@@ -2327,7 +2327,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # md5-derived odd sizes, gray/RGB, 0-3 decomposition levels.
         # Even docs: reversible 5/3 + RCT, exact pixel sums; odd docs:
         # irreversible 9/7 + scalar-expounded quantization + ICT (r04
-        # item 3), checked via the within_band MSE<=4 invariant
+        # item 3), checked via the within_band MSE<=6 invariant (the
+        # embedded-image queries use _images_lossy_band's sum band instead)
         "media_jpx_decode": lambda s, d: media.media_jpx_decode(
             _pipeline(s, d)["spans_flat"]
         ),
@@ -6132,8 +6133,8 @@ def oracle_sql() -> dict[str, str]:
             SELECT o_year,
                    CAST(SUM(CASE WHEN is_nation THEN micro ELSE 0 END) AS BIGINT) AS nation_micro,
                    CAST(SUM(micro) AS BIGINT) AS total_micro,
-                   FLOOR(CAST(SUM(CASE WHEN is_nation THEN micro ELSE 0 END) AS DOUBLE)
-                         / CAST(SUM(micro) AS DOUBLE) * 1000000.0) AS share_ppm
+                   CAST(FLOOR(CAST(SUM(CASE WHEN is_nation THEN micro ELSE 0 END) AS DOUBLE)
+                         / CAST(SUM(micro) AS DOUBLE) * 1000000.0) AS BIGINT) AS share_ppm
             FROM rev GROUP BY o_year
         """,
         "tpch_q5_local_volume": """

@@ -3,7 +3,10 @@
 Settings follow SURVEY.md §4: AQE on (skew-join splitting + partition
 coalescing), Arrow exchange on with a bounded batch size (span payloads are
 large — BASELINE.json's heavy-tailed corpus), shuffle partitions sized to
-cores rather than the 200 default.
+cores rather than the 200 default.  The session is sized from the machine:
+one local core per CPU in the process's affinity mask and a quarter of
+MemTotal for the driver heap; ``SPARK_GRAFT_CPUS`` and
+``SPARK_DRIVER_MEMORY`` override either.
 """
 
 from __future__ import annotations
@@ -18,13 +21,21 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256"))
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the machine's memory (MemTotal): in local mode the
+    driver heap hosts every executor, and the Python workers need the rest."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1024, kb // 4096)}m"
+
+
 def build_session(
     master: str | None = None,
     app_name: str = "pdfparser_spark",
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
@@ -44,7 +55,10 @@ def build_session(
         # 6.3-6.4 s staged DAG; far bigger gap cold) — the stage tables
         # are write-once/read-once, so cheap compression wins
         .config("spark.sql.parquet.compression.codec", "lz4")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

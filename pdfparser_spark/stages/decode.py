@@ -12,31 +12,22 @@ Covers reference operators S1-S2, L1-L4, T1-T12, A1-A4, D1-D9 (SURVEY.md
 §2): whole-doc reconstruction, version sniff, trailer/xref resolution
 (classic + stream + /Prev), parse-all objects, filter decode with
 spec-correct Flate/LZW/AHx/A85 and media routing.  Sequential per document,
-vectorized across the documents of each Arrow batch.
+vectorized across the documents of each Arrow batch: ``_rows_for_doc`` is
+run by the fused stage's per-document runner (``fused._per_doc``), which
+also reassembles each document's bytes from its spans.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core.extract import decode_document
 from ..schema import DECODED
+from .fused import _per_doc
 
-_COLS = [f.name for f in DECODED.fields]
 
-
-def _rows_for_doc(doc_id: int, spans) -> list[dict]:
-    # reconstruct: text-bearing spans concatenate in offset order (media
-    # markers are zero-width); latin-1 is byte-faithful for ASCII-armored docs.
-    # NULL spans (malformed upstream row) -> empty doc, never a task failure
-    if spans is None:
-        spans = []
-    parts = sorted((s for s in spans if s["text"] is not None), key=lambda s: s["offset"])
-    data = "".join(s["text"] for s in parts).encode("latin-1")
-
+def _rows_for_doc(doc_id: int, data: bytes) -> list[dict]:
+    # sparse rows: each rtype fills its own columns, the rest are NULL
     d = decode_document(data)
     rows: list[dict] = [
         {
@@ -82,12 +73,4 @@ def _rows_for_doc(doc_id: int, spans) -> list[dict]:
 
 
 def decode(documents_raw: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                rows.extend(_rows_for_doc(int(doc_id), spans))
-            out = pd.DataFrame(rows)
-            yield out.reindex(columns=_COLS)
-
-    return documents_raw.mapInPandas(run, schema=DECODED)
+    return _per_doc(documents_raw, DECODED, _rows_for_doc)

@@ -1,4 +1,4 @@
-"""Fused single-pass extraction: documents_raw -> (doc_id, spans).
+"""Fused single-pass extraction: documents_raw -> per-document tables.
 
 The staged DAG (decode -> tokenize -> classify -> assemble) buys
 checkpoint/resume and per-stage lineage at the cost of three shuffles and
@@ -9,6 +9,15 @@ running the whole kernel (core/extract.py: version -> xref -> objects ->
 filters -> page tree -> content tokenize -> CMap decode -> ordered spans)
 per document, zero shuffles, no intermediate materialization.
 
+Every extractor here is a row function plus a schema.  The row function
+``rows_of(doc_id, data)`` turns one document's bytes into its output rows,
+tuples in schema order; ``_per_doc`` runs it: the Arrow batch loop, byte
+reassembly from the interleaved spans (``_doc_bytes``), one pandas frame
+per batch, and the ``mapInPandas`` call.  The runner adds no error
+handling: each kernel keeps its own leniency.  The staged decode stage
+runs through the same runner.  The one cross-document extractor,
+``extract_merge_pairs_fused``, groups by pair instead.
+
 Semantics are identical to the staged DAG (same kernel functions; asserted
 by the shared DuckDB oracle and pytest span-equality).  Use the staged
 pipeline when you need resumability on very long jobs; use the fused stage
@@ -18,25 +27,109 @@ the input scan and the output write.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core.extract import (
     extract_advance_spans,
+    extract_attachments,
+    extract_ccitt_images,
+    extract_doc_graph,
+    extract_doc_meta,
+    extract_font_programs,
+    extract_graphics,
+    extract_image_xobjects,
+    extract_inline_pixels,
     extract_layout_spans,
+    extract_linearization,
+    extract_markup_annots,
+    extract_outline_tree,
+    extract_page_labels,
+    extract_revisions,
+    extract_shadings,
+    extract_signatures,
     extract_spans,
     extract_tagged_spans,
+    extract_xmp,
 )
 from ..schema import DOCUMENTS_RAW
+from ..synth import SIG_D, SIG_E, SIG_EC_D, SIG_N, TAG_LANGS
+
+_SPANS = "doc_id long, ord int, kind string, text string, media_ref string"
+_LAYOUT = "doc_id long, ord int, page_idx int, x double, y double, text string"
+_TAGGED = "doc_id long, ord int, page_idx int, struct_type string, lang string, text string"
+_WORDS = (
+    "doc_id long, ord int, page_idx int, x double, y double, "
+    "ax_micro long, w_micro long, text string, size double, mode int"
+)
+_FIELDS = "doc_id long, field_idx int, field_name string, field_type string, field_value string"
+
 
 def _doc_bytes(spans) -> bytes:
+    # text-bearing spans concatenate in offset order (media markers are
+    # zero-width); latin-1 is byte-faithful for the ASCII-armored text.
     # spans may be NULL (malformed upstream row) — treat as empty, never crash
     if spans is None:
         return b""
     parts = sorted((s for s in spans if s["text"] is not None), key=lambda s: s["offset"])
     return "".join(s["text"] for s in parts).encode("latin-1")
+
+
+def _columns(schema) -> list[str]:
+    # DDL strings here are flat (no nested commas); StructTypes name their own
+    if isinstance(schema, str):
+        return [f.split()[0] for f in schema.split(",")]
+    return schema.fieldNames()
+
+
+def _per_doc(
+    documents_raw: DataFrame, schema, rows_of: Callable[[int, bytes], Iterable]
+) -> DataFrame:
+    """Run ``rows_of(doc_id, data)`` over every document of
+    ``documents_raw(doc_id, spans)`` as one ``mapInPandas``; its rows
+    (tuples in schema order, or dicts keyed by column) form the output."""
+    cols = _columns(schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list = []
+            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
+                rows.extend(rows_of(int(doc_id), _doc_bytes(spans)))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return documents_raw.mapInPandas(run, schema=schema)
+
+
+def _span_rows(key: int, spans, *extra) -> list:
+    """``(key, ord, kind, text, media_ref, *extra)`` per kernel span."""
+    return [(key, i, k, t, m, *extra) for i, (k, t, m) in enumerate(spans)]
+
+
+def _layout_rows(doc_id: int, spans) -> list:
+    """Layout spans ``(page, x, y, text, size)`` as ``_LAYOUT`` rows in
+    reading order: (page, -y, x, emit order) — top-to-bottom,
+    left-to-right, the layout-analysis convention.  The sort is stable,
+    so emit order breaks ties."""
+    ordered = sorted(spans, key=lambda s: (s[0], -s[2], s[1]))
+    return [(doc_id, i, p, float(x), float(y), t) for i, (p, x, y, t, _sz) in enumerate(ordered)]
+
+
+def _tagged_rows(doc_id: int, spans) -> list:
+    return [(doc_id, o, p, st, lg, t) for p, o, st, lg, t in spans]
+
+
+def _word_rows(doc_id: int, words) -> list:
+    return [
+        (doc_id, i, int(p), float(x), float(y), int(ax), int(w), t, float(size), int(mode))
+        for i, (p, x, y, ax, w, t, size, mode) in enumerate(words)
+    ]
+
+
+def _field_rows(doc_id: int, fields) -> list:
+    return [(doc_id, int(i), name, ftype, value) for i, name, ftype, value in fields]
 
 
 def extract_fused(
@@ -47,21 +140,14 @@ def extract_fused(
     credential for encrypted documents (tried as user then owner password;
     constant per job, captured by the Arrow kernel closure)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_spans = [], []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_spans(_doc_bytes(spans), strict=strict, password=password)
-                out_ids.append(int(doc_id))
-                out_spans.append(
-                    [
-                        {"kind": k, "text": t, "media_ref": m, "offset": i}
-                        for i, (k, t, m) in enumerate(res["spans"])
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": out_ids, "spans": out_spans})
+    def rows_of(doc_id, data):
+        spans = extract_spans(data, strict=strict, password=password)["spans"]
+        return [(doc_id, [
+            {"kind": k, "text": t, "media_ref": m, "offset": i}
+            for i, (k, t, m) in enumerate(spans)
+        ])]
 
-    return documents_raw.mapInPandas(run, schema=DOCUMENTS_RAW)
+    return _per_doc(documents_raw, DOCUMENTS_RAW, rows_of)
 
 
 def extract_layout_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -72,34 +158,10 @@ def extract_layout_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
     order) — top-to-bottom, left-to-right, the layout-analysis convention.
     Emits (doc_id, ord, page_idx, x, y, text)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_layout_spans(_doc_bytes(spans), password=password)
-                ordered = sorted(
-                    enumerate(res["spans"]),
-                    key=lambda e: (e[1][0], -e[1][2], e[1][1], e[0]),
-                )
-                for ordn, (_emit_i, (page_idx, x, y, txt, _size)) in enumerate(ordered):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "x": float(x),
-                            "y": float(y),
-                            "text": txt,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "ord", "page_idx", "x", "y", "text"]
-            )
+    def rows_of(doc_id, data):
+        return _layout_rows(doc_id, extract_layout_spans(data, password=password)["spans"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, page_idx int, x double, y double, text string",
-    )
+    return _per_doc(documents_raw, _LAYOUT, rows_of)
 
 
 def extract_advance_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -113,37 +175,18 @@ def extract_advance_fused(documents_raw: DataFrame, password: bytes = b"") -> Da
     not dropped).  Emits (doc_id, ord, page_idx, x, y, ax_micro, text,
     size, mode)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_advance_spans(_doc_bytes(spans), password=password)
-                for ordn, (page_idx, x, y, ax, txt, size, mode) in enumerate(res["spans"]):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "x": float(x),
-                            "y": float(y),
-                            "ax_micro": int(ax),
-                            "text": txt,
-                            "size": float(size),
-                            "mode": int(mode),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "ord", "page_idx", "x", "y", "ax_micro",
-                    "text", "size", "mode",
-                ],
-            )
+    def rows_of(doc_id, data):
+        spans = extract_advance_spans(data, password=password)["spans"]
+        return [
+            (doc_id, i, p, float(x), float(y), int(ax), t, float(size), int(mode))
+            for i, (p, x, y, ax, t, size, mode) in enumerate(spans)
+        ]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, page_idx int, x double, y double, "
+    return _per_doc(
+        documents_raw,
+        "doc_id long, ord int, page_idx int, x double, y double, "
         "ax_micro long, text string, size double, mode int",
+        rows_of,
     )
 
 
@@ -157,43 +200,11 @@ def extract_word_boxes_fused(documents_raw: DataFrame, password: bytes = b"") ->
     strict superset of `extract_advance_fused`'s columns; same plan
     (one mapInPandas, scan-bound)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_advance_spans(
-                    _doc_bytes(spans), password=password, with_width=True
-                )
-                for ordn, (page_idx, x, y, ax, w, txt, size, mode) in enumerate(
-                    res["spans"]
-                ):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "x": float(x),
-                            "y": float(y),
-                            "ax_micro": int(ax),
-                            "w_micro": int(w),
-                            "text": txt,
-                            "size": float(size),
-                            "mode": int(mode),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "ord", "page_idx", "x", "y", "ax_micro",
-                    "w_micro", "text", "size", "mode",
-                ],
-            )
+    def rows_of(doc_id, data):
+        res = extract_advance_spans(data, password=password, with_width=True)
+        return _word_rows(doc_id, res["spans"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, page_idx int, x double, y double, "
-        "ax_micro long, w_micro long, text string, size double, mode int",
-    )
+    return _per_doc(documents_raw, _WORDS, rows_of)
 
 
 def extract_hocr_roundtrip_fused(
@@ -205,43 +216,13 @@ def extract_hocr_roundtrip_fused(
     lenient HTML parser.  Rows must equal `extract_word_boxes`' (same
     oracle), so a green row proves the exporter emits hOCR our own
     independent HTML machinery fully agrees with."""
-    from ..core.extract import extract_advance_spans
     from ..core.hocr import hocr_to_words, words_to_hocr
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "ord", "page_idx", "x", "y", "ax_micro",
-            "w_micro", "text", "size", "mode",
-        ]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_advance_spans(
-                    _doc_bytes(spans), password=password, with_width=True
-                )
-                back = hocr_to_words(words_to_hocr(res["spans"]))
-                for ordn, (page_idx, x, y, ax, w, txt, size, mode) in enumerate(back):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": int(page_idx),
-                            "x": float(x),
-                            "y": float(y),
-                            "ax_micro": int(ax),
-                            "w_micro": int(w),
-                            "text": txt,
-                            "size": float(size),
-                            "mode": int(mode),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        res = extract_advance_spans(data, password=password, with_width=True)
+        return _word_rows(doc_id, hocr_to_words(words_to_hocr(res["spans"])))
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, page_idx int, x double, y double, "
-        "ax_micro long, w_micro long, text string, size double, mode int",
-    )
+    return _per_doc(documents_raw, _WORDS, rows_of)
 
 
 def cluster_columns(xs, min_gap: float = 100.0) -> list:
@@ -280,48 +261,27 @@ def extract_columns_fused(
     ``column_split_x`` to force the fixed two-column split instead.
     Emits (doc_id, ord, page_idx, col, x, y, text)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_layout_spans(_doc_bytes(spans))
-                if column_split_x is not None:
-                    col_of = lambda _p, x: int(x >= column_split_x)  # noqa: E731
-                else:
-                    page_xs: dict = {}
-                    for page_idx, x, _y, _t, _s in res["spans"]:
-                        page_xs.setdefault(page_idx, []).append(x)
-                    starts = {p: cluster_columns(xs, min_gap) for p, xs in page_xs.items()}
-                    col_of = lambda p, x: _column_of(x, starts[p])  # noqa: E731
-                ordered = sorted(
-                    enumerate(res["spans"]),
-                    key=lambda e: (
-                        e[1][0],                       # page
-                        col_of(e[1][0], e[1][1]),      # column
-                        -e[1][2],                      # top-to-bottom
-                        e[1][1],                       # left-to-right
-                        e[0],                          # emit order
-                    ),
-                )
-                for ordn, (_emit_i, (page_idx, x, y, txt, _size)) in enumerate(ordered):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "col": col_of(page_idx, x),
-                            "x": float(x),
-                            "y": float(y),
-                            "text": txt,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "ord", "page_idx", "col", "x", "y", "text"]
-            )
+    def rows_of(doc_id, data):
+        spans = extract_layout_spans(data)["spans"]
+        if column_split_x is not None:
+            col_of = lambda _p, x: int(x >= column_split_x)  # noqa: E731
+        else:
+            page_xs: dict = {}
+            for p, x, _y, _t, _s in spans:
+                page_xs.setdefault(p, []).append(x)
+            starts = {p: cluster_columns(xs, min_gap) for p, xs in page_xs.items()}
+            col_of = lambda p, x: _column_of(x, starts[p])  # noqa: E731
+        # page, column, top-to-bottom, left-to-right; stable: emit order
+        ordered = sorted(spans, key=lambda s: (s[0], col_of(s[0], s[1]), -s[2], s[1]))
+        return [
+            (doc_id, i, p, col_of(p, x), float(x), float(y), t)
+            for i, (p, x, y, t, _sz) in enumerate(ordered)
+        ]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, page_idx int, col int, x double, y double, text string",
+    return _per_doc(
+        documents_raw,
+        "doc_id long, ord int, page_idx int, col int, x double, y double, text string",
+        rows_of,
     )
 
 
@@ -331,29 +291,16 @@ def extract_layout_sized_fused(documents_raw: DataFrame) -> DataFrame:
     body-size estimation).  Emits (doc_id, page_idx, x, y, size, text)
     in emit order; downstream ranking/aggregation is JVM algebra."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_layout_spans(_doc_bytes(spans))
-                for page_idx, x, y, txt, size in res["spans"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "page_idx": page_idx,
-                            "x": float(x),
-                            "y": float(y),
-                            "size": float(size),
-                            "text": txt,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page_idx", "x", "y", "size", "text"]
-            )
+    def rows_of(doc_id, data):
+        return [
+            (doc_id, p, float(x), float(y), float(size), t)
+            for p, x, y, t, size in extract_layout_spans(data)["spans"]
+        ]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, page_idx int, x double, y double, size double, text string",
+    return _per_doc(
+        documents_raw,
+        "doc_id long, page_idx int, x double, y double, size double, text string",
+        rows_of,
     )
 
 
@@ -366,66 +313,44 @@ def extract_images_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
     sub-byte /BitsPerComponent, /Decode, /ImageMask) via
     `textops.raster.decode_raster`.  Emits
     (doc_id, media_ref, fmt, width, height, pixel_sum)."""
-    import numpy as np
-
-    from ..core.extract import extract_image_xobjects
     from ..textops.media import sniff_decode
     from ..textops.raster import decode_raster
 
-    cols = ["doc_id", "media_ref", "fmt", "width", "height", "pixel_sum", "alpha_sum"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                images = extract_image_xobjects(_doc_bytes(spans), password=password)
-                for name, payload, meta in images:
-                    try:
-                        if meta["is_media"]:
-                            dec = sniff_decode(bytes(payload))
-                            if dec is None:
-                                continue  # video/unknown codec: stub tier
-                            fmt, w, h, img = dec
-                        else:
-                            w, h = int(meta["width"]), int(meta["height"])
-                            img = decode_raster(
-                                bytes(payload), w, h, int(meta["bpc"] or 8),
-                                meta["colorspace"], meta["decode"],
-                                meta["imagemask"],
-                            )
-                            fmt = "raw"
-                        alpha_sum = None
-                        sm = meta.get("smask")
-                        if sm is not None:
-                            alpha = decode_raster(
-                                bytes(sm["payload"]), int(sm["width"]),
-                                int(sm["height"]), int(sm["bpc"] or 8), "gray",
-                            )
-                            alpha_sum = int(alpha.sum(dtype=np.int64))
-                    except Exception:
-                        # corrupt payload (truncated JPEG, short samples,
-                        # ...): lenient like the rest of the kernel — skip
-                        # the image, never kill the task
-                        continue
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "media_ref": name,
-                            "fmt": fmt,
-                            "width": w,
-                            "height": h,
-                            "pixel_sum": int(img.sum(dtype=np.int64)),
-                            "alpha_sum": alpha_sum,
-                        }
+    def rows_of(doc_id, data):
+        for name, payload, meta in extract_image_xobjects(data, password=password):
+            try:
+                if meta["is_media"]:
+                    dec = sniff_decode(bytes(payload))
+                    if dec is None:
+                        continue  # video/unknown codec: stub tier
+                    fmt, w, h, img = dec
+                else:
+                    w, h = int(meta["width"]), int(meta["height"])
+                    img = decode_raster(
+                        bytes(payload), w, h, int(meta["bpc"] or 8),
+                        meta["colorspace"], meta["decode"], meta["imagemask"],
                     )
-            yield pd.DataFrame(rows, columns=cols)
+                    fmt = "raw"
+                alpha_sum = None
+                sm = meta.get("smask")
+                if sm is not None:
+                    alpha = decode_raster(
+                        bytes(sm["payload"]), int(sm["width"]),
+                        int(sm["height"]), int(sm["bpc"] or 8), "gray",
+                    )
+                    alpha_sum = int(alpha.sum(dtype=np.int64))
+            except Exception:
+                # corrupt payload (truncated JPEG, short samples, ...):
+                # lenient like the rest of the kernel — skip the image,
+                # never kill the task
+                continue
+            yield doc_id, name, fmt, w, h, int(img.sum(dtype=np.int64)), alpha_sum
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, media_ref string, fmt string, width int, height int, "
-            "pixel_sum long, alpha_sum long"
-        ),
+    return _per_doc(
+        documents_raw,
+        "doc_id long, media_ref string, fmt string, width int, height int, "
+        "pixel_sum long, alpha_sum long",
+        rows_of,
     )
 
 
@@ -434,36 +359,19 @@ def extract_meta_fused(documents_raw: DataFrame, password: bytes = b"") -> DataF
     plus the catalog /Outlines First->Next chain walk
     (`core.extract.extract_doc_meta`).  Emits
     (doc_id, title, author, n_outlines, first_outline)."""
-    from ..core.extract import extract_doc_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                m = extract_doc_meta(_doc_bytes(spans), password=password)
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "title": m["title"],
-                        "author": m["author"],
-                        "created": m["created"],
-                        "n_outlines": int(m["n_outlines"]),
-                        "first_outline": m["first_outline"],
-                        "first_outline_page": m["first_outline_page"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "title", "author", "created",
-                    "n_outlines", "first_outline", "first_outline_page",
-                ],
-            )
+    def rows_of(doc_id, data):
+        m = extract_doc_meta(data, password=password)
+        return [(
+            doc_id, m["title"], m["author"], m["created"], int(m["n_outlines"]),
+            m["first_outline"], m["first_outline_page"],
+        )]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, title string, author string, created string, "
+    return _per_doc(
+        documents_raw,
+        "doc_id long, title string, author string, created string, "
         "n_outlines int, first_outline string, first_outline_page int",
+        rows_of,
     )
 
 
@@ -473,33 +381,18 @@ def extract_outlines_fused(documents_raw: DataFrame, password: bytes = b"") -> D
     with its nesting depth, resolved /Dest target page, and open/closed
     display state.  Emits (doc_id, ord, depth, title, target_page,
     closed); one mapInPandas, scan-bound like every fused kernel."""
-    from ..core.extract import extract_outline_tree
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_outline_tree(_doc_bytes(spans), password=password)
-                for ordn, depth, title, target, closed in res["items"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": int(ordn),
-                            "depth": int(depth),
-                            "title": title,
-                            "target_page": None if target is None else int(target),
-                            "closed": bool(closed),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "ord", "depth", "title", "target_page", "closed"],
-            )
+    def rows_of(doc_id, data):
+        items = extract_outline_tree(data, password=password)["items"]
+        return [
+            (doc_id, int(o), int(depth), title, None if target is None else int(target), bool(closed))
+            for o, depth, title, target, closed in items
+        ]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, depth int, title string, "
-        "target_page int, closed boolean",
+    return _per_doc(
+        documents_raw,
+        "doc_id long, ord int, depth int, title string, target_page int, closed boolean",
+        rows_of,
     )
 
 
@@ -508,38 +401,22 @@ def extract_shadings_fused(documents_raw: DataFrame, password: bytes = b"") -> D
     /Shading resources with geometry + the colour function evaluated at
     its /Domain endpoints (`core.extract.extract_shadings`).  Flattened
     one row per (doc, page, name) with per-channel endpoint colours."""
-    from ..core.extract import extract_shadings
 
-    schema = (
+    def rows_of(doc_id, data):
+        shadings = extract_shadings(data, password=password)["shadings"]
+        return [
+            (doc_id, p, name, stype, cmax, *c0, *c1, n_ops)
+            for p, name, stype, cmax, c0, c1, n_ops in shadings
+            if len(c0) == 3 and len(c1) == 3  # non-RGB alternate: outside this view
+        ]
+
+    return _per_doc(
+        documents_raw,
         "doc_id long, page_idx int, name string, shading_type int, "
         "coord_max int, c0_r int, c0_g int, c0_b int, "
-        "c1_r int, c1_g int, c1_b int, n_ops int"
+        "c1_r int, c1_g int, c1_b int, n_ops int",
+        rows_of,
     )
-    cols = [f.split(" ")[0] for f in schema.split(", ")]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_shadings(_doc_bytes(spans), password=password)
-                for page_idx, name, stype, cmax, c0, c1, n_ops in res["shadings"]:
-                    if len(c0) != 3 or len(c1) != 3:
-                        continue  # non-RGB alternate: outside this view
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "page_idx": page_idx,
-                            "name": name,
-                            "shading_type": stype,
-                            "coord_max": cmax,
-                            "c0_r": c0[0], "c0_g": c0[1], "c0_b": c0[2],
-                            "c1_r": c1[0], "c1_g": c1[1], "c1_b": c1[2],
-                            "n_ops": n_ops,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return documents_raw.mapInPandas(run, schema=schema)
 
 
 def extract_graphics_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -547,38 +424,18 @@ def extract_graphics_fused(documents_raw: DataFrame, password: bytes = b"") -> D
     over every page's content stream (`core.extract.extract_graphics`).
     Emits (doc_id, n_rects, n_lines, n_curves, n_subpaths, n_strokes,
     n_fills, n_clips, rect_area)."""
-    from ..core.extract import extract_graphics
-
-    cols = [
-        "n_rects",
-        "n_lines",
-        "n_curves",
-        "n_subpaths",
-        "n_strokes",
-        "n_fills",
-        "n_clips",
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                g = extract_graphics(_doc_bytes(spans), password=password)
-                row = {"doc_id": int(doc_id)}
-                for c in cols:
-                    row[c] = int(g[c])
-                row["rect_area"] = int(g["rect_area"])
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=["doc_id"] + cols + ["rect_area"])
-
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, n_rects int, n_lines int, n_curves int, "
-            "n_subpaths int, n_strokes int, n_fills int, n_clips int, "
-            "rect_area long"
-        ),
+    schema = (
+        "doc_id long, n_rects int, n_lines int, n_curves int, "
+        "n_subpaths int, n_strokes int, n_fills int, n_clips int, "
+        "rect_area long"
     )
+    counters = _columns(schema)[1:]
+
+    def rows_of(doc_id, data):
+        g = extract_graphics(data, password=password)
+        return [(doc_id, *(int(g[c]) for c in counters))]
+
+    return _per_doc(documents_raw, schema, rows_of)
 
 
 def extract_links_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -586,30 +443,15 @@ def extract_links_fused(documents_raw: DataFrame, password: bytes = b"") -> Data
     /URI actions AND internal /Dest links resolved to their target page
     (`core.extract.extract_doc_graph`), one row per link.
     Emits (doc_id, page, link_idx, uri, target_page)."""
-    from ..core.extract import extract_doc_graph
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                g = extract_doc_graph(_doc_bytes(spans), password=password)
-                for page, link_idx, uri, target in g["links"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "page": int(page),
-                            "link_idx": int(link_idx),
-                            "uri": uri,
-                            "target_page": target,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "link_idx", "uri", "target_page"]
-            )
+    def rows_of(doc_id, data):
+        return [
+            (doc_id, int(page), int(li), uri, target)
+            for page, li, uri, target in extract_doc_graph(data, password=password)["links"]
+        ]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, page int, link_idx int, uri string, target_page int",
+    return _per_doc(
+        documents_raw, "doc_id long, page int, link_idx int, uri string, target_page int", rows_of
     )
 
 
@@ -619,32 +461,11 @@ def extract_forms_fused(documents_raw: DataFrame, password: bytes = b"") -> Data
     (doc_id, field_idx, field_name, field_type, field_value) — the value
     is a PDF string for /Tx fields and a NAME for /Btn fields, both
     surfaced as strings; an unset /V surfaces as NULL."""
-    from ..core.extract import extract_doc_graph
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                g = extract_doc_graph(_doc_bytes(spans), password=password)
-                for field_idx, fname, ftype, fval in g["fields"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "field_idx": int(field_idx),
-                            "field_name": fname,
-                            "field_type": ftype,
-                            "field_value": fval,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "field_idx", "field_name", "field_type", "field_value"],
-            )
+    def rows_of(doc_id, data):
+        return _field_rows(doc_id, extract_doc_graph(data, password=password)["fields"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, field_idx int, field_name string, field_type string, field_value string",
-    )
+    return _per_doc(documents_raw, _FIELDS, rows_of)
 
 
 def extract_fill_form_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -655,43 +476,16 @@ def extract_fill_form_fused(documents_raw: DataFrame, password: bytes = b"") -> 
     /Btn fields and every other object must come back byte-identical;
     the filled values replace the old /V — the interactive-editor save
     path, driven end to end."""
-    from ..core.extract import extract_doc_graph
     from ..core.writer import fill_form_fields
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "field_idx", "field_name", "field_type", "field_value"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                data = _doc_bytes(spans)
-                first = extract_doc_graph(data, password=password)["fields"]
-                fills = {
-                    name: f"filled-{int(doc_id)}-{name}"
-                    for (_i, name, ftype, _v) in first
-                    if ftype == "Tx"
-                }
-                if fills:
-                    data = fill_form_fields(
-                        data, fills, xref_stream=int(doc_id) % 2 == 1
-                    )
-                for field_idx, fname, ftype, fval in extract_doc_graph(
-                    data, password=password
-                )["fields"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "field_idx": int(field_idx),
-                            "field_name": fname,
-                            "field_type": ftype,
-                            "field_value": fval,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        first = extract_doc_graph(data, password=password)["fields"]
+        fills = {name: f"filled-{doc_id}-{name}" for _i, name, ftype, _v in first if ftype == "Tx"}
+        if fills:
+            data = fill_form_fields(data, fills, xref_stream=doc_id % 2 == 1)
+        return _field_rows(doc_id, extract_doc_graph(data, password=password)["fields"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, field_idx int, field_name string, field_type string, field_value string",
-    )
+    return _per_doc(documents_raw, _FIELDS, rows_of)
 
 
 def extract_attachments_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -699,30 +493,17 @@ def extract_attachments_fused(documents_raw: DataFrame, password: bytes = b"") -
     tree -> /Filespec -> decoded /EF stream
     (`core.extract.extract_attachments`), one row per attachment.  Emits
     (doc_id, att_idx, att_name, size, payload_md5)."""
-    from ..core.extract import extract_attachments
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                g = extract_attachments(_doc_bytes(spans), password=password)
-                for att_idx, name, size, digest in g["attachments"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "att_idx": int(att_idx),
-                            "att_name": name,
-                            "size": None if size is None else int(size),
-                            "payload_md5": digest,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "att_idx", "att_name", "size", "payload_md5"]
-            )
+    def rows_of(doc_id, data):
+        return [
+            (doc_id, int(i), name, None if size is None else int(size), digest)
+            for i, name, size, digest in extract_attachments(data, password=password)["attachments"]
+        ]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, att_idx int, att_name string, size int, payload_md5 string",
+    return _per_doc(
+        documents_raw,
+        "doc_id long, att_idx int, att_name string, size int, payload_md5 string",
+        rows_of,
     )
 
 
@@ -735,34 +516,10 @@ def extract_tagged_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
     per-document and row-local, so the plan is scan -> kernel -> sink at
     any cluster size."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_tagged_spans(_doc_bytes(spans), password=password)
-                for page_idx, ordn, stype, lang, txt in res["spans"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "struct_type": stype,
-                            "lang": lang,
-                            "text": txt,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "ord", "page_idx", "struct_type", "lang", "text"],
-            )
+    def rows_of(doc_id, data):
+        return _tagged_rows(doc_id, extract_tagged_spans(data, password=password)["spans"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, ord int, page_idx int, struct_type string, "
-            "lang string, text string"
-        ),
-    )
+    return _per_doc(documents_raw, _TAGGED, rows_of)
 
 
 def extract_scanned_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -774,51 +531,31 @@ def extract_scanned_fused(documents_raw: DataFrame, password: bytes = b"") -> Da
     MMR generic regions (``textops/jbig2.py``).  Emits one row per image
     with the ink statistics (count + position-weighted signature — any
     single pixel flip changes it).  One mapInPandas; decode per-doc."""
-    import numpy as np
-
-    from ..core.extract import extract_ccitt_images
     from ..textops.ccitt import decode_ccitt
     from ..textops.jbig2 import decode_jbig2
 
-    cols = ["doc_id", "page_idx", "media_ref", "width", "height", "n_black", "ink_sig"]
+    def rows_of(doc_id, data):
+        res = extract_ccitt_images(data, password=password)
+        for page_idx, name, codec, k, columns, nrows, ba, b1, payload, gbl in res["images"]:
+            try:
+                if codec == "jbig2":
+                    mask = decode_jbig2(payload, gbl)
+                else:
+                    mask = decode_ccitt(payload, columns, nrows, k=k, byte_align=ba, black_is_1=b1)
+            except ValueError:
+                continue  # corrupt scan: contained skip, task lives
+            h, w = mask.shape
+            idx = np.arange(h * w, dtype=np.int64).reshape(h, w) + 1
+            yield (
+                doc_id, page_idx, name, w, h,
+                int(mask.sum(dtype=np.int64)), int((idx * mask).sum(dtype=np.int64)),
+            )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_ccitt_images(_doc_bytes(spans), password=password)
-                for page_idx, name, codec, k, columns, nrows, ba, b1, payload, gbl in res["images"]:
-                    try:
-                        if codec == "jbig2":
-                            mask = decode_jbig2(payload, gbl)
-                        else:
-                            mask = decode_ccitt(
-                                payload, columns, nrows, k=k,
-                                byte_align=ba, black_is_1=b1,
-                            )
-                    except ValueError:
-                        continue  # corrupt scan: contained skip, task lives
-                    h, w = mask.shape
-                    idx = np.arange(h * w, dtype=np.int64).reshape(h, w) + 1
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "page_idx": page_idx,
-                            "media_ref": name,
-                            "width": w,
-                            "height": h,
-                            "n_black": int(mask.sum(dtype=np.int64)),
-                            "ink_sig": int((idx * mask).sum(dtype=np.int64)),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, page_idx int, media_ref string, width int, "
-            "height int, n_black long, ink_sig long"
-        ),
+    return _per_doc(
+        documents_raw,
+        "doc_id long, page_idx int, media_ref string, width int, "
+        "height int, n_black long, ink_sig long",
+        rows_of,
     )
 
 
@@ -827,63 +564,31 @@ def extract_labels_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
     walk + style formatting (decimal/roman/letters, prefix, /St) in one
     mapInPandas.  Every page gets a label (viewer-default ordinal+1 when
     no tree governs it)."""
-    from ..core.extract import extract_page_labels
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_page_labels(_doc_bytes(spans), password=password)
-                for page_idx, label in res["labels"]:
-                    rows.append(
-                        {"doc_id": int(doc_id), "page_idx": page_idx, "label": label}
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "page_idx", "label"])
+    def rows_of(doc_id, data):
+        labels = extract_page_labels(data, password=password)["labels"]
+        return [(doc_id, p, label) for p, label in labels]
 
-    return documents_raw.mapInPandas(
-        run, schema="doc_id long, page_idx int, label string"
-    )
+    return _per_doc(documents_raw, "doc_id long, page_idx int, label string", rows_of)
 
 
 def extract_signatures_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """Digital-signature verification (§12.8), zero shuffle: the AcroForm
     walk + ByteRange coverage + CMS digest/RSA verification in one
     mapInPandas — the verdict columns are per-doc scalars, so the plan is
-    scan -> kernel -> sink at any corpus size."""
-    from ..core.extract import extract_signatures
+    scan -> kernel -> sink at any corpus size.  The kernel's rows are
+    (sig_idx, field, signer, digest_alg, key_alg, coverage_ok,
+    digest_ok, sig_ok)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "sig_idx", "field", "signer",
-            "digest_alg", "key_alg", "coverage_ok", "digest_ok", "sig_ok",
-        ]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_signatures(_doc_bytes(spans), password=password)
-                for si, field, signer, alg, kalg, cov, dok, sok in res["signatures"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "sig_idx": si,
-                            "field": field,
-                            "signer": signer,
-                            "digest_alg": alg,
-                            "key_alg": kalg,
-                            "coverage_ok": cov,
-                            "digest_ok": dok,
-                            "sig_ok": sok,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        return [(doc_id, *s) for s in extract_signatures(data, password=password)["signatures"]]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, sig_idx int, field string, signer string, "
-            "digest_alg string, key_alg string, coverage_ok boolean, digest_ok boolean, "
-            "sig_ok boolean"
-        ),
+    return _per_doc(
+        documents_raw,
+        "doc_id long, sig_idx int, field string, signer string, "
+        "digest_alg string, key_alg string, coverage_ok boolean, digest_ok boolean, "
+        "sig_ok boolean",
+        rows_of,
     )
 
 
@@ -891,38 +596,17 @@ def extract_markup_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
     """Markup annotations (§12.5.6), zero shuffle: the /Annots walk plus
     the /QuadPoints-to-layout geometric join in one mapInPandas — the
     highlighted TEXT is recovered per document, so no cross-doc data
-    movement exists at any corpus size."""
-    from ..core.extract import extract_markup_annots
+    movement exists at any corpus size.  The kernel's rows are
+    (page_idx, annot_idx, subtype, author, contents, covered_text)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "page_idx", "annot_idx", "subtype",
-            "author", "contents", "covered_text",
-        ]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_markup_annots(_doc_bytes(spans), password=password)
-                for p, ai, sub, author, contents, covered in res["annots"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "page_idx": p,
-                            "annot_idx": ai,
-                            "subtype": sub,
-                            "author": author,
-                            "contents": contents,
-                            "covered_text": covered,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        return [(doc_id, *a) for a in extract_markup_annots(data, password=password)["annots"]]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, page_idx int, annot_idx int, subtype string, "
-            "author string, contents string, covered_text string"
-        ),
+    return _per_doc(
+        documents_raw,
+        "doc_id long, page_idx int, annot_idx int, subtype string, "
+        "author string, contents string, covered_text string",
+        rows_of,
     )
 
 
@@ -930,57 +614,28 @@ def extract_revisions_fused(documents_raw: DataFrame, password: bytes = b"") -> 
     """Incremental-update revision history (§7.5.6), zero shuffle: the
     xref /Prev chain replayed oldest-first per document — kind, visible
     object count under the prefix merge, and the ids each revision
-    changed.  The PDF-side analog of the snapshot log's changes() feed."""
-    from ..core.extract import extract_revisions
+    changed.  The PDF-side analog of the snapshot log's changes() feed.
+    The kernel's rows are (rev_idx, kind, n_objects, changed)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "rev_idx", "kind", "n_objects", "changed"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_revisions(_doc_bytes(spans), password=password)
-                for rev_idx, kind, n_objects, changed in res["revisions"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "rev_idx": rev_idx,
-                            "kind": kind,
-                            "n_objects": n_objects,
-                            "changed": changed,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        return [(doc_id, *r) for r in extract_revisions(data, password=password)["revisions"]]
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, rev_idx int, kind string, n_objects int, changed string",
+    return _per_doc(
+        documents_raw,
+        "doc_id long, rev_idx int, kind string, n_objects int, changed string",
+        rows_of,
     )
 
 
 def extract_xmp_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """XMP metadata mining (§14.3.2), zero shuffle beyond the leveling
     repartition: one row per document that carries a /Metadata packet."""
-    from ..core.extract import extract_xmp
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "xmp_title", "creator_tool"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_xmp(_doc_bytes(spans), password=password)
-                if res["has_xmp"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "xmp_title": res["title"],
-                            "creator_tool": res["creator_tool"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        res = extract_xmp(data, password=password)
+        return [(doc_id, res["title"], res["creator_tool"])] if res["has_xmp"] else []
 
-    return documents_raw.mapInPandas(
-        run, schema="doc_id long, xmp_title string, creator_tool string"
-    )
+    return _per_doc(documents_raw, "doc_id long, xmp_title string, creator_tool string", rows_of)
 
 
 def extract_rewrite_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -989,38 +644,20 @@ def extract_rewrite_fused(documents_raw: DataFrame, password: bytes = b"") -> Da
     Output rows equal plain extraction's (same span oracle), so a green
     row proves the writer emits documents the kernel fully agrees with —
     the transformation-pipeline primitive (scrub/edit spans, re-emit)."""
-    from ..core.extract import extract_spans
     from ..core.writer import write_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "kind", "text", "media_ref"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_spans(_doc_bytes(spans), password=password)
-                # odd docs rewrite in the modern xref-STREAM form, every
-                # third with Flate-compressed content streams — all
-                # writer formats must re-extract identically
-                again = extract_spans(
-                    write_pdf(first["spans"], xref_stream=doc_id % 2 == 1,
-                              objstm=doc_id % 4 == 3,
-                              compress=doc_id % 3 == 0)
-                )
-                for ordn, (kind, text, media_ref) in enumerate(again["spans"]):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": media_ref,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        first = extract_spans(data, password=password)
+        # odd docs rewrite in the modern xref-STREAM form, every third
+        # with Flate-compressed content streams — all writer formats must
+        # re-extract identically
+        again = extract_spans(
+            write_pdf(first["spans"], xref_stream=doc_id % 2 == 1,
+                      objstm=doc_id % 4 == 3, compress=doc_id % 3 == 0)
+        )
+        return _span_rows(doc_id, again["spans"])
 
-    return documents_raw.mapInPandas(
-        run, schema="doc_id long, ord int, kind string, text string, media_ref string"
-    )
+    return _per_doc(documents_raw, _SPANS, rows_of)
 
 
 def extract_tagged_rewrite_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -1032,44 +669,17 @@ def extract_tagged_rewrite_fused(documents_raw: DataFrame, password: bytes = b""
     written language — the PDF/UA-shaped authoring primitive an
     accessibility/remediation pipeline needs.  ``lang`` cycles the
     synth TAG_LANGS by doc%3 so the channel is per-doc observable."""
-    from ..core.extract import extract_spans, extract_tagged_spans
     from ..core.writer import write_pdf
-    from ..synth import TAG_LANGS
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "page_idx", "struct_type", "lang", "text"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_spans(_doc_bytes(spans), password=password)
-                again = extract_tagged_spans(
-                    write_pdf(
-                        first["spans"],
-                        tagged=True,
-                        lang=TAG_LANGS[int(doc_id) % 3],
-                        xref_stream=doc_id % 2 == 1,
-                    )
-                )
-                for page_idx, ordn, stype, lg, txt in again["spans"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "struct_type": stype,
-                            "lang": lg,
-                            "text": txt,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        first = extract_spans(data, password=password)
+        again = extract_tagged_spans(
+            write_pdf(first["spans"], tagged=True, lang=TAG_LANGS[doc_id % 3],
+                      xref_stream=doc_id % 2 == 1)
+        )
+        return _tagged_rows(doc_id, again["spans"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, ord int, page_idx int, struct_type string, "
-            "lang string, text string"
-        ),
-    )
+    return _per_doc(documents_raw, _TAGGED, rows_of)
 
 
 def extract_tagged_fixpoint_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -1081,41 +691,19 @@ def extract_tagged_fixpoint_fused(documents_raw: DataFrame, password: bytes = b"
     the full structure channel, not just text.  The document default
     language is recovered from the artifact rows (they speak it) or the
     first tagged row."""
-    from ..core.extract import extract_tagged_spans
     from ..core.writer import write_tagged_page
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "page_idx", "struct_type", "lang", "text"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_tagged_spans(_doc_bytes(spans), password=password)
-                seq = [(st, lg, t) for (_p, _o, st, lg, t) in first["spans"]]
-                un = [lg for (st, lg, _t) in seq if st is None]
-                base = un[0] if un else (seq[0][1] if seq else None)
-                again = extract_tagged_spans(
-                    write_tagged_page(seq, base_lang=base, xref_stream=doc_id % 2 == 1)
-                )
-                for page_idx, ordn, stype, lg, txt in again["spans"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "struct_type": stype,
-                            "lang": lg,
-                            "text": txt,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        first = extract_tagged_spans(data, password=password)
+        seq = [(st, lg, t) for (_p, _o, st, lg, t) in first["spans"]]
+        un = [lg for (st, lg, _t) in seq if st is None]
+        base = un[0] if un else (seq[0][1] if seq else None)
+        again = extract_tagged_spans(
+            write_tagged_page(seq, base_lang=base, xref_stream=doc_id % 2 == 1)
+        )
+        return _tagged_rows(doc_id, again["spans"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, ord int, page_idx int, struct_type string, "
-            "lang string, text string"
-        ),
-    )
+    return _per_doc(documents_raw, _TAGGED, rows_of)
 
 
 def extract_linearized_roundtrip_fused(
@@ -1129,44 +717,20 @@ def extract_linearized_roundtrip_fused(
     equal plain extraction's and every check must hold, so one green
     row proves both the byte-range-servable layout and the validator —
     the streaming-delivery write shape."""
-    from ..core.extract import extract_linearization, extract_spans
     from ..core.writer import write_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "ord", "kind", "text", "media_ref",
-            "linearized", "l_ok", "n_ok", "o_ok", "t_ok", "h_ok",
-        ]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_spans(_doc_bytes(spans), password=password)
-                lb = write_pdf(first["spans"], linearized=True)
-                flags = extract_linearization(lb)
-                again = extract_spans(lb)
-                for ordn, (kind, text, media_ref) in enumerate(again["spans"]):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": media_ref,
-                            "linearized": flags["linearized"],
-                            "l_ok": flags["l_ok"],
-                            "n_ok": flags["n_ok"],
-                            "o_ok": flags["o_ok"],
-                            "t_ok": flags["t_ok"],
-                            "h_ok": flags["h_ok"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    flags = ("linearized", "l_ok", "n_ok", "o_ok", "t_ok", "h_ok")
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, kind string, text string, media_ref string, "
-        "linearized boolean, l_ok boolean, n_ok boolean, o_ok boolean, "
-        "t_ok boolean, h_ok boolean",
+    def rows_of(doc_id, data):
+        lb = write_pdf(extract_spans(data, password=password)["spans"], linearized=True)
+        checks = extract_linearization(lb)
+        return _span_rows(doc_id, extract_spans(lb)["spans"], *(checks[f] for f in flags))
+
+    return _per_doc(
+        documents_raw,
+        _SPANS + ", linearized boolean, l_ok boolean, n_ok boolean, "
+        "o_ok boolean, t_ok boolean, h_ok boolean",
+        rows_of,
     )
 
 
@@ -1181,43 +745,25 @@ def extract_redact_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
     not a text column)."""
     import re as _re
 
-    from ..core.extract import extract_spans
     from ..core.writer import write_pdf
     from ..textops.curation import EMAIL_RE, IPV4_RE, PHONE_RE
 
     subs = [(_re.compile(p), r) for p, r in
             ((EMAIL_RE, "<EMAIL>"), (PHONE_RE, "<PHONE>"), (IPV4_RE, "<IP>"))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "kind", "text", "media_ref"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_spans(_doc_bytes(spans), password=password)
-                scrubbed = []
-                for kind, text, media_ref in first["spans"]:
-                    if kind == "text" and text:
-                        for rx, repl in subs:
-                            text = rx.sub(repl, text)
-                    scrubbed.append((kind, text, media_ref))
-                again = extract_spans(
-                    write_pdf(scrubbed, xref_stream=doc_id % 2 == 1, objstm=doc_id % 4 == 3)
-                )
-                for ordn, (kind, text, media_ref) in enumerate(again["spans"]):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": media_ref,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        scrubbed = []
+        for kind, text, media_ref in extract_spans(data, password=password)["spans"]:
+            if kind == "text" and text:
+                for rx, repl in subs:
+                    text = rx.sub(repl, text)
+            scrubbed.append((kind, text, media_ref))
+        again = extract_spans(
+            write_pdf(scrubbed, xref_stream=doc_id % 2 == 1, objstm=doc_id % 4 == 3)
+        )
+        return _span_rows(doc_id, again["spans"])
 
-    return documents_raw.mapInPandas(
-        run, schema="doc_id long, ord int, kind string, text string, media_ref string"
-    )
+    return _per_doc(documents_raw, _SPANS, rows_of)
 
 
 def extract_font_inventory_fused(
@@ -1228,37 +774,19 @@ def extract_font_inventory_fused(
     space width (core.extract.extract_font_programs) — the corpus font
     forensics a rendering/compliance pipeline runs before committing to
     a font strategy."""
-    from ..core.extract import extract_font_programs
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "page_idx", "font_name", "subtype",
-            "program", "n_glyphs", "w_space",
+    def rows_of(doc_id, data):
+        fonts = extract_font_programs(data, password=password)["fonts"]
+        return [
+            (doc_id, int(p), fname, sub, prog, int(n), None if w32 is None else int(w32))
+            for p, fname, sub, prog, n, w32 in fonts
         ]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_font_programs(_doc_bytes(spans), password=password)
-                for p, fname, sub, prog, n, w32 in res["fonts"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "page_idx": int(p),
-                            "font_name": fname,
-                            "subtype": sub,
-                            "program": prog,
-                            "n_glyphs": int(n),
-                            "w_space": int(w32) if w32 is not None else None,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, page_idx int, font_name string, subtype string, "
-            "program string, n_glyphs int, w_space int"
-        ),
+    return _per_doc(
+        documents_raw,
+        "doc_id long, page_idx int, font_name string, subtype string, "
+        "program string, n_glyphs int, w_space int",
+        rows_of,
     )
 
 
@@ -1275,52 +803,28 @@ def extract_encrypt_rewrite_fused(
     decryptor end-to-end.  A wrong-password probe per doc must yield
     ZERO spans — asserted in-kernel (a poison row would break the
     oracle), so ciphertext secrecy is part of the checked contract."""
-    from ..core.extract import extract_spans
     from ..core.writer import write_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "kind", "text", "media_ref"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_spans(_doc_bytes(spans), password=password)
-                # password + seed are CORPUS-SHARED on purpose: R6 key
-                # derivation (Algorithm 2.B) costs ~2.5 s per distinct
-                # (pwd, salt) pair in pure Python, and crypt.hash_2b
-                # memoizes per worker process — shared salts amortize it
-                # to a one-time cost per executor (same trade the
-                # protected synth family makes)
-                pwd = b"hunter2-rw"
-                enc = write_pdf(
-                    first["spans"],
-                    xref_stream=doc_id % 3 == 1,
-                    objstm=doc_id % 3 == 2,
-                    encrypt={
-                        "mode": "aes256" if doc_id % 2 else "rc4",
-                        "user_pwd": pwd,
-                        "seed": b"encrw",
-                    },
-                )
-                locked = extract_spans(enc, strict=False, password=b"not-the-key")
-                again = extract_spans(enc, password=pwd)
-                spans_out = again["spans"] if not locked["spans"] else [
-                    ("text", "!CIPHERTEXT-LEAKED!", None)
-                ]
-                for ordn, (kind, text, media_ref) in enumerate(spans_out):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": media_ref,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    # password + seed are CORPUS-SHARED on purpose: R6 key derivation
+    # (Algorithm 2.B) costs ~2.5 s per distinct (pwd, salt) pair in pure
+    # Python, and crypt.hash_2b memoizes per worker process — shared
+    # salts amortize it to a one-time cost per executor (same trade the
+    # protected synth family makes)
+    pwd = b"hunter2-rw"
 
-    return documents_raw.mapInPandas(
-        run, schema="doc_id long, ord int, kind string, text string, media_ref string"
-    )
+    def rows_of(doc_id, data):
+        enc = write_pdf(
+            extract_spans(data, password=password)["spans"],
+            xref_stream=doc_id % 3 == 1,
+            objstm=doc_id % 3 == 2,
+            encrypt={"mode": "aes256" if doc_id % 2 else "rc4", "user_pwd": pwd, "seed": b"encrw"},
+        )
+        locked = extract_spans(enc, strict=False, password=b"not-the-key")
+        again = extract_spans(enc, password=pwd)
+        spans = again["spans"] if not locked["spans"] else [("text", "!CIPHERTEXT-LEAKED!", None)]
+        return _span_rows(doc_id, spans)
+
+    return _per_doc(documents_raw, _SPANS, rows_of)
 
 
 def extract_portfolio_fused(
@@ -1336,50 +840,32 @@ def extract_portfolio_fused(
     document's spans — the UNCHANGED span oracle is green only if writer
     name-tree emission, attachment decode, and the recursive kernel all
     agree (the portfolio/e-mail-archive ingestion shape)."""
-    from ..core.extract import extract_attachments, extract_spans
     from ..core.writer import write_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "kind", "text", "media_ref"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                inner_bytes = _doc_bytes(spans)
-                carrier = write_pdf(
-                    [("text", "portfolio %d" % doc_id, None)],
-                    xref_stream=doc_id % 2 == 1,
-                    objstm=doc_id % 4 == 3,
-                    attachments=[
-                        ("doc%d.pdf" % doc_id, inner_bytes),
-                        ("notes.txt", b"carrier for %d" % doc_id),
-                    ],
-                )
-                atts = extract_attachments(carrier, with_payload=True)
-                inner = next(
-                    (pl for _i, nm, _sz, _md5, pl in atts["attachments"]
-                     if nm.endswith(".pdf") and pl is not None),
-                    None,
-                )
-                spans_out = (
-                    extract_spans(inner, password=password)["spans"]
-                    if inner is not None
-                    else [("text", "!ATTACHMENT-LOST!", None)]
-                )
-                for ordn, (kind, text, media_ref) in enumerate(spans_out):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": media_ref,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        carrier = write_pdf(
+            [("text", "portfolio %d" % doc_id, None)],
+            xref_stream=doc_id % 2 == 1,
+            objstm=doc_id % 4 == 3,
+            attachments=[
+                ("doc%d.pdf" % doc_id, data),
+                ("notes.txt", b"carrier for %d" % doc_id),
+            ],
+        )
+        atts = extract_attachments(carrier, with_payload=True)
+        inner = next(
+            (pl for _i, nm, _sz, _md5, pl in atts["attachments"]
+             if nm.endswith(".pdf") and pl is not None),
+            None,
+        )
+        spans = (
+            extract_spans(inner, password=password)["spans"]
+            if inner is not None
+            else [("text", "!ATTACHMENT-LOST!", None)]
+        )
+        return _span_rows(doc_id, spans)
 
-    return documents_raw.mapInPandas(
-        run, schema="doc_id long, ord int, kind string, text string, media_ref string"
-    )
+    return _per_doc(documents_raw, _SPANS, rows_of)
 
 
 def extract_merge_pairs_fused(
@@ -1400,44 +886,24 @@ def extract_merge_pairs_fused(
     At 1000 executors this is hash-partition + per-pair kernel work."""
     import pyspark.sql.functions as F
 
-    from ..core.extract import extract_spans
     from ..core.writer import write_pdf
 
+    schema = "pair_id long, ord int, kind string, text string, media_ref string"
+
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["pair_id", "ord", "kind", "text", "media_ref"]
         rows = []
         for pair_id, grp in pdf.groupby("pair_id"):
-            grp = grp.sort_values("doc_id")
             spans_all = []
-            for _, r in grp.iterrows():
-                spans_all.extend(
-                    extract_spans(_doc_bytes(r["spans"]), password=password)["spans"]
-                )
-            merged = write_pdf(
-                spans_all,
-                xref_stream=pair_id % 2 == 1,
-                objstm=pair_id % 4 == 3,
-            )
-            again = extract_spans(merged)
-            for ordn, (kind, text, media_ref) in enumerate(again["spans"]):
-                rows.append(
-                    {
-                        "pair_id": int(pair_id),
-                        "ord": ordn,
-                        "kind": kind,
-                        "text": text,
-                        "media_ref": media_ref,
-                    }
-                )
-        return pd.DataFrame(rows, columns=cols)
+            for spans in grp.sort_values("doc_id")["spans"]:
+                spans_all.extend(extract_spans(_doc_bytes(spans), password=password)["spans"])
+            merged = write_pdf(spans_all, xref_stream=pair_id % 2 == 1, objstm=pair_id % 4 == 3)
+            rows.extend(_span_rows(int(pair_id), extract_spans(merged)["spans"]))
+        return pd.DataFrame(rows, columns=_columns(schema))
 
     paired = documents_raw.withColumn(
         "pair_id", F.floor(F.col("doc_id") / 2).cast("long")
     )
-    return paired.groupBy("pair_id").applyInPandas(
-        merge,
-        schema="pair_id long, ord int, kind string, text string, media_ref string",
-    )
+    return paired.groupBy("pair_id").applyInPandas(merge, schema=schema)
 
 
 def extract_incremental_redact_fused(
@@ -1450,43 +916,18 @@ def extract_incremental_redact_fused(
     The first text span must come back as [REDACTED] with every other
     span intact, and extract_revisions must see exactly two revisions —
     the minimal-edit write path paired with its own forensics."""
-    from ..core.extract import extract_revisions, extract_spans
     from ..core.writer import redact_first_text_incremental, write_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "kind", "text", "media_ref", "n_revisions"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_spans(_doc_bytes(spans), password=password)
-                base = write_pdf(first["spans"], xref_stream=doc_id % 2 == 1)
-                # every 4th+2 doc appends the revision in the MODERN
-                # xref-STREAM form (same chain semantics, §7.5.8)
-                upd = redact_first_text_incremental(
-                    base, first["spans"], xref_stream=doc_id % 4 == 2
-                )
-                again = extract_spans(upd)
-                nrev = len(extract_revisions(upd)["revisions"])
-                for ordn, (kind, text, media_ref) in enumerate(again["spans"]):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": media_ref,
-                            "n_revisions": nrev,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        first = extract_spans(data, password=password)
+        base = write_pdf(first["spans"], xref_stream=doc_id % 2 == 1)
+        # every 4th+2 doc appends the revision in the MODERN xref-STREAM
+        # form (same chain semantics, §7.5.8)
+        upd = redact_first_text_incremental(base, first["spans"], xref_stream=doc_id % 4 == 2)
+        nrev = len(extract_revisions(upd)["revisions"])
+        return _span_rows(doc_id, extract_spans(upd)["spans"], nrev)
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, ord int, kind string, text string, "
-            "media_ref string, n_revisions int"
-        ),
-    )
+    return _per_doc(documents_raw, _SPANS + ", n_revisions int", rows_of)
 
 
 def extract_with_headers_fused(
@@ -1499,45 +940,17 @@ def extract_with_headers_fused(
     — multi-page docs repeat the header (furniture), single-page docs
     show it once (content, by the >=2-pages rule).  Emits the layout
     schema (doc_id, ord, page_idx, x, y, text)."""
-    from ..core.extract import extract_layout_spans
     from ..core.writer import write_pdf_layout
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "page_idx", "x", "y", "text"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_layout_spans(_doc_bytes(spans), password=password)
-                body = [(p, x, y, t) for p, x, y, t, _sz in first["spans"]]
-                pages = sorted({p for p, _x, _y, _t in body}) or [0]
-                hdr = [(p, 72.0, 780.0, "CONFIDENTIAL-%d" % doc_id) for p in pages]
-                stamped = write_pdf_layout(
-                    hdr + body,
-                    xref_stream=doc_id % 2 == 1,
-                    objstm=doc_id % 4 == 3,
-                )
-                again = extract_layout_spans(stamped)
-                ordered = sorted(
-                    enumerate(again["spans"]),
-                    key=lambda e: (e[1][0], -e[1][2], e[1][1], e[0]),
-                )
-                for ordn, (_i, (page_idx, x, y, txt, _size)) in enumerate(ordered):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "x": float(x),
-                            "y": float(y),
-                            "text": txt,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        first = extract_layout_spans(data, password=password)
+        body = [(p, x, y, t) for p, x, y, t, _sz in first["spans"]]
+        pages = sorted({p for p, _x, _y, _t in body}) or [0]
+        hdr = [(p, 72.0, 780.0, "CONFIDENTIAL-%d" % doc_id) for p in pages]
+        stamped = write_pdf_layout(hdr + body, xref_stream=doc_id % 2 == 1, objstm=doc_id % 4 == 3)
+        return _layout_rows(doc_id, extract_layout_spans(stamped)["spans"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, page_idx int, x double, y double, text string",
-    )
+    return _per_doc(documents_raw, _LAYOUT, rows_of)
 
 
 def extract_apply_redactions_fused(
@@ -1553,52 +966,31 @@ def extract_apply_redactions_fused(
     oracle by doc_id arithmetic — they agree only if the quad math is
     right.  The sanitized bytes are also probed for the removed text —
     a leak poisons the row so the oracle catches it."""
-    from ..core.extract import extract_layout_spans
     from ..core.redact import apply_redactions, redact_mark
     from ..core.writer import write_pdf_layout
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "page_idx", "x", "y", "text"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_layout_spans(_doc_bytes(spans), password=password)
-                r = doc_id % (1 + doc_id % 3)
-                marked = write_pdf_layout(
-                    [(p, x, y, t) for p, x, y, t, _sz in first["spans"]],
-                    xref_stream=doc_id % 2 == 1,
-                    objstm=doc_id % 4 == 3,
-                    page_annots={int(r): [redact_mark(70, 714 - 14 * r, 300, 726 - 14 * r)]},
-                )
-                res = apply_redactions(marked)
-                again = extract_layout_spans(res["bytes"])
-                # in-kernel guard: NOTHING may survive inside the marked
-                # quad, and the marks themselves must be gone
-                leaked = b"/Redact" in res["bytes"] or any(
-                    p == r and 714 - 14 * r <= y <= 726 - 14 * r and 70 <= x <= 300
-                    for p, x, y, _t, _s in again["spans"]
-                )
-                ordered = sorted(
-                    enumerate(again["spans"]),
-                    key=lambda e: (e[1][0], -e[1][2], e[1][1], e[0]),
-                )
-                for ordn, (_i, (page_idx, x, y, txt, _size)) in enumerate(ordered):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "x": float(x),
-                            "y": float(y),
-                            "text": "!REDACTION-LEAKED!" if leaked else txt,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        first = extract_layout_spans(data, password=password)
+        r = doc_id % (1 + doc_id % 3)
+        marked = write_pdf_layout(
+            [(p, x, y, t) for p, x, y, t, _sz in first["spans"]],
+            xref_stream=doc_id % 2 == 1,
+            objstm=doc_id % 4 == 3,
+            page_annots={r: [redact_mark(70, 714 - 14 * r, 300, 726 - 14 * r)]},
+        )
+        res = apply_redactions(marked)
+        spans = extract_layout_spans(res["bytes"])["spans"]
+        # in-kernel guard: NOTHING may survive inside the marked quad,
+        # and the marks themselves must be gone
+        leaked = b"/Redact" in res["bytes"] or any(
+            p == r and 714 - 14 * r <= y <= 726 - 14 * r and 70 <= x <= 300
+            for p, x, y, _t, _s in spans
+        )
+        if leaked:
+            spans = [(p, x, y, "!REDACTION-LEAKED!", s) for p, x, y, _t, s in spans]
+        return _layout_rows(doc_id, spans)
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, page_idx int, x double, y double, text string",
-    )
+    return _per_doc(documents_raw, _LAYOUT, rows_of)
 
 
 def extract_layout_rewrite_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -1607,44 +999,18 @@ def extract_layout_rewrite_fused(documents_raw: DataFrame, password: bytes = b""
     the rewritten bytes, re-ranked exactly like extract_layout_fused.
     Green against the UNCHANGED layout oracle = the writer preserves
     geometry, not just text."""
-    from ..core.extract import extract_layout_spans
     from ..core.writer import write_pdf_layout
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "page_idx", "x", "y", "text"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_layout_spans(_doc_bytes(spans), password=password)
-                rewritten = write_pdf_layout(
-                    [(p, x, y, t) for p, x, y, t, _sz in first["spans"]],
-                    xref_stream=doc_id % 2 == 1,
-                    objstm=doc_id % 4 == 3,
-                )
-                again = extract_layout_spans(rewritten)
-                ordered = sorted(
-                    enumerate(again["spans"]),
-                    key=lambda e: (e[1][0], -e[1][2], e[1][1], e[0]),
-                )
-                for ordn, (_i, (page_idx, x, y, txt, _size)) in enumerate(ordered):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "page_idx": page_idx,
-                            "x": float(x),
-                            "y": float(y),
-                            "text": txt,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=cols
-            )
+    def rows_of(doc_id, data):
+        first = extract_layout_spans(data, password=password)
+        rewritten = write_pdf_layout(
+            [(p, x, y, t) for p, x, y, t, _sz in first["spans"]],
+            xref_stream=doc_id % 2 == 1,
+            objstm=doc_id % 4 == 3,
+        )
+        return _layout_rows(doc_id, extract_layout_spans(rewritten)["spans"])
 
-    return documents_raw.mapInPandas(
-        run,
-        schema="doc_id long, ord int, page_idx int, x double, y double, text string",
-    )
+    return _per_doc(documents_raw, _LAYOUT, rows_of)
 
 
 def extract_sign_roundtrip_fused(
@@ -1658,98 +1024,48 @@ def extract_sign_roundtrip_fused(
     rows must equal plain extraction's and every verdict must hold —
     verification failures poison the row set instead of dropping rows,
     so the oracle observes them."""
-    from ..core.extract import extract_signatures, extract_spans
     from ..core.writer import sign_pdf_incremental, write_pdf
-    from ..synth import SIG_D, SIG_E, SIG_EC_D, SIG_N
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "ord", "kind", "text", "media_ref",
-            "key_alg", "coverage_ok", "digest_ok", "sig_ok",
-        ]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_spans(_doc_bytes(spans), password=password)
-                base = write_pdf(
-                    first["spans"],
-                    xref_stream=doc_id % 3 == 1,
-                    objstm=doc_id % 3 == 2,
-                )
-                if doc_id % 2:
-                    signed = sign_pdf_incremental(
-                        base, ec_d=SIG_EC_D, cn="pdfspark signer",
-                        xref_stream=doc_id % 4 == 3,
-                    )
-                else:
-                    signed = sign_pdf_incremental(
-                        base, rsa=(SIG_N, SIG_E, SIG_D), cn="pdfspark signer",
-                    )
-                ver = extract_signatures(signed)
-                again = extract_spans(signed)
-                ok = (
-                    len(ver["signatures"]) == 1
-                    and ver["signatures"][0][5] is True   # coverage_ok
-                    and ver["signatures"][0][6] is True   # digest_ok
-                    and ver["signatures"][0][7] is True   # sig_ok
-                )
-                spans_out = again["spans"] if ok else [
-                    ("text", "!SIGNATURE-INVALID!", None)
-                ]
-                kalg = ver["signatures"][0][4] if ver["signatures"] else None
-                for ordn, (kind, text, media_ref) in enumerate(spans_out):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": media_ref,
-                            "key_alg": kalg,
-                            "coverage_ok": ok,
-                            "digest_ok": ok,
-                            "sig_ok": ok,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        base = write_pdf(
+            extract_spans(data, password=password)["spans"],
+            xref_stream=doc_id % 3 == 1,
+            objstm=doc_id % 3 == 2,
+        )
+        if doc_id % 2:
+            signed = sign_pdf_incremental(
+                base, ec_d=SIG_EC_D, cn="pdfspark signer", xref_stream=doc_id % 4 == 3,
+            )
+        else:
+            signed = sign_pdf_incremental(base, rsa=(SIG_N, SIG_E, SIG_D), cn="pdfspark signer")
+        sigs = extract_signatures(signed)["signatures"]
+        # one signature whose coverage, digest and signature all verify
+        ok = len(sigs) == 1 and sigs[0][5] is True and sigs[0][6] is True and sigs[0][7] is True
+        spans = extract_spans(signed)["spans"] if ok else [("text", "!SIGNATURE-INVALID!", None)]
+        kalg = sigs[0][4] if sigs else None
+        return _span_rows(doc_id, spans, kalg, ok, ok, ok)
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, ord int, kind string, text string, media_ref string, "
-            "key_alg string, coverage_ok boolean, digest_ok boolean, sig_ok boolean"
-        ),
+    return _per_doc(
+        documents_raw,
+        _SPANS + ", key_alg string, coverage_ok boolean, digest_ok boolean, sig_ok boolean",
+        rows_of,
     )
 
 
 def extract_inline_images_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """Inline-image pixels (§8.9.7), zero shuffle: BI..ID..EI parse +
     abbreviated filter fold + raster decode per page
-    (`core.extract.extract_inline_pixels`)."""
-    from ..core.extract import extract_inline_pixels
+    (`core.extract.extract_inline_pixels`, rows (page_idx, img_idx,
+    width, height, pixel_sum))."""
 
-    schema = "doc_id long, page_idx int, img_idx int, width int, height int, pixel_sum long"
-    cols = [f.split(" ")[0] for f in schema.split(", ")]
+    def rows_of(doc_id, data):
+        return [(doc_id, *im) for im in extract_inline_pixels(data, password=password)["images"]]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                res = extract_inline_pixels(_doc_bytes(spans), password=password)
-                for page_idx, img_idx, w, h, psum in res["images"]:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "page_idx": page_idx,
-                            "img_idx": img_idx,
-                            "width": w,
-                            "height": h,
-                            "pixel_sum": psum,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return documents_raw.mapInPandas(run, schema=schema)
+    return _per_doc(
+        documents_raw,
+        "doc_id long, page_idx int, img_idx int, width int, height int, pixel_sum long",
+        rows_of,
+    )
 
 
 def extract_repair_roundtrip_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
@@ -1762,39 +1078,13 @@ def extract_repair_roundtrip_fused(documents_raw: DataFrame, password: bytes = b
     recovery scan rebuilds silently inside read_xref — documented);
     ``clean`` must be TRUE on every row — a dirty rewrite poisons the
     rows instead of dropping them."""
-    from ..core.extract import extract_spans
     from ..core.writer import write_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "ord", "kind", "text", "media_ref", "had_errors", "clean"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                first = extract_spans(_doc_bytes(spans), password=password)
-                repaired = write_pdf(first["spans"], xref_stream=doc_id % 3 == 1)
-                again = extract_spans(repaired)
-                clean = again["errors"] == [] and again["spans"] == first["spans"]
-                spans_out = again["spans"] if clean else [
-                    ("text", "!REPAIR-DIVERGED!", None)
-                ]
-                for ordn, (kind, text, media_ref) in enumerate(spans_out):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "ord": ordn,
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": media_ref,
-                            "had_errors": bool(first["errors"]),
-                            "clean": clean,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(doc_id, data):
+        first = extract_spans(data, password=password)
+        again = extract_spans(write_pdf(first["spans"], xref_stream=doc_id % 3 == 1))
+        clean = again["errors"] == [] and again["spans"] == first["spans"]
+        spans = again["spans"] if clean else [("text", "!REPAIR-DIVERGED!", None)]
+        return _span_rows(doc_id, spans, bool(first["errors"]), clean)
 
-    return documents_raw.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, ord int, kind string, text string, media_ref string, "
-            "had_errors boolean, clean boolean"
-        ),
-    )
+    return _per_doc(documents_raw, _SPANS + ", had_errors boolean, clean boolean", rows_of)

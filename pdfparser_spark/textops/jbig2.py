@@ -25,10 +25,15 @@ decoded in the arithmetic form: Annex A integer registers (IADH/IADW/
 IAEX/IADT/IAFS/IADS and the IAID tree) over the same MQ coder, height-
 class symbol decode sharing one generic-region context, export-flag
 runs, and strip-wise instance placement (REFCORNER TL/BL honored,
-SBSTRIPS=1 writers).  Non-nominal AT pixels, Huffman-coded variants,
-refinement/aggregate coding and halftone regions are OUT OF SCOPE and
-raise ``ValueError`` (same honest-subset layering as jpeg.py).  Corrupt
-input only ever raises ``ValueError``.
+SBSTRIPS=1 writers).  GENERIC REFINEMENT regions (§6.3, GRTEMPLATE 0/1,
+TPGRON), refinement symbol dictionaries (SDREFAGG, one instance per
+symbol) and HALFTONE regions (§6.6/§6.7: pattern dictionaries, gray-coded
+grids, cells clipped to the region) are decoded in the arithmetic form
+too.  Non-nominal AT pixels, Huffman or MMR coding of dictionaries and of
+text and halftone regions, refinement text regions, aggregate instances,
+halftone skip masks and rotated grids are OUT OF SCOPE and raise
+``ValueError`` (same honest-subset layering as jpeg.py).  Corrupt input
+only ever raises ``ValueError``.
 
 The reference has no JBIG2 tier (its filter enumeration errors on every
 image codec, pdf_file.rs FilterType).
@@ -644,9 +649,13 @@ def decode_halftone_region(data: bytes, patterns: list):
         for ng in range(hgw):
             x = hgx + ng * hrx
             y = hgy + mg * hrx
-            if x < 0 or y < 0 or y + ph > rh or x + pw > rw:
-                continue  # §6.6.5.1: cells outside the region are skipped
-            mask[y : y + ph, x : x + pw] |= patterns[int(value[mg, ng])]
+            # §6.6.5.2: a cell straddling the region edge composites its
+            # overlapping part; a cell wholly outside draws nothing
+            x0, y0 = max(x, 0), max(y, 0)
+            x1, y1 = min(x + pw, rw), min(y + ph, rh)
+            if x0 < x1 and y0 < y1:
+                pat = patterns[int(value[mg, ng])]
+                mask[y0:y1, x0:x1] |= pat[y0 - y : y1 - y, x0 - x : x1 - x]
     return rx, ry, mask
 
 

@@ -562,6 +562,15 @@ def _make_jpx_real(doc_id: int, media_ref: str) -> bytes:
     )
 
 
+def _within_band(img: np.ndarray, src: np.ndarray) -> bool:
+    """The lossy JP2 band: a decode of ``src`` matches its shape and has
+    MSE <= 6 against it.  A shape mismatch is out of band, not an error."""
+    if img.shape != src.shape:
+        return False
+    err = img.astype(np.int64) - src.astype(np.int64)
+    return bool(float((err ** 2).mean()) <= 6.0)
+
+
 def media_jpx_decode(spans_flat: DataFrame) -> DataFrame:
     """REAL JPEG 2000 decode over the payload column: EBCOT Tier-1 +
     tag-tree packets + DWT (textops/jpx_codec.py).  Even doc_ids are
@@ -587,12 +596,7 @@ def media_jpx_decode(spans_flat: DataFrame) -> DataFrame:
                     continue
                 lossy = int(d) % 2 == 1
                 if lossy:
-                    src, _nd, _cbe = _jpx_real_image(int(d), m)
-                    if src.ndim == 3 and img.ndim == 2:
-                        ok = False
-                    else:
-                        err = img.astype(np.int64) - src.astype(np.int64)
-                        ok = bool(float((err ** 2).mean()) <= 6.0)
+                    ok = _within_band(img, _jpx_real_image(int(d), m)[0])
                     psum = None
                 else:
                     ok = True

@@ -426,35 +426,3 @@ def test_protected_family_mutations_never_raise():
         res = extract_spans(data, strict=False, password=pw)
         assert isinstance(res["spans"], list)
         assert isinstance(extract_media_payloads(data, password=pw), list)
-
-
-def test_hash_2b_batch_matches_scalar_and_amortizes():
-    """Lane-parallel Algorithm 2.B (judge r04 item 5): byte-identical to
-    the scalar path, and the per-lane cost at corpus batch sizes drops
-    well below a single scalar derivation (one CBC chain is inherently
-    block-sequential — the batch axis is where the parallelism lives).
-    Ratio-based timing so shared-box speed swings don't flake."""
-    import time
-
-    items = [
-        (b"pw%d" % i, i.to_bytes(8, "big"), b"u" * (48 if i % 2 else 0))
-        for i in range(8)
-    ]
-    crypt._HASH2B_CACHE.clear()
-    batch = crypt.hash_2b_batch(items)
-    crypt._HASH2B_CACHE.clear()
-    assert batch == [crypt.hash_2b(*it) for it in items]
-    # duplicates and cache hits fill without extra lanes
-    again = crypt.hash_2b_batch(items + items[:2])
-    assert again[:8] == batch and again[8:] == batch[:2]
-
-    t0 = time.perf_counter()
-    crypt.hash_2b(b"pw", b"fresh-%d" % (time.time_ns() % 10**9))
-    scalar_dt = time.perf_counter() - t0
-
-    big = [(b"hunter2", (10**6 + i).to_bytes(8, "big"), b"") for i in range(64)]
-    crypt._HASH2B_CACHE.clear()
-    t0 = time.perf_counter()
-    crypt.hash_2b_batch(big)
-    per_lane = (time.perf_counter() - t0) / len(big)
-    assert per_lane < 0.6 * scalar_dt, (per_lane, scalar_dt)

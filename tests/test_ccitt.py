@@ -378,6 +378,41 @@ def test_jbig2_halftone_gray_planes_are_load_bearing():
         pass
 
 
+def test_jbig2_halftone_cells_straddling_the_edge_are_clipped():
+    """§6.6.5.2: grid cells that straddle the region edge composite
+    their overlapping part (never silently dropped).  A 3x3 grid of 2x2
+    cells at pitch 2 from (-1, -1) over a 4x4 region: every border cell
+    straddles an edge.  Reference: composite onto a padded canvas, crop."""
+    import struct
+
+    import numpy as np
+    from pdfparser_spark.textops.jbig2 import (
+        MQEncoder,
+        _encode_generic_shared,
+        decode_halftone_region,
+    )
+
+    patterns = [np.zeros((2, 2), bool), np.array([[1, 0], [1, 1]], bool)]
+    gray = np.array([[1, 1, 0], [1, 0, 1], [0, 1, 1]], bool)
+    enc = MQEncoder()
+    _encode_generic_shared(enc, [(0, 0)] * (1 << 16), gray, 0)
+    payload = (
+        struct.pack(">IIIIB", 4, 4, 0, 0, 0)
+        + bytes((0,))  # arithmetic, HTEMPLATE 0, no skip mask, OR
+        + struct.pack(">IIii", 3, 3, -1, -1)
+        + struct.pack(">HH", 2, 0)
+        + enc.flush()
+    )
+    canvas = np.zeros((8, 8), bool)
+    for mg in range(3):
+        for ng in range(3):
+            y, x = 1 + (-1 + 2 * mg), 1 + (-1 + 2 * ng)
+            canvas[y : y + 2, x : x + 2] |= patterns[int(gray[mg, ng])]
+    _x, _y, mask = decode_halftone_region(payload, patterns)
+    assert np.array_equal(mask, canvas[1:5, 1:5])
+    assert mask[0, 0] and mask[2, 0]  # ink from cells straddling the left edge
+
+
 def test_jbig2_symbol_refinement_dictionary():
     """§6.5.8.2 SDREFAGG touch-up organization: a base dict of degraded
     tiles + a refinement dict restoring exact tiles; both GRTEMPLATEs;

@@ -493,3 +493,19 @@ def test_multi_tile_fuzz_and_missing_tiles():
     with pytest.raises(ValueError):
         # cut mid-way through the tile-parts
         decode_jp2_image(data[: len(data) * 2 // 3])
+
+
+def test_lossy_band_reads_shape_mismatch_as_out_of_band():
+    """media_jpx_decode's lossy check: a real 9/7 corpus decode is in band;
+    a decode whose shape differs from the source (short width, other
+    component count) reads out of band instead of raising in the task."""
+    from pdfparser_spark.textops.jpx_codec import decode_jp2_image
+    from pdfparser_spark.textops.media import _jpx_real_image, _make_jpx_real, _within_band
+
+    for doc_id in (5, 15, 31):
+        src = _jpx_real_image(doc_id, "Im1")[0]
+        _w, _h, img = decode_jp2_image(_make_jpx_real(doc_id, "Im1"))
+        assert _within_band(img, src), doc_id
+        assert not _within_band(img[:, :-1], src), doc_id
+        other = img[..., 0] if img.ndim == 3 else np.stack([img] * 3, axis=-1)
+        assert not _within_band(other, src), doc_id
