@@ -14,8 +14,9 @@ in-sandbox rendering of BASELINE.json's N -> 4N executor criterion).
 
 Scaling methodology: the same extraction job (decode -> tokenize ->
 classify -> assemble over a pre-materialized salted-layout corpus, no
-checkpoint reuse) at ``local[N]`` and ``local[4N]`` (default 8 vs 32) on
-the identical input.  Efficiency = (docs_per_sec_4N / docs_per_sec_N) / 4.
+checkpoint reuse) at ``local[N]`` and ``local[4N]`` (N = CPUS // 4, at
+least 2) on the identical input.  Efficiency = (docs_per_sec_4N /
+docs_per_sec_N) / 4.
 The measurement is slow (two fresh sessions over a x96 corpus), so it runs
 via ``python bench.py --scaling`` which persists ``BENCH/scaling.json`` +
 ``BENCH/BASELINE.md``; default runs are headline-only and attach the most
@@ -41,7 +42,7 @@ from pdfparser_spark.stages import extract_fused, synthesize_corpus  # noqa: E40
 from pdfparser_spark.textops import ann, dedup, graph, model, textqc  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # repeat factor for the scaling corpus: enough per-core work that JVM/task
 # overhead doesn't dominate the local[4N] run.  Per-doc kernel cost on the
 # synthetic corpus is ~1ms core-time per stage chain, so 96 x 5000 sf0.1

@@ -14,17 +14,25 @@ UDFs.  End-to-end flow mirrors the reference's
 Strict ("sensitive", pdf_file.rs:858-877) vs lenient ("stoic",
 pdf_file.rs:879-889): strict returns no spans if any error was recorded;
 lenient keeps going and reports errors as metric rows.
+
+Every kernel opens its document through :func:`open_document` (xref ->
+decryptor -> parse -> decrypt, then the resolved /Root), calls
+:func:`decode_doc_streams` itself when it reads stream payloads, and runs
+its body inside ``with _contained(errors):`` so a corrupt document ends
+as error rows, never as an exception.  New kernels follow the same shape.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
+from typing import NamedTuple
 
 from . import crypt
 from .cmap import CMap, differences_decoder, pdf_text_string, simple_decode
 from .content import do_spans, tokenize_content
-from .errors import DOC_TREE_ERROR, FILTER_ERROR, REFERENCE_ERROR, FilterError, ParsingError, PdfError
+from .errors import DOC_TREE_ERROR, FILTER_ERROR, REFERENCE_ERROR, FilterError, PdfError
 from .filters import build_filter_chain, decode_chain, decode_media_prefix, is_media_chain
 from .objects import Name, Ref, Stream, get_resolved, resolve
 from .tokenizer import Tokenizer
@@ -277,6 +285,55 @@ def _apply_decryption(decryptor, objects: dict, objstm_expanded: set) -> None:
             objects[(obj_id, gen)] = dec_value(val, obj_id, gen)
 
 
+class Document(NamedTuple):
+    """An opened document: the trailer, every parsed object keyed by
+    ``(id, gen)`` (decrypted, stream filters NOT yet decoded) and the
+    resolved ``/Root`` catalog, None when it is missing or not a dict."""
+
+    trailer: dict
+    objects: dict
+    root: dict | None
+
+
+def open_document(data: bytes, password: bytes, errors: list) -> Document:
+    """The one document-open path (the reference builds trailer, xref and
+    object cache once in ``pdf_file.rs``): xref chain or damaged-file
+    recovery -> decryptor -> parse every object (ObjStm containers are
+    decrypted before expansion) -> decrypt in place.  Raises ``PdfError``
+    when no object table can be built; per-object faults land in
+    ``errors``.  Kernels that read stream payloads call
+    :func:`decode_doc_streams` on the result."""
+    offsets, trailer, compressed = read_xref(data)
+    decryptor = _build_decryptor(data, trailer, offsets, password)
+    objstm_expanded: set = set()
+    objects = parse_all_objects(data, offsets, compressed, errors, decryptor, objstm_expanded)
+    _apply_decryption(decryptor, objects, objstm_expanded)
+    root = get_resolved(trailer, "Root", objects)
+    return Document(trailer, objects, root if isinstance(root, dict) else None)
+
+
+@contextlib.contextmanager
+def _contained(errors: list):
+    """Lenient containment for a kernel body: a ``PdfError`` becomes its
+    own error row, anything else a ParsingError row — a corrupt document
+    must not kill the Spark task.  Rows already emitted are kept."""
+    try:
+        yield
+    except PdfError as e:
+        errors.append((e.kind, e.stage, str(e)))
+    except Exception as e:
+        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
+
+
+def _require_pages(root, objects: dict):
+    """The spec-strict catalog guard: the ``/Pages`` node of ``root``, or
+    the ``PdfError`` for a missing catalog or page tree."""
+    if root is None:
+        raise PdfError("trailer /Root missing or dangling", kind=REFERENCE_ERROR, stage="assemble")
+    pages = get_resolved(root, "Pages", objects)
+    if pages is None:
+        raise PdfError("catalog /Pages missing", kind=DOC_TREE_ERROR, stage="assemble")
+    return pages
 
 
 def classify_stream(attrs: dict, objects: dict) -> str:
@@ -782,25 +839,14 @@ def decode_document(data: bytes, password: bytes = b""):
     fonts: list = []
     xobjs: list = []
     n_objects = n_pages = n_streams = 0
-    try:
+    with _contained(errors):
         version = sniff_version(data)
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+        trailer, objects, root = open_document(data, password, errors)
         n_objects = len(objects)
         decode_doc_streams(objects, errors)
         n_streams = sum(1 for v in objects.values() if isinstance(v, Stream))
 
-        root = get_resolved(trailer, "Root", objects)
-        if not isinstance(root, dict):
-            raise PdfError("trailer /Root missing or dangling", kind=REFERENCE_ERROR, stage="assemble")
-        pages_node = get_resolved(root, "Pages", objects)
-        if pages_node is None:
-            raise PdfError("catalog /Pages missing", kind=DOC_TREE_ERROR, stage="assemble")
+        pages_node = _require_pages(root, objects)
         pages = _walk_pages(pages_node, objects, errors)
         n_pages = len(pages)
 
@@ -897,10 +943,6 @@ def decode_document(data: bytes, password: bytes = b""):
             xnames = [str(x) for x in xdict] if isinstance(xdict, dict) else []
             for xname in dict.fromkeys(xnames + extra_xnames):
                 xobjs.append((page_idx, xname))
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {
         "version": version,
         "contents": contents,
@@ -968,15 +1010,10 @@ def extract_image_xobjects(
     contributes no rows rather than killing the task."""
     errors: list = []
     out: list[tuple[str, bytes, dict]] = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(data, offsets, compressed, errors, decryptor, objstm_expanded)
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        root = get_resolved(trailer, "Root", objects)
-        pages_node = get_resolved(root, "Pages", objects) if isinstance(root, dict) else None
+        pages_node = get_resolved(root, "Pages", objects)
         if pages_node is None:
             return out
         seen: set = set()  # pages often share Resources: one row per stream
@@ -1037,10 +1074,6 @@ def extract_image_xobjects(
                             except (FilterError, PdfError):
                                 meta["smask"] = None  # lenient: base image stands
                         out.append((str(xname), payload, meta))
-    except PdfError:
-        return out
-    except Exception:  # lenient
-        return out
     return out
 
 
@@ -1061,27 +1094,17 @@ def extract_spans(data: bytes, strict: bool = False, password: bytes = b""):
     version = None
     spans: list = []
     n_objects = n_pages = n_streams = 0
-    try:
+    with _contained(errors):
         version = sniff_version(data)
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+        trailer, objects, root = open_document(data, password, errors)
         n_objects = len(objects)
         decode_doc_streams(objects, errors)
         n_streams = sum(1 for v in objects.values() if isinstance(v, Stream))
 
-        # B1: trailer -> Root (doc_tree.rs:147-150)
-        root = get_resolved(trailer, "Root", objects)
-        pages_node = (
-            get_resolved(root, "Pages", objects) if isinstance(root, dict) else None
-        )
-        if pages_node is not None:
-            pages = _walk_pages(pages_node, objects, errors)
-        else:
+        # B1: trailer -> Root -> Pages (doc_tree.rs:147-150)
+        try:
+            pages_node = _require_pages(root, objects)
+        except PdfError as err:
             # catalog-loss repair (the real-world mutool/pdfium move): a
             # corrupt or missing /Root//Pages degrades to an ORPHAN-PAGE
             # SCAN — every parsed dict with /Type /Page, in object-id
@@ -1089,24 +1112,21 @@ def extract_spans(data: bytes, strict: bool = False, password: bytes = b""):
             # non-adversarial writer).  Catalog-scoped semantics
             # (optional-content config, names, outlines) are gone with
             # the catalog; strict mode keeps the spec-strict raise.
-            err = (
-                PdfError("trailer /Root missing or dangling", kind=REFERENCE_ERROR, stage="assemble")
-                if not isinstance(root, dict)
-                else PdfError("catalog /Pages missing", kind=DOC_TREE_ERROR, stage="assemble")
-            )
             if strict:
-                raise err
+                raise
             pages = [
                 v
                 for _key, v in sorted(objects.items())
                 if isinstance(v, dict) and str(v.get("Type")) == "Page"
             ]
             if not pages:
-                raise err
+                raise
             errors.append(
                 (err.kind, "assemble", f"{err}; recovered {len(pages)} orphan pages")
             )
             root = None
+        else:
+            pages = _walk_pages(pages_node, objects, errors)
         n_pages = len(pages)
 
         # per-page: tokenize content (Form XObjects executed in place),
@@ -1157,12 +1177,6 @@ def extract_spans(data: bytes, strict: bool = False, password: bytes = b""):
                         elif isinstance(x, (int, float)) and x <= KERN_SPACE_THRESHOLD:
                             parts.append(" ")
                     spans.append(("text", "".join(parts), None))
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except ParsingError as e:  # pragma: no cover - subclass of PdfError
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient catch-all: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
 
     if strict and errors:
         spans = []
@@ -1189,71 +1203,62 @@ def extract_layout_spans(data: bytes, password: bytes = b""):
     the main extraction's interleaved output)."""
     errors: list = []
     out: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        root = get_resolved(trailer, "Root", objects)
-        if not isinstance(root, dict):
-            raise PdfError("trailer /Root missing or dangling", kind=REFERENCE_ERROR, stage="assemble")
-        pages_node = get_resolved(root, "Pages", objects)
-        if pages_node is None:
-            raise PdfError("catalog /Pages missing", kind=DOC_TREE_ERROR, stage="assemble")
-        pages = _walk_pages_inherited(pages_node, objects, errors)
-        font_cache: dict = {}
-        off_ids = _off_ocg_ids(root, objects)
-        for page_idx, (page, inh) in enumerate(pages):
-            resources = inh.get("Resources") or {}
-            # /Rotate normalization (inheritable, §7.7.3.4): report line
-            # origins in READING space so columns/paragraph logic is
-            # rotation-invariant — a 90/270 page swaps effective dims
-            rot = _page_rotation(inh)
-            pw, ph = _page_dims(inh)
-            content = _page_content_bytes(page, objects, errors)
-            for ev, fonts in _content_events(
-                content, resources, objects, errors, layout=True, off_ids=off_ids
-            ):
-                if ev[0] == "atext":
-                    rx, ry = _unrotate(ev[4], ev[5], rot, pw, ph)
-                    out.append((page_idx, rx, ry, pdf_text_string(ev[3]), ev[6]))
-                    continue
-                if ev[0] not in ("text", "textarr"):
-                    continue
-                font_name = ev[2]
-                fkey = (id(fonts), font_name or "")
-                if fkey not in font_cache:
-                    fobj = fonts.get(font_name) if isinstance(fonts, dict) else None
-                    font_cache[fkey] = _font_decoder(fobj, objects, errors)
-                dec = font_cache[fkey]
-                if ev[0] == "text":
-                    txt = dec(ev[3])
-                else:
-                    # TJ array: numeric elements are kerning adjustments in
-                    # thousandths of text-space units (ISO 32000 §9.4.3); a
-                    # gap at/beyond the threshold is an implied word break
-                    # (the layout-analysis convention — writers often kern
-                    # words apart instead of emitting space glyphs).  The
-                    # armored family's -120 intra-phrase kern stays below
-                    # the threshold, so spaced text is never double-spaced.
-                    parts = []
-                    for el in ev[3]:
-                        if isinstance(el, (bytes, bytearray)):
-                            parts.append(dec(el))
-                        elif isinstance(el, (int, float)) and el <= KERN_SPACE_THRESHOLD:
-                            parts.append(" ")
-                    txt = "".join(parts)
-                rx, ry = _unrotate(ev[4], ev[5], rot, pw, ph)
-                out.append((page_idx, rx, ry, txt, ev[6]))
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient catch-all, as extract_spans
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
+        _layout_spans(objects, root, errors, out)
     return {"spans": out, "errors": errors}
+
+
+def _layout_spans(objects: dict, root, errors: list, out: list) -> None:
+    """The walk behind :func:`extract_layout_spans`, over an opened
+    document whose streams are decoded.  Rows are appended to ``out`` as
+    they are emitted, so a fault mid-walk keeps the rows before it."""
+    pages = _walk_pages_inherited(_require_pages(root, objects), objects, errors)
+    font_cache: dict = {}
+    off_ids = _off_ocg_ids(root, objects)
+    for page_idx, (page, inh) in enumerate(pages):
+        resources = inh.get("Resources") or {}
+        # /Rotate normalization (inheritable, §7.7.3.4): report line
+        # origins in READING space so columns/paragraph logic is
+        # rotation-invariant — a 90/270 page swaps effective dims
+        rot = _page_rotation(inh)
+        pw, ph = _page_dims(inh)
+        content = _page_content_bytes(page, objects, errors)
+        for ev, fonts in _content_events(
+            content, resources, objects, errors, layout=True, off_ids=off_ids
+        ):
+            if ev[0] == "atext":
+                rx, ry = _unrotate(ev[4], ev[5], rot, pw, ph)
+                out.append((page_idx, rx, ry, pdf_text_string(ev[3]), ev[6]))
+                continue
+            if ev[0] not in ("text", "textarr"):
+                continue
+            font_name = ev[2]
+            fkey = (id(fonts), font_name or "")
+            if fkey not in font_cache:
+                fobj = fonts.get(font_name) if isinstance(fonts, dict) else None
+                font_cache[fkey] = _font_decoder(fobj, objects, errors)
+            dec = font_cache[fkey]
+            if ev[0] == "text":
+                txt = dec(ev[3])
+            else:
+                # TJ array: numeric elements are kerning adjustments in
+                # thousandths of text-space units (ISO 32000 §9.4.3); a
+                # gap at/beyond the threshold is an implied word break
+                # (the layout-analysis convention — writers often kern
+                # words apart instead of emitting space glyphs).  The
+                # armored family's -120 intra-phrase kern stays below
+                # the threshold, so spaced text is never double-spaced.
+                parts = []
+                for el in ev[3]:
+                    if isinstance(el, (bytes, bytearray)):
+                        parts.append(dec(el))
+                    elif isinstance(el, (int, float)) and el <= KERN_SPACE_THRESHOLD:
+                        parts.append(" ")
+                txt = "".join(parts)
+            rx, ry = _unrotate(ev[4], ev[5], rot, pw, ph)
+            out.append((page_idx, rx, ry, txt, ev[6]))
 
 
 def _parse_w_array(warr, objects: dict) -> dict:
@@ -1517,21 +1522,10 @@ def extract_advance_spans(data: bytes, password: bytes = b"", with_width: bool =
     with the replaced shows — same documented boundary as the cursor)."""
     errors: list = []
     out: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        root = get_resolved(trailer, "Root", objects)
-        if not isinstance(root, dict):
-            raise PdfError("trailer /Root missing or dangling", kind=REFERENCE_ERROR, stage="assemble")
-        pages_node = get_resolved(root, "Pages", objects)
-        if pages_node is None:
-            raise PdfError("catalog /Pages missing", kind=DOC_TREE_ERROR, stage="assemble")
+        pages_node = _require_pages(root, objects)
         pages = _walk_pages_inherited(pages_node, objects, errors)
         dec_cache: dict = {}
         w_cache: dict = {}
@@ -1598,10 +1592,6 @@ def extract_advance_spans(data: bytes, password: bytes = b"", with_width: bool =
                         cursor += adv
                     elif isinstance(el, (int, float)):
                         cursor -= int(round(el * fs)) * (100 if vert else tz)
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient catch-all, as extract_spans
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"spans": out, "errors": errors}
 
 
@@ -1662,20 +1652,13 @@ def extract_doc_meta(data: bytes, password: bytes = b""):
     first_outline_page = None
     n_outlines = 0
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         info = get_resolved(trailer, "Info", objects)
         if isinstance(info, dict):
             title = _as_text(get_resolved(info, "Title", objects))
             author = _as_text(get_resolved(info, "Author", objects))
             created = parse_pdf_date(get_resolved(info, "CreationDate", objects))
-        root = get_resolved(trailer, "Root", objects)
         if isinstance(root, dict):
             outl = get_resolved(root, "Outlines", objects)
             node = get_resolved(outl, "First", objects) if isinstance(outl, dict) else None
@@ -1690,10 +1673,6 @@ def extract_doc_meta(data: bytes, password: bytes = b""):
                 first_outline_page = _dest_page_index(
                     _dest_or_goto(first_node, objects), root, objects, errors
                 )
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {
         "title": title,
         "author": author,
@@ -1746,7 +1725,7 @@ def extract_linearization(data: bytes, password: bytes = b""):
         "l_ok": None, "n_ok": None, "o_ok": None, "t_ok": None, "h_ok": None,
     }
     errors: list = []
-    try:
+    with _contained(errors):
         lin = None
         m = _re.search(rb"(\d+)\s+\d+\s+obj", data[:2048])
         if m:
@@ -1781,14 +1760,7 @@ def extract_linearization(data: bytes, password: bytes = b""):
                 h_ok = False
         flags["h_ok"] = h_ok
         # /N and /O need the real parse (page tree through the xref chain)
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
-        root = get_resolved(trailer, "Root", objects)
+        trailer, objects, root = open_document(data, password, errors)
         if isinstance(root, dict):
             pages_node = get_resolved(root, "Pages", objects)
             nv = lin.get("N")
@@ -1800,10 +1772,6 @@ def extract_linearization(data: bytes, password: bytes = b""):
             fp = _first_page_obj_id(root, objects)
             if fp is not None and isinstance(ov, (int, float)):
                 flags["o_ok"] = int(ov) == fp
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {**flags, "errors": errors}
 
 
@@ -1823,15 +1791,8 @@ def extract_outline_tree(data: bytes, password: bytes = b""):
     the nested tier.  Lenient: damaged docs yield [] + error rows."""
     items: list = []
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
-        root = get_resolved(trailer, "Root", objects)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         if isinstance(root, dict):
             outl = get_resolved(root, "Outlines", objects)
             first = (
@@ -1860,10 +1821,6 @@ def extract_outline_tree(data: bytes, password: bytes = b""):
                 items.append((len(items), depth, title, target, closed))
                 stack.append((get_resolved(node, "Next", objects), depth))
                 stack.append((kids, depth + 1))
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"items": items, "errors": errors}
 
 
@@ -1972,15 +1929,8 @@ def extract_doc_graph(data: bytes, password: bytes = b""):
     links: list = []
     fields: list = []
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
-        root = get_resolved(trailer, "Root", objects)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         if isinstance(root, dict):
             root_pages = get_resolved(root, "Pages", objects)
             for p, page in enumerate(_walk_pages(root_pages, objects, errors)):
@@ -2052,10 +2002,6 @@ def extract_doc_graph(data: bytes, password: bytes = b""):
                         )
                         continue
                     _walk_field(fd, None, None, None, 0)
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"links": links, "fields": fields, "errors": errors}
 
 
@@ -2085,16 +2031,9 @@ def extract_graphics(data: bytes, password: bytes = b""):
         "rect_area": 0,
     }
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        root = get_resolved(trailer, "Root", objects)
         if isinstance(root, dict):
             root_pages = get_resolved(root, "Pages", objects)
             for page in _walk_pages(root_pages, objects, errors):
@@ -2104,10 +2043,6 @@ def extract_graphics(data: bytes, password: bytes = b""):
                 stats = graphics_stats(content)
                 for k in totals:
                     totals[k] += stats[k]
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     totals["errors"] = errors
     return totals
 
@@ -2136,16 +2071,9 @@ def extract_inline_pixels(data: bytes, password: bytes = b""):
 
     rows: list = []
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        root = get_resolved(trailer, "Root", objects)
         if isinstance(root, dict):
             root_pages = get_resolved(root, "Pages", objects)
             for page_idx, page in enumerate(_walk_pages(root_pages, objects, errors)):
@@ -2198,10 +2126,6 @@ def extract_inline_pixels(data: bytes, password: bytes = b""):
                         errors.append(
                             ("ParsingError", "classify", f"inline image: {e}")
                         )
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"images": rows, "errors": errors}
 
 
@@ -2221,16 +2145,9 @@ def extract_shadings(data: bytes, password: bytes = b""):
 
     rows: list = []
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        root = get_resolved(trailer, "Root", objects)
         if isinstance(root, dict):
             root_pages = get_resolved(root, "Pages", objects)
             for page_idx, page in enumerate(_walk_pages(root_pages, objects, errors)):
@@ -2279,10 +2196,6 @@ def extract_shadings(data: bytes, password: bytes = b""):
                         )
                     except (ValueError, TypeError, IndexError, KeyError):
                         continue  # lenient: skip the shading, keep the page
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"shadings": rows, "errors": errors}
 
 
@@ -2298,19 +2211,10 @@ def extract_font_programs(data: bytes, password: bytes = b""):
     code 32, None when unmapped).  Lenient like every kernel here."""
     rows: list = []
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)  # font programs may be filtered
-        root = get_resolved(trailer, "Root", objects)
-        root_pages = (
-            get_resolved(root, "Pages", objects) if isinstance(root, dict) else None
-        )
+        root_pages = get_resolved(root, "Pages", objects)
         from .cff import parse_cff_widths
         from .truetype import parse_truetype_widths
         from .type1 import parse_type1_widths
@@ -2348,10 +2252,6 @@ def extract_font_programs(data: bytes, password: bytes = b""):
                             break
                 w32 = table.get(32)
                 rows.append((p, str(fname), sub, prog, len(table), w32))
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"fonts": rows, "errors": errors}
 
 
@@ -2373,17 +2273,10 @@ def extract_attachments(data: bytes, password: bytes = b"", with_payload: bool =
     documents) needs the bytes, not just the digest."""
     atts: list = []
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        root = get_resolved(trailer, "Root", objects)
-        names = get_resolved(root, "Names", objects) if isinstance(root, dict) else None
+        names = get_resolved(root, "Names", objects)
         tree = (
             get_resolved(names, "EmbeddedFiles", objects)
             if isinstance(names, dict)
@@ -2431,10 +2324,6 @@ def extract_attachments(data: bytes, password: bytes = b"", with_payload: bool =
                     else None,
                 )
             atts.append(row)
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"attachments": atts, "errors": errors}
 
 
@@ -2544,21 +2433,10 @@ def extract_tagged_spans(data: bytes, password: bytes = b""):
     """
     errors: list = []
     out: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        root = get_resolved(trailer, "Root", objects)
-        if not isinstance(root, dict):
-            raise PdfError("trailer /Root missing or dangling", kind=REFERENCE_ERROR, stage="assemble")
-        pages_node = get_resolved(root, "Pages", objects)
-        if pages_node is None:
-            raise PdfError("catalog /Pages missing", kind=DOC_TREE_ERROR, stage="assemble")
+        pages_node = _require_pages(root, objects)
         pages = _walk_pages(pages_node, objects, errors)
 
         # logical rank per (page, mcid) + the leaf's /S type and its
@@ -2624,10 +2502,6 @@ def extract_tagged_spans(data: bytes, password: bytes = b""):
             # artifact/untagged content speaks the document default
             out.append((page_idx, ordn, None, doc_lang, txt))
             ordn += 1
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient catch-all, as extract_spans
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"spans": out, "errors": errors}
 
 
@@ -2647,15 +2521,10 @@ def extract_ccitt_images(data: bytes, password: bytes = b""):
     docs yield error rows, not exceptions."""
     errors: list = []
     out: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(data, offsets, compressed, errors, decryptor, objstm_expanded)
-        _apply_decryption(decryptor, objects, objstm_expanded)
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)  # sets stream kinds (image routing)
-        root = get_resolved(trailer, "Root", objects)
-        pages_node = get_resolved(root, "Pages", objects) if isinstance(root, dict) else None
+        pages_node = get_resolved(root, "Pages", objects)
         if pages_node is None:
             return {"images": out, "errors": errors}
         seen: set = set()
@@ -2725,10 +2594,6 @@ def extract_ccitt_images(data: bytes, password: bytes = b""):
                         b"",
                     )
                 )
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"images": out, "errors": errors}
 
 
@@ -2804,18 +2669,9 @@ def extract_page_labels(data: bytes, password: bytes = b""):
     label)], "errors"}``; lenient like every kernel entry point."""
     errors: list = []
     out: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(data, offsets, compressed, errors, decryptor, objstm_expanded)
-        _apply_decryption(decryptor, objects, objstm_expanded)
-        root = get_resolved(trailer, "Root", objects)
-        if not isinstance(root, dict):
-            raise PdfError("trailer /Root missing or dangling", kind=REFERENCE_ERROR, stage="assemble")
-        pages_node = get_resolved(root, "Pages", objects)
-        if pages_node is None:
-            raise PdfError("catalog /Pages missing", kind=DOC_TREE_ERROR, stage="assemble")
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
+        pages_node = _require_pages(root, objects)
         n_pages = len(_walk_pages(pages_node, objects, errors))
 
         ranges: list = []
@@ -2849,10 +2705,6 @@ def extract_page_labels(data: bytes, password: bytes = b""):
             else:
                 k, s, p, st = gov
                 out.append((idx, _format_page_label(s, p, st + (idx - k))))
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"labels": out, "errors": errors}
 
 
@@ -2875,16 +2727,9 @@ def extract_signatures(data: bytes, password: bytes = b""):
 
     sigs: list = []
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
-        root = get_resolved(trailer, "Root", objects)
-        acro = get_resolved(root, "AcroForm", objects) if isinstance(root, dict) else None
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
+        acro = get_resolved(root, "AcroForm", objects)
         farr = get_resolved(acro, "Fields", objects) if isinstance(acro, dict) else None
         si = 0
         for fref in farr if isinstance(farr, list) else []:
@@ -2921,10 +2766,6 @@ def extract_signatures(data: bytes, password: bytes = b""):
                 errors.append((DOC_TREE_ERROR, "classify", "malformed signature dict"))
             sigs.append((si, fname, signer, alg, key_alg, coverage, digest_ok, sig_ok))
             si += 1
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"signatures": sigs, "errors": errors}
 
 
@@ -2944,128 +2785,131 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
     Lenient, like every kernel here."""
     annots_out: list = []
     errors: list = []
-    try:
-        layout = extract_layout_spans(data, password=password)
-        errors.extend(layout["errors"])
-        by_page: dict = {}
-        for page_idx, x, y, txt, _size in layout["spans"]:
-            by_page.setdefault(page_idx, []).append((x, y, txt))
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, [], decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
-        root = get_resolved(trailer, "Root", objects)
-        root_pages = get_resolved(root, "Pages", objects) if isinstance(root, dict) else None
-        for p, page in enumerate(_walk_pages(root_pages, objects, errors)):
-            arr = get_resolved(page, "Annots", objects)
-            if not isinstance(arr, list):
-                continue
-            ai = 0
-            for aref in arr:
-                an = resolve(aref, objects)
-                if not isinstance(an, dict):
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
+        # Annotations are walked BEFORE stream decoding: a FreeText
+        # appearance decodes its own content, and its fonts decode without
+        # their /ToUnicode CMaps (the synth appearance draws plain codes
+        # under a CMap font; its oracle text depends on this).  Highlight
+        # text comes from the layout walk below, whose error rows precede
+        # this walk's.
+        walk_errors: list = []
+        quads: dict = {}  # annots_out index -> (page, QuadPoints numbers)
+        with _contained(walk_errors):
+            root_pages = get_resolved(root, "Pages", objects)
+            for p, page in enumerate(_walk_pages(root_pages, objects, walk_errors)):
+                arr = get_resolved(page, "Annots", objects)
+                if not isinstance(arr, list):
                     continue
-                sub = str(get_resolved(an, "Subtype", objects))
-                if sub not in ("Text", "Highlight", "FreeText"):
-                    continue
-                author = _as_text(get_resolved(an, "T", objects))
-                contents = _as_text(get_resolved(an, "Contents", objects))
-                covered = None
-                if sub == "FreeText":
-                    # §12.5.5: the annotation's VISIBLE text is drawn by
-                    # its /AP /N appearance Form XObject; /Contents is only
-                    # the fallback.  Tokenize the appearance with its own
-                    # /Resources (caller fallback per §8.10.2) and decode
-                    # the shows — covered_text = what a reader actually sees
-                    covered = ""
-                    ap = get_resolved(an, "AP", objects)
-                    nstream = (
-                        resolve(ap.get("N"), objects) if isinstance(ap, dict) else None
-                    )
-                    if isinstance(nstream, Stream):
-                        content = nstream.data
-                        if content is None:
-                            try:
-                                content = decode_chain(
-                                    nstream.raw,
-                                    build_filter_chain(
-                                        nstream.attrs, lambda v: resolve(v, objects)
-                                    ),
-                                )
-                            except (FilterError, PdfError):
-                                content = None
-                        fres = get_resolved(nstream.attrs, "Resources", objects)
-                        if not isinstance(fres, dict):
-                            fres = get_resolved(page, "Resources", objects) or {}
-                        if content:
-                            parts = []
-                            fcache: dict = {}
-                            for ev, fonts in _content_events(
-                                bytes(content), fres, objects, errors
-                            ):
-                                if ev[0] not in ("text", "textarr", "atext"):
-                                    continue
-                                if ev[0] == "atext":
-                                    parts.append(pdf_text_string(ev[3]))
-                                    continue
-                                fname = ev[2] or ""
-                                if fname not in fcache:
-                                    fobj = (
-                                        fonts.get(fname)
-                                        if isinstance(fonts, dict)
-                                        else None
+                ai = 0
+                for aref in arr:
+                    an = resolve(aref, objects)
+                    if not isinstance(an, dict):
+                        continue
+                    sub = str(get_resolved(an, "Subtype", objects))
+                    if sub not in ("Text", "Highlight", "FreeText"):
+                        continue
+                    author = _as_text(get_resolved(an, "T", objects))
+                    contents = _as_text(get_resolved(an, "Contents", objects))
+                    covered = None
+                    if sub == "FreeText":
+                        # §12.5.5: the annotation's VISIBLE text is drawn by
+                        # its /AP /N appearance Form XObject; /Contents is only
+                        # the fallback.  Tokenize the appearance with its own
+                        # /Resources (caller fallback per §8.10.2) and decode
+                        # the shows — covered_text = what a reader actually sees
+                        covered = ""
+                        ap = get_resolved(an, "AP", objects)
+                        nstream = (
+                            resolve(ap.get("N"), objects) if isinstance(ap, dict) else None
+                        )
+                        if isinstance(nstream, Stream):
+                            content = nstream.data
+                            if content is None:
+                                try:
+                                    content = decode_chain(
+                                        nstream.raw,
+                                        build_filter_chain(
+                                            nstream.attrs, lambda v: resolve(v, objects)
+                                        ),
                                     )
-                                    fcache[fname] = _font_decoder(fobj, objects, errors)
-                                dec = fcache[fname]
-                                if ev[0] == "text":
-                                    parts.append(dec(ev[3]))
-                                else:
-                                    # same kern-as-word-break rule as the
-                                    # flat span path
-                                    parts.append(
-                                        "".join(
-                                            dec(el)
-                                            if isinstance(el, (bytes, bytearray))
-                                            else " "
-                                            for el in ev[3]
-                                            if isinstance(el, (bytes, bytearray))
-                                            or (
-                                                isinstance(el, (int, float))
-                                                and el <= KERN_SPACE_THRESHOLD
+                                except (FilterError, PdfError):
+                                    content = None
+                            fres = get_resolved(nstream.attrs, "Resources", objects)
+                            if not isinstance(fres, dict):
+                                fres = get_resolved(page, "Resources", objects) or {}
+                            if content:
+                                parts = []
+                                fcache: dict = {}
+                                for ev, fonts in _content_events(
+                                    bytes(content), fres, objects, walk_errors
+                                ):
+                                    if ev[0] not in ("text", "textarr", "atext"):
+                                        continue
+                                    if ev[0] == "atext":
+                                        parts.append(pdf_text_string(ev[3]))
+                                        continue
+                                    fname = ev[2] or ""
+                                    if fname not in fcache:
+                                        fobj = (
+                                            fonts.get(fname)
+                                            if isinstance(fonts, dict)
+                                            else None
+                                        )
+                                        fcache[fname] = _font_decoder(fobj, objects, walk_errors)
+                                    dec = fcache[fname]
+                                    if ev[0] == "text":
+                                        parts.append(dec(ev[3]))
+                                    else:
+                                        # same kern-as-word-break rule as the
+                                        # flat span path
+                                        parts.append(
+                                            "".join(
+                                                dec(el)
+                                                if isinstance(el, (bytes, bytearray))
+                                                else " "
+                                                for el in ev[3]
+                                                if isinstance(el, (bytes, bytearray))
+                                                or (
+                                                    isinstance(el, (int, float))
+                                                    and el <= KERN_SPACE_THRESHOLD
+                                                )
                                             )
                                         )
-                                    )
-                            covered = "".join(parts)
-                if sub == "Highlight":
-                    qp = get_resolved(an, "QuadPoints", objects)
-                    covered = ""
-                    if isinstance(qp, list) and len(qp) >= 8:
-                        nums = [
-                            float(resolve(v, objects))
-                            for v in qp
-                            if isinstance(resolve(v, objects), (int, float))
-                        ]
-                        hits = []
-                        eps = 1.0
-                        for q in range(0, len(nums) - 7, 8):
-                            xs = nums[q : q + 8 : 2]
-                            ys = nums[q + 1 : q + 8 : 2]
-                            x0, x1 = min(xs) - eps, max(xs) + eps
-                            y0, y1 = min(ys) - eps, max(ys) + eps
-                            for x, y, txt in by_page.get(p, []):
-                                if x0 <= x <= x1 and y0 <= y <= y1 and txt:
-                                    hits.append((x, y, txt))
-                        hits = sorted(set(hits), key=lambda h: (-h[1], h[0]))
-                        covered = " ".join(t for _x, _y, t in hits)
-                annots_out.append((p, ai, sub, author, contents, covered))
-                ai += 1
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
+                                covered = "".join(parts)
+                    if sub == "Highlight":
+                        qp = get_resolved(an, "QuadPoints", objects)
+                        covered = ""
+                        if isinstance(qp, list) and len(qp) >= 8:
+                            nums = [
+                                float(resolve(v, objects))
+                                for v in qp
+                                if isinstance(resolve(v, objects), (int, float))
+                            ]
+                            quads[len(annots_out)] = (p, nums)
+                    annots_out.append((p, ai, sub, author, contents, covered))
+                    ai += 1
+        spans: list = []
+        with _contained(errors):  # a failed layout walk keeps the annotations
+            decode_doc_streams(objects, errors)
+            _layout_spans(objects, root, errors, spans)
+        errors.extend(walk_errors)
+        by_page: dict = {}
+        for page_idx, x, y, txt, _size in spans:
+            by_page.setdefault(page_idx, []).append((x, y, txt))
+        for i, (p, nums) in quads.items():
+            hits = []
+            eps = 1.0
+            for q in range(0, len(nums) - 7, 8):
+                xs = nums[q : q + 8 : 2]
+                ys = nums[q + 1 : q + 8 : 2]
+                x0, x1 = min(xs) - eps, max(xs) + eps
+                y0, y1 = min(ys) - eps, max(ys) + eps
+                for x, y, txt in by_page.get(p, []):
+                    if x0 <= x <= x1 and y0 <= y <= y1 and txt:
+                        hits.append((x, y, txt))
+            hits = sorted(set(hits), key=lambda h: (-h[1], h[0]))
+            annots_out[i] = annots_out[i][:5] + (" ".join(t for _x, _y, t in hits),)
     return {"annots": annots_out, "errors": errors}
 
 
@@ -3088,7 +2932,7 @@ def extract_revisions(data: bytes, password: bytes = b""):
     del password  # xref layer is never encrypted (§7.6.2)
     rows: list = []
     errors: list = []
-    try:
+    with _contained(errors):
         sections = list(reversed(xref_sections(data)))  # oldest-first
 
         def oid(k) -> int:  # offset keys are (id, gen) tuples
@@ -3114,10 +2958,6 @@ def extract_revisions(data: bytes, password: bytes = b""):
                     ",".join(str(k) for k in changed) if i > 0 else None,
                 )
             )
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"revisions": rows, "errors": errors}
 
 
@@ -3144,16 +2984,9 @@ def extract_xmp(data: bytes, password: bytes = b""):
     title = tool = None
     has_xmp = False
     errors: list = []
-    try:
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, errors, decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
-        root = get_resolved(trailer, "Root", objects)
-        meta = get_resolved(root, "Metadata", objects) if isinstance(root, dict) else None
+    with _contained(errors):
+        trailer, objects, root = open_document(data, password, errors)
+        meta = get_resolved(root, "Metadata", objects)
         if isinstance(meta, Stream):
             raw = meta.data
             if raw is None:
@@ -3184,8 +3017,4 @@ def extract_xmp(data: bytes, password: bytes = b""):
                 m = _re.search(r"(?:\w+:)?CreatorTool\s*=\s*\"([^\"]*)\"", xml)
                 if m:
                     tool = _xml_unescape(m.group(1))
-    except PdfError as e:
-        errors.append((e.kind, e.stage, str(e)))
-    except Exception as e:  # lenient: corrupt doc must not kill the task
-        errors.append(("ParsingError", "tokenize", f"{type(e).__name__}: {e}"))
     return {"title": title, "creator_tool": tool, "has_xmp": has_xmp, "errors": errors}

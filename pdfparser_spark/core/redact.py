@@ -25,13 +25,12 @@ from __future__ import annotations
 
 from .errors import PdfError
 from .extract import (
-    _apply_decryption,
-    _build_decryptor,
+    _contained,
+    _layout_spans,
     _walk_pages,
-    extract_layout_spans,
+    decode_doc_streams,
     get_resolved,
-    parse_all_objects,
-    read_xref,
+    open_document,
     resolve,
 )
 from .writer import write_pdf_layout
@@ -82,23 +81,17 @@ def apply_redactions(data: bytes, password: bytes = b"") -> dict:
     the document unredacted with the error recorded — a caller deciding
     to ship MUST check n_redacted/errors, not assume."""
     errors: list = []
+    spans: list = []
     try:
-        layout = extract_layout_spans(data, password=password)
-        errors.extend(layout["errors"])
-        offsets, trailer, compressed = read_xref(data)
-        decryptor = _build_decryptor(data, trailer, offsets, password)
-        objstm_expanded: set = set()
-        objects = parse_all_objects(
-            data, offsets, compressed, [], decryptor, objstm_expanded
-        )
-        _apply_decryption(decryptor, objects, objstm_expanded)
-        root = get_resolved(trailer, "Root", objects)
-        root_pages = (
-            get_resolved(root, "Pages", objects) if isinstance(root, dict) else None
-        )
+        trailer, objects, root = open_document(data, password, errors)
+        with _contained(errors):  # a failed layout walk keeps the marks
+            decode_doc_streams(objects, errors)
+            _layout_spans(objects, root, errors, spans)
         boxes_by_page = {
             p: _redact_boxes(page, objects)
-            for p, page in enumerate(_walk_pages(root_pages, objects, errors))
+            for p, page in enumerate(
+                _walk_pages(get_resolved(root, "Pages", objects), objects, errors)
+            )
         }
     except PdfError as e:
         errors.append((e.kind, e.stage, str(e)))
@@ -108,7 +101,7 @@ def apply_redactions(data: bytes, password: bytes = b"") -> dict:
         return {"bytes": data, "n_redacted": 0, "errors": errors}
 
     kept, dropped = [], 0
-    for page_idx, x, y, text, _size in layout["spans"]:
+    for page_idx, x, y, text, _size in spans:
         covered = any(
             x0 <= x <= x1 and y0 <= y <= y1
             for (x0, y0, x1, y1) in boxes_by_page.get(page_idx, ())

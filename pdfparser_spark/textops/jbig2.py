@@ -30,8 +30,8 @@ TPGRON), refinement symbol dictionaries (SDREFAGG, one instance per
 symbol) and HALFTONE regions (§6.6/§6.7: pattern dictionaries, gray-coded
 grids, cells clipped to the region) are decoded in the arithmetic form
 too.  Non-nominal AT pixels, Huffman or MMR coding of dictionaries and of
-text and halftone regions, refinement text regions, aggregate instances,
-halftone skip masks and rotated grids are OUT OF SCOPE and raise
+text and halftone regions, refinement text regions, aggregate instances
+and halftone skip masks are OUT OF SCOPE and raise
 ``ValueError`` (same honest-subset layering as jpeg.py).  Corrupt input
 only ever raises ``ValueError``.
 
@@ -577,9 +577,9 @@ def encode_jbig2_arith(
 # placed on a grid indexed by a GRAY-CODED multi-bitplane image (Annex
 # C.5: planes MSB->LSB share one MQ stream and one generic context;
 # binary value bit b_j = plane_j XOR b_{j+1}).  Subset: arithmetic
-# coding (no MMR), upright grid (HRY=0), no skip mask, OR composition,
-# default pixel 0 — the shapes the matched writer emits; everything
-# else raises ValueError (the shared fuzz-containment contract).
+# coding (no MMR), no skip mask, OR composition, default pixel 0 — the
+# shapes the matched writer emits; everything else raises ValueError
+# (the shared fuzz-containment contract).
 
 def decode_pattern_dict(data: bytes) -> list:
     """Pattern dictionary segment payload (§7.4.4.1) -> list of HDPH x
@@ -621,8 +621,6 @@ def decode_halftone_region(data: bytes, patterns: list):
         raise ValueError("JBIG2: halftone default pixel 1 unsupported")
     hgw, hgh, hgx, hgy = struct.unpack_from(">IIii", data, 18)
     hrx, hry = struct.unpack_from(">HH", data, 34)
-    if hry != 0:
-        raise ValueError("JBIG2: rotated halftone grids unsupported")
     if not patterns:
         raise ValueError("JBIG2: halftone region with no referred patterns")
     if hgw == 0 or hgh == 0 or hgw * hgh > 1 << 22:
@@ -647,8 +645,9 @@ def decode_halftone_region(data: bytes, patterns: list):
     mask = np.zeros((rh, rw), dtype=bool)
     for mg in range(hgh):
         for ng in range(hgw):
-            x = hgx + ng * hrx
-            y = hgy + mg * hrx
+            # §6.6.5.2: grid origin and vector are in 1/256 pixel
+            x = (hgx + mg * hry + ng * hrx) >> 8
+            y = (hgy + mg * hrx - ng * hry) >> 8
             # §6.6.5.2: a cell straddling the region edge composites its
             # overlapping part; a cell wholly outside draws nothing
             x0, y0 = max(x, 0), max(y, 0)
@@ -691,7 +690,7 @@ def encode_jbig2_halftone(mask: np.ndarray, template: int = 0) -> bytes:
         struct.pack(">IIIIB", w, h, 0, 0, 0)
         + bytes(((template << 1),))  # halftone flags
         + struct.pack(">IIii", w, h, 0, 0)  # grid = one cell per pixel
-        + struct.pack(">HH", 1, 0)  # HRX=1, HRY=0 (upright)
+        + struct.pack(">HH", 256, 0)  # HRX = 1 pixel in 1/256 units, HRY=0
         + enc.flush()
     )
     page_info = struct.pack(">IIIIBH", w, h, 0, 0, 0x01, 0)

@@ -399,8 +399,8 @@ def test_jbig2_halftone_cells_straddling_the_edge_are_clipped():
     payload = (
         struct.pack(">IIIIB", 4, 4, 0, 0, 0)
         + bytes((0,))  # arithmetic, HTEMPLATE 0, no skip mask, OR
-        + struct.pack(">IIii", 3, 3, -1, -1)
-        + struct.pack(">HH", 2, 0)
+        + struct.pack(">IIii", 3, 3, -256, -256)  # origin (-1, -1) in 1/256 px
+        + struct.pack(">HH", 512, 0)  # pitch 2 px
         + enc.flush()
     )
     canvas = np.zeros((8, 8), bool)
@@ -411,6 +411,43 @@ def test_jbig2_halftone_cells_straddling_the_edge_are_clipped():
     _x, _y, mask = decode_halftone_region(payload, patterns)
     assert np.array_equal(mask, canvas[1:5, 1:5])
     assert mask[0, 0] and mask[2, 0]  # ink from cells straddling the left edge
+
+
+def test_jbig2_halftone_grid_is_in_256ths_of_a_pixel():
+    """§6.6.5.2: cell (m, n) sits at ((HGX + m*HRY + n*HRX) >> 8,
+    (HGY + m*HRX - n*HRY) >> 8) — origin and vector in 1/256 pixel, so
+    a fractional origin floors and a non-zero HRY skews the grid.
+    Reference: the formula composited cell by cell."""
+    import struct
+
+    import numpy as np
+    from pdfparser_spark.textops.jbig2 import (
+        MQEncoder,
+        _encode_generic_shared,
+        decode_halftone_region,
+    )
+
+    patterns = [np.zeros((2, 2), bool), np.array([[1, 1], [0, 1]], bool)]
+    gray = np.array([[1, 0, 1], [0, 1, 1]], bool)
+    for hgx, hgy, hrx, hry in ((384, 256, 512, 0), (640, 128, 512, 256)):
+        enc = MQEncoder()
+        _encode_generic_shared(enc, [(0, 0)] * (1 << 16), gray, 0)
+        payload = (
+            struct.pack(">IIIIB", 10, 8, 0, 0, 0)
+            + bytes((0,))  # arithmetic, HTEMPLATE 0, no skip mask, OR
+            + struct.pack(">IIii", 3, 2, hgx, hgy)
+            + struct.pack(">HH", hrx, hry)
+            + enc.flush()
+        )
+        canvas = np.zeros((16, 18), bool)  # the region padded by 4
+        for m in range(2):
+            for n in range(3):
+                x = 4 + ((hgx + m * hry + n * hrx) >> 8)
+                y = 4 + ((hgy + m * hrx - n * hry) >> 8)
+                canvas[y : y + 2, x : x + 2] |= patterns[int(gray[m, n])]
+        _x, _y, mask = decode_halftone_region(payload, patterns)
+        assert np.array_equal(mask, canvas[4:12, 4:14]), (hgx, hgy, hrx, hry)
+        assert mask.any()
 
 
 def test_jbig2_symbol_refinement_dictionary():

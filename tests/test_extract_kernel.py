@@ -479,6 +479,9 @@ def test_markup_annots_family_roundtrip():
     # non-markup doc: no annot rows
     d = build_document(7, text)
     assert extract_markup_annots(d["bytes"])["annots"] == []
+    # corrupt input: the document is opened once, so one error row
+    bad = extract_markup_annots(b"\x00garbage")
+    assert bad["annots"] == [] and len(bad["errors"]) == 1
 
 
 def test_markup_quad_geometry_multiquad_and_malformed():
@@ -860,9 +863,10 @@ def test_apply_redactions():
     res3 = apply_redactions(write_pdf_layout(lsp))
     assert res3["n_redacted"] == 0
     assert [t[:4] for t in extract_layout_spans(res3["bytes"])["spans"]] == lsp
-    # corrupt input: contained, original bytes returned
+    # corrupt input: contained, original bytes returned, one error row
+    # (the document is opened once)
     res4 = apply_redactions(b"\x00garbage")
-    assert res4["bytes"] == b"\x00garbage" and res4["errors"]
+    assert res4["bytes"] == b"\x00garbage" and len(res4["errors"]) == 1
 
 
 def test_field_hierarchy_qualified_names():
