@@ -14,8 +14,8 @@ required by BASELINE.json:6.  Supports:
     mac_roman, else latin-1 (ISO 32000 annex D).
 
 Mappings are keyed by the raw code BYTES (not an integer) so a 1-byte code
-``<41>`` and a 2-byte code ``<0041>`` stay distinct.  The classify stage
-builds one decoder per (doc, font) and applies it to raw Tj/TJ operands.
+``<41>`` and a 2-byte code ``<0041>`` stay distinct.  core/extract.py
+builds one decoder per font spec and applies it to raw Tj/TJ operands.
 """
 
 from __future__ import annotations
@@ -133,7 +133,11 @@ class CMap:
                 base = _hexbytes(m3.group(1))
                 base_i = int.from_bytes(base, "big")
                 blen = len(base)
-                for k in range(hi_i - lo_i + 1):
+                # a run that outgrows its destination's byte width stops
+                # at the last code whose destination fits; later codes
+                # stay unmapped (lenient, like malformed /Differences)
+                fits = (1 << (8 * blen)) - base_i
+                for k in range(min(hi_i - lo_i + 1, fits)):
                     self.map[(lo_i + k).to_bytes(w, "big")] = _utf16be(
                         (base_i + k).to_bytes(blen, "big")
                     )
@@ -280,21 +284,30 @@ def pdf_text_string(raw: bytes) -> str:
     return raw.decode("latin-1")
 
 
-def differences_decoder(base_encoding: str | None, differences: list):
-    """Decoder for a §9.6.5.1 /Encoding DICTIONARY: start from the
-    /BaseEncoding single-byte table (same simple_decode fallbacks), then
-    apply the /Differences array — an integer sets the current code, each
-    following name remaps that code (auto-incrementing).  Malformed
-    entries are skipped, never fatal (lenient stance)."""
-    table = [simple_decode(bytes([i]), base_encoding) for i in range(256)]
+def differences_remap(differences) -> list[tuple[int, str]]:
+    """A §9.6.5.1 /Differences array as ``(code, glyph name)`` pairs: an
+    integer sets the current code, each following name remaps that code
+    (auto-incrementing).  Malformed entries and codes outside one byte
+    are skipped, never fatal (lenient stance)."""
+    out: list[tuple[int, str]] = []
     code = 0
     for item in differences if isinstance(differences, list) else []:
         if isinstance(item, (int, float)):
             code = int(item)
         elif isinstance(item, str):
             if 0 <= code <= 255:
-                table[code] = glyph_to_char(item)
+                out.append((code, str(item)))
             code += 1
+    return out
+
+
+def remap_decoder(base_encoding: str | None, remap):
+    """Decoder for an /Encoding DICTIONARY: the /BaseEncoding single-byte
+    table (same simple_decode fallbacks) with ``remap``'s ``(code, glyph
+    name)`` pairs applied on top."""
+    table = [simple_decode(bytes([i]), base_encoding) for i in range(256)]
+    for code, name in remap:
+        table[code] = glyph_to_char(name)
 
     def decode(raw: bytes) -> str:
         return "".join(table[b] for b in raw)
@@ -302,17 +315,7 @@ def differences_decoder(base_encoding: str | None, differences: list):
     return decode
 
 
-def encoding_decoder(spec: str | None):
-    """Decoder from a serialized encoding spec (the staged DAG's string
-    ``encoding`` column): a plain base-encoding name, or a JSON object
-    ``{"b": base_name, "d": [differences...]}`` produced by
-    core/extract.py for /Encoding dictionaries."""
-    if spec and spec.startswith("{"):
-        import json
-
-        try:
-            d = json.loads(spec)
-        except ValueError:
-            return lambda raw: simple_decode(raw, None)
-        return differences_decoder(d.get("b"), d.get("d") or [])
-    return lambda raw: simple_decode(raw, spec)
+def differences_decoder(base_encoding: str | None, differences: list):
+    """Decoder for a §9.6.5.1 /Encoding dictionary's raw /BaseEncoding
+    name and /Differences array."""
+    return remap_decoder(base_encoding, differences_remap(differences))

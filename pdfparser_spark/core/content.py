@@ -622,37 +622,3 @@ def shading_ops(data: bytes) -> dict:
                 pos = _skip_inline_image(data, pos)
         last_name = None
     return out
-
-
-def do_spans(data: bytes) -> list[tuple[str, int, int]]:
-    """Byte spans of every ``/Name Do`` op: (name, start, end) where
-    ``start`` is the name token's offset and ``end`` is the position just
-    after ``Do``.  The decode stage uses these to splice Form XObject
-    content in place (core/extract.py ``expand_forms``) so the staged DAG
-    and the fused kernel extract identical spans.  Inline images are
-    skipped with the same BI..EI rule as tokenize_content."""
-    out: list[tuple[str, int, int]] = []
-    pos = 0
-    n = len(data)
-    last_name: tuple[str, int] | None = None
-    while pos < n:
-        try:
-            kind, val, p = _next_token(data, pos)
-        except ParsingError:
-            pos += 1
-            continue
-        if kind == "eof":
-            break
-        at = pos
-        pos = p
-        if kind == "name":
-            last_name = (str(val), at)
-        elif kind == "keyword":
-            if val == b"Do" and last_name is not None:
-                out.append((last_name[0], last_name[1], p))
-            elif val == b"BI":
-                pos = _skip_inline_image(data, pos)
-            # every operator consumes its operands — a stale name must not
-            # attach to a later Do
-            last_name = None
-    return out

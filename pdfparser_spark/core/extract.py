@@ -26,12 +26,11 @@ from __future__ import annotations
 
 import contextlib
 import hashlib
-import json
 from typing import NamedTuple
 
 from . import crypt
-from .cmap import CMap, differences_decoder, pdf_text_string, simple_decode
-from .content import do_spans, tokenize_content
+from .cmap import CMap, differences_remap, pdf_text_string, remap_decoder, simple_decode
+from .content import tokenize_content
 from .errors import DOC_TREE_ERROR, FILTER_ERROR, REFERENCE_ERROR, FilterError, PdfError
 from .filters import build_filter_chain, decode_chain, decode_media_prefix, is_media_chain
 from .objects import Name, Ref, Stream, get_resolved, resolve
@@ -557,10 +556,158 @@ def _gs_font_map(resources, objects: dict) -> dict:
     return out
 
 
+# A SCOPE is one resource context: a page's /Resources, or a Form
+# XObject's own (the caller's when the form declares none, §8.10.2's
+# legacy-writer allowance).  ``_content_events`` asks a scope four things:
+#   key       its font-namespace key (decoder caches are keyed on it,
+#             since a form's /F1 may be a different font than the page's)
+#   hidden    the /Properties names whose /OC content is switched off
+#   gs_sizes  {ExtGState name: font size | None} for every gs that
+#             selects a font (the tokenizer names that font __gs__<name>)
+#   xobject(name)  what ``/name Do`` draws: a Form, _MEDIA, or None when
+#             the scope does not declare the name (a dangling reference)
+# The fused kernels read scopes from the object graph (ResourceScope); the
+# staged DAG's decode stage writes every scope a page can reach as typed
+# rows (scope_table) and its tokenize stage reads them back (table_scopes).
+
+
+class Form(NamedTuple):
+    """A ``Do`` target that is a decoded Form XObject."""
+
+    ident: object  # identity for the recursion guard
+    content: bytes
+    matrix: list | None  # the form's /Matrix when it is six numbers
+    scope: object  # the scope its content runs under
+
+
+_MEDIA = "media"  # a declared XObject that draws no content stream
+
+
+class ResourceScope:
+    """A scope read from the object graph."""
+
+    __slots__ = ("resources", "objects", "off_ids", "key", "hidden", "gs_sizes", "fonts", "xobjects")
+
+    def __init__(self, resources, objects: dict, off_ids: set) -> None:
+        self.resources, self.objects, self.off_ids = resources, objects, off_ids
+        self.key = id(resources)
+        # evaluated even with an empty OFF set: OCMD Off-family policies
+        # can hide content over all-ON groups
+        self.hidden = _hidden_prop_names(resources, objects, off_ids)
+        gs = _gs_font_map(resources, objects)
+        self.gs_sizes = {nm: sz for nm, (_f, sz) in gs.items()}
+        fonts = get_resolved(resources, "Font", objects)
+        self.fonts = fonts if isinstance(fonts, dict) else {}
+        if gs:
+            # ExtGState-declared fonts join the font namespace under the
+            # names the tokenizer emits on ``gs``
+            self.fonts = {**self.fonts, **{"__gs__" + nm: f for nm, (f, _sz) in gs.items()}}
+        self.xobjects = get_resolved(resources, "XObject", objects) or {}
+
+    def xobject(self, name: str):
+        xobjects, objects = self.xobjects, self.objects
+        if not isinstance(xobjects, dict):
+            return _MEDIA
+        xo = resolve(xobjects.get(name), objects)
+        if xo is None and name not in xobjects:
+            return None
+        if (
+            isinstance(xo, Stream)
+            and xo.data is not None
+            and str(get_resolved(xo.attrs, "Subtype", objects)) == "Form"
+        ):
+            res = get_resolved(xo.attrs, "Resources", objects)
+            mat = get_resolved(xo.attrs, "Matrix", objects)
+            if not (
+                isinstance(mat, list)
+                and len(mat) == 6
+                and all(isinstance(v, (int, float)) for v in mat)
+            ):
+                mat = None
+            scope = ResourceScope(res, objects, self.off_ids) if isinstance(res, dict) else self
+            return Form(id(xo), xo.data, mat, scope)
+        return _MEDIA
+
+
+def scope_table(page_scope: ResourceScope) -> tuple[list, list, list]:
+    """Every scope ``page_scope`` can reach through its Form XObjects, in
+    discovery order (the page's own first), as ``(scopes, rows, forms)``:
+    ``rows[i]`` is scope i as plain values — ``hidden`` names, ``gs``
+    ``{name, size}`` entries and ``xobjects`` ``{name, form, scope}``
+    entries (None when /XObject is not a dict), where ``form`` indexes the
+    decoded form contents in ``forms`` (None for media) and ``scope`` the
+    scope that form runs under."""
+    scopes = [page_scope]
+    scope_index = {id(page_scope.resources): 0}
+    forms: list = []
+    form_index: dict = {}
+    rows: list = []
+    for scope in scopes:  # grows while it is walked
+        xobjects = None
+        if isinstance(scope.xobjects, dict):
+            xobjects = []
+            for name in scope.xobjects:
+                do = scope.xobject(str(name))
+                form = sub = None
+                if isinstance(do, Form):
+                    form = form_index.setdefault(do.ident, len(forms))
+                    if form == len(forms):
+                        forms.append(do.content)
+                    sub = scope_index.setdefault(id(do.scope.resources), len(scopes))
+                    if sub == len(scopes):
+                        scopes.append(do.scope)
+                xobjects.append({"name": str(name), "form": form, "scope": sub})
+        rows.append(
+            {
+                "hidden": sorted(scope.hidden) if scope.hidden else None,
+                "gs": [{"name": nm, "size": sz} for nm, sz in scope.gs_sizes.items()] or None,
+                "xobjects": xobjects,
+            }
+        )
+    return scopes, rows, forms
+
+
+class TableScope:
+    """A scope rebuilt from a :func:`scope_table` row; its key is its
+    index in the page's table."""
+
+    __slots__ = ("key", "hidden", "gs_sizes", "_do", "_forms", "_scopes")
+
+    def __init__(self, key: int, row, forms, scopes: list) -> None:
+        self.key = key
+        hidden = row["hidden"]
+        self.hidden = frozenset(hidden) if hidden is not None and len(hidden) else None
+        gs = row["gs"]
+        self.gs_sizes = {g["name"]: g["size"] for g in gs} if gs is not None else {}
+        xobjects = row["xobjects"]
+        self._do = (
+            None if xobjects is None else {x["name"]: (x["form"], x["scope"]) for x in xobjects}
+        )
+        self._forms, self._scopes = forms, scopes
+
+    def xobject(self, name: str):
+        if self._do is None:
+            return _MEDIA
+        hit = self._do.get(name)
+        if hit is None:
+            return None
+        form, scope = hit
+        if form is None:
+            return _MEDIA
+        form = int(form)  # Arrow hands nullable ints to pandas as floats
+        return Form(form, bytes(self._forms[form]), None, self._scopes[int(scope)])
+
+
+def table_scopes(rows, forms) -> list:
+    """A page's :func:`scope_table` rows as scopes; the page's is first."""
+    scopes: list = []
+    scopes.extend(TableScope(i, row, forms, scopes) for i, row in enumerate(rows))
+    return scopes
+
+
 def _content_events(
     content: bytes,
-    resources,
-    objects: dict,
+    scope,
     errors: list,
     layout: bool = False,
     depth: int = 0,
@@ -568,20 +715,16 @@ def _content_events(
     ox: float = 0.0,
     oy: float = 0.0,
     advance: bool = False,
-    off_ids: set | None = None,
     mcid: bool = False,
 ):
-    """Yield ``(event, fonts)`` pairs for one content stream, EXECUTING
-    Form XObjects in place (ISO 32000 §8.10): a ``Do`` whose target is a
-    ``/Subtype /Form`` stream recurses into the form's decoded content
-    under the form's own ``/Resources`` (caller's as fallback when the
-    form declares none, §8.10.2's legacy-writer allowance), so text in
-    stamps / letterheads / flattened form fields is extracted instead of
-    being misreported as media.  Image and unresolvable XObjects still
-    surface as ``('media', ...)`` events, and a dangling name records the
-    same ReferenceError metric as before.  ``fonts`` is the /Font dict of
-    the emitting context — a form's /F1 may be a different font than the
-    page's /F1, so callers key decoder caches on (id(fonts), name).
+    """Yield ``(event, scope)`` pairs for one content stream interpreted
+    under ``scope``, EXECUTING Form XObjects in place (ISO 32000 §8.10): a
+    ``Do`` whose target is a form recurses into the form's content under
+    the form's scope, so text in stamps / letterheads / flattened form
+    fields is extracted instead of being misreported as media.  Other
+    XObjects surface as ``('media', ...)`` events, and a name the scope
+    does not declare also records a ReferenceError.  ``scope`` in each
+    pair is the emitting context: decode a show with ITS fonts.
 
     With ``layout=True``, the form's /Matrix translation (e, f) offsets
     recursed line origins (accumulated across nesting); rotation/scale
@@ -593,170 +736,38 @@ def _content_events(
         active = set()
     if advance:
         layout = True
-    fonts = get_resolved(resources, "Font", objects) or {}
-    xobjects = get_resolved(resources, "XObject", objects) or {}
-    # evaluated even with an empty OFF set: OCMD Off-family policies can
-    # hide content over all-ON groups
-    hidden = _hidden_prop_names(resources, objects, off_ids)
-    gs_sizes = _gs_font_map(resources, objects)
-    if gs_sizes:
-        # the ExtGState-declared fonts join the page's font namespace
-        # under sentinel names the tokenizer emits on ``gs``
-        add = {}
-        for nm, (fref, _sz) in gs_sizes.items():
-            add["__gs__" + nm] = fref
-        fonts = {**fonts, **add} if isinstance(fonts, dict) else add
     for ev in tokenize_content(
-        content, layout=layout, advance=advance, hidden_props=hidden, mcid=mcid,
-        gs_fonts={nm: sz for nm, (_f, sz) in gs_sizes.items()} if gs_sizes else None,
+        content, layout=layout, advance=advance, hidden_props=scope.hidden, mcid=mcid,
+        gs_fonts=scope.gs_sizes,
     ):
         if ev[0] == "media":
             name = ev[2]
-            xo = resolve(xobjects.get(name), objects) if isinstance(xobjects, dict) else None
-            if xo is None and isinstance(xobjects, dict) and name not in xobjects:
+            do = scope.xobject(name)
+            if do is None:
                 errors.append((REFERENCE_ERROR, "classify", f"dangling XObject {name}"))
-            if (
-                isinstance(xo, Stream)
-                and xo.data is not None
-                and str(get_resolved(xo.attrs, "Subtype", objects)) == "Form"
-            ):
-                if depth >= MAX_FORM_DEPTH or id(xo) in active:
+            elif do is not _MEDIA:
+                if depth >= MAX_FORM_DEPTH or do.ident in active:
                     errors.append(
                         (DOC_TREE_ERROR, "tokenize", f"form recursion capped at {name}")
                     )
                     continue
-                sub_res = get_resolved(xo.attrs, "Resources", objects)
-                if not isinstance(sub_res, dict):
-                    sub_res = resources
                 fx = fy = 0.0
-                if layout:
-                    mat = get_resolved(xo.attrs, "Matrix", objects)
-                    if (
-                        isinstance(mat, list)
-                        and len(mat) == 6
-                        and all(isinstance(v, (int, float)) for v in mat)
-                    ):
-                        fx, fy = float(mat[4]), float(mat[5])
-                active.add(id(xo))
+                if layout and do.matrix is not None:
+                    fx, fy = float(do.matrix[4]), float(do.matrix[5])
+                active.add(do.ident)
                 yield from _content_events(
-                    xo.data, sub_res, objects, errors, layout,
-                    depth + 1, active, ox + fx, oy + fy, advance, off_ids, mcid,
+                    do.content, do.scope, errors, layout,
+                    depth + 1, active, ox + fx, oy + fy, advance, mcid,
                 )
-                active.discard(id(xo))
+                active.discard(do.ident)
                 continue
-            yield ev, fonts
+            yield ev, scope
         elif ev[0] == "inline":
-            yield ev, fonts
+            yield ev, scope
         else:
             if layout and (ox or oy):
                 ev = ev[:4] + (ev[4] + ox, ev[5] + oy) + ev[6:]
-            yield ev, fonts
-
-
-def _form_entries(resources, objects: dict) -> dict:
-    """{name: Stream} of the /XObject entries that are decoded Form
-    streams.  Empty for the overwhelmingly common no-form page — the
-    decode stage's fast path pays one tiny dict scan, never a content
-    re-tokenization."""
-    xobjects = get_resolved(resources, "XObject", objects) or {}
-    out: dict = {}
-    if isinstance(xobjects, dict):
-        for name, xref in xobjects.items():
-            xo = resolve(xref, objects)
-            if (
-                isinstance(xo, Stream)
-                and xo.data is not None
-                and str(get_resolved(xo.attrs, "Subtype", objects)) == "Form"
-            ):
-                out[str(name)] = xo
-    return out
-
-
-def expand_forms(
-    content: bytes,
-    resources,
-    objects: dict,
-    errors: list,
-    depth: int = 0,
-    active: set | None = None,
-):
-    """Staged-DAG realization of Form XObject execution (§8.10): splice
-    each form's decoded content into the page stream at its ``/Name Do``
-    site (byte-exact spans from content.do_spans), recursively, so the
-    tokenize stage sees one flat stream and staged output equals the
-    fused kernel's.  Returns ``(bytes, extra_fonts, extra_xobj_names)``
-    — the fonts/XObject names declared by the spliced forms' own
-    /Resources, which the caller merges into the PAGE dimension tables
-    (staged mode resolves fonts per page, a documented flattening; the
-    fused kernel keys caches per emitting context).  Depth/cycle capping
-    records the same DocTreeError metric as the fused path."""
-    if active is None:
-        active = set()
-    forms = _form_entries(resources, objects)
-    if not forms:
-        return content, {}, []
-    extra_fonts: dict = {}
-    extra_xnames: list = []
-    pieces: list[bytes] = []
-    cur = 0
-    for name, start, end in do_spans(content):
-        xo = forms.get(name)
-        if xo is None:
-            continue
-        pieces.append(content[cur:start])
-        cur = end
-        if depth >= MAX_FORM_DEPTH or id(xo) in active:
-            errors.append((DOC_TREE_ERROR, "tokenize", f"form recursion capped at {name}"))
-            continue
-        sub_res = get_resolved(xo.attrs, "Resources", objects)
-        if not isinstance(sub_res, dict):
-            sub_res = resources
-        active.add(id(xo))
-        inner, inner_fonts, inner_xnames = expand_forms(
-            xo.data, sub_res, objects, errors, depth + 1, active
-        )
-        active.discard(id(xo))
-        fdict = get_resolved(sub_res, "Font", objects) or {}
-        if isinstance(fdict, dict):
-            for fname, fref in fdict.items():
-                extra_fonts.setdefault(str(fname), fref)
-        xdict = get_resolved(sub_res, "XObject", objects) or {}
-        if isinstance(xdict, dict):
-            extra_xnames.extend(str(x) for x in xdict)
-        extra_fonts.update(inner_fonts)
-        extra_xnames.extend(inner_xnames)
-        pieces.append(b"\n")
-        pieces.append(inner)
-        pieces.append(b"\n")
-    pieces.append(content[cur:])
-    return b"".join(pieces), extra_fonts, extra_xnames
-
-
-def _encoding_spec(font: dict, objects: dict):
-    """(cmap_bytes, encoding_spec_string) for the decode stage's string
-    ``encoding`` column: /ToUnicode wins; an /Encoding NAME passes
-    through; an /Encoding DICTIONARY (/BaseEncoding + /Differences,
-    §9.6.5.1) serializes to the JSON form cmap.encoding_decoder reads."""
-    tu = get_resolved(font, "ToUnicode", objects)
-    if isinstance(tu, Stream) and tu.data is not None:
-        return tu.data, None
-    enc = get_resolved(font, "Encoding", objects)
-    if isinstance(enc, dict):
-        import json
-
-        base = get_resolved(enc, "BaseEncoding", objects)
-        diffs = get_resolved(enc, "Differences", objects)
-        ser = []
-        for it in diffs if isinstance(diffs, list) else []:
-            if isinstance(it, (int, float)):
-                ser.append(int(it))
-            else:
-                ser.append(str(it))
-        return None, json.dumps(
-            {"b": str(base) if isinstance(base, str) else None, "d": ser},
-            separators=(",", ":"),
-        )
-    return None, str(enc) if isinstance(enc, str) else None
+            yield ev, scope
 
 
 def _page_rotation(inh: dict) -> int:
@@ -796,163 +807,168 @@ def _unrotate(px: float, py: float, rot: int, w: float, h: float) -> tuple[float
     return (px, py)
 
 
-def _font_decoder(font_obj, objects: dict, errors: list):
-    """§2.7 fonts: prefer /ToUnicode CMap; else simple encoding."""
+class FontSpec(NamedTuple):
+    """What decodes a font's shown bytes (§9.10.2): the /ToUnicode CMap
+    bytes, which win when present; else the base encoding name (an
+    /Encoding name, or an /Encoding dictionary's /BaseEncoding) and the
+    dictionary's /Differences as ``(code, glyph name)`` pairs."""
+
+    tounicode: bytes | None = None
+    encoding: str | None = None
+    differences: tuple = ()
+
+
+def _font_spec(font_obj, objects: dict) -> FontSpec:
     font = resolve(font_obj, objects)
     if not isinstance(font, dict):
-        return lambda raw: simple_decode(raw, None)
+        return FontSpec()
     tu = get_resolved(font, "ToUnicode", objects)
     if isinstance(tu, Stream) and tu.data is not None:
-        cm = CMap.parse(tu.data)
-        return cm.decode
+        return FontSpec(tounicode=tu.data)
     enc = get_resolved(font, "Encoding", objects)
     if isinstance(enc, dict):
         # /Encoding dictionary (§9.6.5.1): /BaseEncoding + /Differences
         # remap table — common in real subset-embedded fonts; the reference
         # has no font code at all (SURVEY.md §2.7)
         base = get_resolved(enc, "BaseEncoding", objects)
-        return differences_decoder(
-            str(base) if isinstance(base, str) else None,
-            get_resolved(enc, "Differences", objects),
+        return FontSpec(
+            encoding=str(base) if isinstance(base, str) else None,
+            differences=tuple(differences_remap(get_resolved(enc, "Differences", objects))),
         )
-    enc_name = str(enc) if isinstance(enc, str) else None
-    return lambda raw: simple_decode(raw, enc_name)
+    return FontSpec(encoding=str(enc) if isinstance(enc, str) else None)
+
+
+def spec_decoder(spec: FontSpec):
+    """The decoder a :class:`FontSpec` describes: bytes -> str."""
+    if spec.tounicode is not None:
+        return CMap.parse(spec.tounicode).decode
+    if spec.differences:
+        return remap_decoder(spec.encoding, spec.differences)
+    enc = spec.encoding
+    return lambda raw: simple_decode(raw, enc)
+
+
+def _font_decoder(font_obj, objects: dict, errors: list):
+    """§2.7 fonts: the decoder of one font object."""
+    return spec_decoder(_font_spec(font_obj, objects))
+
+
+def show_operand(ev):
+    """A show event's operand: Tj bytes, or the TJ array's strings with
+    None at each kern at/beyond KERN_SPACE_THRESHOLD — an implied word
+    break, since TeX/InDesign-class writers position words by kerns with
+    no space glyphs (§9.4.3; the armored family's -120 intra-phrase kern
+    stays below the threshold, so spaced text is never double-spaced)."""
+    if ev[0] != "textarr":
+        return ev[3]
+    return [
+        x if isinstance(x, (bytes, bytearray)) else None
+        for x in ev[3]
+        if isinstance(x, (bytes, bytearray))
+        or (isinstance(x, (int, float)) and x <= KERN_SPACE_THRESHOLD)
+    ]
+
+
+def shown_text(operand, dec) -> str:
+    """The text of a :func:`show_operand`, decoded part by part."""
+    if isinstance(operand, (bytes, bytearray)):
+        return dec(operand)
+    return "".join(" " if p is None else dec(p) for p in operand)
+
+
+def _scope_decoder(decoders: dict, scope: ResourceScope, font_name, errors: list):
+    """The decoder of ``font_name`` in ``scope``, built once per
+    (scope, font) in ``decoders``."""
+    key = (scope.key, font_name or "")
+    dec = decoders.get(key)
+    if dec is None:
+        dec = decoders[key] = _font_decoder(scope.fonts.get(font_name), scope.objects, errors)
+    return dec
+
+
+def _event_text(ev, scope: ResourceScope, decoders: dict, errors: list) -> str:
+    """The text of one show event: an /ActualText replacement is a PDF
+    text string, decoded WITHOUT the font (§14.9.4); Tj/TJ operands decode
+    through the font ``scope`` binds to the event's font name."""
+    if ev[0] == "atext":
+        return pdf_text_string(ev[3])
+    return shown_text(show_operand(ev), _scope_decoder(decoders, scope, ev[2], errors))
+
+
+def _document_pages(root, objects: dict, errors: list, strict: bool):
+    """B1 (doc_tree.rs:147-150): trailer -> Root -> Pages, walked.
+    Returns ``(pages, root)``.  A corrupt or missing /Root or /Pages
+    raises under ``strict``; otherwise it degrades to an ORPHAN-PAGE SCAN
+    (the real-world mutool/pdfium repair): every parsed dict with /Type
+    /Page, in object-id order (creation order, which is page order for
+    every non-adversarial writer), with ``root`` None — catalog-scoped
+    semantics (optional-content config, names, outlines) are gone with
+    the catalog."""
+    try:
+        pages_node = _require_pages(root, objects)
+    except PdfError as err:
+        if strict:
+            raise
+        pages = [
+            v
+            for _key, v in sorted(objects.items())
+            if isinstance(v, dict) and str(v.get("Type")) == "Page"
+        ]
+        if not pages:
+            raise
+        errors.append((err.kind, "assemble", f"{err}; recovered {len(pages)} orphan pages"))
+        return pages, None
+    return _walk_pages(pages_node, objects, errors), root
+
+
+def _opened_pages(data: bytes, password: bytes, strict: bool, result: dict):
+    """The head :func:`extract_spans` and :func:`decode_document` share:
+    open, decode streams, find the pages.  Records ``version`` and the
+    ``n_*`` counts in ``result`` as they are reached and its errors in
+    ``result["errors"]``; yields ``(page_idx, page scope, content)``."""
+    errors = result["errors"]
+    result["version"] = sniff_version(data)
+    trailer, objects, root = open_document(data, password, errors)
+    result["n_objects"] = len(objects)
+    decode_doc_streams(objects, errors)
+    result["n_streams"] = sum(1 for v in objects.values() if isinstance(v, Stream))
+    pages, root = _document_pages(root, objects, errors, strict)
+    result["n_pages"] = len(pages)
+    off_ids = _off_ocg_ids(root, objects)
+    for page_idx, page in enumerate(pages):
+        scope = ResourceScope(get_resolved(page, "Resources", objects), objects, off_ids)
+        yield page_idx, scope, _page_content_bytes(page, objects, errors)
+
+
+def _kernel_result(**rows) -> dict:
+    """An empty kernel result: ``rows`` plus the version, errors and counts."""
+    return {"version": None, **rows, "errors": [], "n_objects": 0, "n_pages": 0, "n_streams": 0}
 
 
 def decode_document(data: bytes, password: bytes = b""):
-    """Decode-stage kernel: everything up to (and including) per-page
-    decoded content bytes and font/XObject bindings, but *no* content
-    tokenization — that is the tokenize stage's job, and classification /
-    assembly happen in DataFrame algebra (joins + ordered aggregation).
+    """Decode-stage kernel: :func:`extract_spans` up to the content
+    interpreter.  Per page it keeps the content bytes and every scope the
+    page can reach (:func:`scope_table`), with a :class:`FontSpec` for
+    each font of each scope; the tokenize stage runs ``_content_events``
+    over them and the classify stage decodes with the specs.
 
     Returns dict:
        version: str | None
-       contents: list[(page_idx, seq, decoded_bytes, hidden_props_json)]
-       fonts:    list[(page_idx, font_name, cmap_bytes | None, encoding | None)]
-       xobjs:    list[(page_idx, media_name)]
-       errors:   list[(error_kind, stage, detail)]
+       pages:   list[(page_idx, content_bytes, scope_rows, form_contents)]
+       fonts:   list[(page_idx, scope, font_name, FontSpec)]
+       errors:  list[(error_kind, stage, detail)] — extract_spans' rows
+                except those the content interpreter records
        n_objects, n_pages, n_streams
     """
-    errors: list = []
-    version = None
-    contents: list = []
-    fonts: list = []
-    xobjs: list = []
-    n_objects = n_pages = n_streams = 0
-    with _contained(errors):
-        version = sniff_version(data)
-        trailer, objects, root = open_document(data, password, errors)
-        n_objects = len(objects)
-        decode_doc_streams(objects, errors)
-        n_streams = sum(1 for v in objects.values() if isinstance(v, Stream))
-
-        pages_node = _require_pages(root, objects)
-        pages = _walk_pages(pages_node, objects, errors)
-        n_pages = len(pages)
-
-        off_ids = _off_ocg_ids(root, objects)
-        for page_idx, page in enumerate(pages):
-            resources = get_resolved(page, "Resources", objects) or {}
-            # switched-off OCG property names travel to the tokenize stage
-            # as a JSON list in the content row's ``encoding`` column (the
-            # column exists for font rows; content rows reuse it — same
-            # precedent as the /Differences spec serialization).  Form
-            # content is spliced into the page, so its /OC names resolve
-            # against the PAGE /Properties namespace — the documented
-            # staged flattening, same as fonts.
-            hidden = _hidden_prop_names(resources, objects, off_ids)
-            gs_map = _gs_font_map(resources, objects)
-            if gs_map:
-                # extended channel shape: hidden names + the gs-font
-                # sizes ride together (tokenize stage sniffs dict vs list)
-                hidden_json = json.dumps(
-                    {
-                        "hidden": sorted(hidden) if hidden else [],
-                        "gs": {nm: sz for nm, (_f, sz) in gs_map.items()},
-                    }
-                )
-            else:
-                hidden_json = json.dumps(sorted(hidden)) if hidden else None
-
-            # content pieces first: a /Contents ARRAY concatenates into ONE
-            # stream before tokenization (§7.8.2 — tokens may be split only
-            # BETWEEN streams, but operands and their operator routinely
-            # land in different pieces, so per-piece tokenization is
-            # wrong); then Form XObjects splice in place (§8.10) and
-            # contribute their own font/XObject names to the page's
-            # dimension rows below
-            extra_fonts: dict = {}
-            extra_xnames: list = []
-            cobj = get_resolved(page, "Contents", objects)
-            items = cobj if isinstance(cobj, list) else ([cobj] if cobj is not None else [])
-            pieces: list = []
-            for it in items:
-                st = resolve(it, objects)
-                if isinstance(st, Stream) and st.data is not None:
-                    pieces.append(st.data)
-                elif isinstance(st, Stream):
-                    errors.append((FILTER_ERROR, "decode", "content stream undecoded"))
-                elif it is not None:
-                    errors.append((REFERENCE_ERROR, "classify", "dangling /Contents reference"))
-            if pieces:
-                cdata, ef, ex = expand_forms(
-                    b"\n".join(pieces), resources, objects, errors
-                )
-                extra_fonts.update(ef)
-                extra_xnames.extend(ex)
-                contents.append((page_idx, 0, cdata, hidden_json))
-
-            fdict = get_resolved(resources, "Font", objects) or {}
-            seen_fonts: set = set()
-            if isinstance(fdict, dict):
-                for fname, fref in fdict.items():
-                    font = resolve(fref, objects)
-                    cmap_bytes = None
-                    enc_spec = None
-                    if isinstance(font, dict):
-                        cmap_bytes, enc_spec = _encoding_spec(font, objects)
-                    fonts.append((page_idx, str(fname), cmap_bytes, enc_spec))
-                    seen_fonts.add(str(fname))
-            # fonts declared by spliced forms (page namespace wins on
-            # collision — the staged flattening documented in expand_forms)
-            for fname, fref in extra_fonts.items():
-                if fname in seen_fonts:
-                    continue
-                font = resolve(fref, objects)
-                cmap_bytes = None
-                enc_spec = None
-                if isinstance(font, dict):
-                    cmap_bytes, enc_spec = _encoding_spec(font, objects)
-                fonts.append((page_idx, fname, cmap_bytes, enc_spec))
-                seen_fonts.add(fname)
-            # ExtGState-declared fonts (§8.4.5 /Font): dimension rows
-            # under the tokenizer's ``__gs__<name>`` sentinel keys
-            for gname, (fref, _sz) in gs_map.items():
-                key = "__gs__" + gname
-                if key in seen_fonts:
-                    continue
-                font = resolve(fref, objects)
-                cmap_bytes = None
-                enc_spec = None
-                if isinstance(font, dict):
-                    cmap_bytes, enc_spec = _encoding_spec(font, objects)
-                fonts.append((page_idx, key, cmap_bytes, enc_spec))
-                seen_fonts.add(key)
-
-            xdict = get_resolved(resources, "XObject", objects) or {}
-            xnames = [str(x) for x in xdict] if isinstance(xdict, dict) else []
-            for xname in dict.fromkeys(xnames + extra_xnames):
-                xobjs.append((page_idx, xname))
-    return {
-        "version": version,
-        "contents": contents,
-        "fonts": fonts,
-        "xobjs": xobjs,
-        "errors": errors,
-        "n_objects": n_objects,
-        "n_pages": n_pages,
-        "n_streams": n_streams,
-    }
+    out = _kernel_result(pages=[], fonts=[])
+    with _contained(out["errors"]):
+        for page_idx, page_scope, content in _opened_pages(data, password, False, out):
+            scopes, rows, forms = scope_table(page_scope)
+            out["pages"].append((page_idx, content, rows, forms))
+            for si, scope in enumerate(scopes):
+                for name, fref in scope.fonts.items():
+                    out["fonts"].append((page_idx, si, str(name), _font_spec(fref, scope.objects)))
+    return out
 
 
 def _image_colorspace(attrs: dict, objects: dict):
@@ -1090,104 +1106,20 @@ def extract_spans(data: bytes, strict: bool = False, password: bytes = b""):
        errors:  list[(error_kind, stage, detail)]
        n_objects, n_pages, n_streams: ints (metrics/lineage fodder)
     """
-    errors: list = []
-    version = None
-    spans: list = []
-    n_objects = n_pages = n_streams = 0
+    out = _kernel_result(spans=[])
+    errors, spans = out["errors"], out["spans"]
     with _contained(errors):
-        version = sniff_version(data)
-        trailer, objects, root = open_document(data, password, errors)
-        n_objects = len(objects)
-        decode_doc_streams(objects, errors)
-        n_streams = sum(1 for v in objects.values() if isinstance(v, Stream))
-
-        # B1: trailer -> Root -> Pages (doc_tree.rs:147-150)
-        try:
-            pages_node = _require_pages(root, objects)
-        except PdfError as err:
-            # catalog-loss repair (the real-world mutool/pdfium move): a
-            # corrupt or missing /Root//Pages degrades to an ORPHAN-PAGE
-            # SCAN — every parsed dict with /Type /Page, in object-id
-            # order (creation order, which is page order for every
-            # non-adversarial writer).  Catalog-scoped semantics
-            # (optional-content config, names, outlines) are gone with
-            # the catalog; strict mode keeps the spec-strict raise.
-            if strict:
-                raise
-            pages = [
-                v
-                for _key, v in sorted(objects.items())
-                if isinstance(v, dict) and str(v.get("Type")) == "Page"
-            ]
-            if not pages:
-                raise
-            errors.append(
-                (err.kind, "assemble", f"{err}; recovered {len(pages)} orphan pages")
-            )
-            root = None
-        else:
-            pages = _walk_pages(pages_node, objects, errors)
-        n_pages = len(pages)
-
-        # per-page: tokenize content (Form XObjects executed in place),
-        # decode text, resolve XObjects
-        font_cache: dict = {}
-        off_ids = _off_ocg_ids(root, objects) if isinstance(root, dict) else set()
-        for page in pages:
-            resources = get_resolved(page, "Resources", objects) or {}
-            content = _page_content_bytes(page, objects, errors)
-            for ev, fonts in _content_events(
-                content, resources, objects, errors, off_ids=off_ids
-            ):
-                if ev[0] == "inline":
-                    # self-contained inline image: media span, no XObject
-                    # resolution (nothing to dangle)
+        decoders: dict = {}
+        for _page_idx, scope, content in _opened_pages(data, password, strict, out):
+            for ev, sc in _content_events(content, scope, errors):
+                if ev[0] in ("media", "inline"):
+                    # an inline image is self-contained: no XObject to resolve
                     spans.append(("media", None, ev[2]))
-                    continue
-                if ev[0] == "media":
-                    spans.append(("media", None, ev[2]))
-                    continue
-                if ev[0] == "atext":
-                    # /ActualText replacement: a PDF text string, decoded
-                    # WITHOUT the font (§14.9.4)
-                    spans.append(("text", pdf_text_string(ev[3]), None))
-                    continue
-                font_name = ev[2]
-                # a form's /F1 may differ from the page's /F1 — cache per
-                # font-table identity, not per name
-                fkey = (id(fonts), font_name or "")
-                if fkey not in font_cache:
-                    fobj = fonts.get(font_name) if isinstance(fonts, dict) else None
-                    font_cache[fkey] = _font_decoder(fobj, objects, errors)
-                dec = font_cache[fkey]
-                if ev[0] == "text":
-                    spans.append(("text", dec(ev[3]), None))
                 else:
-                    # textarr (TJ): concatenate string operands; a kern
-                    # at/beyond KERN_SPACE_THRESHOLD is an implied word
-                    # break (same rule as the layout kernel) — real
-                    # TeX/InDesign-class writers position words by kerns
-                    # with no space glyphs, and dropping the numbers here
-                    # concatenated their words (judge-verified on
-                    # /usr/share/doc/libtasn1-doc/libtasn1.pdf)
-                    parts = []
-                    for x in ev[3]:
-                        if isinstance(x, (bytes, bytearray)):
-                            parts.append(dec(x))
-                        elif isinstance(x, (int, float)) and x <= KERN_SPACE_THRESHOLD:
-                            parts.append(" ")
-                    spans.append(("text", "".join(parts), None))
-
+                    spans.append(("text", _event_text(ev, sc, decoders, errors), None))
     if strict and errors:
-        spans = []
-    return {
-        "version": version,
-        "spans": spans,
-        "errors": errors,
-        "n_objects": n_objects,
-        "n_pages": n_pages,
-        "n_streams": n_streams,
-    }
+        out["spans"] = []
+    return out
 
 
 def extract_layout_spans(data: bytes, password: bytes = b""):
@@ -1215,48 +1147,20 @@ def _layout_spans(objects: dict, root, errors: list, out: list) -> None:
     document whose streams are decoded.  Rows are appended to ``out`` as
     they are emitted, so a fault mid-walk keeps the rows before it."""
     pages = _walk_pages_inherited(_require_pages(root, objects), objects, errors)
-    font_cache: dict = {}
+    decoders: dict = {}
     off_ids = _off_ocg_ids(root, objects)
     for page_idx, (page, inh) in enumerate(pages):
-        resources = inh.get("Resources") or {}
+        scope = ResourceScope(inh.get("Resources"), objects, off_ids)
         # /Rotate normalization (inheritable, §7.7.3.4): report line
         # origins in READING space so columns/paragraph logic is
         # rotation-invariant — a 90/270 page swaps effective dims
         rot = _page_rotation(inh)
         pw, ph = _page_dims(inh)
         content = _page_content_bytes(page, objects, errors)
-        for ev, fonts in _content_events(
-            content, resources, objects, errors, layout=True, off_ids=off_ids
-        ):
-            if ev[0] == "atext":
-                rx, ry = _unrotate(ev[4], ev[5], rot, pw, ph)
-                out.append((page_idx, rx, ry, pdf_text_string(ev[3]), ev[6]))
+        for ev, sc in _content_events(content, scope, errors, layout=True):
+            if ev[0] in ("media", "inline"):
                 continue
-            if ev[0] not in ("text", "textarr"):
-                continue
-            font_name = ev[2]
-            fkey = (id(fonts), font_name or "")
-            if fkey not in font_cache:
-                fobj = fonts.get(font_name) if isinstance(fonts, dict) else None
-                font_cache[fkey] = _font_decoder(fobj, objects, errors)
-            dec = font_cache[fkey]
-            if ev[0] == "text":
-                txt = dec(ev[3])
-            else:
-                # TJ array: numeric elements are kerning adjustments in
-                # thousandths of text-space units (ISO 32000 §9.4.3); a
-                # gap at/beyond the threshold is an implied word break
-                # (the layout-analysis convention — writers often kern
-                # words apart instead of emitting space glyphs).  The
-                # armored family's -120 intra-phrase kern stays below
-                # the threshold, so spaced text is never double-spaced.
-                parts = []
-                for el in ev[3]:
-                    if isinstance(el, (bytes, bytearray)):
-                        parts.append(dec(el))
-                    elif isinstance(el, (int, float)) and el <= KERN_SPACE_THRESHOLD:
-                        parts.append(" ")
-                txt = "".join(parts)
+            txt = _event_text(ev, sc, decoders, errors)
             rx, ry = _unrotate(ev[4], ev[5], rot, pw, ph)
             out.append((page_idx, rx, ry, txt, ev[6]))
 
@@ -1527,16 +1431,14 @@ def extract_advance_spans(data: bytes, password: bytes = b"", with_width: bool =
         decode_doc_streams(objects, errors)
         pages_node = _require_pages(root, objects)
         pages = _walk_pages_inherited(pages_node, objects, errors)
-        dec_cache: dict = {}
+        decoders: dict = {}
         w_cache: dict = {}
         off_ids = _off_ocg_ids(root, objects)
         for page_idx, (page, inh) in enumerate(pages):
-            resources = inh.get("Resources") or {}
+            scope = ResourceScope(inh.get("Resources"), objects, off_ids)
             content = _page_content_bytes(page, objects, errors)
             cursor = 0
-            for ev, fonts in _content_events(
-                content, resources, objects, errors, advance=True, off_ids=off_ids
-            ):
+            for ev, sc in _content_events(content, scope, errors, advance=True):
                 if ev[0] == "atext":
                     # replacement text: positioned at the cursor of the
                     # first replaced show; its glyph advance is unknowable
@@ -1553,13 +1455,10 @@ def extract_advance_spans(data: bytes, password: bytes = b"", with_width: bool =
                     continue
                 if ev[0] not in ("text", "textarr"):
                     continue
-                font_name = ev[2]
-                fkey = (id(fonts), font_name or "")
-                if fkey not in dec_cache:
-                    fobj = fonts.get(font_name) if isinstance(fonts, dict) else None
-                    dec_cache[fkey] = _font_decoder(fobj, objects, errors)
-                    w_cache[fkey] = _font_widths(fobj, objects)
-                dec = dec_cache[fkey]
+                dec = _scope_decoder(decoders, sc, ev[2], errors)
+                fkey = (sc.key, ev[2] or "")
+                if fkey not in w_cache:
+                    w_cache[fkey] = _font_widths(sc.fonts.get(ev[2]), objects)
                 wid, cw, apply_tw, vert = w_cache[fkey]
                 x, y, fs, tc, tw, tz, seg = ev[4], ev[5], ev[6], ev[7], ev[8], ev[9], ev[10]
                 rise, tr = ev[11], ev[12]
@@ -2452,40 +2351,16 @@ def extract_tagged_spans(data: bytes, password: bytes = b""):
 
         tagged: list = []
         untagged: list = []
-        font_cache: dict = {}
+        decoders: dict = {}
         off_ids = _off_ocg_ids(root, objects)
         emit_i = 0
         for page_idx, page in enumerate(pages):
-            resources = get_resolved(page, "Resources", objects) or {}
+            scope = ResourceScope(get_resolved(page, "Resources", objects), objects, off_ids)
             content = _page_content_bytes(page, objects, errors)
-            for ev, fonts in _content_events(
-                content, resources, objects, errors, off_ids=off_ids, mcid=True
-            ):
+            for ev, sc in _content_events(content, scope, errors, mcid=True):
                 if ev[0] in ("media", "inline"):
                     continue  # media carries no text; stays in the main extraction
-                if ev[0] == "atext":
-                    txt = pdf_text_string(ev[3])
-                else:
-                    font_name = ev[2]
-                    fkey = (id(fonts), font_name or "")
-                    if fkey not in font_cache:
-                        fobj = fonts.get(font_name) if isinstance(fonts, dict) else None
-                        font_cache[fkey] = _font_decoder(fobj, objects, errors)
-                    dec = font_cache[fkey]
-                    if ev[0] == "text":
-                        txt = dec(ev[3])
-                    else:
-                        # same TJ kern-as-word-break rule as the flat path
-                        parts = []
-                        for x in ev[3]:
-                            if isinstance(x, (bytes, bytearray)):
-                                parts.append(dec(x))
-                            elif (
-                                isinstance(x, (int, float))
-                                and x <= KERN_SPACE_THRESHOLD
-                            ):
-                                parts.append(" ")
-                        txt = "".join(parts)
+                txt = _event_text(ev, sc, decoders, errors)
                 m = ev[-1]
                 rank = leaf_rank.get((id(page), m)) if m is not None else None
                 if rank is not None:
@@ -2840,42 +2715,11 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
                                 fres = get_resolved(page, "Resources", objects) or {}
                             if content:
                                 parts = []
-                                fcache: dict = {}
-                                for ev, fonts in _content_events(
-                                    bytes(content), fres, objects, walk_errors
-                                ):
-                                    if ev[0] not in ("text", "textarr", "atext"):
-                                        continue
-                                    if ev[0] == "atext":
-                                        parts.append(pdf_text_string(ev[3]))
-                                        continue
-                                    fname = ev[2] or ""
-                                    if fname not in fcache:
-                                        fobj = (
-                                            fonts.get(fname)
-                                            if isinstance(fonts, dict)
-                                            else None
-                                        )
-                                        fcache[fname] = _font_decoder(fobj, objects, walk_errors)
-                                    dec = fcache[fname]
-                                    if ev[0] == "text":
-                                        parts.append(dec(ev[3]))
-                                    else:
-                                        # same kern-as-word-break rule as the
-                                        # flat span path
-                                        parts.append(
-                                            "".join(
-                                                dec(el)
-                                                if isinstance(el, (bytes, bytearray))
-                                                else " "
-                                                for el in ev[3]
-                                                if isinstance(el, (bytes, bytearray))
-                                                or (
-                                                    isinstance(el, (int, float))
-                                                    and el <= KERN_SPACE_THRESHOLD
-                                                )
-                                            )
-                                        )
+                                decoders: dict = {}
+                                scope = ResourceScope(fres, objects, set())
+                                for ev, sc in _content_events(bytes(content), scope, walk_errors):
+                                    if ev[0] in ("text", "textarr", "atext"):
+                                        parts.append(_event_text(ev, sc, decoders, walk_errors))
                                 covered = "".join(parts)
                     if sub == "Highlight":
                         qp = get_resolved(an, "QuadPoints", objects)

@@ -144,41 +144,18 @@ class Pipeline:
         decoded = self._checkpointed("decode", build_decode)
         tokens = self._checkpointed("tokenize", lambda: tokenize(decoded), eager=False)
 
-        def build_classify():
-            spans, dangling = classify(tokens, decoded)
-            # persist the dangling-ref rows alongside via a tag column so one
-            # table carries both (single checkpoint per stage)
-            spans_tag = spans.withColumn("error_kind", F.lit(None).cast("string")).withColumn(
-                "detail", F.lit(None).cast("string")
-            )
-            dang_tag = dangling.select(
-                "doc_id",
-                F.lit(None).cast("int").alias("page_idx"),
-                F.lit(None).cast("int").alias("seq"),
-                F.lit(None).cast("int").alias("ev_idx"),
-                F.lit(None).cast("string").alias("kind"),
-                F.lit(None).cast("string").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                "error_kind",
-                "detail",
-            )
-            return spans_tag.unionByName(dang_tag)
+        classified = self._checkpointed("classify", lambda: classify(tokens, decoded))
 
-        classified_all = self._checkpointed("classify", build_classify)
-        classified = classified_all.filter(F.col("kind").isNotNull()).drop("error_kind", "detail")
-
-        # metrics: decode-stage error rows + classify anti-join rows,
-        # aggregated per (doc, kind, stage) — reference error taxonomy.
-        decode_errors = decoded.filter(F.col("rtype") == "error").select(
+        # metrics: the decode stage's error rows + the content interpreter's
+        # (tokenize), aggregated per (doc, kind, stage) — reference error
+        # taxonomy.
+        errors = decoded.filter(F.col("rtype") == "error").select(
             "doc_id", "error_kind", "stage"
+        ).unionByName(
+            tokens.filter(F.col("ev_type") == "error").select("doc_id", "error_kind", "stage")
         )
-        classify_errors = classified_all.filter(F.col("error_kind").isNotNull()).select(
-            "doc_id", "error_kind", F.lit("classify").alias("stage")
-        )
-        metrics = (
-            decode_errors.unionByName(classify_errors)
-            .groupBy("doc_id", "error_kind", "stage")
-            .agg(F.count(F.lit(1)).alias("count"))
+        metrics = errors.groupBy("doc_id", "error_kind", "stage").agg(
+            F.count(F.lit(1)).alias("count")
         )
 
         spans = self._checkpointed(

@@ -30,18 +30,63 @@ DOCUMENTS_RAW = T.StructType(
     ]
 )
 
-# decode-stage output: one row per (doc meta | content stream | font binding |
-# xobject binding | error).  rtype discriminates; unused columns are NULL.
+# one resource scope of a page (core/extract.py ``scope_table``): its
+# hidden /OC names, its ExtGState font sizes and what each /XObject name
+# draws — a form (index into the page's ``forms``, run under scope
+# ``scope``) or media (form NULL).  ``xobjects`` is NULL when the scope's
+# /XObject is not a dictionary, so every name draws media.
+SCOPE_STRUCT = T.StructType(
+    [
+        T.StructField("hidden", T.ArrayType(T.StringType())),
+        T.StructField(
+            "gs",
+            T.ArrayType(
+                T.StructType(
+                    [T.StructField("name", T.StringType()), T.StructField("size", T.DoubleType())]
+                )
+            ),
+        ),
+        T.StructField(
+            "xobjects",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("name", T.StringType()),
+                        T.StructField("form", T.IntegerType()),
+                        T.StructField("scope", T.IntegerType()),
+                    ]
+                )
+            ),
+        ),
+    ]
+)
+
+# decode-stage output: one row per doc meta | page | font of a page scope |
+# error.  rtype discriminates; unused columns are NULL.
 DECODED = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
-        T.StructField("rtype", T.StringType()),  # meta|content|font|xobj|error
+        T.StructField("rtype", T.StringType()),  # meta|page|font|error
         T.StructField("page_idx", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),  # content-stream order within page
-        T.StructField("data", T.BinaryType()),  # decoded content / CMap bytes
+        # page: its content bytes, every scope it can reach (scope 0 is the
+        # page's own) and the decoded content of every form they name
+        T.StructField("data", T.BinaryType()),
+        T.StructField("scopes", T.ArrayType(SCOPE_STRUCT)),
+        T.StructField("forms", T.ArrayType(T.BinaryType())),
+        # font: keyed by (page_idx, scope, font_name), carrying its
+        # core/extract.py ``FontSpec``
+        T.StructField("scope", T.IntegerType()),
         T.StructField("font_name", T.StringType()),
-        T.StructField("encoding", T.StringType()),
-        T.StructField("media_name", T.StringType()),
+        T.StructField("tounicode", T.BinaryType()),
+        T.StructField("base_encoding", T.StringType()),
+        T.StructField(
+            "differences",
+            T.ArrayType(
+                T.StructType(
+                    [T.StructField("code", T.IntegerType()), T.StructField("glyph", T.StringType())]
+                )
+            ),
+        ),
         T.StructField("version", T.StringType()),
         T.StructField("error_kind", T.StringType()),
         T.StructField("stage", T.StringType()),
@@ -52,22 +97,26 @@ DECODED = T.StructType(
     ]
 )
 
-# tokenize-stage output: postfix-machine events in byte order
+# tokenize-stage output: the content interpreter's events in page order,
+# forms executed in place, plus the errors it records
 TOKENS = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("page_idx", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),
+        T.StructField("seq", T.IntegerType()),  # one content per page: 0
         T.StructField("ev_idx", T.IntegerType()),
-        T.StructField("ev_type", T.StringType()),  # text | media
+        T.StructField("ev_type", T.StringType()),  # text | atext | media | error
+        # text: the scope whose font ``font_name`` decodes it
+        T.StructField("scope", T.IntegerType()),
         T.StructField("font_name", T.StringType()),
+        # Tj bytes, or the ActualText string of an atext event
         T.StructField("operand", T.BinaryType()),
+        # TJ strings, NULL at each kern that reads as a word break
+        T.StructField("parts", T.ArrayType(T.BinaryType())),
         T.StructField("media_name", T.StringType()),
-        # byte offsets into operand where a TJ kern at/beyond the
-        # word-break threshold fell between string elements — classify
-        # inserts a space there (offsets land on operand boundaries, so
-        # per-segment font decode is safe even for 2-byte CID codes)
-        T.StructField("break_offsets", T.ArrayType(T.IntegerType())),
+        T.StructField("error_kind", T.StringType()),
+        T.StructField("stage", T.StringType()),
+        T.StructField("detail", T.StringType()),
     ]
 )
 

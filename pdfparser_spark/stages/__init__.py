@@ -4,9 +4,9 @@
 
 Each stage is a DataFrame -> DataFrame function with a checkpointable
 boundary (pipeline.py persists each output).  Sequential per-document work
-happens only inside ``mapInPandas`` kernels; *between* stages everything is
-Spark algebra — font binding and XObject resolution are joins, dangling
-references fall out of an anti-join, ordering is one ordered aggregation.
+happens only inside ``mapInPandas`` kernels, each running the fused
+kernel's own code (core/extract.py); *between* stages everything is Spark
+algebra — font binding is one join, ordering is one ordered aggregation.
 """
 
 from .assemble import assemble, assemble_line_boxes, assemble_paragraphs, flatten_spans, hyphenate_words

@@ -1,20 +1,18 @@
 """Stage 3 — classify.
 
-Text events bind to their page's font via an equi-join on
-``(doc_id, page_idx, font_name)`` — the DataFrame realization of the
-reference's transparent reference deref (pdf_objects.rs:216-301; SURVEY.md
-§2.4 A2: "join-then-coalesce, not pointer chase").  Glyph bytes become
-Unicode through the font's /ToUnicode CMap (cmap.py) or the simple-encoding
-fallback, inside a mapInPandas kernel with a per-batch CMap parse cache.
+Text events bind to the font of the scope that showed them via ONE
+equi-join on ``(doc_id, page_idx, scope, font_name)`` — the DataFrame
+realization of the reference's transparent reference deref
+(pdf_objects.rs:216-301; SURVEY.md §2.4 A2: "join-then-coalesce, not
+pointer chase").  Glyph bytes become Unicode through the font row's typed
+spec, with the fused kernel's own builder (``core.extract.spec_decoder``)
+and text rule (``core.extract.shown_text``), inside a mapInPandas kernel
+that builds each distinct spec's decoder once per task.  ActualText
+replacements decode as PDF text strings, never through a font.  Media
+events pass through: the tokenize stage already resolved every ``Do``.
 
-Media events resolve against the page's /XObject dictionary with a join;
-events whose XObject is missing are exactly the *anti-join* rows — they
-still emit a media span (lenient semantics match core/extract.py) plus a
-ReferenceError metric row (reference error taxonomy main.rs:36-40).
-
-Fonts/xobjects per document are tiny next to the token stream, so the join
-sides are hinted broadcast when small; at cluster scale AQE's skew-join
-splitting handles heavy-tailed documents (session.py).
+At cluster scale AQE's skew-join splitting handles heavy-tailed documents
+(session.py).
 """
 
 from __future__ import annotations
@@ -25,128 +23,59 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.cmap import CMap, encoding_decoder, pdf_text_string
-from ..core.content import INLINE_MEDIA_REF
-from .tokenize import ATEXT_FONT
+from ..core.cmap import pdf_text_string
+from ..core.extract import FontSpec, shown_text, spec_decoder
 from ..schema import CLASSIFIED
 
-_COLS = [f.name for f in CLASSIFIED.fields]
-# below this row count the dimension side is broadcast (fonts/xobjects are
-# a few rows per document)
-BROADCAST_DIM_MAX = 10_000_000
+_COLS = CLASSIFIED.fieldNames()
+_KEY = ["doc_id", "page_idx", "seq", "ev_idx"]
 
 
-def _maybe_broadcast(df: DataFrame, dim_rows_hint: int | None) -> DataFrame:
-    if dim_rows_hint is not None and dim_rows_hint <= BROADCAST_DIM_MAX:
-        return F.broadcast(df)
-    return df
-
-
-def classify(tokens: DataFrame, decoded: DataFrame, dim_rows_hint: int | None = None):
-    """Returns (classified_spans, extra_error_rows).
-
-    ``extra_error_rows`` has columns (doc_id, error_kind, stage, detail) for
-    dangling XObject references found by the anti-join.
-    """
-    fonts = (
-        decoded.filter(F.col("rtype") == "font")
-        .select("doc_id", "page_idx", "font_name", F.col("data").alias("cmap"), "encoding")
-    )
-    xobjs = (
-        decoded.filter(F.col("rtype") == "xobj")
-        .select("doc_id", "page_idx", F.col("media_name").alias("xobj_name"))
-        .withColumn("xobj_present", F.lit(True))
+def _spec(tounicode, encoding, differences) -> FontSpec:
+    return FontSpec(
+        bytes(tounicode) if tounicode is not None else None,
+        encoding if isinstance(encoding, str) else None,
+        tuple((int(d["code"]), d["glyph"]) for d in differences) if differences is not None else (),
     )
 
-    text_ev = tokens.filter(F.col("ev_type") == "text")
-    media_ev = tokens.filter(F.col("ev_type") == "media")
 
-    # --- text: bind font, decode glyph bytes ------------------------------
-    joined = text_ev.join(
-        _maybe_broadcast(fonts, dim_rows_hint), on=["doc_id", "page_idx", "font_name"], how="left"
-    ).select(
-        "doc_id", "page_idx", "seq", "ev_idx", "font_name", "operand",
-        "break_offsets", "cmap", "encoding",
+def classify(tokens: DataFrame, decoded: DataFrame) -> DataFrame:
+    fonts = decoded.filter(F.col("rtype") == "font").select(
+        "doc_id", "page_idx", "scope", "font_name", "tounicode", "base_encoding", "differences"
     )
-
-    def _with_breaks(raw: bytes, breaks, decode_fn) -> str:
-        # TJ kern-as-word-break: decode each operand segment and insert
-        # the implied space at the recorded byte offsets (offsets are
-        # operand boundaries, so segment-wise decode is CID-safe)
-        if breaks is None or len(breaks) == 0:
-            return decode_fn(raw)
-        parts = []
-        prev = 0
-        for off in breaks:
-            parts.append(decode_fn(raw[prev:off]))
-            parts.append(" ")
-            prev = off
-        parts.append(decode_fn(raw[prev:]))
-        return "".join(parts)
+    shows = tokens.filter(F.col("ev_type").isin("text", "atext")).join(
+        fonts, on=["doc_id", "page_idx", "scope", "font_name"], how="left"
+    )
 
     def decode_text(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[bytes, CMap] = {}
-        enc_cache: dict = {}  # spec string -> decoder (simple or /Differences)
+        decoders: dict = {}
         for pdf in batches:
             texts = []
-            for fname, operand, breaks, cmap, enc in zip(
-                pdf["font_name"], pdf["operand"], pdf["break_offsets"],
-                pdf["cmap"], pdf["encoding"],
+            for ev_type, operand, parts, tu, enc, diffs in zip(
+                pdf["ev_type"], pdf["operand"], pdf["parts"],
+                pdf["tounicode"], pdf["base_encoding"], pdf["differences"],
             ):
-                raw = bytes(operand) if operand is not None else b""
-                if fname == ATEXT_FONT:
-                    # /ActualText replacement (§14.9.4): a PDF text
-                    # string — never font-decoded
-                    texts.append(pdf_text_string(raw))
-                elif cmap is not None:
-                    key = bytes(cmap)
-                    cm = cache.get(key)
-                    if cm is None:
-                        cm = cache[key] = CMap.parse(key)
-                    texts.append(_with_breaks(raw, breaks, cm.decode))
-                else:
-                    spec = enc if isinstance(enc, str) else None
-                    dec = enc_cache.get(spec)
-                    if dec is None:
-                        dec = enc_cache[spec] = encoding_decoder(spec)
-                    texts.append(_with_breaks(raw, breaks, dec))
-            out = pdf[["doc_id", "page_idx", "seq", "ev_idx"]].copy()
+                if ev_type == "atext":
+                    texts.append(pdf_text_string(bytes(operand)))
+                    continue
+                spec = _spec(tu, enc, diffs)
+                dec = decoders.get(spec)
+                if dec is None:
+                    dec = decoders[spec] = spec_decoder(spec)
+                texts.append(shown_text(bytes(operand) if parts is None else parts, dec))
+            out = pdf[_KEY].copy()
             out["kind"] = "text"
             out["text"] = texts
             out["media_ref"] = None
             yield out.reindex(columns=_COLS)
 
-    text_spans = joined.mapInPandas(decode_text, schema=CLASSIFIED)
-
-    # --- media: resolve XObject name against page resources ----------------
-    media_joined = media_ev.join(
-        _maybe_broadcast(xobjs, dim_rows_hint),
-        on=(
-            (media_ev.doc_id == xobjs.doc_id)
-            & (media_ev.page_idx == xobjs.page_idx)
-            & (media_ev.media_name == xobjs.xobj_name)
-        ),
-        how="left",
-    ).select(
-        media_ev.doc_id,
-        media_ev.page_idx,
-        media_ev.seq,
-        media_ev.ev_idx,
+    text_spans = shows.select(
+        *_KEY, "ev_type", "operand", "parts", "tounicode", "base_encoding", "differences"
+    ).mapInPandas(decode_text, schema=CLASSIFIED)
+    media_spans = tokens.filter(F.col("ev_type") == "media").select(
+        *_KEY,
         F.lit("media").alias("kind"),
         F.lit(None).cast("string").alias("text"),
-        media_ev.media_name.alias("media_ref"),
-        F.col("xobj_present"),
+        F.col("media_name").alias("media_ref"),
     )
-    media_spans = media_joined.drop("xobj_present")
-    dangling = (
-        media_joined.filter(
-            F.col("xobj_present").isNull() & (F.col("media_ref") != INLINE_MEDIA_REF)
-        )
-        .select(
-            "doc_id",
-            F.lit("ReferenceError").alias("error_kind"),
-            F.lit("classify").alias("stage"),
-            F.concat(F.lit("dangling XObject "), F.col("media_ref")).alias("detail"),
-        )
-    )
-    return text_spans.unionByName(media_spans), dangling
+    return text_spans.unionByName(media_spans)

@@ -2,16 +2,17 @@
 
 Input:  ``documents_raw(doc_id, spans)`` (interleaved text+media spans).
 Output: flat DECODED rows per doc:
-    rtype='meta'    version + n_objects/n_pages/n_streams   (lineage/metrics)
-    rtype='content' (page_idx, seq, data=decoded bytes)     -> tokenize
-    rtype='font'    (page_idx, font_name, data=CMap, encoding) -> classify
-    rtype='xobj'    (page_idx, media_name)                  -> classify join
-    rtype='error'   (error_kind, stage, detail)             -> metrics
+    rtype='meta'  version + n_objects/n_pages/n_streams     (lineage/metrics)
+    rtype='page'  (page_idx, data=content bytes, scopes, forms) -> tokenize
+    rtype='font'  (page_idx, scope, font_name, font spec)        -> classify
+    rtype='error' (error_kind, stage, detail)                    -> metrics
 
-Covers reference operators S1-S2, L1-L4, T1-T12, A1-A4, D1-D9 (SURVEY.md
-§2): whole-doc reconstruction, version sniff, trailer/xref resolution
-(classic + stream + /Prev), parse-all objects, filter decode with
-spec-correct Flate/LZW/AHx/A85 and media routing.  Sequential per document,
+``core.extract.decode_document`` is the kernel: the fused kernel's own
+open, stream decode and page walk (with its orphan-page recovery), then
+per page the content bytes and every resource scope the page can reach
+through its Form XObjects, each font carrying its typed spec (ToUnicode
+bytes, base encoding, /Differences).  Covers reference operators S1-S2,
+L1-L4, T1-T12, A1-A4, D1-D9 (SURVEY.md §2).  Sequential per document,
 vectorized across the documents of each Arrow batch: ``_rows_for_doc`` is
 run by the fused stage's per-document runner (``fused._per_doc``), which
 also reassembles each document's bytes from its spans.
@@ -25,12 +26,15 @@ from ..core.extract import decode_document
 from ..schema import DECODED
 from .fused import _per_doc
 
+_EMPTY = dict.fromkeys(DECODED.fieldNames())
+
 
 def _rows_for_doc(doc_id: int, data: bytes) -> list[dict]:
     # sparse rows: each rtype fills its own columns, the rest are NULL
     d = decode_document(data)
     rows: list[dict] = [
         {
+            **_EMPTY,
             "doc_id": doc_id,
             "rtype": "meta",
             "version": d["version"],
@@ -39,35 +43,42 @@ def _rows_for_doc(doc_id: int, data: bytes) -> list[dict]:
             "n_streams": d["n_streams"],
         }
     ]
-    for page_idx, seq, payload, hidden_json in d["contents"]:
-        # content rows reuse the (font-row) ``encoding`` column to carry the
-        # page's switched-off OCG property names to the tokenize stage
+    for page_idx, content, scopes, forms in d["pages"]:
         rows.append(
             {
+                **_EMPTY,
                 "doc_id": doc_id,
-                "rtype": "content",
+                "rtype": "page",
                 "page_idx": page_idx,
-                "seq": seq,
-                "data": payload,
-                "encoding": hidden_json,
+                "data": content,
+                "scopes": scopes,
+                "forms": forms,
             }
         )
-    for page_idx, fname, cmap, enc in d["fonts"]:
+    for page_idx, scope, font_name, spec in d["fonts"]:
         rows.append(
             {
+                **_EMPTY,
                 "doc_id": doc_id,
                 "rtype": "font",
                 "page_idx": page_idx,
-                "font_name": fname,
-                "data": cmap,
-                "encoding": enc,
+                "scope": scope,
+                "font_name": font_name,
+                "tounicode": spec.tounicode,
+                "base_encoding": spec.encoding,
+                "differences": [{"code": c, "glyph": g} for c, g in spec.differences] or None,
             }
         )
-    for page_idx, xname in d["xobjs"]:
-        rows.append({"doc_id": doc_id, "rtype": "xobj", "page_idx": page_idx, "media_name": xname})
     for kind, stage, detail in d["errors"]:
         rows.append(
-            {"doc_id": doc_id, "rtype": "error", "error_kind": kind, "stage": stage, "detail": detail[:500]}
+            {
+                **_EMPTY,
+                "doc_id": doc_id,
+                "rtype": "error",
+                "error_kind": kind,
+                "stage": stage,
+                "detail": detail[:500],
+            }
         )
     return rows
 

@@ -1,14 +1,18 @@
 """Stage 2 — tokenize.
 
-Input:  DECODED rows with rtype='content' (decoded content-stream bytes).
-Output: TOKENS — postfix-machine events in byte order per stream.
+Input:  DECODED rows with rtype='page' (content bytes, scopes, forms).
+Output: TOKENS — the content interpreter's events per page, in order.
 
 This is the content-stream operator layer the reference only sketched
 (StreamType::Content pdf_file.rs:705, design notes temp.rs:35-65; SURVEY.md
-§2.7): Tj/TJ/'/" text-show operators carrying their raw operand bytes and
-the active /Tf font, and Do XObject placements.  Each content stream is
-independent, so this stage is embarrassingly parallel — no shuffle is
-introduced (narrow mapInPandas over the pruned content columns).
+§2.7).  Each page's scopes are rebuilt from the decode stage's rows
+(``core.extract.table_scopes``) and the fused kernel's own interpreter,
+``core.extract._content_events``, runs over them, so Form XObjects execute
+in place under their own resources.  It emits text events (with their
+scope and, for TJ, their parts), ActualText replacements (``atext``),
+media events, and the errors the interpreter records (dangling XObject,
+form recursion cap).  Pages are independent, so this stage is
+embarrassingly parallel — no shuffle (narrow mapInPandas).
 """
 
 from __future__ import annotations
@@ -19,118 +23,46 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import json
-
-from ..core.content import tokenize_content
-from ..core.extract import KERN_SPACE_THRESHOLD
+from ..core.extract import _content_events, _contained, show_operand, table_scopes
 from ..schema import TOKENS
 
-_COLS = [f.name for f in TOKENS.fields]
+_EMPTY = dict.fromkeys(TOKENS.fieldNames())
 
 
-ATEXT_FONT = "__atext__"  # sentinel font: classify decodes as PDF text string
+def _page_rows(doc_id: int, page_idx: int, content: bytes, scopes, forms) -> list[dict]:
+    head = {**_EMPTY, "doc_id": doc_id, "page_idx": page_idx, "seq": 0}
+    rows: list[dict] = []
+    errors: list = []
+    with _contained(errors):
+        page_scope = table_scopes(scopes, forms)[0]
+        for ev_idx, (ev, scope) in enumerate(_content_events(content, page_scope, errors)):
+            row = {**head, "ev_idx": ev_idx}
+            if ev[0] in ("media", "inline"):
+                row.update(ev_type="media", media_name=ev[2])
+            elif ev[0] == "atext":
+                row.update(ev_type="atext", operand=ev[3])
+            else:
+                operand = show_operand(ev)
+                row.update(ev_type="text", scope=scope.key, font_name=ev[2])
+                row["operand" if ev[0] == "text" else "parts"] = operand
+            rows.append(row)
+    for kind, stage, detail in errors:
+        rows.append({**head, "ev_type": "error", "error_kind": kind, "stage": stage, "detail": detail[:500]})
+    return rows
 
 
 def tokenize(decoded: DataFrame) -> DataFrame:
-    # the content row's ``encoding`` column carries the page's switched-off
-    # OCG property names (JSON list, decode stage) — /OC regions naming
-    # them are suppressed here, exactly like the fused kernel
-    content = decoded.filter(F.col("rtype") == "content").select(
-        "doc_id", "page_idx", "seq", "data", "encoding"
+    pages = decoded.filter(F.col("rtype") == "page").select(
+        "doc_id", "page_idx", "data", "scopes", "forms"
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
-            for doc_id, page_idx, seq, data, hidden_json in zip(
-                pdf["doc_id"], pdf["page_idx"], pdf["seq"], pdf["data"], pdf["encoding"]
+            for doc_id, page_idx, data, scopes, forms in zip(
+                pdf["doc_id"], pdf["page_idx"], pdf["data"], pdf["scopes"], pdf["forms"]
             ):
-                hidden = None
-                gs_fonts = None
-                if isinstance(hidden_json, str) and hidden_json:
-                    payload = json.loads(hidden_json)
-                    if isinstance(payload, dict):
-                        # extended channel: {"hidden": [...], "gs": {name: size}}
-                        hidden = frozenset(payload.get("hidden") or []) or None
-                        gs_fonts = payload.get("gs") or None
-                    else:
-                        hidden = frozenset(payload)
-                for ev_idx, ev in enumerate(
-                    tokenize_content(
-                        bytes(data), hidden_props=hidden, gs_fonts=gs_fonts
-                    )
-                ):
-                    if ev[0] == "atext":
-                        # /ActualText replacement: not font-encoded — route
-                        # to classify's PDF-text-string arm via the
-                        # sentinel font name (which matches no font row)
-                        rows.append(
-                            {
-                                "doc_id": int(doc_id),
-                                "page_idx": int(page_idx),
-                                "seq": int(seq),
-                                "ev_idx": ev_idx,
-                                "ev_type": "text",
-                                "font_name": ATEXT_FONT,
-                                "operand": ev[3],
-                            }
-                        )
-                    elif ev[0] in ("media", "inline"):
-                        # inline images carry the INLINE_MEDIA_REF sentinel
-                        # as their media_name; classify resolves real names
-                        # against /XObject and exempts the sentinel from the
-                        # dangling-reference anti-join
-                        rows.append(
-                            {
-                                "doc_id": int(doc_id),
-                                "page_idx": int(page_idx),
-                                "seq": int(seq),
-                                "ev_idx": ev_idx,
-                                "ev_type": "media",
-                                "media_name": ev[2],
-                            }
-                        )
-                    else:
-                        breaks = None
-                        if ev[0] == "text":
-                            operand = ev[3]
-                        else:
-                            # TJ array: join string elements; record the
-                            # byte offset of every kern at/beyond the
-                            # word-break threshold so classify re-inserts
-                            # the implied space (kern-positioned writers
-                            # emit no space glyphs — see core/extract.py)
-                            segs: list[bytes] = []
-                            offs: list[int] = []
-                            n = 0
-                            for x in ev[3]:
-                                if isinstance(x, (bytes, bytearray)):
-                                    segs.append(bytes(x))
-                                    n += len(x)
-                                elif (
-                                    isinstance(x, (int, float))
-                                    and x <= KERN_SPACE_THRESHOLD
-                                ):
-                                    offs.append(n)
-                            operand = b"".join(segs)
-                            breaks = offs or None
-                        rows.append(
-                            {
-                                "doc_id": int(doc_id),
-                                "page_idx": int(page_idx),
-                                "seq": int(seq),
-                                "ev_idx": ev_idx,
-                                "ev_type": "text",
-                                "font_name": ev[2],
-                                "operand": operand,
-                                "break_offsets": breaks,
-                            }
-                        )
-            out = pd.DataFrame(rows).reindex(columns=_COLS)
-            # reindex fills missing keys with NaN; Arrow needs None for a
-            # null array<int> value
-            col = out["break_offsets"]
-            out["break_offsets"] = col.astype(object).where(col.notna(), None)
-            yield out
+                rows.extend(_page_rows(int(doc_id), int(page_idx), bytes(data), scopes, forms))
+            yield pd.DataFrame(rows, columns=TOKENS.fieldNames())
 
-    return content.mapInPandas(run, schema=TOKENS)
+    return pages.mapInPandas(run, schema=TOKENS)

@@ -108,7 +108,7 @@ def test_encrypted_document_rejected_with_error_row():
     assert any(k == "FilterError" and "Encrypt" in detail for (k, _s, detail) in res["errors"])
 
     dres = decode_document(raw)
-    assert dres["contents"] == []
+    assert dres["pages"] == [] and dres["fonts"] == []
     assert any(k == "FilterError" for (k, _s, _d) in dres["errors"])
 
 
@@ -959,12 +959,14 @@ def test_extgstate_font_selection():
     out = extract_spans(built["bytes"], strict=True)
     assert not out["errors"]
     assert [tuple(s) for s in out["spans"]] == expected_spans(21, text)
-    # staged dimension rows carry the sentinel font, and the DECODED
-    # page-0 content really selects via gs (no Tf before the first show)
+    # the staged font rows carry the gs-selected font, and page 0's
+    # content really selects via gs (no Tf before the first show) under a
+    # scope that declares GS1's font size
     dd = decode_document(built["bytes"])
-    assert "__gs__GS1" in [f[1] for f in dd["fonts"] if f[0] == 0]
-    page0 = next(bytes(c[2]) for c in dd["contents"] if c[0] == 0)
+    assert "__gs__GS1" in [f[2] for f in dd["fonts"] if f[0] == 0]
+    _idx, page0, scopes, _forms = dd["pages"][0]
     assert b"/GS1 gs" in page0 and b"Tf" not in page0.split(b"ET")[0]
+    assert "GS1" in [g["name"] for g in scopes[0]["gs"]]
 
 
 def test_incremental_xref_stream_revision():

@@ -167,10 +167,10 @@ def test_contents_array_concatenates_before_tokenize():
     d = build_document(13, TEXT)
     got = [t for (k, t, _m) in extract_spans(d["bytes"])["spans"] if k == "text"]
     assert got == _family_page_texts(13, TEXT)
-    # the staged decode concatenates: exactly ONE content row per page
+    # the staged decode concatenates: exactly ONE content per page
     dd = decode_document(d["bytes"])
-    pages = [c[0] for c in dd["contents"]]
-    assert len(pages) == len(set(pages))
+    pages = [p[0] for p in dd["pages"]]
+    assert pages == list(range(dd["n_pages"]))
     # and the second piece really exists as its own stream object
     assert d["bytes"].count(b"endstream") >= 2
 

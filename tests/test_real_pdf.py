@@ -46,7 +46,7 @@ def test_simple_pdf_page_tree(pdf_bytes):
     assert res["version"] == "1.7"
     assert res["n_pages"] == 1
     assert res["n_objects"] == 3
-    assert res["contents"] == []  # the page carries no /Contents
+    assert [p[:2] for p in res["pages"]] == [(0, b"")]  # the page carries no /Contents
 
 
 def test_simple_pdf_extract_spans(pdf_bytes):

@@ -71,6 +71,16 @@ def test_cmap_bfrange_array_form():
     assert cm.decode(b"\x01\x02\x03") == "XYZ"
 
 
+def test_cmap_bfrange_outgrowing_its_destination_stops_at_the_last_fit():
+    """<0000> <FFFF> <0041> would map code FFBF to 0x10000, which two
+    bytes cannot hold: the run stops at FFBE and later codes stay unmapped."""
+    cm = CMap.parse(
+        b"1 begincodespacerange <0000> <FFFF> endcodespacerange\n"
+        b"1 beginbfrange <0000> <FFFF> <0041> endbfrange"
+    )
+    assert cm.decode(b"\x00\x00\x00\x01\xff\xbe\xff\xbf\xff\xff") == "AB\uffff\ufffd\ufffd"
+
+
 def test_simple_decode_winansi():
     assert simple_decode(b"caf\xe9", "WinAnsiEncoding") == "café"
 
