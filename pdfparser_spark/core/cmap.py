@@ -313,9 +313,3 @@ def remap_decoder(base_encoding: str | None, remap):
         return "".join(table[b] for b in raw)
 
     return decode
-
-
-def differences_decoder(base_encoding: str | None, differences: list):
-    """Decoder for a §9.6.5.1 /Encoding dictionary's raw /BaseEncoding
-    name and /Differences array."""
-    return remap_decoder(base_encoding, differences_remap(differences))

@@ -53,16 +53,6 @@ class FilterError(PdfError):
     stage = "decode"
 
 
-class ReferenceError_(PdfError):
-    kind = REFERENCE_ERROR
-    stage = "classify"
-
-
-class UnavailableTypeError(PdfError):
-    kind = UNAVAILABLE_TYPE
-    stage = "classify"
-
-
 class DocTreeError(PdfError):
     kind = DOC_TREE_ERROR
     stage = "assemble"

@@ -19,7 +19,11 @@ Every kernel opens its document through :func:`open_document` (xref ->
 decryptor -> parse -> decrypt, then the resolved /Root), calls
 :func:`decode_doc_streams` itself when it reads stream payloads, and runs
 its body inside ``with _contained(errors):`` so a corrupt document ends
-as error rows, never as an exception.  New kernels follow the same shape.
+as error rows, never as an exception.  A kernel that reads pages walks
+the page tree once, with :func:`_walk_pages`: every page comes with its
+inherited /Resources, /MediaBox and /Rotate, and a lost catalog degrades
+to the orphan-page scan (only strict :func:`extract_spans` refuses
+instead).  New kernels follow the same shape.
 """
 
 from __future__ import annotations
@@ -403,13 +407,49 @@ def _page_content_bytes(page: dict, objects: dict, errors: list) -> bytes:
 _INHERITABLE = ("Resources", "MediaBox", "Rotate")
 
 
-def _walk_pages_inherited(root_pages, objects: dict, errors: list):
-    """B2/B3 walk yielding ``(page_dict, inherited)`` pairs in document
-    order, where ``inherited`` carries the inheritable page attributes
-    (§7.7.3.4) accumulated down the tree — a page's own value shadows an
-    ancestor's.  Iterative with an explicit stack; depth-capped."""
+def _inherited(node: dict, objects: dict, inh: dict) -> dict:
+    """``inh`` with ``node``'s own inheritable attributes laid over it."""
+    here = inh
+    for k in _INHERITABLE:
+        v = get_resolved(node, k, objects)
+        if v is not None:
+            if here is inh:
+                here = dict(inh)
+            here[k] = v
+    return here
+
+
+def _walk_pages(root, objects: dict, errors: list, strict: bool = False):
+    """B1-B3, the one page walk (reference PageTree::new + add_node,
+    doc_tree.rs:63-150): catalog -> /Pages -> depth-first over /Kids.
+    Returns ``(pages, root)`` with pages as ``(page dict, attrs)`` in
+    document order; ``attrs`` holds the inheritable attributes in effect
+    (§7.7.3.4: a page's own value shadows an ancestor's).  Iterative with
+    an explicit stack; depth-capped; a bad node is an error row.
+
+    A missing /Root or /Pages raises :func:`_require_pages`' error under
+    ``strict``; otherwise the walk degrades to an ORPHAN-PAGE SCAN (the
+    real-world mutool/pdfium repair): every parsed dict with /Type /Page,
+    in object-id order (creation order, which is page order for every
+    non-adversarial writer), each with its own attributes, and ``root``
+    None — catalog-scoped semantics (optional-content config, names,
+    outlines) are gone with the catalog.  It raises when no page is found."""
+    try:
+        pages_node = _require_pages(root, objects)
+    except PdfError as err:
+        if strict:
+            raise
+        pages = [
+            (v, _inherited(v, objects, {}))
+            for _key, v in sorted(objects.items())
+            if isinstance(v, dict) and str(v.get("Type")) == "Page"
+        ]
+        if not pages:
+            raise
+        errors.append((err.kind, "assemble", f"{err}; recovered {len(pages)} orphan pages"))
+        return pages, None
     pages = []
-    stack = [(root_pages, 0, {})]
+    stack = [(pages_node, 0, {})]
     while stack:
         node, depth, inh = stack.pop()
         node = resolve(node, objects)
@@ -422,13 +462,7 @@ def _walk_pages_inherited(root_pages, objects: dict, errors: list):
         if depth > MAX_TREE_DEPTH:
             errors.append((DOC_TREE_ERROR, "assemble", "page tree too deep"))
             continue
-        here = inh
-        for k in _INHERITABLE:
-            v = get_resolved(node, k, objects)
-            if v is not None:
-                if here is inh:
-                    here = dict(inh)
-                here[k] = v
+        here = _inherited(node, objects, inh)
         ntype = get_resolved(node, "Type", objects)
         ntype = str(ntype) if ntype is not None else None
         kids = get_resolved(node, "Kids", objects)
@@ -442,13 +476,7 @@ def _walk_pages_inherited(root_pages, objects: dict, errors: list):
         else:
             # NotImplemented node type (doc_tree.rs:116-124)
             errors.append((DOC_TREE_ERROR, "assemble", f"unhandled node type {ntype}"))
-    return pages
-
-
-def _walk_pages(root_pages, objects: dict, errors: list):
-    """B2/B3 (reference PageTree::new + add_node doc_tree.rs:63-124):
-    depth-first over /Kids, yielding page dicts in document order."""
-    return [p for p, _inh in _walk_pages_inherited(root_pages, objects, errors)]
+    return pages, root
 
 
 # Form XObjects may invoke other forms (ISO 32000 §8.10.1); real documents
@@ -895,32 +923,6 @@ def _event_text(ev, scope: ResourceScope, decoders: dict, errors: list) -> str:
     return shown_text(show_operand(ev), _scope_decoder(decoders, scope, ev[2], errors))
 
 
-def _document_pages(root, objects: dict, errors: list, strict: bool):
-    """B1 (doc_tree.rs:147-150): trailer -> Root -> Pages, walked.
-    Returns ``(pages, root)``.  A corrupt or missing /Root or /Pages
-    raises under ``strict``; otherwise it degrades to an ORPHAN-PAGE SCAN
-    (the real-world mutool/pdfium repair): every parsed dict with /Type
-    /Page, in object-id order (creation order, which is page order for
-    every non-adversarial writer), with ``root`` None — catalog-scoped
-    semantics (optional-content config, names, outlines) are gone with
-    the catalog."""
-    try:
-        pages_node = _require_pages(root, objects)
-    except PdfError as err:
-        if strict:
-            raise
-        pages = [
-            v
-            for _key, v in sorted(objects.items())
-            if isinstance(v, dict) and str(v.get("Type")) == "Page"
-        ]
-        if not pages:
-            raise
-        errors.append((err.kind, "assemble", f"{err}; recovered {len(pages)} orphan pages"))
-        return pages, None
-    return _walk_pages(pages_node, objects, errors), root
-
-
 def _opened_pages(data: bytes, password: bytes, strict: bool, result: dict):
     """The head :func:`extract_spans` and :func:`decode_document` share:
     open, decode streams, find the pages.  Records ``version`` and the
@@ -932,11 +934,11 @@ def _opened_pages(data: bytes, password: bytes, strict: bool, result: dict):
     result["n_objects"] = len(objects)
     decode_doc_streams(objects, errors)
     result["n_streams"] = sum(1 for v in objects.values() if isinstance(v, Stream))
-    pages, root = _document_pages(root, objects, errors, strict)
+    pages, root = _walk_pages(root, objects, errors, strict)
     result["n_pages"] = len(pages)
     off_ids = _off_ocg_ids(root, objects)
-    for page_idx, page in enumerate(pages):
-        scope = ResourceScope(get_resolved(page, "Resources", objects), objects, off_ids)
+    for page_idx, (page, attrs) in enumerate(pages):
+        scope = ResourceScope(attrs.get("Resources"), objects, off_ids)
         yield page_idx, scope, _page_content_bytes(page, objects, errors)
 
 
@@ -1029,13 +1031,10 @@ def extract_image_xobjects(
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        pages_node = get_resolved(root, "Pages", objects)
-        if pages_node is None:
-            return out
+        pages, _root = _walk_pages(root, objects, errors)
         seen: set = set()  # pages often share Resources: one row per stream
-        for page in _walk_pages(pages_node, objects, errors):
-            resources = get_resolved(page, "Resources", objects) or {}
-            xdict = get_resolved(resources, "XObject", objects) or {}
+        for _page, attrs in pages:
+            xdict = get_resolved(attrs.get("Resources"), "XObject", objects) or {}
             if isinstance(xdict, dict):
                 for xname, xref in xdict.items():
                     st = resolve(xref, objects)
@@ -1093,12 +1092,6 @@ def extract_image_xobjects(
     return out
 
 
-def extract_media_payloads(data: bytes, password: bytes = b"") -> list[tuple[str, bytes]]:
-    """Back-compat view of :func:`extract_image_xobjects`:
-    (media_ref, payload) pairs only."""
-    return [(name, payload) for name, payload, _meta in extract_image_xobjects(data, password)]
-
-
 def extract_spans(data: bytes, strict: bool = False, password: bytes = b""):
     """Full kernel.  Returns dict with keys:
        version: str | None
@@ -1138,24 +1131,25 @@ def extract_layout_spans(data: bytes, password: bytes = b""):
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        _layout_spans(objects, root, errors, out)
+        pages, root = _walk_pages(root, objects, errors)
+        _layout_spans(objects, root, pages, errors, out)
     return {"spans": out, "errors": errors}
 
 
-def _layout_spans(objects: dict, root, errors: list, out: list) -> None:
-    """The walk behind :func:`extract_layout_spans`, over an opened
-    document whose streams are decoded.  Rows are appended to ``out`` as
-    they are emitted, so a fault mid-walk keeps the rows before it."""
-    pages = _walk_pages_inherited(_require_pages(root, objects), objects, errors)
+def _layout_spans(objects: dict, root, pages: list, errors: list, out: list) -> None:
+    """The page loop behind :func:`extract_layout_spans`, over the walked
+    ``pages`` of an opened document whose streams are decoded.  Rows are
+    appended to ``out`` as they are emitted, so a fault mid-walk keeps the
+    rows before it."""
     decoders: dict = {}
     off_ids = _off_ocg_ids(root, objects)
-    for page_idx, (page, inh) in enumerate(pages):
-        scope = ResourceScope(inh.get("Resources"), objects, off_ids)
+    for page_idx, (page, attrs) in enumerate(pages):
+        scope = ResourceScope(attrs.get("Resources"), objects, off_ids)
         # /Rotate normalization (inheritable, §7.7.3.4): report line
         # origins in READING space so columns/paragraph logic is
         # rotation-invariant — a 90/270 page swaps effective dims
-        rot = _page_rotation(inh)
-        pw, ph = _page_dims(inh)
+        rot = _page_rotation(attrs)
+        pw, ph = _page_dims(attrs)
         content = _page_content_bytes(page, objects, errors)
         for ev, sc in _content_events(content, scope, errors, layout=True):
             if ev[0] in ("media", "inline"):
@@ -1429,13 +1423,12 @@ def extract_advance_spans(data: bytes, password: bytes = b"", with_width: bool =
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        pages_node = _require_pages(root, objects)
-        pages = _walk_pages_inherited(pages_node, objects, errors)
+        pages, root = _walk_pages(root, objects, errors)
         decoders: dict = {}
         w_cache: dict = {}
         off_ids = _off_ocg_ids(root, objects)
-        for page_idx, (page, inh) in enumerate(pages):
-            scope = ResourceScope(inh.get("Resources"), objects, off_ids)
+        for page_idx, (page, attrs) in enumerate(pages):
+            scope = ResourceScope(attrs.get("Resources"), objects, off_ids)
             content = _page_content_bytes(page, objects, errors)
             cursor = 0
             for ev, sc in _content_events(content, scope, errors, advance=True):
@@ -1558,20 +1551,20 @@ def extract_doc_meta(data: bytes, password: bytes = b""):
             title = _as_text(get_resolved(info, "Title", objects))
             author = _as_text(get_resolved(info, "Author", objects))
             created = parse_pdf_date(get_resolved(info, "CreationDate", objects))
-        if isinstance(root, dict):
-            outl = get_resolved(root, "Outlines", objects)
-            node = get_resolved(outl, "First", objects) if isinstance(outl, dict) else None
-            first_node = node
-            while isinstance(node, dict) and n_outlines < 4096:  # cycle cap
-                t = _as_text(get_resolved(node, "Title", objects))
-                if first_outline is None and t is not None:
-                    first_outline = t
-                n_outlines += 1
-                node = get_resolved(node, "Next", objects)
-            if isinstance(first_node, dict):
-                first_outline_page = _dest_page_index(
-                    _dest_or_goto(first_node, objects), root, objects, errors
-                )
+        outl = get_resolved(root, "Outlines", objects)
+        node = get_resolved(outl, "First", objects) if isinstance(outl, dict) else None
+        first_node = node
+        while isinstance(node, dict) and n_outlines < 4096:  # cycle cap
+            t = _as_text(get_resolved(node, "Title", objects))
+            if first_outline is None and t is not None:
+                first_outline = t
+            n_outlines += 1
+            node = get_resolved(node, "Next", objects)
+        # walked last: a document without pages keeps its metadata
+        pages, root = _walk_pages(root, objects, errors)
+        first_outline_page = _dest_page_index(
+            _dest_or_goto(first_node, objects), root, objects, pages
+        )
     return {
         "title": title,
         "author": author,
@@ -1660,13 +1653,12 @@ def extract_linearization(data: bytes, password: bytes = b""):
         flags["h_ok"] = h_ok
         # /N and /O need the real parse (page tree through the xref chain)
         trailer, objects, root = open_document(data, password, errors)
+        nv = lin.get("N")
+        if isinstance(nv, (int, float)):
+            # /N is checked against the catalog's page tree only
+            with contextlib.suppress(PdfError):
+                flags["n_ok"] = int(nv) == len(_walk_pages(root, objects, errors, strict=True)[0])
         if isinstance(root, dict):
-            pages_node = get_resolved(root, "Pages", objects)
-            nv = lin.get("N")
-            if pages_node is not None and isinstance(nv, (int, float)):
-                flags["n_ok"] = int(nv) == len(
-                    _walk_pages_inherited(pages_node, objects, errors)
-                )
             ov = lin.get("O")
             fp = _first_page_obj_id(root, objects)
             if fp is not None and isinstance(ov, (int, float)):
@@ -1692,34 +1684,30 @@ def extract_outline_tree(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        if isinstance(root, dict):
-            outl = get_resolved(root, "Outlines", objects)
-            first = (
-                get_resolved(outl, "First", objects) if isinstance(outl, dict) else None
-            )
-            # pre-order DFS with an explicit stack: push the sibling
-            # BELOW the child so the child pops first; count + depth
-            # caps bound malicious cycles (same policy as the page walk)
-            stack = [(first, 0)]
-            while stack and len(items) < 4096:
-                node, depth = stack.pop()
-                if not isinstance(node, dict) or depth > 32:
-                    continue
-                title = _as_text(get_resolved(node, "Title", objects))
-                dest = _dest_or_goto(node, objects)
-                target = (
-                    _dest_page_index(dest, root, objects, errors)
-                    if dest is not None
-                    else None
-                )
-                cnt = get_resolved(node, "Count", objects)
-                kids = get_resolved(node, "First", objects)
-                closed = (
-                    isinstance(cnt, (int, float)) and cnt < 0 and kids is not None
-                )
-                items.append((len(items), depth, title, target, closed))
-                stack.append((get_resolved(node, "Next", objects), depth))
-                stack.append((kids, depth + 1))
+        outl = get_resolved(root, "Outlines", objects)
+        first = get_resolved(outl, "First", objects) if isinstance(outl, dict) else None
+        # pre-order DFS with an explicit stack: push the sibling
+        # BELOW the child so the child pops first; count + depth
+        # caps bound malicious cycles (same policy as the page walk)
+        dests: list = []
+        stack = [(first, 0)]
+        while stack and len(items) < 4096:
+            node, depth = stack.pop()
+            if not isinstance(node, dict) or depth > 32:
+                continue
+            title = _as_text(get_resolved(node, "Title", objects))
+            dests.append(_dest_or_goto(node, objects))
+            cnt = get_resolved(node, "Count", objects)
+            kids = get_resolved(node, "First", objects)
+            closed = isinstance(cnt, (int, float)) and cnt < 0 and kids is not None
+            items.append((len(items), depth, title, None, closed))
+            stack.append((get_resolved(node, "Next", objects), depth))
+            stack.append((kids, depth + 1))
+        # targets last: a document without pages keeps its outline
+        pages, root = _walk_pages(root, objects, errors)
+        for i, dest in enumerate(dests):
+            target = _dest_page_index(dest, root, objects, pages)
+            items[i] = items[i][:3] + (target,) + items[i][4:]
     return {"items": items, "errors": errors}
 
 
@@ -1776,12 +1764,12 @@ def _dest_or_goto(node, objects: dict):
     return None
 
 
-def _dest_page_index(dest, root: dict, objects: dict, errors: list):
+def _dest_page_index(dest, root, objects: dict, pages: list):
     """Destination -> target page index (ISO 32000 §12.3.2): an explicit
     ``[page /XYZ ...]`` array, or a NAMED destination — a string looked
     up in the catalog's ``/Names /Dests`` name tree (§12.3.2.3), falling
     back to the PDF 1.1 catalog ``/Dests`` dictionary.  The resolved
-    page object is matched against the page-tree walk by identity.
+    page object is matched by identity against the walked ``pages``.
     Returns None when unresolvable (lenient)."""
     if isinstance(dest, (bytes, bytearray)) or isinstance(dest, str):
         key = (
@@ -1804,13 +1792,7 @@ def _dest_page_index(dest, root: dict, objects: dict, errors: list):
     if not isinstance(dest, list) or not dest:
         return None
     target = resolve(dest[0], objects)
-    if not isinstance(target, dict):
-        return None
-    root_pages = get_resolved(root, "Pages", objects)
-    for i, page in enumerate(_walk_pages(root_pages, objects, errors)):
-        if page is target:
-            return i
-    return None
+    return next((i for i, (page, _attrs) in enumerate(pages) if page is target), None)
 
 
 def extract_doc_graph(data: bytes, password: bytes = b""):
@@ -1830,77 +1812,66 @@ def extract_doc_graph(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        if isinstance(root, dict):
-            root_pages = get_resolved(root, "Pages", objects)
-            for p, page in enumerate(_walk_pages(root_pages, objects, errors)):
-                annots = get_resolved(page, "Annots", objects)
-                if not isinstance(annots, list):
-                    continue
-                li = 0
-                for a in annots:
-                    an = resolve(a, objects)
-                    if not isinstance(an, dict):
-                        continue
-                    if str(get_resolved(an, "Subtype", objects)) != "Link":
-                        continue
-                    act = get_resolved(an, "A", objects)
-                    uri = None
-                    if isinstance(act, dict) and str(get_resolved(act, "S", objects)) == "URI":
-                        uri = _as_text(get_resolved(act, "URI", objects))
-                    # internal navigation: a /Dest (direct or named,
-                    # §12.3.2) or the /A /GoTo action form (§12.6.4.2)
-                    target = _dest_page_index(
-                        _dest_or_goto(an, objects), root, objects, errors
-                    )
-                    links.append((p, li, uri, target))
-                    li += 1
-            def _walk_field(fd: dict, inh_ft, inh_v, prefix: str | None, depth: int):
-                """§12.7.3.2 hierarchy: a field with /Kids that carry /T
-                is NON-terminal — recurse, building the fully-qualified
-                name parent.child and inheriting /FT and /V (a kid's own
-                entry shadows an ancestor's).  Kids WITHOUT /T are widget
-                annotations of the same field, not child fields."""
-                fname = _as_text(get_resolved(fd, "T", objects))
-                qual = (
-                    f"{prefix}.{fname}" if prefix and fname else (fname or prefix)
-                )
-                ftype = get_resolved(fd, "FT", objects)
-                if ftype is None:
-                    ftype = inh_ft
-                val = get_resolved(fd, "V", objects)
-                if val is None:
-                    val = inh_v
-                kids = get_resolved(fd, "Kids", objects)
-                kid_fields = []
-                if isinstance(kids, list) and depth < 32:
-                    for kref in kids:
-                        kd = resolve(kref, objects)
-                        if isinstance(kd, dict) and get_resolved(kd, "T", objects) is not None:
-                            kid_fields.append(kd)
-                if kid_fields:
-                    for kd in kid_fields:
-                        _walk_field(kd, ftype, val, qual, depth + 1)
-                    return
-                fields.append(
-                    (
-                        len(fields),
-                        qual,
-                        str(ftype) if ftype is not None else None,
-                        _as_text(val),
-                    )
-                )
 
-            acro = get_resolved(root, "AcroForm", objects)
-            farr = get_resolved(acro, "Fields", objects) if isinstance(acro, dict) else None
-            if isinstance(farr, list):
-                for fref in farr:
-                    fd = resolve(fref, objects)
-                    if not isinstance(fd, dict):
-                        errors.append(
-                            (REFERENCE_ERROR, "classify", "dangling /Fields reference")
-                        )
-                        continue
-                    _walk_field(fd, None, None, None, 0)
+        def _walk_field(fd: dict, inh_ft, inh_v, prefix: str | None, depth: int):
+            """§12.7.3.2 hierarchy: a field with /Kids that carry /T
+            is NON-terminal — recurse, building the fully-qualified
+            name parent.child and inheriting /FT and /V (a kid's own
+            entry shadows an ancestor's).  Kids WITHOUT /T are widget
+            annotations of the same field, not child fields."""
+            fname = _as_text(get_resolved(fd, "T", objects))
+            qual = f"{prefix}.{fname}" if prefix and fname else (fname or prefix)
+            ftype = get_resolved(fd, "FT", objects)
+            if ftype is None:
+                ftype = inh_ft
+            val = get_resolved(fd, "V", objects)
+            if val is None:
+                val = inh_v
+            kids = get_resolved(fd, "Kids", objects)
+            kid_fields = []
+            if isinstance(kids, list) and depth < 32:
+                for kref in kids:
+                    kd = resolve(kref, objects)
+                    if isinstance(kd, dict) and get_resolved(kd, "T", objects) is not None:
+                        kid_fields.append(kd)
+            if kid_fields:
+                for kd in kid_fields:
+                    _walk_field(kd, ftype, val, qual, depth + 1)
+                return
+            fields.append(
+                (len(fields), qual, str(ftype) if ftype is not None else None, _as_text(val))
+            )
+
+        # fields first: a document without pages keeps its form
+        acro = get_resolved(root, "AcroForm", objects)
+        farr = get_resolved(acro, "Fields", objects) if isinstance(acro, dict) else None
+        for fref in farr if isinstance(farr, list) else []:
+            fd = resolve(fref, objects)
+            if not isinstance(fd, dict):
+                errors.append((REFERENCE_ERROR, "classify", "dangling /Fields reference"))
+                continue
+            _walk_field(fd, None, None, None, 0)
+        pages, root = _walk_pages(root, objects, errors)
+        for p, (page, _attrs) in enumerate(pages):
+            annots = get_resolved(page, "Annots", objects)
+            if not isinstance(annots, list):
+                continue
+            li = 0
+            for a in annots:
+                an = resolve(a, objects)
+                if not isinstance(an, dict):
+                    continue
+                if str(get_resolved(an, "Subtype", objects)) != "Link":
+                    continue
+                act = get_resolved(an, "A", objects)
+                uri = None
+                if isinstance(act, dict) and str(get_resolved(act, "S", objects)) == "URI":
+                    uri = _as_text(get_resolved(act, "URI", objects))
+                # internal navigation: a /Dest (direct or named,
+                # §12.3.2) or the /A /GoTo action form (§12.6.4.2)
+                target = _dest_page_index(_dest_or_goto(an, objects), root, objects, pages)
+                links.append((p, li, uri, target))
+                li += 1
     return {"links": links, "fields": fields, "errors": errors}
 
 
@@ -1933,15 +1904,14 @@ def extract_graphics(data: bytes, password: bytes = b""):
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        if isinstance(root, dict):
-            root_pages = get_resolved(root, "Pages", objects)
-            for page in _walk_pages(root_pages, objects, errors):
-                content = _page_content_bytes(page, objects, errors)
-                if not content:
-                    continue
-                stats = graphics_stats(content)
-                for k in totals:
-                    totals[k] += stats[k]
+        pages, _root = _walk_pages(root, objects, errors)
+        for page, _attrs in pages:
+            content = _page_content_bytes(page, objects, errors)
+            if not content:
+                continue
+            stats = graphics_stats(content)
+            for k in totals:
+                totals[k] += stats[k]
     totals["errors"] = errors
     return totals
 
@@ -1973,58 +1943,51 @@ def extract_inline_pixels(data: bytes, password: bytes = b""):
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        if isinstance(root, dict):
-            root_pages = get_resolved(root, "Pages", objects)
-            for page_idx, page in enumerate(_walk_pages(root_pages, objects, errors)):
-                content = _page_content_bytes(page, objects, errors)
-                if not content:
-                    continue
-                for img_idx, (params, payload) in enumerate(
-                    parse_inline_images(content)
-                ):
-                    try:
-                        norm = {
-                            _INLINE_ABBREV.get(k, k): v for k, v in params.items()
-                        }
-                        filters = norm.get("Filter")
-                        if filters is not None and not isinstance(filters, list):
-                            filters = [filters]
-                        for fname in filters or []:
-                            full = _INLINE_FILTERS.get(str(fname), str(fname))
-                            dec = _DECODERS.get(full)
-                            if dec is None:
-                                raise ValueError(f"inline filter {full}")
-                            payload = dec(payload, None)
-                        cs = norm.get("ColorSpace")
-                        # the content tokenizer returns keyword bytes, so
-                        # /IM true arrives as b"true" (ADVICE r04)
-                        imagemask = norm.get("ImageMask") in (True, b"true", "true")
-                        dec_arr = norm.get("Decode")
-                        img = decode_raster(
-                            bytes(payload),
+        pages, _root = _walk_pages(root, objects, errors)
+        for page_idx, (page, _attrs) in enumerate(pages):
+            content = _page_content_bytes(page, objects, errors)
+            if not content:
+                continue
+            for img_idx, (params, payload) in enumerate(parse_inline_images(content)):
+                try:
+                    norm = {_INLINE_ABBREV.get(k, k): v for k, v in params.items()}
+                    filters = norm.get("Filter")
+                    if filters is not None and not isinstance(filters, list):
+                        filters = [filters]
+                    for fname in filters or []:
+                        full = _INLINE_FILTERS.get(str(fname), str(fname))
+                        dec = _DECODERS.get(full)
+                        if dec is None:
+                            raise ValueError(f"inline filter {full}")
+                        payload = dec(payload, None)
+                    cs = norm.get("ColorSpace")
+                    # the content tokenizer returns keyword bytes, so
+                    # /IM true arrives as b"true"
+                    imagemask = norm.get("ImageMask") in (True, b"true", "true")
+                    dec_arr = norm.get("Decode")
+                    img = decode_raster(
+                        bytes(payload),
+                        int(norm.get("Width", 0)),
+                        int(norm.get("Height", 0)),
+                        # §8.9.6: an image mask is always 1 bit/sample
+                        int(norm.get("BitsPerComponent", 1 if imagemask else 8)),
+                        _INLINE_CS.get(str(cs), str(cs)) if cs is not None else None,
+                        dec_arr if isinstance(dec_arr, list) else None,
+                        imagemask,
+                    )
+                    import numpy as _np
+
+                    rows.append(
+                        (
+                            page_idx,
+                            img_idx,
                             int(norm.get("Width", 0)),
                             int(norm.get("Height", 0)),
-                            # §8.9.6: an image mask is always 1 bit/sample
-                            int(norm.get("BitsPerComponent", 1 if imagemask else 8)),
-                            _INLINE_CS.get(str(cs), str(cs)) if cs is not None else None,
-                            dec_arr if isinstance(dec_arr, list) else None,
-                            imagemask,
+                            int(img.sum(dtype=_np.int64)),
                         )
-                        import numpy as _np
-
-                        rows.append(
-                            (
-                                page_idx,
-                                img_idx,
-                                int(norm.get("Width", 0)),
-                                int(norm.get("Height", 0)),
-                                int(img.sum(dtype=_np.int64)),
-                            )
-                        )
-                    except Exception as e:
-                        errors.append(
-                            ("ParsingError", "classify", f"inline image: {e}")
-                        )
+                    )
+                except Exception as e:
+                    errors.append(("ParsingError", "classify", f"inline image: {e}"))
     return {"images": rows, "errors": errors}
 
 
@@ -2047,54 +2010,44 @@ def extract_shadings(data: bytes, password: bytes = b""):
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        if isinstance(root, dict):
-            root_pages = get_resolved(root, "Pages", objects)
-            for page_idx, page in enumerate(_walk_pages(root_pages, objects, errors)):
-                resources = get_resolved(page, "Resources", objects) or {}
-                shd = get_resolved(resources, "Shading", objects)
-                if not isinstance(shd, dict):
-                    continue
-                content = _page_content_bytes(page, objects, errors)
-                ops = shading_ops(content) if content else {}
-                for name in sorted(str(k) for k in shd):
-                    try:
-                        sdict = get_resolved(shd, name, objects)
-                        if not isinstance(sdict, dict):
-                            continue
-                        stype = get_resolved(sdict, "ShadingType", objects)
-                        coords = get_resolved(sdict, "Coords", objects) or []
-                        fn_obj = get_resolved(sdict, "Function", objects)
-                        fn, n_out = build_function(
-                            fn_obj, lambda v: resolve(v, objects)
-                        )
-                        attrs = getattr(fn_obj, "attrs", fn_obj)
-                        dom = [
-                            float(resolve(v, objects))
-                            for v in resolve(attrs.get("Domain"), objects)
-                        ]
-                        import math as _math
+        pages, _root = _walk_pages(root, objects, errors)
+        for page_idx, (page, attrs) in enumerate(pages):
+            shd = get_resolved(attrs.get("Resources"), "Shading", objects)
+            if not isinstance(shd, dict):
+                continue
+            content = _page_content_bytes(page, objects, errors)
+            ops = shading_ops(content) if content else {}
+            for name in sorted(str(k) for k in shd):
+                try:
+                    sdict = get_resolved(shd, name, objects)
+                    if not isinstance(sdict, dict):
+                        continue
+                    stype = get_resolved(sdict, "ShadingType", objects)
+                    coords = get_resolved(sdict, "Coords", objects) or []
+                    fn_obj = get_resolved(sdict, "Function", objects)
+                    fn, n_out = build_function(fn_obj, lambda v: resolve(v, objects))
+                    fn_attrs = getattr(fn_obj, "attrs", fn_obj)
+                    dom = [
+                        float(resolve(v, objects))
+                        for v in resolve(fn_attrs.get("Domain"), objects)
+                    ]
+                    import math as _math
 
-                        c0 = [
-                            int(_math.floor(255.0 * c + 0.5))
-                            for c in fn([dom[0]])
-                        ]
-                        c1 = [
-                            int(_math.floor(255.0 * c + 0.5))
-                            for c in fn([dom[1]])
-                        ]
-                        rows.append(
-                            (
-                                page_idx,
-                                name,
-                                int(stype),
-                                int(resolve(coords[-1], objects)) if coords else 0,
-                                c0,
-                                c1,
-                                int(ops.get(name, 0)),
-                            )
+                    c0 = [int(_math.floor(255.0 * c + 0.5)) for c in fn([dom[0]])]
+                    c1 = [int(_math.floor(255.0 * c + 0.5)) for c in fn([dom[1]])]
+                    rows.append(
+                        (
+                            page_idx,
+                            name,
+                            int(stype),
+                            int(resolve(coords[-1], objects)) if coords else 0,
+                            c0,
+                            c1,
+                            int(ops.get(name, 0)),
                         )
-                    except (ValueError, TypeError, IndexError, KeyError):
-                        continue  # lenient: skip the shading, keep the page
+                    )
+                except (ValueError, TypeError, IndexError, KeyError):
+                    continue  # lenient: skip the shading, keep the page
     return {"shadings": rows, "errors": errors}
 
 
@@ -2113,7 +2066,7 @@ def extract_font_programs(data: bytes, password: bytes = b""):
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)  # font programs may be filtered
-        root_pages = get_resolved(root, "Pages", objects)
+        pages, _root = _walk_pages(root, objects, errors)
         from .cff import parse_cff_widths
         from .truetype import parse_truetype_widths
         from .type1 import parse_type1_widths
@@ -2123,9 +2076,8 @@ def extract_font_programs(data: bytes, password: bytes = b""):
             ("FontFile2", "truetype", parse_truetype_widths),
             ("FontFile3", "cff", parse_cff_widths),
         )
-        for p, page in enumerate(_walk_pages(root_pages, objects, errors)):
-            res = get_resolved(page, "Resources", objects) or {}
-            fdict = get_resolved(res, "Font", objects) or {}
+        for p, (_page, attrs) in enumerate(pages):
+            fdict = get_resolved(attrs.get("Resources"), "Font", objects) or {}
             if not isinstance(fdict, dict):
                 continue
             for fname, fref in fdict.items():
@@ -2335,8 +2287,7 @@ def extract_tagged_spans(data: bytes, password: bytes = b""):
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)
-        pages_node = _require_pages(root, objects)
-        pages = _walk_pages(pages_node, objects, errors)
+        pages, root = _walk_pages(root, objects, errors)
 
         # logical rank per (page, mcid) + the leaf's /S type and its
         # effective /Lang (catalog /Lang = the §14.9.2 document default)
@@ -2354,8 +2305,8 @@ def extract_tagged_spans(data: bytes, password: bytes = b""):
         decoders: dict = {}
         off_ids = _off_ocg_ids(root, objects)
         emit_i = 0
-        for page_idx, page in enumerate(pages):
-            scope = ResourceScope(get_resolved(page, "Resources", objects), objects, off_ids)
+        for page_idx, (page, attrs) in enumerate(pages):
+            scope = ResourceScope(attrs.get("Resources"), objects, off_ids)
             content = _page_content_bytes(page, objects, errors)
             for ev, sc in _content_events(content, scope, errors, mcid=True):
                 if ev[0] in ("media", "inline"):
@@ -2399,13 +2350,10 @@ def extract_ccitt_images(data: bytes, password: bytes = b""):
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
         decode_doc_streams(objects, errors)  # sets stream kinds (image routing)
-        pages_node = get_resolved(root, "Pages", objects)
-        if pages_node is None:
-            return {"images": out, "errors": errors}
+        pages, _root = _walk_pages(root, objects, errors)
         seen: set = set()
-        for page_idx, page in enumerate(_walk_pages(pages_node, objects, errors)):
-            resources = get_resolved(page, "Resources", objects) or {}
-            xdict = get_resolved(resources, "XObject", objects) or {}
+        for page_idx, (_page, attrs) in enumerate(pages):
+            xdict = get_resolved(attrs.get("Resources"), "XObject", objects) or {}
             if not isinstance(xdict, dict):
                 continue
             for xname, xref in xdict.items():
@@ -2546,8 +2494,8 @@ def extract_page_labels(data: bytes, password: bytes = b""):
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        pages_node = _require_pages(root, objects)
-        n_pages = len(_walk_pages(pages_node, objects, errors))
+        pages, root = _walk_pages(root, objects, errors)
+        n_pages = len(pages)
 
         ranges: list = []
         pl = get_resolved(root, "PageLabels", objects)
@@ -2666,13 +2614,13 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
         # appearance decodes its own content, and its fonts decode without
         # their /ToUnicode CMaps (the synth appearance draws plain codes
         # under a CMap font; its oracle text depends on this).  Highlight
-        # text comes from the layout walk below, whose error rows precede
-        # this walk's.
+        # text comes from the layout pass below, whose error rows precede
+        # the page walk's and this walk's.
         walk_errors: list = []
+        pages, root = _walk_pages(root, objects, walk_errors)
         quads: dict = {}  # annots_out index -> (page, QuadPoints numbers)
         with _contained(walk_errors):
-            root_pages = get_resolved(root, "Pages", objects)
-            for p, page in enumerate(_walk_pages(root_pages, objects, walk_errors)):
+            for p, (page, attrs) in enumerate(pages):
                 arr = get_resolved(page, "Annots", objects)
                 if not isinstance(arr, list):
                     continue
@@ -2712,7 +2660,7 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
                                     content = None
                             fres = get_resolved(nstream.attrs, "Resources", objects)
                             if not isinstance(fres, dict):
-                                fres = get_resolved(page, "Resources", objects) or {}
+                                fres = attrs.get("Resources") or {}
                             if content:
                                 parts = []
                                 decoders: dict = {}
@@ -2736,7 +2684,7 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
         spans: list = []
         with _contained(errors):  # a failed layout walk keeps the annotations
             decode_doc_streams(objects, errors)
-            _layout_spans(objects, root, errors, spans)
+            _layout_spans(objects, root, pages, errors, spans)
         errors.extend(walk_errors)
         by_page: dict = {}
         for page_idx, x, y, txt, _size in spans:

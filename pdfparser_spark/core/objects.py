@@ -24,7 +24,7 @@ Mapping (SURVEY.md §1.2):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 class Name(str):
@@ -80,17 +80,6 @@ class IndirectObject:
     obj_id: int
     gen: int
     value: object
-
-
-@dataclass
-class ParsedDoc:
-    """Everything the per-document parse produces before assembly."""
-
-    version: str | None = None
-    trailer: dict = field(default_factory=dict)
-    objects: dict = field(default_factory=dict)  # (obj_id, gen) -> value
-    xref_offsets: dict = field(default_factory=dict)  # (obj_id, gen) -> byte offset
-    errors: list = field(default_factory=list)  # (error_kind, stage, detail)
 
 
 MAX_REF_DEPTH = 32

@@ -84,15 +84,11 @@ def apply_redactions(data: bytes, password: bytes = b"") -> dict:
     spans: list = []
     try:
         trailer, objects, root = open_document(data, password, errors)
-        with _contained(errors):  # a failed layout walk keeps the marks
+        pages, root = _walk_pages(root, objects, errors)
+        with _contained(errors):  # a failed layout pass keeps the marks
             decode_doc_streams(objects, errors)
-            _layout_spans(objects, root, errors, spans)
-        boxes_by_page = {
-            p: _redact_boxes(page, objects)
-            for p, page in enumerate(
-                _walk_pages(get_resolved(root, "Pages", objects), objects, errors)
-            )
-        }
+            _layout_spans(objects, root, pages, errors, spans)
+        boxes_by_page = {p: _redact_boxes(page, objects) for p, (page, _attrs) in enumerate(pages)}
     except PdfError as e:
         errors.append((e.kind, e.stage, str(e)))
         return {"bytes": data, "n_redacted": 0, "errors": errors}

@@ -822,7 +822,7 @@ def build_document(doc_id: int, text: str) -> dict:
     # _embedded_image class) wrapped in ASCIIHex transport armor
     # ([/AHx /DCT] — the old-writer chain shape) so the payload stays
     # ASCII like the rest of this family; the kernel never rasterizes it
-    # (SURVEY.md §2.5 D8), but extract_media_payloads strips the armor
+    # (SURVEY.md §2.5 D8), but extract_image_xobjects strips the armor
     # and hands actual image bytes to the media tier
     if imgobj_id is not None:
         b.media_marker("Im1")

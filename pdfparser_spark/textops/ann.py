@@ -327,19 +327,6 @@ def ivf_train_kmeans(
     return codebook
 
 
-def ivf_assign(embeddings: DataFrame, n_lists: int = N_LISTS) -> DataFrame:
-    """(vec_id, list_id) — each vector's inverted list: the nearest
-    centroid of a FIXED deterministic random codebook (the trained
-    variant is ``ivf_train_kmeans`` + ``ann_ivf_trained``).  At
-    cluster scale this is the partitioning column: each list is a
-    co-located shard and queries only touch n_probe of them."""
-    scores = _list_scores(F.col("embedding"), n_lists)
-    return embeddings.select(
-        "vec_id",
-        F.array_position(scores, F.array_min(scores)).cast("int").alias("list_id"),
-    )
-
-
 def ann_ivf_topk(
     embeddings: DataFrame,
     n_queries: int = 5,

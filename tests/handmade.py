@@ -1,0 +1,49 @@
+"""Hand-built one-revision PDFs for kernel edge cases, shared by the
+kernel and pipeline tests."""
+
+from __future__ import annotations
+
+
+def pdf(*objs: bytes) -> bytes:
+    """A one-revision PDF whose objects 1..n are ``objs`` (1 = catalog)."""
+    out = bytearray(b"%PDF-1.7\n")
+    offsets = []
+    for i, body in enumerate(objs, 1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
+    xref = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    out += b"".join(b"%010d 00000 n \n" % o for o in offsets)
+    out += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (len(objs) + 1, xref)
+    return bytes(out)
+
+
+def stream(attrs: bytes, data: bytes) -> bytes:
+    return b"<< %s /Length %d >>\nstream\n%s\nendstream" % (attrs, len(data), data)
+
+
+# /Resources (a /Differences font and an image) only on the /Pages node:
+# the page inherits them (ISO 32000 §7.7.3.4); codes XY decode as AB
+INHERITED_RESOURCES = pdf(
+    b"<< /Type /Catalog /Pages 2 0 R >>",
+    b"<< /Type /Pages /Kids [3 0 R] /Count 1 "
+    b"/Resources << /Font << /F1 4 0 R >> /XObject << /Im1 5 0 R >> >> >>",
+    b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 6 0 R >>",
+    b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
+    b"/Encoding << /Differences [88 /A /B] >> >>",
+    b"<< /Type /XObject /Subtype /Image /Width 1 /Height 1 /BitsPerComponent 8 "
+    b"/ColorSpace /DeviceGray /Length 1 >>\nstream\n\x00\nendstream",
+    stream(b"", b"/Im1 Do BT /F1 12 Tf 72 720 Td (XY) Tj ET"),
+)
+
+_LINK = b"<< /Type /Annot /Subtype /Link /Rect [0 0 9 9] /Dest [3 0 R /Fit] >>"
+# one dangling kid (99 0 R) in the page tree; three links and two outline
+# items all point at the one real page
+DANGLING_KID = pdf(
+    b"<< /Type /Catalog /Pages 2 0 R /Outlines 4 0 R >>",
+    b"<< /Type /Pages /Kids [3 0 R 99 0 R] /Count 2 >>",
+    b"<< /Type /Page /Parent 2 0 R /Annots [" + b" ".join([_LINK] * 3) + b"] >>",
+    b"<< /Type /Outlines /First 5 0 R /Last 6 0 R /Count 2 >>",
+    b"<< /Title (one) /Parent 4 0 R /Next 6 0 R /Dest [3 0 R /Fit] >>",
+    b"<< /Title (two) /Parent 4 0 R /Prev 5 0 R /Dest [3 0 R /Fit] >>",
+)

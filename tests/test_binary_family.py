@@ -92,6 +92,23 @@ def test_inline_image_tokenizer_does_not_desync():
     assert evs[2][3] == b"after"
 
 
+def test_inline_image_ends_at_its_declared_geometry_in_every_reader():
+    """An EI with no whitespace before it ends a payload of exactly the
+    declared geometry (2x1 gray at 8 bpc = 2 bytes): the tokenizer, the
+    graphics and shading counters and the inline-image parser all resume
+    after it."""
+    from pdfparser_spark.core.content import graphics_stats, parse_inline_images, shading_ops
+
+    content = b"BI /W 2 /H 1 /BPC 8 /CS /G ID \x10\x41EI BT /F1 12 Tf (after) Tj ET"
+    evs = tokenize_content(content)
+    assert [e[0] for e in evs] == ["inline", "text"]
+    assert evs[1][3] == b"after"
+    assert [p for _params, p in parse_inline_images(content)] == [b"\x10\x41"]
+    tail = b" 0 0 10 10 re f /Sh1 sh"
+    assert graphics_stats(content + tail)["n_rects"] == 1
+    assert shading_ops(content + tail) == {"Sh1": 1}
+
+
 def test_startxref_recovery_truncated_footer():
     from pdfparser_spark.synth import build_document
 
@@ -347,12 +364,12 @@ def test_unprotected_family_unchanged_by_password_plumbing():
 
 def test_embedded_jpeg_extraction_end_to_end():
     """PDF-to-pixels: the binary family's Im1 is a REAL /DCTDecode JPEG;
-    extract_media_payloads pulls it (post-decryption, incl. AES-256 docs)
+    extract_image_xobjects pulls it (post-decryption, incl. AES-256 docs)
     out of the object graph, the codec decodes it, and the pixel sums
     match the integer model — shared Resources across pages emit ONE row."""
     import numpy as np
 
-    from pdfparser_spark.core.extract import extract_media_payloads
+    from pdfparser_spark.core.extract import extract_image_xobjects
     from pdfparser_spark.synth import (
         PROTECTED_USER_PWD,
         build_document_protected,
@@ -363,9 +380,10 @@ def test_embedded_jpeg_extraction_end_to_end():
 
     for doc_id in (5, 10, 20, 30, 45):  # CMYK 2-page, JPX, gray, AES jp2, CMYK
         d = build_document_binary(doc_id, TEXT)
-        payloads = extract_media_payloads(d["bytes"])
+        payloads = extract_image_xobjects(d["bytes"])
         assert len(payloads) == 1
-        name, payload = payloads[0]
+        name, payload, meta = payloads[0]
+        assert meta["is_media"]
         fmt, w, h, img = sniff_decode(bytes(payload))
         iw, ih = embedded_image_dims(doc_id)
         want_fmt = "jp2" if (doc_id // 5) % 4 == 2 else "jpg"
@@ -393,8 +411,8 @@ def test_embedded_jpeg_extraction_end_to_end():
             assert int(img.sum(dtype=np.int64)) == int(out.sum()) * 64
 
     prot = build_document_protected(5, TEXT)
-    assert extract_media_payloads(prot["bytes"]) == []  # fails closed
-    got = extract_media_payloads(prot["bytes"], password=PROTECTED_USER_PWD)
+    assert extract_image_xobjects(prot["bytes"]) == []  # fails closed
+    got = extract_image_xobjects(prot["bytes"], password=PROTECTED_USER_PWD)
     assert len(got) == 1 and sniff_decode(bytes(got[0][1]))[0] == "jpg"
 
 
@@ -405,7 +423,7 @@ def test_protected_family_mutations_never_raise():
     with the right password, a wrong one, or none."""
     import random
 
-    from pdfparser_spark.core.extract import extract_media_payloads
+    from pdfparser_spark.core.extract import extract_image_xobjects
     from pdfparser_spark.synth import PROTECTED_USER_PWD, build_document_protected
 
     docs = [build_document_protected(did, TEXT)["bytes"] for did in (3, 9, 15)]
@@ -425,4 +443,4 @@ def test_protected_family_mutations_never_raise():
         pw = PROTECTED_USER_PWD if rng.random() < 0.7 else b"wrong"
         res = extract_spans(data, strict=False, password=pw)
         assert isinstance(res["spans"], list)
-        assert isinstance(extract_media_payloads(data, password=pw), list)
+        assert isinstance(extract_image_xobjects(data, password=pw), list)

@@ -339,14 +339,15 @@ def test_differences_encoding():
 
 
 def test_differences_decoder_agl_fallbacks():
-    from pdfparser_spark.core.cmap import differences_decoder
+    from pdfparser_spark.core.cmap import differences_remap, remap_decoder
 
-    d = differences_decoder("WinAnsiEncoding", [233, "eacute", "bullet", 65, "uni0042", "g42"])
+    diffs = [233, "eacute", "bullet", 65, "uni0042", "g42"]
+    d = remap_decoder("WinAnsiEncoding", differences_remap(diffs))
     assert d(bytes([233, 234])) == "é•"   # auto-increment after a name
     assert d(bytes([65, 66])) == "B�"     # uniXXXX hit, g42 -> U+FFFD
     assert d(b"plain") == "plain"          # base table untouched elsewhere
     # malformed /Differences never raises
-    assert differences_decoder(None, [999, "x", None, -3, "y"])(b"ok") == "ok"
+    assert remap_decoder(None, differences_remap([999, "x", None, -3, "y"]))(b"ok") == "ok"
 
 
 # --- page labels (§12.4.2) ---------------------------------------------------
@@ -1135,6 +1136,68 @@ def test_catalog_loss_orphan_page_recovery():
     r98 = extract_spans(d98["bytes"])
     assert not any("orphan" in e[2] for e in r98["errors"])
     assert r98["spans"] == extract_spans(build_document(98, text)["bytes"])["spans"]
+
+    # every lenient page kernel shares the one walk and its recovery
+    from pdfparser_spark.core import extract
+    from pdfparser_spark.core.redact import apply_redactions
+
+    kernels = [
+        getattr(extract, name)
+        for name in (
+            "extract_layout_spans", "extract_advance_spans", "extract_tagged_spans",
+            "extract_page_labels", "extract_ccitt_images", "extract_graphics",
+            "extract_inline_pixels", "extract_shadings", "extract_font_programs",
+            "extract_doc_graph", "extract_doc_meta", "extract_outline_tree",
+            "extract_markup_annots", "decode_document",
+        )
+    ] + [apply_redactions]
+    for doc_id in (2, 10):
+        dmg = build_document_damaged(doc_id, text)["bytes"]
+        for kernel in kernels:
+            rows = [e for e in kernel(dmg)["errors"] if "orphan pages" in e[2]]
+            assert len(rows) == 1, (doc_id, kernel.__name__)
+        whole = build_document(doc_id, text)["bytes"]
+        for kernel in (extract.extract_layout_spans, extract.extract_tagged_spans):
+            assert kernel(dmg)["spans"] == kernel(whole)["spans"], (doc_id, kernel.__name__)
+        assert extract.extract_page_labels(dmg)["labels"]
+        assert extract.extract_image_xobjects(dmg) == extract.extract_image_xobjects(whole)
+
+
+def test_page_inherits_resources_from_the_page_tree():
+    """§7.7.3.4: /Resources on the /Pages node reach the page in every
+    page-reading kernel and in the staged decode stage."""
+    from handmade import INHERITED_RESOURCES as doc
+
+    from pdfparser_spark.core import extract
+
+    res = extract_spans(doc)
+    assert res["spans"] == [("media", None, "Im1"), ("text", "AB", None)]
+    assert res["errors"] == []
+    assert [s[3] for s in extract.extract_layout_spans(doc)["spans"]] == ["AB"]
+    assert [s[4] for s in extract.extract_tagged_spans(doc)["spans"]] == ["AB"]
+    assert [f[:3] for f in extract.extract_font_programs(doc)["fonts"]] == [(0, "F1", "Type1")]
+    assert [x[0] for x in extract.extract_image_xobjects(doc)] == ["Im1"]
+    dec = extract.decode_document(doc)
+    assert [f[:3] for f in dec["fonts"]] == [(0, 0, "F1")]
+    assert dec["fonts"][0][3].differences == ((88, "A"), (89, "B"))
+    assert [x["name"] for x in dec["pages"][0][2][0]["xobjects"]] == ["Im1"]
+
+
+def test_dangling_kid_is_reported_once_per_document():
+    """The page tree is walked once per document: link and outline
+    targets look pages up in that walk instead of walking again, so its
+    error row is not repeated per link or per outline item."""
+    from handmade import DANGLING_KID as doc
+
+    from pdfparser_spark.core.extract import extract_doc_graph, extract_outline_tree
+
+    row = ("ReferenceError", "assemble", "dangling page-tree reference")
+    graph = extract_doc_graph(doc)
+    assert [link[3] for link in graph["links"]] == [0, 0, 0]
+    assert graph["errors"] == [row]
+    outline = extract_outline_tree(doc)
+    assert [item[3] for item in outline["items"]] == [0, 0]
+    assert outline["errors"] == [row]
 
 
 def test_xref_offset_slop_repair():

@@ -13,6 +13,8 @@ from pdfparser_spark.pipeline import Pipeline
 from pdfparser_spark.stages import synthesize_corpus
 from pdfparser_spark.synth import expected_spans
 
+from handmade import INHERITED_RESOURCES, pdf, stream
+
 
 @pytest.fixture(scope="module")
 def results(spark, sf_dir, tmp_path_factory):
@@ -314,24 +316,6 @@ def test_profile_table_one_pass_metrics(spark):
     assert "Join" not in plan
 
 
-def _pdf(*objs: bytes) -> bytes:
-    """A one-revision PDF whose objects 1..n are ``objs`` (1 = catalog)."""
-    out = bytearray(b"%PDF-1.7\n")
-    offsets = []
-    for i, body in enumerate(objs, 1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
-    xref = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    out += b"".join(b"%010d 00000 n \n" % o for o in offsets)
-    out += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (len(objs) + 1, xref)
-    return bytes(out)
-
-
-def _stream(attrs: bytes, data: bytes) -> bytes:
-    return b"<< %s /Length %d >>\nstream\n%s\nendstream" % (attrs, len(data), data)
-
-
 _CATALOG = b"<< /Type /Catalog /Pages 2 0 R >>"
 _PAGES = b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"
 
@@ -341,42 +325,43 @@ def _page(resources: bytes) -> bytes:
 
 
 # a Form XObject whose own /F1 is a different font than the page's /F1
-_FORM_FONTS = _pdf(
+_FORM_FONTS = pdf(
     _CATALOG, _PAGES,
     _page(b"/Font << /F1 4 0 R >> /XObject << /Fm1 5 0 R >>"),
     b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
     b"/Encoding << /Differences [88 /A /B] >> >>",
-    _stream(b"/Type /XObject /Subtype /Form /Resources << /Font << /F1 7 0 R >> >>",
+    stream(b"/Type /XObject /Subtype /Form /Resources << /Font << /F1 7 0 R >> >>",
             b"BT /F1 12 Tf (XY) Tj ET"),
-    _stream(b"", b"/Fm1 Do BT /F1 12 Tf (XY) Tj ET"),
+    stream(b"", b"/Fm1 Do BT /F1 12 Tf (XY) Tj ET"),
     b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
 )
 # the page draws /Im9, which only the form's /XObject declares
-_FORM_XOBJECT_NAME = _pdf(
+_FORM_XOBJECT_NAME = pdf(
     _CATALOG, _PAGES,
     _page(b"/XObject << /Fm1 5 0 R >>"),
     b"<< /Type /XObject /Subtype /Image /Width 1 /Height 1 /BitsPerComponent 8 "
     b"/ColorSpace /DeviceGray /Length 1 >>\nstream\n\x00\nendstream",
-    _stream(b"/Type /XObject /Subtype /Form /Resources << /XObject << /Im9 4 0 R >> >>",
+    stream(b"/Type /XObject /Subtype /Form /Resources << /XObject << /Im9 4 0 R >> >>",
             b"/Im9 Do"),
-    _stream(b"", b"/Fm1 Do /Im9 Do"),
+    stream(b"", b"/Fm1 Do /Im9 Do"),
 )
 # a ToUnicode range whose destinations outgrow two bytes
-_OVERFLOW_BFRANGE = _pdf(
+_OVERFLOW_BFRANGE = pdf(
     _CATALOG, _PAGES,
     _page(b"/Font << /F1 4 0 R >>"),
     b"<< /Type /Font /Subtype /Type0 /BaseFont /X /Encoding /Identity-H /ToUnicode 5 0 R >>",
-    _stream(b"", b"1 begincodespacerange <0000> <FFFF> endcodespacerange\n"
+    stream(b"", b"1 begincodespacerange <0000> <FFFF> endcodespacerange\n"
                  b"1 beginbfrange <0000> <FFFF> <0041> endbfrange"),
-    _stream(b"", b"BT /F1 12 Tf <00010002FFFF> Tj ET"),
+    stream(b"", b"BT /F1 12 Tf <00010002FFFF> Tj ET"),
 )
 
 
 def test_staged_equals_fused_on_edge_documents(spark, sf_dir):
     """The staged DAG runs the fused kernel's own semantics: equal spans per
     document, and its metrics are exactly extract_spans' error rows, on
-    damaged documents (lost catalogs recover orphan pages) and on forms
-    with their own fonts and XObject names and a malformed ToUnicode."""
+    damaged documents (lost catalogs recover orphan pages), on forms with
+    their own fonts and XObject names, a malformed ToUnicode and a page
+    that inherits its resources from the page tree."""
     from collections import Counter
 
     from pdfparser_spark.core.extract import extract_spans
@@ -391,7 +376,9 @@ def test_staged_equals_fused_on_edge_documents(spark, sf_dir):
     edge = spark.createDataFrame(
         [
             (1000 + i, [{"kind": "input", "text": data.decode("latin-1"), "media_ref": None, "offset": 0}])
-            for i, data in enumerate((_FORM_FONTS, _FORM_XOBJECT_NAME, _OVERFLOW_BFRANGE))
+            for i, data in enumerate(
+                (_FORM_FONTS, _FORM_XOBJECT_NAME, _OVERFLOW_BFRANGE, INHERITED_RESOURCES)
+            )
         ],
         DOCUMENTS_RAW,
     )
@@ -406,8 +393,8 @@ def test_staged_equals_fused_on_edge_documents(spark, sf_dir):
         metrics[r.doc_id][(r.error_kind, r.stage)] += r["count"]
 
     assert got_staged == got_fused
-    for doc_id, pdf in data.items():
-        errors = Counter((k, s) for k, s, _d in extract_spans(pdf)["errors"])
+    for doc_id, doc in data.items():
+        errors = Counter((k, s) for k, s, _d in extract_spans(doc)["errors"])
         assert metrics[doc_id] == errors, doc_id
     # the lost-catalog docs recover their orphan pages in both modes
     assert all(got_staged[d] for d in (2, 10, 18, 26, 34))
@@ -415,3 +402,5 @@ def test_staged_equals_fused_on_edge_documents(spark, sf_dir):
     assert got_staged[1001] == [("media", None, "Im9"), ("media", None, "Im9")]
     assert metrics[1001] == Counter({("ReferenceError", "classify"): 1})
     assert got_staged[1002] == [("text", "BC�", None)]
+    assert got_staged[1003] == [("media", None, "Im1"), ("text", "AB", None)]
+    assert metrics[1003] == Counter()
