@@ -249,16 +249,6 @@ for _b in range(256):
 del _b, _s, _si, _t
 
 
-def _inv_mix_word(x: int) -> int:
-    b = ((x >> 24) & 0xFF, (x >> 16) & 0xFF, (x >> 8) & 0xFF, x & 0xFF)
-    return (
-        ((_gmul(b[0], 14) ^ _gmul(b[1], 11) ^ _gmul(b[2], 13) ^ _gmul(b[3], 9)) << 24)
-        | ((_gmul(b[0], 9) ^ _gmul(b[1], 14) ^ _gmul(b[2], 11) ^ _gmul(b[3], 13)) << 16)
-        | ((_gmul(b[0], 13) ^ _gmul(b[1], 9) ^ _gmul(b[2], 14) ^ _gmul(b[3], 11)) << 8)
-        | (_gmul(b[0], 11) ^ _gmul(b[1], 13) ^ _gmul(b[2], 9) ^ _gmul(b[3], 14))
-    )
-
-
 def _words(w: list) -> list:
     return [(x[0] << 24) | (x[1] << 16) | (x[2] << 8) | x[3] for x in w]
 
@@ -271,13 +261,25 @@ def _schedule(key: bytes):
     loop structure with the inverse tables."""
     w, nr = _expand_key(key)
     rk = tuple(_words(w))
+    return rk, _inverse_schedule(rk, nr), nr
+
+
+def _inverse_schedule(rk: tuple, nr: int) -> tuple:
+    """The round keys reversed, with InvMixColumns over the middle ones.
+    ``_TDi[_SBOX[b]]`` is InvMixColumns of byte b in row i (the table
+    folds in InvSubBytes, which _SBOX undoes), so a word costs four
+    lookups instead of sixteen GF(2^8) multiplications."""
     drk = []
     for rnd in range(nr, -1, -1):
         ws = rk[4 * rnd : 4 * rnd + 4]
         if 0 < rnd < nr:
-            ws = [_inv_mix_word(x) for x in ws]
+            ws = [
+                _TD0[_SBOX[x >> 24]] ^ _TD1[_SBOX[(x >> 16) & 0xFF]]
+                ^ _TD2[_SBOX[(x >> 8) & 0xFF]] ^ _TD3[_SBOX[x & 0xFF]]
+                for x in ws
+            ]
         drk.extend(ws)
-    return rk, tuple(drk), nr
+    return tuple(drk)
 
 
 def _encrypt_words(block: bytes, rk, nr: int) -> bytes:
@@ -330,14 +332,7 @@ def _encrypt_block(block: bytes, w: list, nr: int) -> bytes:
 
 
 def _decrypt_block(block: bytes, w: list, nr: int) -> bytes:
-    rk = tuple(_words(w))
-    drk = []
-    for rnd in range(nr, -1, -1):
-        ws = rk[4 * rnd : 4 * rnd + 4]
-        if 0 < rnd < nr:
-            ws = [_inv_mix_word(x) for x in ws]
-        drk.extend(ws)
-    return _decrypt_words(block, drk, nr)
+    return _decrypt_words(block, _inverse_schedule(tuple(_words(w)), nr), nr)
 
 
 def aes_cbc_encrypt(key: bytes, data: bytes, iv: bytes) -> bytes:

@@ -7,17 +7,18 @@ UDFs.  End-to-end flow mirrors the reference's
 /root/reference/src/pdf_doc/doc_tree.rs:145-157):
 
     version sniff -> startxref/trailer -> xref (classic or stream, /Prev
-    chain) -> parse ALL objects -> decode stream filters -> Root ->
-    page-tree walk (B1-B5, doc_tree.rs:63-142) -> per-page content-stream
-    tokenize -> font CMap decode -> ordered span emission.
+    chain) -> lazy object table -> Root -> page-tree walk (B1-B5,
+    doc_tree.rs:63-142) -> per-page content-stream tokenize -> font CMap
+    decode -> ordered span emission.  An object is parsed, decrypted and
+    (for a stream) filter-decoded the first time the walk dereferences it.
 
 Strict ("sensitive", pdf_file.rs:858-877) vs lenient ("stoic",
 pdf_file.rs:879-889): strict returns no spans if any error was recorded;
 lenient keeps going and reports errors as metric rows.
 
 Every kernel opens its document through :func:`open_document` (xref ->
-decryptor -> parse -> decrypt, then the resolved /Root), calls
-:func:`decode_doc_streams` itself when it reads stream payloads, and runs
+decryptor -> a lazy :class:`ObjectTable`, then the resolved /Root); a
+kernel that scans every object calls its ``read_all()``.  Each kernel runs
 its body inside ``with _contained(errors):`` so a corrupt document ends
 as error rows, never as an exception.  A kernel that reads pages walks
 the page tree once, with :func:`_walk_pages`: every page comes with its
@@ -288,29 +289,105 @@ def _apply_decryption(decryptor, objects: dict, objstm_expanded: set) -> None:
             objects[(obj_id, gen)] = dec_value(val, obj_id, gen)
 
 
+_MISSING = object()
+
+
+class ObjectTable:
+    """A document's objects keyed by ``(id, gen)``, read on first use (the
+    reference's memoizing cache, pdf_file.rs:25-68).  A lookup (``in``,
+    ``[]``, ``get``) of a key not yet read materializes it, once: parse
+    (/Length through the table, header resync), ObjStm expansion (the
+    container is read first, so it is decrypted and decoded), decryption,
+    and for a stream classification and filter decode.  Its error rows
+    land in the document's error list when it is read, so a kernel reports
+    faults only in the objects it reads.  :meth:`read_all` reads every
+    indexed object, in key order, for kernels that scan the whole
+    document.
+
+    Expanding an ObjStm materializes all its members, except one that has
+    a direct xref entry not read yet: that entry wins when it is read."""
+
+    __slots__ = (
+        "_data", "_offsets", "_compressed", "_errors", "_decryptor", "_expanded", "_store", "_tried",
+    )
+
+    def __init__(self, data: bytes, offsets: dict, compressed: dict, errors: list, decryptor):
+        self._data, self._offsets, self._compressed = data, offsets, compressed
+        self._errors, self._decryptor = errors, decryptor
+        self._expanded: set = set()  # keys materialized out of an ObjStm
+        self._store: dict = {}  # materialized objects
+        self._tried: set = set()  # keys whose materialization has started
+
+    def get(self, key, default=None):
+        val = self._store.get(key, _MISSING)
+        if val is _MISSING and key not in self._tried:
+            self._read(key)
+            val = self._store.get(key, _MISSING)
+        return default if val is _MISSING else val
+
+    def __contains__(self, key) -> bool:
+        return self.get(key, _MISSING) is not _MISSING
+
+    def __getitem__(self, key):
+        val = self.get(key, _MISSING)
+        if val is _MISSING:
+            raise KeyError(key)
+        return val
+
+    def read_all(self) -> dict:
+        """Materialize every indexed object not read yet, in key order,
+        and return ``{(id, gen): object}`` for all materialized objects."""
+        offs = {k: off for k, off in self._offsets.items() if k not in self._tried}
+        comp = {i: e for i, e in self._compressed.items() if (i, 0) not in self._tried}
+        self._tried.update(offs)
+        self._tried.update((i, 0) for i in comp)
+        self._materialize(offs, comp)
+        return self._store
+
+    def _read(self, key) -> None:
+        self._tried.add(key)  # also the guard against a lookup cycle
+        off = self._offsets.get(key)
+        if off is not None:
+            self._materialize({key: off}, {})
+        elif key[1] == 0 and key[0] in self._compressed:
+            entry = self._compressed[key[0]]
+            self.get((entry[0], 0))  # the container
+            self._materialize({}, {key[0]: entry})
+
+    def _materialize(self, offsets: dict, compressed: dict) -> None:
+        expanded = self._expanded
+        fresh = parse_all_objects(
+            self._data, offsets, compressed, self._errors, self._decryptor, expanded, self._store
+        )
+        # an ObjStm member whose direct xref entry is still unread: that
+        # entry (a newer revision) wins when it is read
+        for key in [k for k in fresh if k in expanded and k in self._offsets]:
+            if key not in self._tried:
+                del fresh[key]
+                expanded.discard(key)
+        _apply_decryption(self._decryptor, fresh, expanded)
+        self._store.update(fresh)
+        decode_doc_streams(fresh, self._errors, self)
+
+
 class Document(NamedTuple):
-    """An opened document: the trailer, every parsed object keyed by
-    ``(id, gen)`` (decrypted, stream filters NOT yet decoded) and the
+    """An opened document: the trailer, its :class:`ObjectTable` and the
     resolved ``/Root`` catalog, None when it is missing or not a dict."""
 
     trailer: dict
-    objects: dict
+    objects: ObjectTable
     root: dict | None
 
 
 def open_document(data: bytes, password: bytes, errors: list) -> Document:
     """The one document-open path (the reference builds trailer, xref and
     object cache once in ``pdf_file.rs``): xref chain or damaged-file
-    recovery -> decryptor -> parse every object (ObjStm containers are
-    decrypted before expansion) -> decrypt in place.  Raises ``PdfError``
-    when no object table can be built; per-object faults land in
-    ``errors``.  Kernels that read stream payloads call
-    :func:`decode_doc_streams` on the result."""
+    recovery -> decryptor -> a lazy :class:`ObjectTable`, whose first read
+    is the /Root catalog.  Raises ``PdfError`` when no object table can be
+    built; per-object faults land in ``errors`` as the objects are read."""
     offsets, trailer, compressed = read_xref(data)
     decryptor = _build_decryptor(data, trailer, offsets, password)
-    objstm_expanded: set = set()
-    objects = parse_all_objects(data, offsets, compressed, errors, decryptor, objstm_expanded)
-    _apply_decryption(decryptor, objects, objstm_expanded)
+    objects = ObjectTable(data, offsets, compressed, errors, decryptor)
     root = get_resolved(trailer, "Root", objects)
     return Document(trailer, objects, root if isinstance(root, dict) else None)
 
@@ -356,17 +433,21 @@ def classify_stream(attrs: dict, objects: dict) -> str:
     return "unknown"
 
 
-def decode_doc_streams(objects: dict, errors: list) -> None:
+def decode_doc_streams(objects: dict, errors: list, lookup=None) -> None:
     """Decode stage core (D2-D9): fill ``Stream.data`` for every
-    non-media stream; media/undecodable chains pass through with
-    kind='image' (reference decode.rs:184-239, spec-corrected)."""
+    non-media stream in ``objects``, in key order; media/undecodable
+    chains pass through with kind='image' (reference decode.rs:184-239,
+    spec-corrected).  References resolve in ``lookup`` (default
+    ``objects``)."""
+    if lookup is None:
+        lookup = objects
     for _key, val in sorted(objects.items()):
         if not isinstance(val, Stream):
             continue
-        val.kind = classify_stream(val.attrs, objects)
-        chain = build_filter_chain(val.attrs, lambda v: resolve(v, objects))
+        val.kind = classify_stream(val.attrs, lookup)
+        chain = build_filter_chain(val.attrs, lambda v: resolve(v, lookup))
         # D9: /Length validation as a metric, never a panic (decode.rs:185-193)
-        length = resolve(val.attrs.get("Length"), objects)
+        length = resolve(val.attrs.get("Length"), lookup)
         file_len = val.file_len if val.file_len is not None else len(val.raw)
         if isinstance(length, int) and length != file_len:
             errors.append((FILTER_ERROR, "decode", f"/Length {length} != payload {file_len}"))
@@ -441,7 +522,7 @@ def _walk_pages(root, objects: dict, errors: list, strict: bool = False):
             raise
         pages = [
             (v, _inherited(v, objects, {}))
-            for _key, v in sorted(objects.items())
+            for _key, v in sorted(objects.read_all().items())
             if isinstance(v, dict) and str(v.get("Type")) == "Page"
         ]
         if not pages:
@@ -846,11 +927,11 @@ class FontSpec(NamedTuple):
     differences: tuple = ()
 
 
-def _font_spec(font_obj, objects: dict) -> FontSpec:
+def _font_spec(font_obj, objects: dict, tounicode: bool = True) -> FontSpec:
     font = resolve(font_obj, objects)
     if not isinstance(font, dict):
         return FontSpec()
-    tu = get_resolved(font, "ToUnicode", objects)
+    tu = get_resolved(font, "ToUnicode", objects) if tounicode else None
     if isinstance(tu, Stream) and tu.data is not None:
         return FontSpec(tounicode=tu.data)
     enc = get_resolved(font, "Encoding", objects)
@@ -923,28 +1004,35 @@ def _event_text(ev, scope: ResourceScope, decoders: dict, errors: list) -> str:
     return shown_text(show_operand(ev), _scope_decoder(decoders, scope, ev[2], errors))
 
 
-def _opened_pages(data: bytes, password: bytes, strict: bool, result: dict):
-    """The head :func:`extract_spans` and :func:`decode_document` share:
-    open, decode streams, find the pages.  Records ``version`` and the
-    ``n_*`` counts in ``result`` as they are reached and its errors in
-    ``result["errors"]``; yields ``(page_idx, page scope, content)``."""
+def _opened_pages(doc: Document, strict: bool, result: dict):
+    """The page head :func:`extract_spans` and :func:`decode_document`
+    share: walk the pages of an opened document.  Records ``n_pages`` in
+    ``result`` and its errors in ``result["errors"]``; yields ``(page_idx,
+    page scope, content, scope rows, form contents, fonts)``, where the
+    rows and form contents are the page's :func:`scope_table` and fonts
+    ``(scope, name, FontSpec)`` for every font of every scope.  The staged
+    DAG needs all of those, so both kernels read them: with a lazy object
+    table, a fault in an object the page only declares then shows in both
+    or in neither."""
     errors = result["errors"]
-    result["version"] = sniff_version(data)
-    trailer, objects, root = open_document(data, password, errors)
-    result["n_objects"] = len(objects)
-    decode_doc_streams(objects, errors)
-    result["n_streams"] = sum(1 for v in objects.values() if isinstance(v, Stream))
-    pages, root = _walk_pages(root, objects, errors, strict)
+    pages, root = _walk_pages(doc.root, doc.objects, errors, strict)
     result["n_pages"] = len(pages)
-    off_ids = _off_ocg_ids(root, objects)
+    off_ids = _off_ocg_ids(root, doc.objects)
     for page_idx, (page, attrs) in enumerate(pages):
-        scope = ResourceScope(attrs.get("Resources"), objects, off_ids)
-        yield page_idx, scope, _page_content_bytes(page, objects, errors)
+        scope = ResourceScope(attrs.get("Resources"), doc.objects, off_ids)
+        content = _page_content_bytes(page, doc.objects, errors)
+        scopes, rows, forms = scope_table(scope)
+        fonts = [
+            (si, str(name), _font_spec(fref, doc.objects))
+            for si, sc in enumerate(scopes)
+            for name, fref in sc.fonts.items()
+        ]
+        yield page_idx, scope, content, rows, forms, fonts
 
 
 def _kernel_result(**rows) -> dict:
-    """An empty kernel result: ``rows`` plus the version, errors and counts."""
-    return {"version": None, **rows, "errors": [], "n_objects": 0, "n_pages": 0, "n_streams": 0}
+    """An empty kernel result: ``rows`` plus the version, errors and page count."""
+    return {"version": None, **rows, "errors": [], "n_pages": 0}
 
 
 def decode_document(data: bytes, password: bytes = b""):
@@ -960,16 +1048,25 @@ def decode_document(data: bytes, password: bytes = b""):
        fonts:   list[(page_idx, scope, font_name, FontSpec)]
        errors:  list[(error_kind, stage, detail)] — extract_spans' rows
                 except those the content interpreter records
-       n_objects, n_pages, n_streams
+       n_objects, n_pages, n_streams — the object counts are over the
+                whole document, but only the objects the walk read
+                contribute error rows
     """
-    out = _kernel_result(pages=[], fonts=[])
-    with _contained(out["errors"]):
-        for page_idx, page_scope, content in _opened_pages(data, password, False, out):
-            scopes, rows, forms = scope_table(page_scope)
-            out["pages"].append((page_idx, content, rows, forms))
-            for si, scope in enumerate(scopes):
-                for name, fref in scope.fonts.items():
-                    out["fonts"].append((page_idx, si, str(name), _font_spec(fref, scope.objects)))
+    out = _kernel_result(pages=[], fonts=[], n_objects=0, n_streams=0)
+    errors = out["errors"]
+    with _contained(errors):
+        out["version"] = sniff_version(data)
+        doc = open_document(data, password, errors)
+        try:
+            for page_idx, _scope, content, rows, forms, fonts in _opened_pages(doc, False, out):
+                out["pages"].append((page_idx, content, rows, forms))
+                out["fonts"].extend((page_idx, *font) for font in fonts)
+        finally:
+            walked = len(errors)
+            objects = doc.objects.read_all()
+            del errors[walked:]
+            out["n_objects"] = len(objects)
+            out["n_streams"] = sum(1 for v in objects.values() if isinstance(v, Stream))
     return out
 
 
@@ -1030,80 +1127,84 @@ def extract_image_xobjects(
     out: list[tuple[str, bytes, dict]] = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)
+        objects.read_all()
         pages, _root = _walk_pages(root, objects, errors)
-        seen: set = set()  # pages often share Resources: one row per stream
-        for _page, attrs in pages:
-            xdict = get_resolved(attrs.get("Resources"), "XObject", objects) or {}
-            if isinstance(xdict, dict):
-                for xname, xref in xdict.items():
-                    st = resolve(xref, objects)
-                    if isinstance(st, Stream) and st.kind == "image":
-                        key = (str(xname), id(st))
-                        if key in seen:
-                            continue
-                        seen.add(key)
-                        try:
-                            chain = build_filter_chain(
-                                st.attrs, lambda v: resolve(v, objects)
-                            )
-                            is_media = is_media_chain(chain)
-                            if is_media:
-                                # strip transport armor ahead of the codec
-                                payload = decode_media_prefix(st.raw, chain)
-                            else:
-                                # raw raster: the full fold yields samples
-                                payload = decode_chain(st.raw, chain)
-                        except (FilterError, PdfError):
-                            payload = st.raw
-                            is_media = True  # unknown: route to sniffers
-                        decode_arr = get_resolved(st.attrs, "Decode", objects)
-                        meta = {
-                            "is_media": is_media,
-                            "width": get_resolved(st.attrs, "Width", objects),
-                            "height": get_resolved(st.attrs, "Height", objects),
-                            "bpc": get_resolved(st.attrs, "BitsPerComponent", objects),
-                            "imagemask": bool(
-                                get_resolved(st.attrs, "ImageMask", objects) is True
-                            ),
-                            "colorspace": _image_colorspace(st.attrs, objects),
-                            "decode": decode_arr if isinstance(decode_arr, list) else None,
-                            "smask": None,
-                        }
-                        # §11.6.5.2 soft mask: a subsidiary gray image
-                        # whose samples are the base image's alpha plane
-                        sm = get_resolved(st.attrs, "SMask", objects)
-                        if isinstance(sm, Stream) and sm.kind == "image":
-                            try:
-                                sm_chain = build_filter_chain(
-                                    sm.attrs, lambda v: resolve(v, objects)
-                                )
-                                meta["smask"] = {
-                                    "payload": decode_chain(sm.raw, sm_chain),
-                                    "width": get_resolved(sm.attrs, "Width", objects),
-                                    "height": get_resolved(sm.attrs, "Height", objects),
-                                    "bpc": get_resolved(
-                                        sm.attrs, "BitsPerComponent", objects
-                                    ),
-                                }
-                            except (FilterError, PdfError):
-                                meta["smask"] = None  # lenient: base image stands
-                        out.append((str(xname), payload, meta))
+        for _page_idx, xname, st in _page_images(pages, objects):
+            try:
+                chain = build_filter_chain(st.attrs, lambda v: resolve(v, objects))
+                is_media = is_media_chain(chain)
+                if is_media:
+                    # strip transport armor ahead of the codec
+                    payload = decode_media_prefix(st.raw, chain)
+                else:
+                    # raw raster: the full fold yields samples
+                    payload = decode_chain(st.raw, chain)
+            except (FilterError, PdfError):
+                payload = st.raw
+                is_media = True  # unknown: route to sniffers
+            decode_arr = get_resolved(st.attrs, "Decode", objects)
+            meta = {
+                "is_media": is_media,
+                "width": get_resolved(st.attrs, "Width", objects),
+                "height": get_resolved(st.attrs, "Height", objects),
+                "bpc": get_resolved(st.attrs, "BitsPerComponent", objects),
+                "imagemask": bool(get_resolved(st.attrs, "ImageMask", objects) is True),
+                "colorspace": _image_colorspace(st.attrs, objects),
+                "decode": decode_arr if isinstance(decode_arr, list) else None,
+                "smask": None,
+            }
+            # §11.6.5.2 soft mask: a subsidiary gray image whose samples
+            # are the base image's alpha plane
+            sm = get_resolved(st.attrs, "SMask", objects)
+            if isinstance(sm, Stream) and sm.kind == "image":
+                try:
+                    sm_chain = build_filter_chain(sm.attrs, lambda v: resolve(v, objects))
+                    meta["smask"] = {
+                        "payload": decode_chain(sm.raw, sm_chain),
+                        "width": get_resolved(sm.attrs, "Width", objects),
+                        "height": get_resolved(sm.attrs, "Height", objects),
+                        "bpc": get_resolved(sm.attrs, "BitsPerComponent", objects),
+                    }
+                except (FilterError, PdfError):
+                    meta["smask"] = None  # lenient: base image stands
+            out.append((xname, payload, meta))
     return out
+
+
+def _page_images(pages: list, objects: dict):
+    """Every image XObject the walked ``pages`` can draw, directly or
+    through their Form XObjects (:func:`scope_table`), as ``(page_idx,
+    name, stream)`` in page order, each page's own scope first.  Pages
+    often share resources: one row per (name, stream)."""
+    seen: set = set()
+    for page_idx, (_page, attrs) in enumerate(pages):
+        scopes, _rows, _forms = scope_table(ResourceScope(attrs.get("Resources"), objects, set()))
+        for scope in scopes:
+            if not isinstance(scope.xobjects, dict):
+                continue
+            for xname, xref in scope.xobjects.items():
+                st = resolve(xref, objects)
+                key = (str(xname), id(st))
+                if isinstance(st, Stream) and st.kind == "image" and key not in seen:
+                    seen.add(key)
+                    yield page_idx, key[0], st
 
 
 def extract_spans(data: bytes, strict: bool = False, password: bytes = b""):
     """Full kernel.  Returns dict with keys:
        version: str | None
        spans:   list[(kind, text, media_ref)]  in reading order
-       errors:  list[(error_kind, stage, detail)]
-       n_objects, n_pages, n_streams: ints (metrics/lineage fodder)
+       errors:  list[(error_kind, stage, detail)] — for the objects it
+                reads: a fault in an object no page reaches is not seen
+       n_pages: int
     """
     out = _kernel_result(spans=[])
     errors, spans = out["errors"], out["spans"]
     with _contained(errors):
+        out["version"] = sniff_version(data)
+        doc = open_document(data, password, errors)
         decoders: dict = {}
-        for _page_idx, scope, content in _opened_pages(data, password, strict, out):
+        for _page_idx, scope, content, *_decode_stage in _opened_pages(doc, strict, out):
             for ev, sc in _content_events(content, scope, errors):
                 if ev[0] in ("media", "inline"):
                     # an inline image is self-contained: no XObject to resolve
@@ -1130,7 +1231,7 @@ def extract_layout_spans(data: bytes, password: bytes = b""):
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)
+        objects.read_all()
         pages, root = _walk_pages(root, objects, errors)
         _layout_spans(objects, root, pages, errors, out)
     return {"spans": out, "errors": errors}
@@ -1422,7 +1523,7 @@ def extract_advance_spans(data: bytes, password: bytes = b"", with_width: bool =
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)
+        objects.read_all()
         pages, root = _walk_pages(root, objects, errors)
         decoders: dict = {}
         w_cache: dict = {}
@@ -1903,7 +2004,7 @@ def extract_graphics(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)
+        objects.read_all()
         pages, _root = _walk_pages(root, objects, errors)
         for page, _attrs in pages:
             content = _page_content_bytes(page, objects, errors)
@@ -1942,7 +2043,7 @@ def extract_inline_pixels(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)
+        objects.read_all()
         pages, _root = _walk_pages(root, objects, errors)
         for page_idx, (page, _attrs) in enumerate(pages):
             content = _page_content_bytes(page, objects, errors)
@@ -2009,7 +2110,7 @@ def extract_shadings(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)
+        objects.read_all()
         pages, _root = _walk_pages(root, objects, errors)
         for page_idx, (page, attrs) in enumerate(pages):
             shd = get_resolved(attrs.get("Resources"), "Shading", objects)
@@ -2065,7 +2166,7 @@ def extract_font_programs(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)  # font programs may be filtered
+        objects.read_all()  # font programs may be filtered
         pages, _root = _walk_pages(root, objects, errors)
         from .cff import parse_cff_widths
         from .truetype import parse_truetype_widths
@@ -2126,7 +2227,7 @@ def extract_attachments(data: bytes, password: bytes = b"", with_payload: bool =
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)
+        objects.read_all()
         names = get_resolved(root, "Names", objects)
         tree = (
             get_resolved(names, "EmbeddedFiles", objects)
@@ -2286,7 +2387,7 @@ def extract_tagged_spans(data: bytes, password: bytes = b""):
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)
+        objects.read_all()
         pages, root = _walk_pages(root, objects, errors)
 
         # logical rank per (page, mcid) + the leaf's /S type and its
@@ -2349,74 +2450,62 @@ def extract_ccitt_images(data: bytes, password: bytes = b""):
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        decode_doc_streams(objects, errors)  # sets stream kinds (image routing)
+        objects.read_all()  # sets stream kinds (image routing)
         pages, _root = _walk_pages(root, objects, errors)
-        seen: set = set()
-        for page_idx, (_page, attrs) in enumerate(pages):
-            xdict = get_resolved(attrs.get("Resources"), "XObject", objects) or {}
-            if not isinstance(xdict, dict):
+        for page_idx, xname, st in _page_images(pages, objects):
+            try:
+                chain = build_filter_chain(st.attrs, lambda v: resolve(v, objects))
+            except (FilterError, PdfError):
                 continue
-            for xname, xref in xdict.items():
-                st = resolve(xref, objects)
-                if not (isinstance(st, Stream) and st.kind == "image"):
-                    continue
-                key = (str(xname), id(st))
-                if key in seen:
-                    continue
-                seen.add(key)
-                try:
-                    chain = build_filter_chain(st.attrs, lambda v: resolve(v, objects))
-                except (FilterError, PdfError):
-                    continue
-                entry = next(
-                    ((name, parms) for name, parms in chain
-                     if name in ("CCITTFaxDecode", "CCF", "JBIG2Decode")),
-                    None,
-                )
-                if entry is None:
-                    continue
-                try:
-                    payload = decode_media_prefix(st.raw, chain)
-                except (FilterError, PdfError):
-                    errors.append((FILTER_ERROR, "decode", "scan transport armor broken"))
-                    continue
-                parms = entry[1] or {}
-                def geti(key, default):
-                    v = resolve(parms.get(key), objects)
-                    return int(v) if isinstance(v, (int, float)) else default
-                def getb(key):
-                    v = resolve(parms.get(key), objects)
-                    return bool(v) if isinstance(v, bool) else False
-                if entry[0] == "JBIG2Decode":
-                    gstream = resolve(parms.get("JBIG2Globals"), objects)
-                    gbytes = b""
-                    if isinstance(gstream, Stream):
-                        gbytes = bytes(
-                            gstream.data if gstream.data is not None else gstream.raw
-                        )
-                    out.append(
-                        (page_idx, str(xname), "jbig2", 0, 0, None, False, False,
-                         bytes(payload), gbytes)
+            entry = next(
+                ((name, parms) for name, parms in chain
+                 if name in ("CCITTFaxDecode", "CCF", "JBIG2Decode")),
+                None,
+            )
+            if entry is None:
+                continue
+            try:
+                payload = decode_media_prefix(st.raw, chain)
+            except (FilterError, PdfError):
+                errors.append((FILTER_ERROR, "decode", "scan transport armor broken"))
+                continue
+            parms = entry[1] or {}
+            def geti(key, default):
+                v = resolve(parms.get(key), objects)
+                return int(v) if isinstance(v, (int, float)) else default
+            def getb(key):
+                v = resolve(parms.get(key), objects)
+                return bool(v) if isinstance(v, bool) else False
+            if entry[0] == "JBIG2Decode":
+                gstream = resolve(parms.get("JBIG2Globals"), objects)
+                gbytes = b""
+                if isinstance(gstream, Stream):
+                    gbytes = bytes(
+                        gstream.data if gstream.data is not None else gstream.raw
                     )
-                    continue
-                rows = geti("Rows", 0) or None
-                if rows is None:
-                    h = get_resolved(st.attrs, "Height", objects)
-                    rows = int(h) if isinstance(h, (int, float)) else None
                 out.append(
-                    (
-                        page_idx,
-                        str(xname),
-                        "ccitt",
-                        geti("K", 0),
-                        geti("Columns", 1728),
-                        rows,
-                        getb("EncodedByteAlign"),
-                        getb("BlackIs1"),
-                        bytes(payload),
-                        b"",
-                    )
+                    (page_idx, xname, "jbig2", 0, 0, None, False, False,
+                     bytes(payload), gbytes)
                 )
+                continue
+            rows = geti("Rows", 0) or None
+            if rows is None:
+                h = get_resolved(st.attrs, "Height", objects)
+                rows = int(h) if isinstance(h, (int, float)) else None
+            out.append(
+                (
+                    page_idx,
+                    xname,
+                    "ccitt",
+                    geti("K", 0),
+                    geti("Columns", 1728),
+                    rows,
+                    getb("EncodedByteAlign"),
+                    getb("BlackIs1"),
+                    bytes(payload),
+                    b"",
+                )
+            )
     return {"images": out, "errors": errors}
 
 
@@ -2610,12 +2699,11 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        # Annotations are walked BEFORE stream decoding: a FreeText
-        # appearance decodes its own content, and its fonts decode without
-        # their /ToUnicode CMaps (the synth appearance draws plain codes
-        # under a CMap font; its oracle text depends on this).  Highlight
-        # text comes from the layout pass below, whose error rows precede
-        # the page walk's and this walk's.
+        # A FreeText appearance's fonts decode without their /ToUnicode
+        # CMaps (the synth appearance draws plain codes under a CMap font;
+        # its oracle text depends on this).  Highlight text comes from the
+        # layout pass below, whose error rows precede the page walk's and
+        # this walk's.
         walk_errors: list = []
         pages, root = _walk_pages(root, objects, walk_errors)
         quads: dict = {}  # annots_out index -> (page, QuadPoints numbers)
@@ -2666,8 +2754,15 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
                                 decoders: dict = {}
                                 scope = ResourceScope(fres, objects, set())
                                 for ev, sc in _content_events(bytes(content), scope, walk_errors):
-                                    if ev[0] in ("text", "textarr", "atext"):
-                                        parts.append(_event_text(ev, sc, decoders, walk_errors))
+                                    if ev[0] == "atext":
+                                        parts.append(pdf_text_string(ev[3]))
+                                    elif ev[0] in ("text", "textarr"):
+                                        key = (sc.key, ev[2])
+                                        if key not in decoders:
+                                            decoders[key] = spec_decoder(_font_spec(
+                                                sc.fonts.get(ev[2]), objects, tounicode=False
+                                            ))
+                                        parts.append(shown_text(show_operand(ev), decoders[key]))
                                 covered = "".join(parts)
                     if sub == "Highlight":
                         qp = get_resolved(an, "QuadPoints", objects)
@@ -2683,7 +2778,7 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
                     ai += 1
         spans: list = []
         with _contained(errors):  # a failed layout walk keeps the annotations
-            decode_doc_streams(objects, errors)
+            objects.read_all()
             _layout_spans(objects, root, pages, errors, spans)
         errors.extend(walk_errors)
         by_page: dict = {}

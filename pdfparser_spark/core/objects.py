@@ -41,8 +41,9 @@ class Name(str):
 class Ref:
     """Indirect reference ``N G R`` (reference pdf_objects.rs:118-122).
 
-    Resolution is *not* a pointer chase here: within a UDF it is a dict
-    lookup into the parsed-objects map; across DataFrames it is an equi-join
+    Resolution is *not* a pointer chase here: within a UDF it is a lookup
+    in the document's object table (``extract.ObjectTable``), which parses
+    the object on its first lookup; across DataFrames it is an equi-join
     on ``(doc_id, obj_id, gen)`` (SURVEY.md §2.4 A1/A2).
     """
 

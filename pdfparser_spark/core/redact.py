@@ -28,7 +28,6 @@ from .extract import (
     _contained,
     _layout_spans,
     _walk_pages,
-    decode_doc_streams,
     get_resolved,
     open_document,
     resolve,
@@ -86,7 +85,7 @@ def apply_redactions(data: bytes, password: bytes = b"") -> dict:
         trailer, objects, root = open_document(data, password, errors)
         pages, root = _walk_pages(root, objects, errors)
         with _contained(errors):  # a failed layout pass keeps the marks
-            decode_doc_streams(objects, errors)
+            objects.read_all()
             _layout_spans(objects, root, pages, errors, spans)
         boxes_by_page = {p: _redact_boxes(page, objects) for p, (page, _attrs) in enumerate(pages)}
     except PdfError as e:

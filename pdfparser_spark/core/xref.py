@@ -12,14 +12,16 @@ plus object streams (ObjStm, §7.5.7) for type-2 entries, and /Prev chains
 for incrementally-updated files.
 
 The result is the object index ``(obj_id, gen) -> byte offset`` that the
-reference keeps as ``HashMap<ObjectId, usize>`` (pdf_file.rs:226-270) — in
-the pipeline it becomes the per-doc objects table (parse-all-then-join,
-SURVEY.md §2.4 A1).
+reference keeps as ``HashMap<ObjectId, usize>`` (pdf_file.rs:226-270).  A
+kernel reads objects through ``extract.ObjectTable``, which parses one
+object the first time something dereferences it (the reference's memoizing
+cache, pdf_file.rs:25-68); :func:`parse_all_objects` is its parser.
 """
 
 from __future__ import annotations
 
 import re
+from collections import ChainMap
 
 from .errors import ParsingError
 from .filters import build_filter_chain, decode_chain
@@ -303,12 +305,19 @@ def parse_all_objects(
     errors: list,
     decryptor=None,
     objstm_expanded: set | None = None,
+    parsed: dict | None = None,
 ):
-    """Parse-all-then-join (SURVEY.md §2.4 A1): materialize every indexed
-    object.  The reference parses lazily through a memo cache
-    (pdf_file.rs:47-68); at cluster scale we parse each doc once and treat
-    retrieval as dict/join lookup.  Indirect /Length is resolved against
-    already-parsed objects or by direct offset parse (two-pass).
+    """Parse the objects indexed by ``offsets`` (key order) and expand the
+    ObjStm entries of ``compressed``; returns the objects this call parsed.
+    Called with a whole index it reads the whole document; the lazy
+    ``extract.ObjectTable`` calls it with one entry at a time.  Indirect
+    /Length is resolved against already-parsed objects or by direct offset
+    parse (two-pass).
+
+    ``parsed``: objects of the same document that earlier calls
+    materialized.  They are not parsed or expanded again, and /Length and
+    ObjStm container lookups see them (a container found there is already
+    decrypted and decoded).
 
     ``decryptor`` (crypt.StandardDecryptor | None): in encrypted documents
     ObjStm containers must be decrypted BEFORE their payload is
@@ -321,9 +330,10 @@ def parse_all_objects(
     exactly these: an object with a stale type-2 entry that was re-written
     as a direct object in a newer revision IS individually encrypted."""
     objects: dict = {}
+    known = objects if parsed is None else ChainMap(objects, parsed)
 
     def length_resolver(ref: Ref):
-        v = objects.get((ref.obj_id, ref.gen))
+        v = known.get((ref.obj_id, ref.gen))
         if v is None:
             off = offsets.get((ref.obj_id, ref.gen))
             if off is None:
@@ -347,7 +357,7 @@ def parse_all_objects(
 
     tok = Tokenizer(data, length_resolver=length_resolver)
     for (obj_id, gen), off in sorted(offsets.items()):
-        if (obj_id, gen) in objects:
+        if (obj_id, gen) in known:
             continue
         if off <= 0 or off >= len(data):
             errors.append(("ParsingError", "tokenize", f"offset {off} out of range for obj {obj_id}"))
@@ -388,9 +398,9 @@ def parse_all_objects(
 
     # Object streams (§7.5.7): type-2 entries live inside an ObjStm.
     for obj_id, (stm_id, _idx) in sorted(compressed.items()):
-        if (obj_id, 0) in objects:
+        if (obj_id, 0) in known:
             continue
-        container = resolve(Ref(stm_id, 0), objects)
+        container = resolve(Ref(stm_id, 0), known)
         if not isinstance(container, Stream):
             errors.append(("ReferenceError", "tokenize", f"ObjStm {stm_id} missing for obj {obj_id}"))
             continue
@@ -399,10 +409,11 @@ def parse_all_objects(
                 if decryptor is not None and not container.decrypted:
                     container.raw = decryptor.decrypt_stream(stm_id, 0, container.raw)
                     container.decrypted = True
-                container.data = decode_chain(container.raw, build_filter_chain(container.attrs, lambda v: resolve(v, objects)))
+                chain = build_filter_chain(container.attrs, lambda v: resolve(v, known))
+                container.data = decode_chain(container.raw, chain)
             payload = container.data
-            n = int(resolve(container.attrs.get("N"), objects) or 0)
-            first = int(resolve(container.attrs.get("First"), objects) or 0)
+            n = int(resolve(container.attrs.get("N"), known) or 0)
+            first = int(resolve(container.attrs.get("First"), known) or 0)
             itok = Tokenizer(payload)
             pairs = []
             p = 0
@@ -412,7 +423,7 @@ def parse_all_objects(
                 pairs.append((int(onum), int(ooff)))
             for onum, ooff in pairs:
                 val, _ = Tokenizer(payload).parse_value(first + ooff)
-                if (onum, 0) not in objects:
+                if (onum, 0) not in known:
                     objects[(onum, 0)] = val
                     if objstm_expanded is not None:
                         objstm_expanded.add((onum, 0))

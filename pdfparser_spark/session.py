@@ -6,7 +6,10 @@ large — BASELINE.json's heavy-tailed corpus), shuffle partitions sized to
 cores rather than the 200 default.  The session is sized from the machine:
 one local core per CPU in the process's affinity mask and a quarter of
 MemTotal for the driver heap; ``SPARK_GRAFT_CPUS`` and
-``SPARK_DRIVER_MEMORY`` override either.
+``SPARK_DRIVER_MEMORY`` override either.  Python workers run under
+:mod:`pdfparser_spark.daemon`, which stops every task from re-reading
+pyspark.zip (about 250 ms of CPU per task); like the package's UDFs, the
+workers import it from the working directory or ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -60,6 +63,7 @@ def build_session(
             os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "pdfparser_spark.daemon")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

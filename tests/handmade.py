@@ -47,3 +47,17 @@ DANGLING_KID = pdf(
     b"<< /Title (one) /Parent 4 0 R /Next 6 0 R /Dest [3 0 R /Fit] >>",
     b"<< /Title (two) /Parent 4 0 R /Prev 5 0 R /Dest [3 0 R /Fit] >>",
 )
+
+# the page draws /Fm1, whose form draws /Im1: only the form declares the
+# image, so the page reaches it only through the form
+IMAGE_IN_FORM = pdf(
+    b"<< /Type /Catalog /Pages 2 0 R >>",
+    b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+    b"/Resources << /XObject << /Fm1 4 0 R >> >> /Contents 6 0 R >>",
+    stream(b"/Type /XObject /Subtype /Form /BBox [0 0 10 10] "
+           b"/Resources << /XObject << /Im1 5 0 R >> >>", b"/Im1 Do"),
+    b"<< /Type /XObject /Subtype /Image /Width 1 /Height 1 /BitsPerComponent 8 "
+    b"/ColorSpace /DeviceGray /Length 1 >>\nstream\n\x7f\nendstream",
+    stream(b"", b"/Fm1 Do"),
+)

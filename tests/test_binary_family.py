@@ -4,6 +4,7 @@ images (BI/ID/EI), RC4-encrypted documents, and damaged-footer recovery."""
 
 from __future__ import annotations
 
+import random
 import re
 
 import pytest
@@ -250,6 +251,37 @@ def test_rc4_classic_public_vectors():
         crypt.rc4(b"Secret", b"Attack at dawn").hex()
         == "45a01f645fc35b383552544b9bf5"
     )
+
+
+def test_aes_decrypt_known_answers_through_the_stream_schedule():
+    """FIPS-197 Appendix C.1 (AES-128) and C.3 (AES-256) in the decrypt
+    direction, through the cached schedule AESV2/AESV3 streams use; the
+    T-table InvMixColumns of its inverse schedule equals the GF(2^8)
+    definition on random words."""
+    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
+    for key, ct in (
+        (bytes(range(16)), "69c4e0d86a7b0430d8cdb78070b4c55a"),
+        (bytes(range(32)), "8ea2b7ca516745bfeafc49904b496089"),
+    ):
+        _rk, drk, nr = crypt._schedule(key)
+        assert crypt._decrypt_words(bytes.fromhex(ct), drk, nr) == pt
+
+    def inv_mix(x: int) -> int:
+        b = x.to_bytes(4, "big")
+        rows = ((14, 11, 13, 9), (9, 14, 11, 13), (13, 9, 14, 11), (11, 13, 9, 14))
+        out = 0
+        for m in rows:
+            out = (out << 8) | (
+                crypt._gmul(b[0], m[0]) ^ crypt._gmul(b[1], m[1])
+                ^ crypt._gmul(b[2], m[2]) ^ crypt._gmul(b[3], m[3])
+            )
+        return out
+
+    rng = random.Random(7)
+    for _ in range(2000):
+        x = rng.getrandbits(32)
+        # two rounds: only the middle round key passes through InvMixColumns
+        assert crypt._inverse_schedule((0, 0, 0, 0, x, 0, 0, 0, 0, 0, 0, 0), 2)[4] == inv_mix(x)
 
 
 def test_aes_all_key_sizes_fips_vectors():

@@ -1203,7 +1203,8 @@ def test_dangling_kid_is_reported_once_per_document():
 def test_xref_offset_slop_repair():
     """Damaged-family arm doc%8==6: every classic-xref entry offset is
     +3 off — the kernel's +-64-byte header re-sync repairs every object
-    (one repair error row each) and extracts the undamaged spans."""
+    it reads (one repair error row per object read) and extracts the
+    undamaged spans."""
     from pdfparser_spark.core.extract import extract_spans
     from pdfparser_spark.synth import build_document, build_document_damaged
 
@@ -1265,3 +1266,128 @@ def test_xref_stream_footer_recovery():
         res = extract_spans(dmg["bytes"])
         want = extract_spans(build_document(doc_id, text)["bytes"])["spans"]
         assert res["spans"] == want, doc_id
+
+
+def _with_unreferenced_corrupt_object(data: bytes) -> bytes:
+    """``data`` plus an incremental update whose only new object, 99,
+    nothing references and whose xref entry points at garbage."""
+    from pdfparser_spark.core.xref import find_startxref
+
+    prev = find_startxref(data)
+    junk = len(data)
+    out = data + b"not an object at all\n"
+    xref = len(out)
+    out += b"xref\n99 1\n%010d 00000 n \n" % junk
+    out += b"trailer\n<< /Size 100 /Root 1 0 R /Prev %d >>\nstartxref\n%d\n%%%%EOF\n" % (prev, xref)
+    return out
+
+
+def test_a_fault_in_an_unread_object_is_not_seen():
+    """The object table reads lazily: a corrupt object that no page reaches
+    leaves extract_spans' spans, rows and strictness alone, and
+    decode_document counts the whole table but keeps only the rows of the
+    objects its walk read."""
+    from pdfparser_spark.core.extract import decode_document
+
+    text = " ".join(f"w{i}" for i in range(24))
+    clean = build_document(2, text)["bytes"]
+    dirty = _with_unreferenced_corrupt_object(clean)
+    want = extract_spans(clean)
+    assert want["spans"] and not want["errors"]
+    res = extract_spans(dirty)
+    assert res["spans"] == want["spans"]
+    assert not [e for e in res["errors"] if "99" in e[2]]
+    assert extract_spans(dirty, strict=True)["spans"] == want["spans"]
+    dec, dec_clean = decode_document(dirty), decode_document(clean)
+    assert dec["errors"] == []
+    counts = [(d["n_objects"], d["n_streams"], d["n_pages"]) for d in (dec, dec_clean)]
+    assert counts[0] == counts[1]
+
+
+def test_spans_never_parse_what_no_page_reaches(monkeypatch):
+    """extract_spans on synth doc 0 parses the catalog, page tree, page,
+    content, font and image objects, and never the document outline,
+    link annotation, form fields or /Info."""
+    from pdfparser_spark.core import extract
+    from pdfparser_spark.core.objects import Stream
+    from pdfparser_spark.core.xref import parse_all_objects, read_xref
+
+    data = build_document(0, " ".join(f"w{i}" for i in range(24)))["bytes"]
+    offsets, _trailer, compressed = read_xref(data)
+    every = parse_all_objects(data, offsets, compressed, [])
+
+    def unread(v) -> bool:
+        if isinstance(v, Stream) or not isinstance(v, dict):
+            return False
+        return (
+            str(v.get("Type")) in ("Outlines", "Annot")
+            or any(k in v for k in ("Title", "FT", "Fields"))
+        )
+
+    unreached = {k for k, v in every.items() if unread(v)}
+    assert len(unreached) >= 5  # /Info, outline root and item, link, AcroForm, field
+    parsed: set = set()
+
+    def recording(*args, **kwargs):
+        objects = parse_all_objects(*args, **kwargs)
+        parsed.update(objects)
+        return objects
+
+    monkeypatch.setattr(extract, "parse_all_objects", recording)
+    assert extract_spans(data)["spans"]
+    assert parsed and not parsed & unreached
+
+
+def test_encrypted_object_streams_read_lazily():
+    """AESV2 (doc 9) and AESV3 (doc 15) documents whose catalog lives in an
+    encrypted ObjStm: the container is read, decrypted and decoded first
+    when a member is looked up."""
+    from pdfparser_spark.synth import binary_rules, build_document_binary, expected_spans_binary
+
+    text = " ".join(f"w{i}" for i in range(24))
+    for doc_id, cipher in ((9, b"AESV2"), (15, b"AESV3")):
+        assert binary_rules(doc_id)["xref_stream"]
+        data = build_document_binary(doc_id, text)["bytes"]
+        assert cipher in data and b"/ObjStm" in data
+        res = extract_spans(data)
+        assert res["errors"] == []
+        assert res["spans"] == expected_spans_binary(doc_id, text)
+
+
+def test_a_newer_direct_object_wins_over_its_object_stream_copy():
+    """An incremental update rewrites page 4, which the first revision keeps
+    in an ObjStm with the catalog: reading the catalog expands that ObjStm,
+    but the page is read from its newer direct entry."""
+    from pdfparser_spark.core.writer import write_pdf
+    from pdfparser_spark.core.xref import find_startxref, read_xref
+
+    base = write_pdf([("text", "hello", None)], xref_stream=True, objstm=True)
+    assert read_xref(base)[2][4][0] == read_xref(base)[2][1][0]  # one ObjStm
+    page = (
+        b"4 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Resources << /Font << /F1 3 0 R >> >> /Contents 8 0 R >>\nendobj\n"
+    )
+    content = b"BT /F1 12 Tf (bye) Tj ET"
+    stream8 = b"8 0 obj\n<< /Length %d >>\nstream\n%s\nendstream\nendobj\n" % (len(content), content)
+    off4 = len(base)
+    off8 = off4 + len(page)
+    xref = off8 + len(stream8)
+    update = page + stream8 + (
+        b"xref\n4 1\n%010d 00000 n \n8 1\n%010d 00000 n \n"
+        b"trailer\n<< /Size 9 /Root 1 0 R /Prev %d >>\nstartxref\n%d\n%%%%EOF\n"
+    ) % (off4, off8, find_startxref(base), xref)
+    res = extract_spans(base + update)
+    assert res["errors"] == []
+    assert res["spans"] == [("text", "bye", None)]
+
+
+def test_image_drawn_through_a_form_is_listed():
+    """An image only a Form XObject declares is a media span and an image
+    row: the image kernels list every scope the page reaches."""
+    from handmade import IMAGE_IN_FORM as doc
+
+    from pdfparser_spark.core import extract
+
+    assert extract_spans(doc)["spans"] == [("media", None, "Im1")]
+    [(name, payload, meta)] = extract.extract_image_xobjects(doc)
+    assert (name, payload, meta["width"], meta["is_media"]) == ("Im1", b"\x7f", 1, False)
