@@ -357,7 +357,8 @@ class ObjectTable:
     def _materialize(self, offsets: dict, compressed: dict) -> None:
         expanded = self._expanded
         fresh = parse_all_objects(
-            self._data, offsets, compressed, self._errors, self._decryptor, expanded, self._store
+            self._data, offsets, compressed, self._errors, self._decryptor, expanded, self._store,
+            self._offsets,
         )
         # an ObjStm member whose direct xref entry is still unread: that
         # entry (a newer revision) wins when it is read
@@ -927,11 +928,11 @@ class FontSpec(NamedTuple):
     differences: tuple = ()
 
 
-def _font_spec(font_obj, objects: dict, tounicode: bool = True) -> FontSpec:
+def _font_spec(font_obj, objects: dict) -> FontSpec:
     font = resolve(font_obj, objects)
     if not isinstance(font, dict):
         return FontSpec()
-    tu = get_resolved(font, "ToUnicode", objects) if tounicode else None
+    tu = get_resolved(font, "ToUnicode", objects)
     if isinstance(tu, Stream) and tu.data is not None:
         return FontSpec(tounicode=tu.data)
     enc = get_resolved(font, "Encoding", objects)
@@ -957,9 +958,10 @@ def spec_decoder(spec: FontSpec):
     return lambda raw: simple_decode(raw, enc)
 
 
-def _font_decoder(font_obj, objects: dict, errors: list):
-    """§2.7 fonts: the decoder of one font object."""
-    return spec_decoder(_font_spec(font_obj, objects))
+def _font_decoder(spec: FontSpec):
+    """§2.7 fonts: the decoder a fused kernel builds for one font of one
+    scope."""
+    return spec_decoder(spec)
 
 
 def show_operand(ev):
@@ -985,35 +987,35 @@ def shown_text(operand, dec) -> str:
     return "".join(" " if p is None else dec(p) for p in operand)
 
 
-def _scope_decoder(decoders: dict, scope: ResourceScope, font_name, errors: list):
+def _scope_decoder(decoders: dict, scope: ResourceScope, font_name):
     """The decoder of ``font_name`` in ``scope``, built once per
     (scope, font) in ``decoders``."""
     key = (scope.key, font_name or "")
     dec = decoders.get(key)
     if dec is None:
-        dec = decoders[key] = _font_decoder(scope.fonts.get(font_name), scope.objects, errors)
+        dec = decoders[key] = _font_decoder(_font_spec(scope.fonts.get(font_name), scope.objects))
     return dec
 
 
-def _event_text(ev, scope: ResourceScope, decoders: dict, errors: list) -> str:
+def _event_text(ev, scope: ResourceScope, decoders: dict) -> str:
     """The text of one show event: an /ActualText replacement is a PDF
     text string, decoded WITHOUT the font (§14.9.4); Tj/TJ operands decode
     through the font ``scope`` binds to the event's font name."""
     if ev[0] == "atext":
         return pdf_text_string(ev[3])
-    return shown_text(show_operand(ev), _scope_decoder(decoders, scope, ev[2], errors))
+    return shown_text(show_operand(ev), _scope_decoder(decoders, scope, ev[2]))
 
 
 def _opened_pages(doc: Document, strict: bool, result: dict):
     """The page head :func:`extract_spans` and :func:`decode_document`
     share: walk the pages of an opened document.  Records ``n_pages`` in
     ``result`` and its errors in ``result["errors"]``; yields ``(page_idx,
-    page scope, content, scope rows, form contents, fonts)``, where the
-    rows and form contents are the page's :func:`scope_table` and fonts
-    ``(scope, name, FontSpec)`` for every font of every scope.  The staged
-    DAG needs all of those, so both kernels read them: with a lazy object
-    table, a fault in an object the page only declares then shows in both
-    or in neither."""
+    scopes, content, scope rows, form contents, fonts)``, where the scopes
+    (the page's first), rows and form contents are the page's
+    :func:`scope_table` and fonts ``(scope index, name, FontSpec)`` for
+    every font of every scope.  The staged DAG needs all of those, so both
+    kernels read them: with a lazy object table, a fault in an object the
+    page only declares then shows in both or in neither."""
     errors = result["errors"]
     pages, root = _walk_pages(doc.root, doc.objects, errors, strict)
     result["n_pages"] = len(pages)
@@ -1027,7 +1029,7 @@ def _opened_pages(doc: Document, strict: bool, result: dict):
             for si, sc in enumerate(scopes)
             for name, fref in sc.fonts.items()
         ]
-        yield page_idx, scope, content, rows, forms, fonts
+        yield page_idx, scopes, content, rows, forms, fonts
 
 
 def _kernel_result(**rows) -> dict:
@@ -1058,7 +1060,7 @@ def decode_document(data: bytes, password: bytes = b""):
         out["version"] = sniff_version(data)
         doc = open_document(data, password, errors)
         try:
-            for page_idx, _scope, content, rows, forms, fonts in _opened_pages(doc, False, out):
+            for page_idx, _scopes, content, rows, forms, fonts in _opened_pages(doc, False, out):
                 out["pages"].append((page_idx, content, rows, forms))
                 out["fonts"].extend((page_idx, *font) for font in fonts)
         finally:
@@ -1204,13 +1206,17 @@ def extract_spans(data: bytes, strict: bool = False, password: bytes = b""):
         out["version"] = sniff_version(data)
         doc = open_document(data, password, errors)
         decoders: dict = {}
-        for _page_idx, scope, content, *_decode_stage in _opened_pages(doc, strict, out):
-            for ev, sc in _content_events(content, scope, errors):
+        for _page_idx, scopes, content, _rows, _forms, fonts in _opened_pages(doc, strict, out):
+            for si, name, spec in fonts:
+                key = (scopes[si].key, name)
+                if key not in decoders:
+                    decoders[key] = _font_decoder(spec)
+            for ev, sc in _content_events(content, scopes[0], errors):
                 if ev[0] in ("media", "inline"):
                     # an inline image is self-contained: no XObject to resolve
                     spans.append(("media", None, ev[2]))
                 else:
-                    spans.append(("text", _event_text(ev, sc, decoders, errors), None))
+                    spans.append(("text", _event_text(ev, sc, decoders), None))
     if strict and errors:
         out["spans"] = []
     return out
@@ -1255,7 +1261,7 @@ def _layout_spans(objects: dict, root, pages: list, errors: list, out: list) -> 
         for ev, sc in _content_events(content, scope, errors, layout=True):
             if ev[0] in ("media", "inline"):
                 continue
-            txt = _event_text(ev, sc, decoders, errors)
+            txt = _event_text(ev, sc, decoders)
             rx, ry = _unrotate(ev[4], ev[5], rot, pw, ph)
             out.append((page_idx, rx, ry, txt, ev[6]))
 
@@ -1549,7 +1555,7 @@ def extract_advance_spans(data: bytes, password: bytes = b"", with_width: bool =
                     continue
                 if ev[0] not in ("text", "textarr"):
                     continue
-                dec = _scope_decoder(decoders, sc, ev[2], errors)
+                dec = _scope_decoder(decoders, sc, ev[2])
                 fkey = (sc.key, ev[2] or "")
                 if fkey not in w_cache:
                     w_cache[fkey] = _font_widths(sc.fonts.get(ev[2]), objects)
@@ -2412,7 +2418,7 @@ def extract_tagged_spans(data: bytes, password: bytes = b""):
             for ev, sc in _content_events(content, scope, errors, mcid=True):
                 if ev[0] in ("media", "inline"):
                     continue  # media carries no text; stays in the main extraction
-                txt = _event_text(ev, sc, decoders, errors)
+                txt = _event_text(ev, sc, decoders)
                 m = ev[-1]
                 rank = leaf_rank.get((id(page), m)) if m is not None else None
                 if rank is not None:
@@ -2701,7 +2707,8 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
         trailer, objects, root = open_document(data, password, errors)
         # A FreeText appearance's fonts decode without their /ToUnicode
         # CMaps (the synth appearance draws plain codes under a CMap font;
-        # its oracle text depends on this).  Highlight text comes from the
+        # its oracle text depends on this): its decoder cache is seeded
+        # with each font dictionary minus /ToUnicode.  Highlight text comes from the
         # layout pass below, whose error rows precede the page walk's and
         # this walk's.
         walk_errors: list = []
@@ -2736,34 +2743,31 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
                         )
                         if isinstance(nstream, Stream):
                             content = nstream.data
-                            if content is None:
-                                try:
-                                    content = decode_chain(
-                                        nstream.raw,
-                                        build_filter_chain(
-                                            nstream.attrs, lambda v: resolve(v, objects)
-                                        ),
-                                    )
-                                except (FilterError, PdfError):
-                                    content = None
                             fres = get_resolved(nstream.attrs, "Resources", objects)
                             if not isinstance(fres, dict):
                                 fres = attrs.get("Resources") or {}
                             if content:
-                                parts = []
+                                scopes, _rows, _forms = scope_table(
+                                    ResourceScope(fres, objects, set())
+                                )
                                 decoders: dict = {}
-                                scope = ResourceScope(fres, objects, set())
-                                for ev, sc in _content_events(bytes(content), scope, walk_errors):
-                                    if ev[0] == "atext":
-                                        parts.append(pdf_text_string(ev[3]))
-                                    elif ev[0] in ("text", "textarr"):
-                                        key = (sc.key, ev[2])
-                                        if key not in decoders:
-                                            decoders[key] = spec_decoder(_font_spec(
-                                                sc.fonts.get(ev[2]), objects, tounicode=False
-                                            ))
-                                        parts.append(shown_text(show_operand(ev), decoders[key]))
-                                covered = "".join(parts)
+                                for sc in scopes:
+                                    for name, fref in sc.fonts.items():
+                                        font = resolve(fref, objects)
+                                        if isinstance(font, dict):
+                                            plain = {
+                                                k: v for k, v in font.items() if k != "ToUnicode"
+                                            }
+                                            decoders[(sc.key, str(name))] = _font_decoder(
+                                                _font_spec(plain, objects)
+                                            )
+                                covered = "".join(
+                                    _event_text(ev, sc, decoders)
+                                    for ev, sc in _content_events(
+                                        bytes(content), scopes[0], walk_errors
+                                    )
+                                    if ev[0] in ("text", "textarr", "atext")
+                                )
                     if sub == "Highlight":
                         qp = get_resolved(an, "QuadPoints", objects)
                         covered = ""

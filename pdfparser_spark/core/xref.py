@@ -306,13 +306,16 @@ def parse_all_objects(
     decryptor=None,
     objstm_expanded: set | None = None,
     parsed: dict | None = None,
+    index: dict | None = None,
 ):
     """Parse the objects indexed by ``offsets`` (key order) and expand the
     ObjStm entries of ``compressed``; returns the objects this call parsed.
     Called with a whole index it reads the whole document; the lazy
     ``extract.ObjectTable`` calls it with one entry at a time.  Indirect
     /Length is resolved against already-parsed objects or by direct offset
-    parse (two-pass).
+    parse (two-pass) at its entry in ``index``, the document's whole offset
+    index (default ``offsets``): a length object that follows its stream
+    is found even when this call reads only the stream.
 
     ``parsed``: objects of the same document that earlier calls
     materialized.  They are not parsed or expanded again, and /Length and
@@ -331,11 +334,13 @@ def parse_all_objects(
     as a direct object in a newer revision IS individually encrypted."""
     objects: dict = {}
     known = objects if parsed is None else ChainMap(objects, parsed)
+    if index is None:
+        index = offsets
 
     def length_resolver(ref: Ref):
         v = known.get((ref.obj_id, ref.gen))
         if v is None:
-            off = offsets.get((ref.obj_id, ref.gen))
+            off = index.get((ref.obj_id, ref.gen))
             if off is None:
                 return None
             try:

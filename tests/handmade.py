@@ -61,3 +61,17 @@ IMAGE_IN_FORM = pdf(
     b"/ColorSpace /DeviceGray /Length 1 >>\nstream\n\x7f\nendstream",
     stream(b"", b"/Fm1 Do"),
 )
+
+# both content streams take /Length from an object that follows them: the
+# first payload holds the bytes "endstream", the second ends in a CR
+FORWARD_LENGTH = pdf(
+    b"<< /Type /Catalog /Pages 2 0 R >>",
+    b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+    b"/Resources << /Font << /F1 4 0 R >> >> /Contents [5 0 R 7 0 R] >>",
+    b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+    b"<< /Length 6 0 R >>\nstream\nBT /F1 12 Tf 72 720 Td (endstream) Tj ET\nendstream",
+    b"40",
+    b"<< /Length 8 0 R >>\nstream\nBT /F1 12 Tf 72 700 Td (cr) Tj ET\r\nendstream",
+    b"34",
+)

@@ -1304,6 +1304,22 @@ def test_a_fault_in_an_unread_object_is_not_seen():
     assert counts[0] == counts[1]
 
 
+def test_an_indirect_length_that_follows_its_stream_is_resolved():
+    """A content stream read on its own still finds its /Length in the
+    length object that follows it, so a payload holding the bytes
+    "endstream" or ending in a CR is read whole, with no /Length row."""
+    from handmade import FORWARD_LENGTH as doc
+
+    from pdfparser_spark.core.extract import decode_document
+
+    want = [("text", "endstream", None), ("text", "cr", None)]
+    res = extract_spans(doc)
+    assert res["spans"] == want
+    assert res["errors"] == []
+    assert extract_spans(doc, strict=True)["spans"] == want
+    assert decode_document(doc)["errors"] == []
+
+
 def test_spans_never_parse_what_no_page_reaches(monkeypatch):
     """extract_spans on synth doc 0 parses the catalog, page tree, page,
     content, font and image objects, and never the document outline,
