@@ -17,14 +17,16 @@ pdf_file.rs:879-889): strict returns no spans if any error was recorded;
 lenient keeps going and reports errors as metric rows.
 
 Every kernel opens its document through :func:`open_document` (xref ->
-decryptor -> a lazy :class:`ObjectTable`, then the resolved /Root); a
-kernel that scans every object calls its ``read_all()``.  Each kernel runs
-its body inside ``with _contained(errors):`` so a corrupt document ends
-as error rows, never as an exception.  A kernel that reads pages walks
-the page tree once, with :func:`_walk_pages`: every page comes with its
-inherited /Resources, /MediaBox and /Rotate, and a lost catalog degrades
-to the orphan-page scan (only strict :func:`extract_spans` refuses
-instead).  New kernels follow the same shape.
+decryptor -> a lazy :class:`ObjectTable`, then the resolved /Root) and
+reads only the objects it reaches, so it reports faults only in those;
+only the orphan-page scan and :func:`decode_document`'s object counts read
+every object.  Each kernel runs its body inside ``with
+_contained(errors):`` so a corrupt document ends as error rows, never as
+an exception.  A kernel that reads pages walks the page tree once, with
+:func:`_walk_pages`: every page comes with its inherited /Resources,
+/MediaBox and /Rotate, and a lost catalog degrades to the orphan-page scan
+(only strict :func:`extract_spans` refuses instead).  New kernels follow
+the same shape.
 """
 
 from __future__ import annotations
@@ -82,6 +84,23 @@ def _build_decryptor(data: bytes, trailer: dict, offsets: dict, password: bytes 
     def as_int(x, default):  # /Encrypt entries are direct values in practice
         return x if isinstance(x, int) else default
 
+    cf = enc.get("CF")
+    cf = cf if isinstance(cf, dict) else {}
+
+    def crypt_filter(sel_name: str, modes: dict, message: str):
+        """§7.6.5 crypt-filter selection: ``(mode, filter dict)`` for the
+        filter /StmF or /StrF names, ``(None, None)`` for Identity.
+        ``modes`` maps each /CFM the handler allows to its cipher mode;
+        any other /CFM raises ``message`` formatted with it."""
+        sel = str(enc.get(sel_name) or "Identity")
+        if sel == "Identity":
+            return None, None
+        cfd = cf.get(sel)
+        cfm = str(cfd.get("CFM")) if isinstance(cfd, dict) else None
+        if cfm not in modes:
+            raise PdfError(message.format(cfm), kind=FILTER_ERROR, stage="decode")
+        return modes[cfm], cfd
+
     v = as_int(enc.get("V"), 0)
     r = as_int(enc.get("R"), 0)
     if str(enc.get("Filter")) == "Standard" and v in (1, 2) and r in (2, 3):
@@ -90,27 +109,10 @@ def _build_decryptor(data: bytes, trailer: dict, offsets: dict, password: bytes 
     elif str(enc.get("Filter")) == "Standard" and v == 4 and r == 4:
         # crypt filters (§7.6.5): /CF names a filter dict; /StmF + /StrF
         # select which applies to streams/strings.
-        cf = enc.get("CF")
-        cf = cf if isinstance(cf, dict) else {}
-
-        def mode_of(sel_name):
-            sel = str(enc.get(sel_name) or "Identity")
-            if sel == "Identity":
-                return None
-            cfd = cf.get(sel)
-            cfm = str(cfd.get("CFM")) if isinstance(cfd, dict) else None
-            if cfm == "AESV2":
-                return "aes"
-            if cfm == "V2":
-                return "rc4"
-            raise PdfError(
-                f"unsupported encryption (crypt filter CFM={cfm})",
-                kind=FILTER_ERROR,
-                stage="decode",
-            )
-
-        stm_mode = mode_of("StmF")
-        str_mode = mode_of("StrF")
+        modes = {"AESV2": "aes", "V2": "rc4"}
+        message = "unsupported encryption (crypt filter CFM={})"
+        stm_mode = crypt_filter("StmF", modes, message)[0]
+        str_mode = crypt_filter("StrF", modes, message)[0]
         if "Length" in enc:
             n = max(5, as_int(enc.get("Length"), 128) // 8)
         else:
@@ -129,25 +131,9 @@ def _build_decryptor(data: bytes, trailer: dict, offsets: dict, password: bytes 
         # validates the (empty) user password, /UE unwraps the file key.
         # Crypt-filter selection still applies: /StrF /Identity (plaintext
         # strings) is a legal shape, and an unknown CFM fails closed.
-        cf5 = enc.get("CF")
-        cf5 = cf5 if isinstance(cf5, dict) else {}
-
-        def mode_of5(sel_name):
-            sel = str(enc.get(sel_name) or "Identity")
-            if sel == "Identity":
-                return None
-            cfd = cf5.get(sel)
-            cfm = str(cfd.get("CFM")) if isinstance(cfd, dict) else None
-            if cfm != "AESV3":
-                raise PdfError(
-                    f"unsupported encryption (V5 crypt filter CFM={cfm})",
-                    kind=FILTER_ERROR,
-                    stage="decode",
-                )
-            return "aes256"
-
-        stm5 = mode_of5("StmF")
-        str5 = mode_of5("StrF")
+        message = "unsupported encryption (V5 crypt filter CFM={})"
+        stm5 = crypt_filter("StmF", {"AESV3": "aes256"}, message)[0]
+        str5 = crypt_filter("StrF", {"AESV3": "aes256"}, message)[0]
         u5, ue5 = enc.get("U") or b"", enc.get("UE") or b""
         key = crypt.v5_recover_key(u5, ue5, b"")
         if key is None and password:
@@ -172,23 +158,12 @@ def _build_decryptor(data: bytes, trailer: dict, offsets: dict, password: bytes 
             raise PdfError(
                 f"unsupported PubSec version V={v}", kind=FILTER_ERROR, stage="decode"
             )
-        cfp = enc.get("CF")
-        cfp = cfp if isinstance(cfp, dict) else {}
-
-        def pub_filter(sel_name):
-            sel = str(enc.get(sel_name) or "Identity")
-            if sel == "Identity":
-                return None
-            cfd = cfp.get(sel)
-            return cfd if isinstance(cfd, dict) else None
-
-        cfd = pub_filter("StmF") or pub_filter("StrF")
-        if cfd is None or str(cfd.get("CFM")) != "AESV2":
-            raise PdfError(
-                "unsupported PubSec crypt filter (AESV2 scope)",
-                kind=FILTER_ERROR,
-                stage="decode",
-            )
+        message = "unsupported PubSec crypt filter (AESV2 scope)"
+        stm_p, stm_cf = crypt_filter("StmF", {"AESV2": "aes"}, message)
+        str_p, str_cf = crypt_filter("StrF", {"AESV2": "aes"}, message)
+        cfd = stm_cf or str_cf
+        if cfd is None:
+            raise PdfError(message, kind=FILTER_ERROR, stage="decode")
         recips = [
             bytes(rv)
             for rv in (cfd.get("Recipients") or [])
@@ -212,8 +187,6 @@ def _build_decryptor(data: bytes, trailer: dict, offsets: dict, password: bytes 
         key = pubsec.file_key(
             seed, recips, 16, encrypt_metadata=em if isinstance(em, bool) else True
         )
-        stm_p = "aes" if pub_filter("StmF") else None
-        str_p = "aes" if pub_filter("StrF") else None
         return crypt.StandardDecryptor(key, stm_p, str_p, enc_obj)
     else:
         raise PdfError(
@@ -294,15 +267,16 @@ _MISSING = object()
 
 class ObjectTable:
     """A document's objects keyed by ``(id, gen)``, read on first use (the
-    reference's memoizing cache, pdf_file.rs:25-68).  A lookup (``in``,
-    ``[]``, ``get``) of a key not yet read materializes it, once: parse
-    (/Length through the table, header resync), ObjStm expansion (the
-    container is read first, so it is decrypted and decoded), decryption,
-    and for a stream classification and filter decode.  Its error rows
-    land in the document's error list when it is read, so a kernel reports
-    faults only in the objects it reads.  :meth:`read_all` reads every
-    indexed object, in key order, for kernels that scan the whole
-    document.
+    reference's memoizing cache, pdf_file.rs:25-68); the only way any code
+    reads a document's objects.  A lookup (``in``, ``[]``, ``get``) of a
+    key not yet read materializes it, once: parse (/Length through the
+    table, header resync), ObjStm expansion (the container is read first,
+    so it is decrypted and decoded), decryption, and for a stream
+    classification and filter decode.  Its error rows land in the
+    document's error list when it is read, so a kernel reports faults only
+    in the objects it reads.  :meth:`read_all` reads every indexed object,
+    key by key; only the orphan-page scan and ``decode_document``'s object
+    counts need it.
 
     Expanding an ObjStm materializes all its members, except one that has
     a direct xref entry not read yet: that entry wins when it is read."""
@@ -335,26 +309,22 @@ class ObjectTable:
         return val
 
     def read_all(self) -> dict:
-        """Materialize every indexed object not read yet, in key order,
-        and return ``{(id, gen): object}`` for all materialized objects."""
-        offs = {k: off for k, off in self._offsets.items() if k not in self._tried}
-        comp = {i: e for i, e in self._compressed.items() if (i, 0) not in self._tried}
-        self._tried.update(offs)
-        self._tried.update((i, 0) for i in comp)
-        self._materialize(offs, comp)
+        """Read every indexed object, in key order, and return ``{(id,
+        gen): object}`` for all materialized objects."""
+        for key in sorted({*self._offsets, *((i, 0) for i in self._compressed)}):
+            self.get(key)
         return self._store
 
     def _read(self, key) -> None:
         self._tried.add(key)  # also the guard against a lookup cycle
-        off = self._offsets.get(key)
-        if off is not None:
-            self._materialize({key: off}, {})
+        if key in self._offsets:
+            offsets, compressed = {key: self._offsets[key]}, {}
         elif key[1] == 0 and key[0] in self._compressed:
             entry = self._compressed[key[0]]
             self.get((entry[0], 0))  # the container
-            self._materialize({}, {key[0]: entry})
-
-    def _materialize(self, offsets: dict, compressed: dict) -> None:
+            offsets, compressed = {}, {key[0]: entry}
+        else:
+            return
         expanded = self._expanded
         fresh = parse_all_objects(
             self._data, offsets, compressed, self._errors, self._decryptor, expanded, self._store,
@@ -362,10 +332,10 @@ class ObjectTable:
         )
         # an ObjStm member whose direct xref entry is still unread: that
         # entry (a newer revision) wins when it is read
-        for key in [k for k in fresh if k in expanded and k in self._offsets]:
-            if key not in self._tried:
-                del fresh[key]
-                expanded.discard(key)
+        for k in [k for k in fresh if k in expanded and k in self._offsets]:
+            if k not in self._tried:
+                del fresh[k]
+                expanded.discard(k)
         _apply_decryption(self._decryptor, fresh, expanded)
         self._store.update(fresh)
         decode_doc_streams(fresh, self._errors, self)
@@ -1112,10 +1082,9 @@ def _image_colorspace(attrs: dict, objects: dict):
     return names.get(head, head)
 
 
-def extract_image_xobjects(
-    data: bytes, password: bytes = b""
-) -> list[tuple[str, bytes, dict]]:
-    """Embedded image XObjects in page order: (media_ref, payload, meta).
+def extract_image_xobjects(data: bytes, password: bytes = b"") -> dict:
+    """Embedded image XObjects in page order: ``{"images": [(media_ref,
+    payload, meta)], "errors"}``.
     For media-codec chains (/DCTDecode /JPXDecode /CCITTFaxDecode
     /JBIG2Decode) the payload is the post-decryption bytes at the codec
     boundary (transport armor stripped) and meta["is_media"] is True —
@@ -1124,12 +1093,11 @@ def extract_image_xobjects(
     decoded SAMPLE bytes and meta carries the decode geometry —
     width/height/bpc/colorspace//Decode//ImageMask — for
     textops/raster.decode_raster.  Lenient: a broken document
-    contributes no rows rather than killing the task."""
+    contributes error rows and no images rather than killing the task."""
     errors: list = []
     out: list[tuple[str, bytes, dict]] = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()
         pages, _root = _walk_pages(root, objects, errors)
         for _page_idx, xname, st in _page_images(pages, objects):
             try:
@@ -1170,7 +1138,7 @@ def extract_image_xobjects(
                 except (FilterError, PdfError):
                     meta["smask"] = None  # lenient: base image stands
             out.append((xname, payload, meta))
-    return out
+    return {"images": out, "errors": errors}
 
 
 def _page_images(pages: list, objects: dict):
@@ -1237,7 +1205,6 @@ def extract_layout_spans(data: bytes, password: bytes = b""):
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()
         pages, root = _walk_pages(root, objects, errors)
         _layout_spans(objects, root, pages, errors, out)
     return {"spans": out, "errors": errors}
@@ -1529,7 +1496,6 @@ def extract_advance_spans(data: bytes, password: bytes = b"", with_width: bool =
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()
         pages, root = _walk_pages(root, objects, errors)
         decoders: dict = {}
         w_cache: dict = {}
@@ -2010,7 +1976,6 @@ def extract_graphics(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()
         pages, _root = _walk_pages(root, objects, errors)
         for page, _attrs in pages:
             content = _page_content_bytes(page, objects, errors)
@@ -2049,7 +2014,6 @@ def extract_inline_pixels(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()
         pages, _root = _walk_pages(root, objects, errors)
         for page_idx, (page, _attrs) in enumerate(pages):
             content = _page_content_bytes(page, objects, errors)
@@ -2116,7 +2080,6 @@ def extract_shadings(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()
         pages, _root = _walk_pages(root, objects, errors)
         for page_idx, (page, attrs) in enumerate(pages):
             shd = get_resolved(attrs.get("Resources"), "Shading", objects)
@@ -2172,7 +2135,6 @@ def extract_font_programs(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()  # font programs may be filtered
         pages, _root = _walk_pages(root, objects, errors)
         from .cff import parse_cff_widths
         from .truetype import parse_truetype_widths
@@ -2233,7 +2195,6 @@ def extract_attachments(data: bytes, password: bytes = b"", with_payload: bool =
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()
         names = get_resolved(root, "Names", objects)
         tree = (
             get_resolved(names, "EmbeddedFiles", objects)
@@ -2393,7 +2354,6 @@ def extract_tagged_spans(data: bytes, password: bytes = b""):
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()
         pages, root = _walk_pages(root, objects, errors)
 
         # logical rank per (page, mcid) + the leaf's /S type and its
@@ -2456,7 +2416,6 @@ def extract_ccitt_images(data: bytes, password: bytes = b""):
     out: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        objects.read_all()  # sets stream kinds (image routing)
         pages, _root = _walk_pages(root, objects, errors)
         for page_idx, xname, st in _page_images(pages, objects):
             try:
@@ -2705,16 +2664,10 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
     errors: list = []
     with _contained(errors):
         trailer, objects, root = open_document(data, password, errors)
-        # A FreeText appearance's fonts decode without their /ToUnicode
-        # CMaps (the synth appearance draws plain codes under a CMap font;
-        # its oracle text depends on this): its decoder cache is seeded
-        # with each font dictionary minus /ToUnicode.  Highlight text comes from the
-        # layout pass below, whose error rows precede the page walk's and
-        # this walk's.
-        walk_errors: list = []
-        pages, root = _walk_pages(root, objects, walk_errors)
+        # highlight text comes from the layout pass after this walk
+        pages, root = _walk_pages(root, objects, errors)
         quads: dict = {}  # annots_out index -> (page, QuadPoints numbers)
-        with _contained(walk_errors):
+        with _contained(errors):  # a failed annotation walk keeps the layout pass
             for p, (page, attrs) in enumerate(pages):
                 arr = get_resolved(page, "Annots", objects)
                 if not isinstance(arr, list):
@@ -2747,24 +2700,11 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
                             if not isinstance(fres, dict):
                                 fres = attrs.get("Resources") or {}
                             if content:
-                                scopes, _rows, _forms = scope_table(
-                                    ResourceScope(fres, objects, set())
-                                )
                                 decoders: dict = {}
-                                for sc in scopes:
-                                    for name, fref in sc.fonts.items():
-                                        font = resolve(fref, objects)
-                                        if isinstance(font, dict):
-                                            plain = {
-                                                k: v for k, v in font.items() if k != "ToUnicode"
-                                            }
-                                            decoders[(sc.key, str(name))] = _font_decoder(
-                                                _font_spec(plain, objects)
-                                            )
                                 covered = "".join(
                                     _event_text(ev, sc, decoders)
                                     for ev, sc in _content_events(
-                                        bytes(content), scopes[0], walk_errors
+                                        bytes(content), ResourceScope(fres, objects, set()), errors
                                     )
                                     if ev[0] in ("text", "textarr", "atext")
                                 )
@@ -2782,9 +2722,7 @@ def extract_markup_annots(data: bytes, password: bytes = b""):
                     ai += 1
         spans: list = []
         with _contained(errors):  # a failed layout walk keeps the annotations
-            objects.read_all()
             _layout_spans(objects, root, pages, errors, spans)
-        errors.extend(walk_errors)
         by_page: dict = {}
         for page_idx, x, y, txt, _size in spans:
             by_page.setdefault(page_idx, []).append((x, y, txt))

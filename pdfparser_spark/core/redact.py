@@ -85,7 +85,6 @@ def apply_redactions(data: bytes, password: bytes = b"") -> dict:
         trailer, objects, root = open_document(data, password, errors)
         pages, root = _walk_pages(root, objects, errors)
         with _contained(errors):  # a failed layout pass keeps the marks
-            objects.read_all()
             _layout_spans(objects, root, pages, errors, spans)
         boxes_by_page = {p: _redact_boxes(page, objects) for p, (page, _attrs) in enumerate(pages)}
     except PdfError as e:

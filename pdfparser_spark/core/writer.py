@@ -429,24 +429,24 @@ def sign_pdf_incremental(
     with an inline /AcroForm."""
     import binascii as _ba
 
+    from .extract import ObjectTable
     from .objects import Ref, get_resolved, resolve
     from .signature import make_signed_cms
-    from .xref import parse_all_objects, read_xref
+    from .xref import read_xref
 
-    errors: list = []
     offsets, trailer, compressed = read_xref(data)
     if trailer.get("Encrypt") is not None:
         # an encrypted base would need the appended field dict's strings
         # ciphered with the document key (§7.6.2; only the signature
         # /Contents itself is exempt) — out of this writer's scope
         raise ValueError("cannot sign an encrypted document")
-    objects = parse_all_objects(data, offsets, compressed, errors, None, set())
+    objects = ObjectTable(data, offsets, compressed, [], None)
     root_ref = trailer.get("Root")
     root = resolve(root_ref, objects)
     if not isinstance(root, dict) or not isinstance(root_ref, Ref):
         raise ValueError("cannot sign: catalog unresolvable")
     size = get_resolved(trailer, "Size", objects)
-    max_id = max((oid for (oid, _g) in objects), default=0)
+    max_id = max([*(oid for oid, _g in offsets), *compressed], default=0)
     size = max(int(size) if isinstance(size, int) else 0, max_id + 1)
     field_id, sigv_id = size, size + 1
 
@@ -509,12 +509,12 @@ def fill_form_fields(data: bytes, values: dict, xref_stream: bool = False) -> by
     objects byte-identical (not re-emitted at all).  Returns the new
     document; raises ValueError when the document has no /AcroForm."""
     from .cmap import pdf_text_string
+    from .extract import ObjectTable
     from .objects import Ref, get_resolved, resolve
-    from .xref import parse_all_objects, read_xref
+    from .xref import read_xref
 
-    errors: list = []
     offsets, trailer, compressed = read_xref(data)
-    objects = parse_all_objects(data, offsets, compressed, errors, None, set())
+    objects = ObjectTable(data, offsets, compressed, [], None)
     root = get_resolved(trailer, "Root", objects)
     acro = get_resolved(root, "AcroForm", objects) if isinstance(root, dict) else None
     if not isinstance(acro, dict):

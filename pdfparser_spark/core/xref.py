@@ -12,10 +12,11 @@ plus object streams (ObjStm, §7.5.7) for type-2 entries, and /Prev chains
 for incrementally-updated files.
 
 The result is the object index ``(obj_id, gen) -> byte offset`` that the
-reference keeps as ``HashMap<ObjectId, usize>`` (pdf_file.rs:226-270).  A
-kernel reads objects through ``extract.ObjectTable``, which parses one
-object the first time something dereferences it (the reference's memoizing
-cache, pdf_file.rs:25-68); :func:`parse_all_objects` is its parser.
+reference keeps as ``HashMap<ObjectId, usize>`` (pdf_file.rs:226-270).  All
+code reads objects through ``extract.ObjectTable``, which parses one object
+the first time something dereferences it (the reference's memoizing cache,
+pdf_file.rs:25-68); :func:`parse_all_objects` is its parser and has no
+other caller.
 """
 
 from __future__ import annotations
@@ -303,18 +304,17 @@ def parse_all_objects(
     offsets: dict,
     compressed: dict,
     errors: list,
-    decryptor=None,
-    objstm_expanded: set | None = None,
-    parsed: dict | None = None,
-    index: dict | None = None,
+    decryptor,
+    objstm_expanded: set,
+    parsed: dict,
+    index: dict,
 ):
     """Parse the objects indexed by ``offsets`` (key order) and expand the
     ObjStm entries of ``compressed``; returns the objects this call parsed.
-    Called with a whole index it reads the whole document; the lazy
-    ``extract.ObjectTable`` calls it with one entry at a time.  Indirect
-    /Length is resolved against already-parsed objects or by direct offset
-    parse (two-pass) at its entry in ``index``, the document's whole offset
-    index (default ``offsets``): a length object that follows its stream
+    Its caller, ``extract.ObjectTable``, passes one entry at a time.
+    Indirect /Length is resolved against already-parsed objects or by
+    direct offset parse (two-pass) at its entry in ``index``, the
+    document's whole offset index: a length object that follows its stream
     is found even when this call reads only the stream.
 
     ``parsed``: objects of the same document that earlier calls
@@ -324,18 +324,16 @@ def parse_all_objects(
 
     ``decryptor`` (crypt.StandardDecryptor | None): in encrypted documents
     ObjStm containers must be decrypted BEFORE their payload is
-    filter-decoded and expanded — the doc-wide decryption pass runs after
-    parsing and would be too late for the objects inside.
+    filter-decoded and expanded — the decryption pass runs after parsing
+    and would be too late for the objects inside.
 
-    ``objstm_expanded``: if given, filled with the keys of objects that
-    were ACTUALLY materialized out of an ObjStm (not merely listed in a —
+    ``objstm_expanded`` is filled with the keys of objects that were
+    ACTUALLY materialized out of an ObjStm (not merely listed in a —
     possibly stale — type-2 xref entry).  The decryption pass must skip
     exactly these: an object with a stale type-2 entry that was re-written
     as a direct object in a newer revision IS individually encrypted."""
     objects: dict = {}
-    known = objects if parsed is None else ChainMap(objects, parsed)
-    if index is None:
-        index = offsets
+    known = ChainMap(objects, parsed)
 
     def length_resolver(ref: Ref):
         v = known.get((ref.obj_id, ref.gen))
@@ -351,16 +349,28 @@ def parse_all_objects(
                 return None
         return v if isinstance(v, int) else None
 
-    def _resync_header(obj_id: int, gen: int, off: int):
-        """Offset-slop repair (broken real-world writers routinely emit
-        xref offsets a few bytes off): look for the exact ``N G obj``
-        header within +-64 bytes of the recorded offset."""
-        pat = re.compile(rb"(?<![0-9])" + f"{obj_id} {gen} obj".encode("ascii"))
-        lo = max(0, off - 64)
-        m = pat.search(data, lo, min(len(data), off + 96))
-        return m.start() if m is not None and m.start() != off else None
-
     tok = Tokenizer(data, length_resolver=length_resolver)
+
+    def slop_repaired(obj_id: int, gen: int, off: int) -> bool:
+        """Offset-slop repair (broken real-world writers routinely emit
+        xref offsets a few bytes off): parse the exact ``N G obj`` header
+        found within +-64 bytes of the recorded offset."""
+        pat = re.compile(rb"(?<![0-9])" + f"{obj_id} {gen} obj".encode("ascii"))
+        m = pat.search(data, max(0, off - 64), min(len(data), off + 96))
+        if m is None or m.start() == off:
+            return False
+        try:
+            ind, _ = tok.parse_indirect_at(m.start())
+        except ParsingError:
+            return False
+        if ind.obj_id != obj_id:
+            return False
+        objects[(ind.obj_id, ind.gen)] = ind.value
+        errors.append((
+            "ParsingError", "tokenize", f"obj {obj_id}: offset slop {m.start() - off:+d} repaired",
+        ))
+        return True
+
     for (obj_id, gen), off in sorted(offsets.items()):
         if (obj_id, gen) in known:
             continue
@@ -369,37 +379,15 @@ def parse_all_objects(
             continue
         try:
             ind, _ = tok.parse_indirect_at(off)
-            if ind.obj_id != obj_id:
-                off2 = _resync_header(obj_id, gen, off)
-                if off2 is not None:
-                    try:
-                        ind2, _ = tok.parse_indirect_at(off2)
-                        if ind2.obj_id == obj_id:
-                            objects[(ind2.obj_id, ind2.gen)] = ind2.value
-                            errors.append((
-                                "ParsingError", "tokenize",
-                                f"obj {obj_id}: offset slop {off2 - off:+d} repaired",
-                            ))
-                            continue
-                    except ParsingError:
-                        pass
-                errors.append(("ParsingError", "tokenize", f"xref points {obj_id} at object {ind.obj_id}"))
-            objects[(ind.obj_id, ind.gen)] = ind.value
         except ParsingError as e:
-            off2 = _resync_header(obj_id, gen, off)
-            if off2 is not None:
-                try:
-                    ind, _ = tok.parse_indirect_at(off2)
-                    if ind.obj_id == obj_id:
-                        objects[(ind.obj_id, ind.gen)] = ind.value
-                        errors.append((
-                            "ParsingError", "tokenize",
-                            f"obj {obj_id}: offset slop {off2 - off:+d} repaired",
-                        ))
-                        continue
-                except ParsingError:
-                    pass
-            errors.append(("ParsingError", "tokenize", f"obj {obj_id}: {e}"))
+            if not slop_repaired(obj_id, gen, off):
+                errors.append(("ParsingError", "tokenize", f"obj {obj_id}: {e}"))
+            continue
+        if ind.obj_id != obj_id:
+            if slop_repaired(obj_id, gen, off):
+                continue
+            errors.append(("ParsingError", "tokenize", f"xref points {obj_id} at object {ind.obj_id}"))
+        objects[(ind.obj_id, ind.gen)] = ind.value
 
     # Object streams (§7.5.7): type-2 entries live inside an ObjStm.
     for obj_id, (stm_id, _idx) in sorted(compressed.items()):
@@ -430,8 +418,7 @@ def parse_all_objects(
                 val, _ = Tokenizer(payload).parse_value(first + ooff)
                 if (onum, 0) not in known:
                     objects[(onum, 0)] = val
-                    if objstm_expanded is not None:
-                        objstm_expanded.add((onum, 0))
+                    objstm_expanded.add((onum, 0))
         except (ParsingError, ValueError, TypeError) as e:
             errors.append(("ParsingError", "tokenize", f"ObjStm {stm_id}: {e}"))
     return objects

@@ -317,7 +317,7 @@ def extract_images_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
     from ..textops.raster import decode_raster
 
     def rows_of(doc_id, data):
-        for name, payload, meta in extract_image_xobjects(data, password=password):
+        for name, payload, meta in extract_image_xobjects(data, password=password)["images"]:
             try:
                 if meta["is_media"]:
                     dec = sniff_decode(bytes(payload))

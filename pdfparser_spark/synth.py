@@ -525,17 +525,22 @@ def _position_prelude(
     return f"{x} {y + 14} Td 14 TL ", True  # v == 4: TL + implicit T* of '
 
 
+def _show_string(s: str, cmap: bool) -> str:
+    """``s`` as a show operand in the synth font's code space: 2-byte hex
+    codes under the CMap font, a literal string otherwise."""
+    if cmap:
+        return "<" + "".join(f"{ord(c):04X}" for c in s) + ">"
+    return "(" + s + ")"
+
+
 def _content_plain(
     ptext: str, page_idx: int, rules: dict, ox: int = 0, oy: int = 0
 ) -> bytes:
     """The decoded content-stream body for one page."""
     cmap = rules["cmap_font"]
-    if cmap:
-        def show(s: str) -> str:
-            return "<" + "".join(f"{ord(c):04X}" for c in s) + ">"
-    else:
-        def show(s: str) -> str:
-            return "(" + s + ")"
+
+    def show(s: str) -> str:
+        return _show_string(s, cmap)
 
     prelude, quote = _position_prelude(page_idx, rules, ox, oy)
     if page_idx == 0 and rules.get("gs_font"):
@@ -1060,9 +1065,11 @@ def build_document(doc_id: int, text: str) -> dict:
         b.struct(b"\nendstream")
         obj_close()
 
-    # FreeText appearance stream: a Form XObject drawing the REAL text
+    # FreeText appearance stream: a Form XObject drawing the REAL text in
+    # the font's code space
     if ap_id is not None:
-        ap_body = f"BT /F1 10 Tf 2 8 Td (ap-{doc_id % 10}) Tj ET".encode("ascii")
+        shown = _show_string(f"ap-{doc_id % 10}", r["cmap_font"])
+        ap_body = f"BT /F1 10 Tf 2 8 Td {shown} Tj ET".encode("ascii")
         obj_open(ap_id)
         b.struct(
             (

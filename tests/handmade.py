@@ -75,3 +75,20 @@ FORWARD_LENGTH = pdf(
     b"<< /Length 8 0 R >>\nstream\nBT /F1 12 Tf 72 700 Td (cr) Tj ET\r\nendstream",
     b"34",
 )
+
+# a FreeText annotation whose /AP /N appearance shows codes AB in a font
+# whose /ToUnicode CMap maps them to "xy"; /Contents is the fallback text
+_XY_CMAP = (
+    b"begincmap\n1 begincodespacerange\n<00> <FF>\nendcodespacerange\n"
+    b"2 beginbfchar\n<41> <0078>\n<42> <0079>\nendbfchar\nendcmap"
+)
+FREETEXT_TOUNICODE = pdf(
+    b"<< /Type /Catalog /Pages 2 0 R >>",
+    b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Annots [<< /Type /Annot "
+    b"/Subtype /FreeText /Rect [0 0 200 30] /Contents (AB) /AP << /N 4 0 R >> >>] >>",
+    stream(b"/Type /XObject /Subtype /Form /BBox [0 0 200 30] "
+           b"/Resources << /Font << /F1 5 0 R >> >>", b"BT /F1 10 Tf 2 8 Td (AB) Tj ET"),
+    b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 6 0 R >>",
+    stream(b"", _XY_CMAP),
+)

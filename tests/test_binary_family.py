@@ -191,27 +191,27 @@ def test_stale_type2_entry_still_decrypts_direct_object():
     """An object listed in a (stale) type-2 xref entry but actually parsed
     as a direct object IS individually encrypted — the decryption skip-set
     must be the real expansion record, not the raw type-2 map."""
-    from pdfparser_spark.core.extract import _apply_decryption, _build_decryptor
-    from pdfparser_spark.core.xref import parse_all_objects, read_xref
+    from pdfparser_spark.core.extract import ObjectTable, _build_decryptor
+    from pdfparser_spark.core.objects import Stream
+    from pdfparser_spark.core.xref import read_xref
 
     d = build_document_binary(6, TEXT)  # RC4-encrypted, classic xref (even id)
     data = d["bytes"]
     offsets, trailer, compressed = read_xref(data)
     assert not compressed
+    decryptor = _build_decryptor(data, trailer, offsets)
+    plain = ObjectTable(data, offsets, {}, [], decryptor).read_all()
     # inject a stale type-2 entry pointing at a nonexistent container for a
     # content-stream object that exists as a DIRECT object
-    content_ids = [oid for (oid, gen) in offsets if gen == 0]
-    stale_id = max(content_ids)
-    compressed = {stale_id: (9999, 0)}
+    stale_id = max(k[0] for k, v in plain.items() if isinstance(v, Stream) and k[1] == 0)
     errors: list = []
-    decryptor = _build_decryptor(data, trailer, offsets)
-    expanded: set = set()
-    objects = parse_all_objects(data, offsets, compressed, errors, decryptor, expanded)
-    assert (stale_id, 0) in objects and (stale_id, 0) not in expanded
-    _apply_decryption(decryptor, objects, expanded)
-    # full path: the doc still extracts span-perfect despite the stale entry
-    from pdfparser_spark.core.extract import decode_doc_streams
-    decode_doc_streams(objects, errors)
+    stale = ObjectTable(data, offsets, {stale_id: (9999, 0)}, errors, decryptor)
+    objects = stale.read_all()
+    assert objects[(stale_id, 0)].decrypted and objects[(stale_id, 0)].data
+    assert errors == []
+    assert {k: getattr(v, "data", v) for k, v in objects.items()} == {
+        k: getattr(v, "data", v) for k, v in plain.items()
+    }
 
 
 def test_encrypt_metadata_false_changes_key():
@@ -412,7 +412,7 @@ def test_embedded_jpeg_extraction_end_to_end():
 
     for doc_id in (5, 10, 20, 30, 45):  # CMYK 2-page, JPX, gray, AES jp2, CMYK
         d = build_document_binary(doc_id, TEXT)
-        payloads = extract_image_xobjects(d["bytes"])
+        payloads = extract_image_xobjects(d["bytes"])["images"]
         assert len(payloads) == 1
         name, payload, meta = payloads[0]
         assert meta["is_media"]
@@ -443,8 +443,9 @@ def test_embedded_jpeg_extraction_end_to_end():
             assert int(img.sum(dtype=np.int64)) == int(out.sum()) * 64
 
     prot = build_document_protected(5, TEXT)
-    assert extract_image_xobjects(prot["bytes"]) == []  # fails closed
-    got = extract_image_xobjects(prot["bytes"], password=PROTECTED_USER_PWD)
+    closed = extract_image_xobjects(prot["bytes"])  # fails closed
+    assert closed["images"] == [] and closed["errors"]
+    got = extract_image_xobjects(prot["bytes"], password=PROTECTED_USER_PWD)["images"]
     assert len(got) == 1 and sniff_decode(bytes(got[0][1]))[0] == "jpg"
 
 
@@ -475,4 +476,4 @@ def test_protected_family_mutations_never_raise():
         pw = PROTECTED_USER_PWD if rng.random() < 0.7 else b"wrong"
         res = extract_spans(data, strict=False, password=pw)
         assert isinstance(res["spans"], list)
-        assert isinstance(extract_image_xobjects(data, password=pw), list)
+        assert isinstance(extract_image_xobjects(data, password=pw)["images"], list)

@@ -214,7 +214,7 @@ def test_new_tiers_on_real_pdfs():
     }
     for path, (nr, nl, nc) in expect.items():
         data = open(path, "rb").read()
-        assert extract_image_xobjects(data) == []
+        assert extract_image_xobjects(data) == {"images": [], "errors": []}
         sh = extract_shadings(data)
         assert sh["shadings"] == [] and sh["errors"] == []
         assert extract_signatures(data)["signatures"] == []

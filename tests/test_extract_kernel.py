@@ -125,7 +125,7 @@ def test_armored_embedded_image_prefix_decode():
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
     for doc_id in (5, 10, 25):
         d = build_document(doc_id, text)
-        images = extract_image_xobjects(d["bytes"])
+        images = extract_image_xobjects(d["bytes"])["images"]
         assert len(images) == 1
         name, payload, meta = images[0]
         assert meta["is_media"]
@@ -137,7 +137,7 @@ def test_armored_embedded_image_prefix_decode():
         fmt, w, h, _img = sniff_decode(bytes(payload))
         assert (name, fmt, (w, h)) == ("Im1", want_fmt, embedded_image_dims(doc_id))
     d = build_document(15, text)  # raster class: payload = sample bytes
-    [(name, payload, meta)] = extract_image_xobjects(d["bytes"])
+    [(name, payload, meta)] = extract_image_xobjects(d["bytes"])["images"]
     iw, ih = embedded_image_dims(15)
     assert not meta["is_media"]
     assert (meta["width"], meta["height"], meta["bpc"]) == (iw, ih, 8)
@@ -510,8 +510,7 @@ def test_markup_quad_geometry_multiquad_and_malformed():
 
 
 def test_revisions_chain_replay():
-    from pdfparser_spark.core.extract import extract_revisions
-    from pdfparser_spark.core.xref import parse_all_objects, read_xref
+    from pdfparser_spark.core.extract import extract_revisions, open_document
     from pdfparser_spark.synth import build_document, build_document_damaged, doc_rules
 
     text = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16 w17"
@@ -523,8 +522,7 @@ def test_revisions_chain_replay():
         rules = doc_rules(did)
         assert len(revs) == (2 if rules["incremental"] else 1), did
         # visible count under the full prefix merge == the parse's count
-        offsets, _tr, compressed = read_xref(d["bytes"])
-        objs = parse_all_objects(d["bytes"], offsets, compressed, [])
+        objs = open_document(d["bytes"], b"", []).objects.read_all()
         assert revs[-1][2] == len(objs), did
         kind = "stream" if did % 2 == 1 else "classic"
         assert all(rv[1] == kind for rv in revs), did
@@ -1148,7 +1146,7 @@ def test_catalog_loss_orphan_page_recovery():
             "extract_page_labels", "extract_ccitt_images", "extract_graphics",
             "extract_inline_pixels", "extract_shadings", "extract_font_programs",
             "extract_doc_graph", "extract_doc_meta", "extract_outline_tree",
-            "extract_markup_annots", "decode_document",
+            "extract_markup_annots", "extract_image_xobjects", "decode_document",
         )
     ] + [apply_redactions]
     for doc_id in (2, 10):
@@ -1160,7 +1158,8 @@ def test_catalog_loss_orphan_page_recovery():
         for kernel in (extract.extract_layout_spans, extract.extract_tagged_spans):
             assert kernel(dmg)["spans"] == kernel(whole)["spans"], (doc_id, kernel.__name__)
         assert extract.extract_page_labels(dmg)["labels"]
-        assert extract.extract_image_xobjects(dmg) == extract.extract_image_xobjects(whole)
+        images = [extract.extract_image_xobjects(d)["images"] for d in (dmg, whole)]
+        assert images[0] == images[1]
 
 
 def test_page_inherits_resources_from_the_page_tree():
@@ -1176,7 +1175,7 @@ def test_page_inherits_resources_from_the_page_tree():
     assert [s[3] for s in extract.extract_layout_spans(doc)["spans"]] == ["AB"]
     assert [s[4] for s in extract.extract_tagged_spans(doc)["spans"]] == ["AB"]
     assert [f[:3] for f in extract.extract_font_programs(doc)["fonts"]] == [(0, "F1", "Type1")]
-    assert [x[0] for x in extract.extract_image_xobjects(doc)] == ["Im1"]
+    assert [x[0] for x in extract.extract_image_xobjects(doc)["images"]] == ["Im1"]
     dec = extract.decode_document(doc)
     assert [f[:3] for f in dec["fonts"]] == [(0, 0, "F1")]
     assert dec["fonts"][0][3].differences == ((88, "A"), (89, "B"))
@@ -1271,14 +1270,17 @@ def test_xref_stream_footer_recovery():
 def _with_unreferenced_corrupt_object(data: bytes) -> bytes:
     """``data`` plus an incremental update whose only new object, 99,
     nothing references and whose xref entry points at garbage."""
-    from pdfparser_spark.core.xref import find_startxref
+    from pdfparser_spark.core.xref import find_startxref, read_xref
 
     prev = find_startxref(data)
+    root = read_xref(data)[1]["Root"]
     junk = len(data)
     out = data + b"not an object at all\n"
     xref = len(out)
     out += b"xref\n99 1\n%010d 00000 n \n" % junk
-    out += b"trailer\n<< /Size 100 /Root 1 0 R /Prev %d >>\nstartxref\n%d\n%%%%EOF\n" % (prev, xref)
+    out += b"trailer\n<< /Size 100 /Root %d %d R /Prev %d >>\nstartxref\n%d\n%%%%EOF\n" % (
+        root.obj_id, root.gen, prev, xref,
+    )
     return out
 
 
@@ -1304,6 +1306,49 @@ def test_a_fault_in_an_unread_object_is_not_seen():
     assert counts[0] == counts[1]
 
 
+# each kernel that once read every object up front -> (synth build
+# function, doc id) of a document on which its output is not empty
+_EXERCISED = {
+    "extract_image_xobjects": ("build_document", 0),
+    "extract_layout_spans": ("build_document", 1),
+    "extract_advance_spans": ("build_document", 1),
+    "extract_graphics": ("build_document", 1),
+    "extract_inline_pixels": ("build_document_binary", 0),
+    "extract_shadings": ("build_document", 5),
+    "extract_font_programs": ("build_document", 0),
+    "extract_attachments": ("build_document", 3),
+    "extract_tagged_spans": ("build_document", 1),
+    "extract_ccitt_images": ("build_document_scanned", 0),
+    "extract_markup_annots": ("build_document", 6),
+}
+
+
+@pytest.mark.parametrize("kernel", [*_EXERCISED, "apply_redactions"])
+def test_no_kernel_sees_an_object_it_does_not_read(kernel):
+    """Every kernel reads only the objects it reaches: a corrupt object
+    that nothing references gives no error row, and the rest of the
+    result (for apply_redactions, the sanitized bytes) equals the clean
+    document's."""
+    from pdfparser_spark import synth
+    from pdfparser_spark.core import extract
+    from pdfparser_spark.core.redact import apply_redactions, redact_mark
+    from pdfparser_spark.core.writer import write_pdf_layout
+
+    if kernel == "apply_redactions":
+        fn = apply_redactions
+        spans = [(0, 72.0, 720.0, "public alpha"), (0, 72.0, 706.0, "secret beta")]
+        clean = write_pdf_layout(spans, page_annots={0: [redact_mark(70, 700, 300, 712)]})
+    else:
+        fn = getattr(extract, kernel)
+        build, doc_id = _EXERCISED[kernel]
+        clean = getattr(synth, build)(doc_id, " ".join(f"w{i}" for i in range(24)))["bytes"]
+    want = fn(clean)
+    assert not want["errors"]
+    got = fn(_with_unreferenced_corrupt_object(clean))
+    assert not [e for e in got["errors"] if "99" in e[2]]
+    assert got == want
+
+
 def test_an_indirect_length_that_follows_its_stream_is_resolved():
     """A content stream read on its own still finds its /Length in the
     length object that follows it, so a payload holding the bytes
@@ -1326,11 +1371,10 @@ def test_spans_never_parse_what_no_page_reaches(monkeypatch):
     link annotation, form fields or /Info."""
     from pdfparser_spark.core import extract
     from pdfparser_spark.core.objects import Stream
-    from pdfparser_spark.core.xref import parse_all_objects, read_xref
 
     data = build_document(0, " ".join(f"w{i}" for i in range(24)))["bytes"]
-    offsets, _trailer, compressed = read_xref(data)
-    every = parse_all_objects(data, offsets, compressed, [])
+    every = extract.open_document(data, b"", []).objects.read_all()
+    parse_all_objects = extract.parse_all_objects
 
     def unread(v) -> bool:
         if isinstance(v, Stream) or not isinstance(v, dict):
@@ -1405,5 +1449,27 @@ def test_image_drawn_through_a_form_is_listed():
     from pdfparser_spark.core import extract
 
     assert extract_spans(doc)["spans"] == [("media", None, "Im1")]
-    [(name, payload, meta)] = extract.extract_image_xobjects(doc)
+    [(name, payload, meta)] = extract.extract_image_xobjects(doc)["images"]
     assert (name, payload, meta["width"], meta["is_media"]) == ("Im1", b"\x7f", 1, False)
+
+
+def test_image_kernel_reports_its_errors():
+    """extract_image_xobjects returns its error rows like every kernel:
+    garbage input names the failed xref recovery."""
+    from pdfparser_spark.core import extract
+
+    res = extract.extract_image_xobjects(b"\x00garbage")
+    assert res["images"] == [] and res["errors"]
+    assert res["errors"] == extract.extract_ccitt_images(b"\x00garbage")["errors"]
+
+
+def test_freetext_appearance_text_follows_its_font_cmap():
+    """A FreeText appearance decodes through its font's /ToUnicode like
+    any other text: the covered text is the CMap's, not the raw codes."""
+    from handmade import FREETEXT_TOUNICODE as doc
+
+    from pdfparser_spark.core.extract import extract_markup_annots
+
+    res = extract_markup_annots(doc)
+    assert res["annots"] == [(0, 0, "FreeText", None, "AB", "xy")]
+    assert res["errors"] == []

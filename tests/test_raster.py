@@ -122,7 +122,7 @@ def test_raster_corpus_end_to_end():
     for builder, pw in ((build_document, b""), (build_document_binary, b"")):
         for doc_id in (15, 35, 55, 75, 95, 115):
             d = builder(doc_id, TEXT)
-            images = extract_image_xobjects(d["bytes"], password=pw)
+            images = extract_image_xobjects(d["bytes"], password=pw)["images"]
             assert len(images) == 1, (builder.__name__, doc_id)
             name, payload, meta = images[0]
             assert name == "Im1" and not meta["is_media"]
@@ -137,10 +137,11 @@ def test_raster_corpus_end_to_end():
 
     for doc_id in (15, 35):  # force-encrypted: palette string ciphered
         d = build_document_protected(doc_id, TEXT)
-        assert extract_image_xobjects(d["bytes"]) == []  # fails closed
+        closed = extract_image_xobjects(d["bytes"])  # fails closed
+        assert closed["images"] == [] and closed["errors"]
         [(name, payload, meta)] = extract_image_xobjects(
             d["bytes"], password=PROTECTED_USER_PWD
-        )
+        )["images"]
         w, h = embedded_image_dims(doc_id)
         img = decode_raster(
             bytes(payload), w, h, int(meta["bpc"]), meta["colorspace"],
