@@ -171,16 +171,20 @@ class CMap:
         return "".join(out)
 
 
+def _simple_codec(encoding_name: str | None) -> str:
+    """The Python codec of a simple font's base encoding (WinAnsi == cp1252
+    per ISO 32000 D.2); latin-1 for none or any other."""
+    if encoding_name == "WinAnsiEncoding":
+        return "cp1252"
+    if encoding_name == "MacRomanEncoding":
+        return "mac_roman"
+    return "latin-1"
+
+
 def simple_decode(raw: bytes, encoding_name: str | None) -> str:
     """Fallback single-byte decode when the font has no /ToUnicode
-    (reference has no equivalent; WinAnsi == cp1252 per ISO 32000 D.2)."""
-    if encoding_name == "WinAnsiEncoding":
-        enc = "cp1252"
-    elif encoding_name == "MacRomanEncoding":
-        enc = "mac_roman"
-    else:
-        enc = "latin-1"
-    return raw.decode(enc, errors="replace")
+    (reference has no equivalent)."""
+    return raw.decode(_simple_codec(encoding_name), errors="replace")
 
 
 # ---------------------------------------------------------------------------
@@ -305,7 +309,9 @@ def remap_decoder(base_encoding: str | None, remap):
     """Decoder for an /Encoding DICTIONARY: the /BaseEncoding single-byte
     table (same simple_decode fallbacks) with ``remap``'s ``(code, glyph
     name)`` pairs applied on top."""
-    table = [simple_decode(bytes([i]), base_encoding) for i in range(256)]
+    # one decode of all 256 codes: each codec is single-byte, and an
+    # undefined code decodes to one U+FFFD
+    table = list(bytes(range(256)).decode(_simple_codec(base_encoding), "replace"))
     for code, name in remap:
         table[code] = glyph_to_char(name)
 

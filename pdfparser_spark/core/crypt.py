@@ -152,10 +152,13 @@ def object_key(file_key: bytes, obj_id: int, gen: int, aes: bool = False) -> byt
 
 # ---------------------------------------------------------------------------
 # AES (FIPS-197) — needed for the AESV2 crypt filter (ISO 32000 §7.6.2):
-# CBC mode, 16-byte IV prefix, PKCS#7 padding.  Pure Python; the container
-# has no crypto libs, and per-document payloads are small (the kernel is
-# Arrow-batch parallel across documents, so the Python cipher is off the
-# per-byte hot path the way the filters are).
+# CBC mode, 16-byte IV prefix, PKCS#7 padding.  Pure Python, like RC4
+# above: the package declares no crypto dependency.  (Where the
+# `cryptography` package happens to be installed, its ARC4 still rejects
+# key lengths PDF allows, such as 11-15-byte object keys, so using it would
+# mean a second cipher path.)  Per-document payloads are small (the kernel
+# is Arrow-batch parallel across documents, so the Python cipher is off
+# the per-byte hot path the way the filters are).
 # ---------------------------------------------------------------------------
 
 _SBOX = bytes.fromhex(

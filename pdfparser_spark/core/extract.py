@@ -53,7 +53,7 @@ MAX_TREE_DEPTH = 64
 KERN_SPACE_THRESHOLD = -180
 
 
-def _build_decryptor(data: bytes, trailer: dict, offsets: dict, password: bytes = b""):
+def _build_decryptor(trailer: dict, objects: ObjectTable, password: bytes = b""):
     """Encrypted document (ISO 32000 §7.6): build the document's
     :class:`crypt.StandardDecryptor` BEFORE object parsing, so ObjStm
     containers can be decrypted before expansion (modern writers combine
@@ -64,18 +64,16 @@ def _build_decryptor(data: bytes, trailer: dict, offsets: dict, password: bytes 
     /O recovery for R<=4, Algorithm 2.A owner path for R6) after the empty
     user password; a wrong/missing password raises and surfaces as the
     password-required error row (the reference's unsupported-Crypt stance,
-    decode.rs:46, 83-87)."""
+    decode.rs:46, 83-87).  An indirect /Encrypt dictionary is read through
+    ``objects`` (its offset-slop repair and error rows included) before
+    the decryptor is attached to the table; it is never decrypted."""
     enc_target = trailer.get("Encrypt")
     if enc_target is None:
         return None
     enc_obj = None
     if isinstance(enc_target, Ref):
         enc_obj = (enc_target.obj_id, enc_target.gen)
-        off = offsets.get(enc_obj)
-        if off is None or not (0 < off < len(data)):
-            raise PdfError("unreadable /Encrypt dictionary", kind=FILTER_ERROR, stage="decode")
-        ind, _ = Tokenizer(data).parse_indirect_at(off)
-        enc = ind.value
+        enc = objects.get(enc_obj)
     else:
         enc = enc_target
     if not isinstance(enc, dict):
@@ -279,15 +277,19 @@ class ObjectTable:
     counts need it.
 
     Expanding an ObjStm materializes all its members, except one that has
-    a direct xref entry not read yet: that entry wins when it is read."""
+    a direct xref entry not read yet: that entry wins when it is read.
+    ``decryptor`` applies to the objects read after it is set;
+    :func:`open_document` sets it once the /Encrypt dictionary is read.
+    A recovered document's index holds candidate offsets per key, which
+    the first read validates (``xref.parse_all_objects``)."""
 
     __slots__ = (
-        "_data", "_offsets", "_compressed", "_errors", "_decryptor", "_expanded", "_store", "_tried",
+        "_data", "_offsets", "_compressed", "_errors", "decryptor", "_expanded", "_store", "_tried",
     )
 
     def __init__(self, data: bytes, offsets: dict, compressed: dict, errors: list, decryptor):
         self._data, self._offsets, self._compressed = data, offsets, compressed
-        self._errors, self._decryptor = errors, decryptor
+        self._errors, self.decryptor = errors, decryptor
         self._expanded: set = set()  # keys materialized out of an ObjStm
         self._store: dict = {}  # materialized objects
         self._tried: set = set()  # keys whose materialization has started
@@ -327,7 +329,7 @@ class ObjectTable:
             return
         expanded = self._expanded
         fresh = parse_all_objects(
-            self._data, offsets, compressed, self._errors, self._decryptor, expanded, self._store,
+            self._data, offsets, compressed, self._errors, self.decryptor, expanded, self._store,
             self._offsets,
         )
         # an ObjStm member whose direct xref entry is still unread: that
@@ -336,7 +338,7 @@ class ObjectTable:
             if k not in self._tried:
                 del fresh[k]
                 expanded.discard(k)
-        _apply_decryption(self._decryptor, fresh, expanded)
+        _apply_decryption(self.decryptor, fresh, expanded)
         self._store.update(fresh)
         decode_doc_streams(fresh, self._errors, self)
 
@@ -357,8 +359,8 @@ def open_document(data: bytes, password: bytes, errors: list) -> Document:
     is the /Root catalog.  Raises ``PdfError`` when no object table can be
     built; per-object faults land in ``errors`` as the objects are read."""
     offsets, trailer, compressed = read_xref(data)
-    decryptor = _build_decryptor(data, trailer, offsets, password)
-    objects = ObjectTable(data, offsets, compressed, errors, decryptor)
+    objects = ObjectTable(data, offsets, compressed, errors, None)
+    objects.decryptor = _build_decryptor(trailer, objects, password)
     root = get_resolved(trailer, "Root", objects)
     return Document(trailer, objects, root if isinstance(root, dict) else None)
 

@@ -1,24 +1,35 @@
-"""PDF object tokenizer / recursive-descent parser — spec-correct.
+"""PDF object tokenizer and value parser — spec-correct.
 
 Reference: the ~325-line byte state machine ``parse_object_at``
 (/root/reference/src/pdf_doc/pdf_file/pdf_file.rs:274-599) with states
 Neutral/HexString/CharString/Name/Number/Comment/Keyword
 (pdf_file.rs:727-736), and the byte classifiers
-(/root/reference/src/pdf_doc/pdf_file/util.rs:8-29).
+(/root/reference/src/pdf_doc/pdf_file/util.rs:8-29).  Like the reference,
+:meth:`Tokenizer.parse_value` is ONE iterative loop with an explicit
+container stack (the reference's object buffer, which ``R`` pops,
+pdf_file.rs:347-384): no recursion, so nesting depth is bounded by memory,
+not by the interpreter stack.  The loop reads tokens with one compiled
+scanner (``_TOKEN_RE``) whose alternatives match a name, an integer
+together with the ``G R`` tail that makes it a reference, a delimiter, a
+plain literal string or a keyword in one C-level step; everything else
+(strings with escapes, nested parens or CR; hex strings; reals; ``#``
+names; comments inside ``N G R``; errors) is a branch of the same loop
+that reads the token with :func:`_next_token` and restarts the scanner.
+:func:`_next_token` reads one token with the same grammar (without the
+reference tail) for the content-stream readers.
 
 Covered sub-operators (SURVEY.md §2.3): T1 arrays, T2 dicts, T3 literal
 strings (escapes, octal, line continuation, nested parens — spec-correct
 CR/LF, unlike pdf_file.rs:428,435), T4 hex strings (both cases, unlike
 util.rs:23-25), T5 names (with #xx escapes), T6 numbers, T7 comments,
-T8 keywords, T9 indirect references via 3-token lookahead (pdf_file.rs:
-347-384 pops the object buffer), T10 ``N G obj``, T11 stream extraction
-with indirect-/Length two-pass fallback (pdf_file.rs:601-671), T12 byte
-classifiers.
+T8 keywords, T9 indirect references (``N G R``; a comment between the
+three tokens is whitespace, §7.2.4), T10 ``N G obj``, T11 stream
+extraction with indirect-/Length two-pass fallback (pdf_file.rs:601-671),
+T12 byte classifiers.
 
 This module is pure Python over ``bytes`` and executes inside Arrow-batch
-UDFs; it is sequential per document by nature (single-pass, one char of
-backtracking like the reference) but the pipeline vectorizes across
-documents.
+UDFs; it is sequential per document by nature (single-pass like the
+reference) but the pipeline vectorizes across documents.
 """
 
 from __future__ import annotations
@@ -34,33 +45,40 @@ WHITESPACE = frozenset(b"\x00\t\n\x0c\r ")
 DELIMITERS = frozenset(b"()<>[]{}/%")
 _DIGITS = frozenset(b"0123456789")
 _NUMBER_START = frozenset(b"0123456789+-.")
-_REGULAR_END = WHITESPACE | DELIMITERS
 _WS_BYTES = bytes(WHITESPACE)
 
-# C-side scanners for the hot paths (name / number / keyword runs): one
-# regex match replaces a per-character Python loop
-_NAME_RE = re.compile(rb"/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)")
+# The token grammar.  _SKIP is whitespace and comments (T7: ``%`` to EOL);
+# a regular byte is neither whitespace nor a delimiter.  Group numbers:
+# 1 name body, 2 integer (3 the generation when ``N G R`` follows it), 4
+# ``<<``, 5 ``>>``, 6 ``[``, 7 ``]``, 8 plain literal string (no escape,
+# paren or CR), 9 keyword, 10 (empty) anything else, read by the helpers.
+_WS = rb"[\x00\t\n\x0c\r ]"
+_REG = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+_SKIP = rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+"
+_TOKEN_RE = re.compile(
+    _SKIP + rb"(?:/(" + _REG + rb"*+)"
+    rb"|([+-]?\d++)(?!\.)(?:" + _WS + rb"++(\d++)" + _WS + rb"++R(?!" + _REG + rb"))?"
+    rb"|(<<)|(>>)|(\[)|(\])|\(([^\\()\r]*+)\)"
+    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%0-9+\-.]" + _REG + rb"*+)|())"
+)
+_SKIP_RE = re.compile(_SKIP)
+_STREAM_RE = re.compile(_SKIP + rb"stream(?!" + _REG + rb")")
+_ENDOBJ_RE = re.compile(_SKIP + rb"endobj(?!" + _REG + rb")")
+_HEADER_RE = re.compile(
+    _SKIP + rb"(\d++)(?!\.)" + _SKIP + rb"(\d++)(?!\.)" + _SKIP + rb"obj(?!" + _REG + rb")"
+)
 _NUM_RE = re.compile(rb"[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]*)")
-_KW_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
-# `G R` continuation of an `N G R` indirect reference: one C-level match
-# replaces two _next_token calls on the 3-token-lookahead hot path (T9)
-_REF_TAIL_RE = re.compile(rb"[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+R(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|\Z)")
+# token kind of each scanner group, as _next_token names it
+_KINDS = (None, "name", "number", "number", "dict_open", "dict_close", "array_open",
+          "array_close", "value", "keyword")
+_KEYWORD_VALUES = {b"true": True, b"false": False, b"null": None}
+_ARRAY, _KEY, _VALUE, _TOP = range(4)  # parse_value: what the next token is
 
 
 def skip_ws(data: bytes, pos: int) -> int:
     """Skip whitespace and comments (T7: ``%...`` to EOL, reference
     pdf_file.rs:516-524; comments act as whitespace per spec)."""
-    n = len(data)
-    while pos < n:
-        c = data[pos]
-        if c in WHITESPACE:
-            pos += 1
-        elif c == 0x25:  # '%'
-            while pos < n and data[pos] not in (0x0A, 0x0D):
-                pos += 1
-        else:
-            break
-    return pos
+    return _SKIP_RE.match(data, pos).end()
 
 
 def _parse_literal_string(data: bytes, pos: int) -> tuple[bytes, int]:
@@ -148,22 +166,17 @@ def _parse_hex_string(data: bytes, pos: int) -> tuple[bytes, int]:
 _NAME_CACHE: dict = {}
 
 
-def _parse_name(data: bytes, pos: int) -> tuple[Name, int]:
-    """T5 (reference pdf_file.rs:476-485) + spec ``#xx`` escapes.  Names
-    repeat heavily (/Type /Page /Length ...) — an interning cache skips the
-    decode+construct on every hit; bounded so adversarial docs can't grow
-    it without limit."""
-    m = _NAME_RE.match(data, pos)
-    body = m.group(1)
-    cached = _NAME_CACHE.get(body)
-    if cached is not None:
-        return cached, m.end()
+def _name(body: bytes) -> Name:
+    """T5 (reference pdf_file.rs:476-485) + spec ``#xx`` escapes: the name
+    whose bytes after ``/`` are ``body``.  Names repeat heavily (/Type
+    /Page /Length ...), so callers look ``body`` up in ``_NAME_CACHE``
+    first; escape-free names are interned here, bounded so adversarial
+    docs can't grow the cache without limit."""
     if b"#" not in body:
         name = Name(body.decode("latin-1"))
         if len(_NAME_CACHE) < 4096:
             _NAME_CACHE[body] = name
-        return name, m.end()
-    # slow path: resolve #xx hex escapes
+        return name
     out = bytearray()
     i = 0
     n = len(body)
@@ -178,7 +191,7 @@ def _parse_name(data: bytes, pos: int) -> tuple[Name, int]:
                 pass
         out.append(c)
         i += 1
-    return Name(out.decode("latin-1")), m.end()
+    return Name(out.decode("latin-1"))
 
 
 def _parse_number(data: bytes, pos: int):
@@ -196,66 +209,49 @@ def _parse_number(data: bytes, pos: int):
     return int(text), m.end()
 
 
-def _read_keyword(data: bytes, pos: int) -> tuple[bytes, int]:
-    """T8 (reference pdf_file.rs:525-595, util.rs:35-41)."""
-    m = _KW_RE.match(data, pos)
-    if not m:
-        return b"", pos
-    return m.group(), m.end()
-
-
-_KEYWORD_VALUES = {b"true": True, b"false": False, b"null": None}
-
-
 def _next_token(data: bytes, pos: int):
     """One token: returns (kind, value, newpos) with kind in
     {'value','name','dict_open','dict_close','array_open','array_close',
     'keyword','number','eof'}."""
-    n = len(data)
-    # inlined whitespace fast path (skip_ws call overhead dominates when
-    # tokens are separated by a single space, the common case)
-    while pos < n and data[pos] in WHITESPACE:
-        pos += 1
-    if pos < n and data[pos] == 0x25:  # '%' comment -> full skipper
-        pos = skip_ws(data, pos)
-    if pos >= n:
+    m = _TOKEN_RE.match(data, pos)
+    g = m.lastindex
+    if g == 1:
+        body = m.group(1)
+        name = _NAME_CACHE.get(body)
+        return "name", _name(body) if name is None else name, m.end()
+    if g == 2:
+        return "number", int(m.group(2)), m.end()
+    if g == 3:  # an integer that heads ``N G R``: the token is N alone
+        return "number", int(m.group(2)), m.end(2)
+    if g == 8:
+        return "value", m.group(8), m.end()
+    if g == 9:
+        return "keyword", m.group(9), m.end()
+    if g != 10:
+        return _KINDS[g], None, m.end()
+    pos = m.end()
+    if pos >= len(data):
         return "eof", None, pos
     c = data[pos]
-    # branch order = measured token frequency: numbers > names > keywords
-    # > dict delimiters > strings/arrays (profiled on the synth corpus)
     if c in _NUMBER_START:
         v, p = _parse_number(data, pos)
         return "number", v, p
-    if c == 0x2F:
-        v, p = _parse_name(data, pos)
-        return "name", v, p
-    if c == 0x3C:  # '<'
-        if pos + 1 < n and data[pos + 1] == 0x3C:
-            return "dict_open", None, pos + 2
+    if c == 0x3C:  # '<' (never '<<' here)
         v, p = _parse_hex_string(data, pos)
         return "value", v, p
-    if c == 0x3E:  # '>'
-        if pos + 1 < n and data[pos + 1] == 0x3E:
-            return "dict_close", None, pos + 2
+    if c == 0x3E:  # '>' (never '>>' here)
         raise ParsingError("stray '>'")
-    if c == 0x5B:
-        return "array_open", None, pos + 1
-    if c == 0x5D:
-        return "array_close", None, pos + 1
     if c == 0x28:
         v, p = _parse_literal_string(data, pos)
         return "value", v, p
-    kw, p = _read_keyword(data, pos)
-    if not kw:
-        raise ParsingError(f"unexpected byte {c:#x} at {pos}")
-    return "keyword", kw, p
+    raise ParsingError(f"unexpected byte {c:#x} at {pos}")
 
 
 class Tokenizer:
-    """Value-level parser with 3-token lookahead for ``N G R`` (T9) and
-    stream extraction (T11).  ``length_resolver(Ref) -> int | None`` handles
-    indirect ``/Length`` (reference pdf_file.rs:647-656); when it cannot,
-    we fall back to scanning for ``endstream`` (SURVEY.md §7.5)."""
+    """Value-level parser (T1-T10) and stream extraction (T11).
+    ``length_resolver(Ref) -> int | None`` handles indirect ``/Length``
+    (reference pdf_file.rs:647-656); when it cannot, we fall back to
+    scanning for ``endstream`` (SURVEY.md §7.5)."""
 
     def __init__(self, data: bytes, length_resolver=None):
         self.data = data
@@ -263,92 +259,112 @@ class Tokenizer:
 
     # -- value parsing -----------------------------------------------------
     def parse_value(self, pos: int):
-        kind, val, p = _next_token(self.data, pos)
-        if kind == "value" or kind == "name":
-            return val, p
-        if kind == "number":
-            return self._maybe_ref(val, p)
-        if kind == "array_open":
-            return self._parse_array(p)
-        if kind == "dict_open":
-            return self._parse_dict_or_stream(p)
-        if kind == "keyword":
-            if val in _KEYWORD_VALUES:
-                return _KEYWORD_VALUES[val], p
-            raise ParsingError(f"unexpected keyword {val!r} at {pos}")
-        raise ParsingError(f"unexpected token {kind} at {pos}")
-
-    def _maybe_ref(self, first, pos: int):
-        """3-token lookahead: ``int int R`` -> Ref (T9).  The ``G R`` tail
-        is matched with one regex instead of two token reads (hot path:
-        every integer in every dict/array pays this probe)."""
-        if not isinstance(first, int) or first < 0:
-            return first, pos
-        m = _REF_TAIL_RE.match(self.data, pos)
-        if m:
-            return Ref(first, int(m.group(1))), m.end()
-        # comments may legally separate the three tokens (they count as
-        # whitespace, §7.2.4) but the fast regex has no comment support —
-        # if a '%' appears nearby (either between N and G or between G and
-        # R), retry with the comment-aware token reader
+        """The value at ``pos`` -> ``(value, end)``.  One loop over the
+        token scanner; ``stack`` holds the enclosing containers, ``mode``
+        says what the open one wants next.  A dict that closes is a
+        stream's attributes when the keyword ``stream`` follows it (T11).
+        Each rare branch sets ``m`` to None once it has moved past the
+        scanner's match, so ``end`` holds the value's end instead."""
         data = self.data
-        if data.find(b"%", pos, pos + 64) != -1:
-            k2, v2, p2 = _next_token(data, pos)
-            if k2 == "number" and isinstance(v2, int) and v2 >= 0:
-                k3, v3, p3 = _next_token(data, p2)
-                if k3 == "keyword" and v3 == b"R":
-                    return Ref(first, v2), p3
-        return first, pos
-
-    def _parse_array(self, pos: int):
-        out = []
+        match = _TOKEN_RE.scanner(data, pos).match
+        stack: list = []  # (container, mode, key) of each enclosing container
+        cur = key = end = None
+        mode = _TOP
+        pct = pos  # no '%' in [the last integer's end, pct)
         while True:
-            kind, val, p = _next_token(self.data, pos)
-            if kind == "array_close":
-                return out, p
-            if kind == "eof":
-                raise ParsingError("unterminated array")
-            if kind == "number":
-                v, pos = self._maybe_ref(val, p)
-                out.append(v)
+            m = match()
+            g = m.lastindex
+            if mode == _KEY:
+                if g == 1:
+                    body = m.group(1)
+                    key = _NAME_CACHE.get(body)
+                    if key is None:
+                        key = _name(body)
+                    mode = _VALUE
+                    continue
+                if g != 5:
+                    kind = _KINDS[g] if g != 10 else _next_token(data, m.end())[0]
+                    raise ParsingError(f"dict key must be a name, got {kind}")
+                v = cur
+                cur, mode, key = stack.pop()
+                sm = _STREAM_RE.match(data, m.end())
+                if sm is not None:
+                    v, end = self._extract_stream(v, sm.end())
+                    m = None
+                    match = _TOKEN_RE.scanner(data, end).match
+                elif mode == _TOP and _TOKEN_RE.match(data, m.end()).lastindex == 10:
+                    _next_token(data, m.end())  # the peek past a dict raises what it reads
+            elif g == 1:
+                body = m.group(1)
+                v = _NAME_CACHE.get(body)
+                if v is None:
+                    v = _name(body)
+            elif g == 3:
+                v = int(m.group(2))
+                if v >= 0:
+                    v = Ref(v, int(m.group(3)))
+                else:  # a negative N heads no reference
+                    end = m.end(2)
+                    m = None
+                    match = _TOKEN_RE.scanner(data, end).match
+            elif g == 2:
+                v = int(m.group(2))
+                if v >= 0 and m.end() + 64 > pct:
+                    # T9 with comments: ``N % c\n G R`` is a reference too;
+                    # read G and R as tokens when a '%' lies within 64 bytes
+                    end = m.end()
+                    pct = data.find(b"%", end, end + 4096)
+                    if pct == -1:
+                        pct = end + 4096
+                    elif pct < end + 64:
+                        k2, v2, p2 = _next_token(data, end)
+                        if k2 == "number" and type(v2) is int and v2 >= 0:
+                            k3, v3, p3 = _next_token(data, p2)
+                            if k3 == "keyword" and v3 == b"R":
+                                v = Ref(v, v2)
+                                end = p3
+                                m = None
+                                match = _TOKEN_RE.scanner(data, end).match
+            elif g == 4 or g == 6:
+                stack.append((cur, mode, key))
+                if g == 4:
+                    cur, mode = {}, _KEY
+                else:
+                    cur, mode = [], _ARRAY
                 continue
-            if kind in ("value", "name"):
-                out.append(val)
-                pos = p
-                continue
-            if kind == "array_open":
-                v, pos = self._parse_array(p)
-                out.append(v)
-                continue
-            if kind == "dict_open":
-                v, pos = self._parse_dict_or_stream(p)
-                out.append(v)
-                continue
-            if kind == "keyword" and val in _KEYWORD_VALUES:
-                out.append(_KEYWORD_VALUES[val])
-                pos = p
-                continue
-            raise ParsingError(f"unexpected {kind} in array")
-
-    def _parse_dict_or_stream(self, pos: int):
-        """T2 + T11.  Keys must be names (reference pdf_file.rs:808-829
-        errors on odd/non-name keys)."""
-        d: dict = {}
-        while True:
-            kind, key, p = _next_token(self.data, pos)
-            if kind == "dict_close":
-                pos = p
-                break
-            if kind != "name":
-                raise ParsingError(f"dict key must be a name, got {kind}")
-            val, pos = self.parse_value(p)
-            d[key] = val  # Name is a str subclass: hashes/compares as str
-        # stream?
-        save = pos
-        kind, kw, p = _next_token(self.data, pos)
-        if kind == "keyword" and kw == b"stream":
-            return self._extract_stream(d, p)
-        return d, save
+            elif g == 7:
+                if mode != _ARRAY:
+                    raise ParsingError(f"unexpected token array_close at {m.start()}")
+                v = cur
+                cur, mode, key = stack.pop()
+            elif g == 8:
+                v = m.group(8)
+            elif g == 9:
+                v = m.group(9)
+                if v not in _KEYWORD_VALUES:
+                    if mode == _ARRAY:
+                        raise ParsingError("unexpected keyword in array")
+                    raise ParsingError(f"unexpected keyword {v!r} at {m.start()}")
+                v = _KEYWORD_VALUES[v]
+            elif g == 5:
+                if mode == _ARRAY:
+                    raise ParsingError("unexpected dict_close in array")
+                raise ParsingError(f"unexpected token dict_close at {m.start()}")
+            else:  # reals, hex and escaped strings, errors, the end
+                kind, v, end = _next_token(data, m.end())
+                if kind == "eof":
+                    if mode == _ARRAY:
+                        raise ParsingError("unterminated array")
+                    raise ParsingError(f"unexpected token eof at {m.start()}")
+                m = None
+                match = _TOKEN_RE.scanner(data, end).match
+            if mode == _ARRAY:
+                cur.append(v)
+            elif mode == _VALUE:
+                cur[key] = v  # Name is a str subclass: hashes/compares as str
+                mode = _KEY
+            else:
+                return v, end if m is None else m.end()
 
     def _extract_stream(self, attrs: dict, pos: int):
         """T11 (reference make_stream_object pdf_file.rs:601-671): payload
@@ -388,14 +404,25 @@ class Tokenizer:
     # -- indirect objects ----------------------------------------------------
     def parse_indirect_at(self, pos: int) -> tuple[IndirectObject, int]:
         """T10: ``N G obj <value> endobj`` (reference pdf_file.rs:548-572,
-        831-843)."""
-        k1, v1, p1 = _next_token(self.data, pos)
-        k2, v2, p2 = _next_token(self.data, p1)
-        k3, v3, p3 = _next_token(self.data, p2)
-        if k1 != "number" or k2 != "number" or k3 != "keyword" or v3 != b"obj":
-            raise ParsingError(f"expected 'N G obj' at {pos}")
+        831-843).  The header and ``endobj`` are one match each; when a
+        match fails, the token reads give today's results and errors (a
+        signed or real header number is read, a missing ``endobj`` is
+        not an error)."""
+        data = self.data
+        m = _HEADER_RE.match(data, pos)
+        if m is not None:
+            obj_id, gen, p3 = int(m.group(1)), int(m.group(2)), m.end()
+        else:
+            k1, v1, p1 = _next_token(data, pos)
+            k2, v2, p2 = _next_token(data, p1)
+            k3, v3, p3 = _next_token(data, p2)
+            if k1 != "number" or k2 != "number" or k3 != "keyword" or v3 != b"obj":
+                raise ParsingError(f"expected 'N G obj' at {pos}")
+            obj_id, gen = int(v1), int(v2)
         value, p = self.parse_value(p3)
-        k, kw, p4 = _next_token(self.data, p)
-        if k == "keyword" and kw == b"endobj":
-            p = p4
-        return IndirectObject(int(v1), int(v2), value), p
+        m = _ENDOBJ_RE.match(data, p)
+        if m is not None:
+            p = m.end()
+        else:
+            _next_token(data, p)  # raises what a bad token after the value raises
+        return IndirectObject(obj_id, gen, value), p

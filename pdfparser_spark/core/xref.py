@@ -17,6 +17,13 @@ code reads objects through ``extract.ObjectTable``, which parses one object
 the first time something dereferences it (the reference's memoizing cache,
 pdf_file.rs:25-68); :func:`parse_all_objects` is its parser and has no
 other caller.
+
+Damaged-file recovery validates on read: when the footer is lost, the
+scan indexes each key's candidate offsets (newest first) without parsing
+them, and the table keeps the first candidate that parses and names the
+key when it first reads the key.  The scan parses only what the trailer
+needs (see :func:`_recover_by_scan`), so a recovered document, like an
+intact one, pays only for the objects a kernel reaches.
 """
 
 from __future__ import annotations
@@ -146,20 +153,47 @@ def _parse_xref_stream(data: bytes, pos: int, tok: Tokenizer):
 
 
 _OBJ_HEADER_RE = re.compile(rb"(?:^|[\r\n])\s*(\d+)\s+(\d+)\s+obj\b")
+# candidate offsets kept per key, newest first: a binary stream payload can
+# hold bytes that look like an object header, and real shadowing chains
+# from incremental updates are short
+_MAX_CANDIDATES_PER_KEY = 4
+
+
+def _first_candidate(tok: Tokenizer, key: tuple, offs: tuple):
+    """``(offset, object)`` for the first offset in ``offs`` whose object
+    parses and names ``key``, or None.  A candidate that does not (a false
+    header match) is skipped silently."""
+    for off in offs:
+        try:
+            ind, _ = tok.parse_indirect_at(off)
+        except ParsingError:
+            continue
+        if (ind.obj_id, ind.gen) == key:
+            return off, ind
+    return None
 
 
 def _recover_by_scan(data: bytes, tok: Tokenizer):
     """Damaged-footer recovery (the reference's reverse-scan spirit,
     pdf_file.rs:165-190, extended with scan-all-``obj``): when
     ``startxref`` is missing or points at garbage, rebuild the object
-    index by scanning every ``N G obj`` header (last definition wins —
-    incremental updates append), then recover the trailer: the LAST
-    ``trailer`` keyword by reverse scan for CLASSIC layouts, or — the
-    MODERN xref-stream layout carries no trailer keyword at all — a
-    SYNTHESIZED trailer pointing at the newest scanned ``/Type
-    /Catalog`` object.  Objects living in object streams are not
-    recoverable this way; their dangling references degrade to lenient
-    error rows."""
+    index by scanning every ``N G obj`` header, then recover the trailer:
+    the LAST ``trailer`` keyword by reverse scan for CLASSIC layouts, or —
+    the MODERN xref-stream layout carries no trailer keyword at all — a
+    SYNTHESIZED trailer pointing at the newest scanned ``/Type /Catalog``
+    object.  Objects living in object streams are not recoverable this
+    way; their dangling references degrade to lenient error rows.
+
+    The index maps each key to a tuple of candidate offsets, newest first
+    (incremental updates append; at most ``_MAX_CANDIDATES_PER_KEY``).
+    They are validated on read: the object table parses a key's
+    candidates the first time it reads the key and keeps the first that
+    parses and names the key (:func:`_first_candidate`).  The scan itself
+    parses only what the trailer needs: candidates until one is valid
+    (else no object exists), and, without a trailer keyword, the
+    candidates that can hold a catalog — whose bytes up to the next
+    scanned header contain ``Catalog`` or a ``#`` escape — plus the newer
+    candidates of the same key, and the highest key's for /Size."""
     trailer = None
     at = data.rfind(b"trailer")
     if at != -1:
@@ -167,49 +201,47 @@ def _recover_by_scan(data: bytes, tok: Tokenizer):
         maybe, _ = tok.parse_value(pos)
         if isinstance(maybe, dict):
             trailer = maybe
-    # collect ALL candidate offsets per (id, gen): a binary stream payload
-    # can contain bytes that look like an object header, and naive
-    # last-wins would let such a false match shadow the real object.
-    # Validate candidates newest-first by actually parsing the header.
-    candidates: dict = {}
+    found: dict = {}
+    starts = []
     for m in _OBJ_HEADER_RE.finditer(data):
-        candidates.setdefault((int(m.group(1)), int(m.group(2))), []).append(m.start(1))
-    # Validation parses the full object (incl. stream body) — correct but
-    # potentially quadratic if a large damaged file's binary streams are
-    # riddled with false-positive header matches, so bound the number of
-    # candidates tried per key (newest-first; real shadowing chains from
-    # incremental updates are short).
-    offsets: dict = {}
+        found.setdefault((int(m.group(1)), int(m.group(2))), []).append(m.start(1))
+        starts.append(m.start(1))
+    offsets = {k: tuple(offs[::-1][:_MAX_CANDIDATES_PER_KEY]) for k, offs in found.items()}
     catalog_key = None
-    catalog_off = -1
-    _MAX_CANDIDATES_PER_KEY = 4
-    for key, offs in candidates.items():
-        for off in list(reversed(offs))[:_MAX_CANDIDATES_PER_KEY]:
-            # newest definition first (incremental updates)
-            try:
-                ind, _ = Tokenizer(data).parse_indirect_at(off)
-            except ParsingError:
+    if trailer is None:
+        nxt = dict(zip(starts, starts[1:]))
+
+        def may_be_catalog(off: int) -> bool:
+            end = nxt.get(off, len(data))
+            return data.find(b"Catalog", off, end) != -1 or data.find(b"#", off, end) != -1
+
+        catalog_off = -1
+        for key, offs in offsets.items():
+            hits = [i for i, off in enumerate(offs) if may_be_catalog(off)]
+            if not hits:
                 continue
-            if (ind.obj_id, ind.gen) == key:
-                offsets[key] = off
-                if (
-                    isinstance(ind.value, dict)
-                    and str(ind.value.get("Type")) == "Catalog"
-                    and off > catalog_off
-                ):
-                    catalog_key, catalog_off = key, off
-                break
-    if not offsets:
+            hit = _first_candidate(tok, key, offs[: hits[-1] + 1])
+            if hit is None:
+                continue
+            off, ind = hit
+            if (
+                isinstance(ind.value, dict)
+                and str(ind.value.get("Type")) == "Catalog"
+                and off > catalog_off
+            ):
+                catalog_key, catalog_off = key, off
+    if catalog_key is None and not any(
+        _first_candidate(tok, key, offs) is not None for key, offs in offsets.items()
+    ):
         raise ParsingError("no indirect objects found during recovery scan")
     if trailer is None:
         if catalog_key is None:
             raise ParsingError(
                 "missing startxref, no trailer keyword and no catalog object"
             )
-        trailer = {
-            "Root": Ref(catalog_key[0], catalog_key[1]),
-            "Size": max(k[0] for k in offsets) + 1,
-        }
+        size = next(k[0] for k in sorted(offsets, reverse=True)
+                    if _first_candidate(tok, k, offsets[k]) is not None)
+        trailer = {"Root": Ref(catalog_key[0], catalog_key[1]), "Size": size + 1}
     return offsets, trailer
 
 
@@ -315,7 +347,10 @@ def parse_all_objects(
     Indirect /Length is resolved against already-parsed objects or by
     direct offset parse (two-pass) at its entry in ``index``, the
     document's whole offset index: a length object that follows its stream
-    is found even when this call reads only the stream.
+    is found even when this call reads only the stream.  An entry that is
+    a tuple holds recovery-scan candidates (:func:`_recover_by_scan`): the
+    first that parses and names its key is the object, and the others are
+    skipped without an error row or an offset-slop repair.
 
     ``parsed``: objects of the same document that earlier calls
     materialized.  They are not parsed or expanded again, and /Length and
@@ -336,17 +371,24 @@ def parse_all_objects(
     known = ChainMap(objects, parsed)
 
     def length_resolver(ref: Ref):
-        v = known.get((ref.obj_id, ref.gen))
+        key = (ref.obj_id, ref.gen)
+        v = known.get(key)
         if v is None:
-            off = index.get((ref.obj_id, ref.gen))
+            off = index.get(key)
             if off is None:
                 return None
-            try:
-                ind, _ = Tokenizer(data).parse_indirect_at(off)
-                objects[(ind.obj_id, ind.gen)] = ind.value
-                v = ind.value
-            except ParsingError:
-                return None
+            if type(off) is tuple:
+                hit = _first_candidate(Tokenizer(data), key, off)
+                if hit is None:
+                    return None
+                ind = hit[1]
+            else:
+                try:
+                    ind, _ = Tokenizer(data).parse_indirect_at(off)
+                except ParsingError:
+                    return None
+            objects[(ind.obj_id, ind.gen)] = ind.value
+            v = ind.value
         return v if isinstance(v, int) else None
 
     tok = Tokenizer(data, length_resolver=length_resolver)
@@ -373,6 +415,11 @@ def parse_all_objects(
 
     for (obj_id, gen), off in sorted(offsets.items()):
         if (obj_id, gen) in known:
+            continue
+        if type(off) is tuple:  # recovery-scan candidates: no rows, no slop repair
+            hit = _first_candidate(tok, (obj_id, gen), off)
+            if hit is not None:
+                objects[(obj_id, gen)] = hit[1].value
             continue
         if off <= 0 or off >= len(data):
             errors.append(("ParsingError", "tokenize", f"offset {off} out of range for obj {obj_id}"))

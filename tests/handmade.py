@@ -92,3 +92,20 @@ FREETEXT_TOUNICODE = pdf(
     b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 6 0 R >>",
     stream(b"", _XY_CMAP),
 )
+
+# the page dict holds a 5,000-deep nested array (/Deep) beside its text
+DEEP_NESTING = pdf(
+    b"<< /Type /Catalog /Pages 2 0 R >>",
+    b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Deep " + b"[" * 5000 + b"]" * 5000
+    + b" /Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>",
+    b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+    stream(b"", b"BT /F1 12 Tf 72 720 Td (deep) Tj ET"),
+)
+
+
+def body_only(doc: bytes, catalog: bytes = b"/Type /Catalog") -> bytes:
+    """``doc`` cut before its xref table (no trailer keyword, no
+    ``startxref``: recovery synthesizes the trailer), its catalog's
+    ``/Type /Catalog`` written as ``catalog``."""
+    return doc[: doc.rindex(b"\nxref") + 1].replace(b"/Type /Catalog", catalog, 1)

@@ -199,7 +199,7 @@ def test_stale_type2_entry_still_decrypts_direct_object():
     data = d["bytes"]
     offsets, trailer, compressed = read_xref(data)
     assert not compressed
-    decryptor = _build_decryptor(data, trailer, offsets)
+    decryptor = _build_decryptor(trailer, ObjectTable(data, offsets, {}, [], None))
     plain = ObjectTable(data, offsets, {}, [], decryptor).read_all()
     # inject a stale type-2 entry pointing at a nonexistent container for a
     # content-stream object that exists as a DIRECT object

@@ -1473,3 +1473,71 @@ def test_freetext_appearance_text_follows_its_font_cmap():
     res = extract_markup_annots(doc)
     assert res["annots"] == [(0, 0, "FreeText", None, "AB", "xy")]
     assert res["errors"] == []
+
+
+def test_deep_nesting_does_not_drop_the_page():
+    """The value parser is one loop with an explicit container stack, so a
+    page dict holding a 5,000-deep nested array still yields its text."""
+    from handmade import DEEP_NESTING as doc
+
+    assert extract_spans(doc) == {
+        "version": "1.7", "spans": [("text", "deep", None)], "errors": [], "n_pages": 1,
+    }
+
+
+def test_footer_recovery_parses_only_what_is_read(monkeypatch):
+    """Recovery validates on read: on a footer-cut document the scan only
+    indexes candidate offsets, so the /Info object, which no page reaches,
+    is never parsed."""
+    import re
+
+    from pdfparser_spark.core.tokenizer import Tokenizer
+
+    d = build_document(4, " ".join(f"w{i}" for i in range(24)))
+    cut = d["bytes"][: d["bytes"].rfind(b"startxref")]
+    info = re.search(rb"/Info (\d+) 0 R", cut).group(1)
+    info_at = cut.index(b"\n%s 0 obj" % info) + 1
+    assert b"/Title" in cut[info_at : info_at + 40]
+    parsed = []
+    parse = Tokenizer.parse_indirect_at
+
+    def recording(self, pos):
+        parsed.append(pos)
+        return parse(self, pos)
+
+    monkeypatch.setattr(Tokenizer, "parse_indirect_at", recording)
+    res = extract_spans(cut)
+    assert res["spans"] == d["expected"] and res["errors"] == []
+    assert cut.index(b"\n4 0 obj") + 1 in parsed  # the page is read
+    assert info_at not in parsed
+
+
+def test_trailerless_recovery_reads_an_escaped_catalog_type():
+    """Without a trailer keyword the scan parses only the candidates that
+    can be a catalog; one whose /Type is written ``/Cat#61log`` is one."""
+    from handmade import INHERITED_RESOURCES, body_only
+
+    want = extract_spans(INHERITED_RESOURCES)
+    assert want["spans"] and not want["errors"]
+    assert extract_spans(body_only(INHERITED_RESOURCES)) == want
+    assert extract_spans(body_only(INHERITED_RESOURCES, b"/Type /Cat#61log")) == want
+
+
+def test_encrypt_dictionary_offset_slop_is_repaired():
+    """The /Encrypt dictionary is read through the object table, so an
+    xref entry a few bytes off is repaired as for any other object."""
+    from pdfparser_spark.core.xref import read_xref
+    from pdfparser_spark.synth import build_document_binary
+
+    clean = build_document_binary(0, " ".join(f"w{i}" for i in range(24)))["bytes"]
+    offsets, trailer, _ = read_xref(clean)
+    enc = trailer["Encrypt"]
+    off = offsets[(enc.obj_id, enc.gen)]
+    entry = b"%010d %05d n" % (off, enc.gen)
+    assert clean.count(entry) == 1
+    moved = clean.replace(entry, b"%010d %05d n" % (off - 3, enc.gen))
+    want = extract_spans(clean)
+    assert want["spans"] and want["errors"] == []
+    assert extract_spans(moved) == {
+        **want, "errors": [("ParsingError", "tokenize", f"obj {enc.obj_id}: offset slop +3 repaired")],
+    }

@@ -85,6 +85,19 @@ def test_simple_decode_winansi():
     assert simple_decode(b"caf\xe9", "WinAnsiEncoding") == "café"
 
 
+def test_remap_decoder_base_table_equals_per_byte_decode():
+    """remap_decoder's one-decode base table equals simple_decode byte by
+    byte (cp1252's undefined codes included), with /Differences on top."""
+    from pdfparser_spark.core.cmap import remap_decoder
+
+    every = bytes(range(256))
+    for base in ("WinAnsiEncoding", "MacRomanEncoding", None):
+        want = [simple_decode(bytes([i]), base) for i in range(256)]
+        assert list(remap_decoder(base, [])(every)) == want
+        want[65] = "é"
+        assert list(remap_decoder(base, [(65, "eacute")])(every)) == want
+
+
 def test_hybrid_xrefstm_merges_classic_and_stream():
     """Hybrid-reference file (ISO 32000 §7.5.8.4): classic trailer carries
     /XRefStm pointing at an xref stream whose entries complement the classic
