@@ -342,6 +342,98 @@ def test_v5_key_recovery_and_wrong_password():
     assert crypt.v5_recover_key(bytes(48), ue, b"") is None
 
 
+# Characterization of every public AES output, pinned from the FIPS-197
+# cipher: per key size, the SHA-256 of the 81 ciphertexts for plaintext
+# lengths 0-80 under one fixed IV, and the 17-byte plaintext's ciphertext.
+_CBC_PINS = {
+    16: (
+        "36c6276378bc914bbe227f60a78704ca1750010e964c6cf2e0260dcbee7bae59",
+        "eedec111c39884f8d1074eab723731c7c0d26bcd2bad67b29af38552641bba12"
+        "82b8b4b8e9e16a2308a4e87df5770013",
+    ),
+    24: (
+        "ed3af392f32711f065916bbad586a3989e0a30dac3d957305ce31b6b49b8ee2c",
+        "de9bf5a7094557c0ffb110688af781919d75edaf2b0053a3e12278017bf9ca4a"
+        "d9067e797b989101f7bb07f4c976643d",
+    ),
+    32: (
+        "07d6b09d67500fa6f0041d2e456549b57415405feb01627ff49c2ccf569e30ff",
+        "ad207f64388602ee5c0d52ec74f24d0f5734bc01242bf8ddc928b9b5016e88d5"
+        "3b3ccc1eb06085a628fab40da68b405e",
+    ),
+}
+
+
+@pytest.mark.parametrize("klen", sorted(_CBC_PINS))
+def test_aes_cbc_outputs_are_pinned(klen):
+    import hashlib
+
+    key = hashlib.sha256(b"key%d" % klen).digest()[:klen]
+    iv = hashlib.md5(b"iv%d" % klen).digest()
+    cts = []
+    for n in range(81):
+        pt = bytes((7 * i + n) & 0xFF for i in range(n))
+        ct = crypt.aes_cbc_encrypt(key, pt, iv)
+        assert ct[:16] == iv and len(ct) == 16 + (n // 16 + 1) * 16
+        assert crypt.aes_cbc_decrypt(key, ct) == pt
+        cts.append(ct)
+    digest, ct17 = _CBC_PINS[klen]
+    assert cts[17].hex() == ct17
+    assert hashlib.sha256(b"".join(cts)).hexdigest() == digest
+
+
+def test_aes_cbc_decrypt_lenient_contract():
+    """Short or partial-block input decrypts to b""; a padding byte outside
+    1-16 is kept, and one inside is stripped without checking the rest."""
+    key = bytes(range(16))
+    ct = crypt.aes_cbc_encrypt(key, b"fifteen bytes!!", bytes(16))  # pad 0x01
+    assert crypt.aes_cbc_decrypt(key, ct[:16]) == b""
+    assert crypt.aes_cbc_decrypt(key, ct + b"\x00") == b""
+    assert crypt.aes_cbc_decrypt(key, ct[:-1]) == b""
+    # flipping IV byte 15 flips the last plaintext byte, the padding byte
+    bad = bytes(15) + bytes((0x01 ^ 0x20,)) + ct[16:]
+    assert crypt.aes_cbc_decrypt(key, bad) == b"fifteen bytes!!\x20"
+    five = bytes(15) + bytes((0x01 ^ 0x05,)) + ct[16:]
+    assert crypt.aes_cbc_decrypt(key, five) == b"fifteen byt"
+
+
+# (pwd, salt, udata) -> (hash_2b, the /UE wrap of sha256(pwd + salt) under
+# the key salt salt[::-1]); each udata is a 48-byte /U string
+_V5_PINS = [
+    (
+        b"", b"saltAAAA", bytes(range(48)),
+        "610bfcc160da4ba9bb134b7e38e7e1b41b9fc4c5a57f2d9bd3b52c36898253de",
+        "cd41be87ebdf4543a325e2ac07f8b7828917e7b7b8907d36736b7f8e4ef2600c",
+    ),
+    (
+        b"hunter2", b"\x00\x01\x02\x03\xfc\xfd\xfe\xff", bytes.fromhex(
+            "8b00d9ca3cf19d68cddb69ce7ec7af403283cb1e20becf3095cb1e5761291c95"
+            "140151ad47d8f2c22c11f0ce32bcd97a"
+        ),
+        "320f9ca19be347d847749ef72edd541f94390e2b7f64b89ff14caf158a8f345d",
+        "e7831ac16455a6525215ffccb06b786565697ea19cc3e438db4c5ef81f51d698",
+    ),
+    (
+        b"x" * 127, b"8bytesal", bytes(48),
+        "d171de82cb41213cea7df35b4644e6d043df4ffbc8ddfa88367dd5365b63f178",
+        "67a416ec6d1f7bbee976800d70d879fbc860816a51f4746da14084377c54539c",
+    ),
+]
+
+
+@pytest.mark.parametrize("pwd,salt,udata,h_hex,ue_hex", _V5_PINS)
+def test_v5_kdf_outputs_are_pinned(pwd, salt, udata, h_hex, ue_hex):
+    import hashlib
+
+    fk = hashlib.sha256(pwd + salt).digest()
+    assert crypt.hash_2b(pwd, salt, udata).hex() == h_hex
+    u, ue = crypt.v5_entries(fk, salt, salt[::-1], pwd, udata)
+    assert u == bytes.fromhex(h_hex) + salt + salt[::-1]
+    assert ue.hex() == ue_hex
+    # the owner path reads udata back from the first 48 bytes of /U
+    assert crypt.v5_recover_key_owner(udata, u, ue, pwd) == fk
+
+
 def test_v5_wrong_user_password_doc_rejected():
     d = build_document_binary(15, TEXT)
     u_hex = re.search(rb"/U <([0-9a-f]{96})>", d["bytes"]).group(1)
