@@ -10,9 +10,9 @@ Algorithms 4-7 password verification (user AND owner paths), and the
 R6 iterated-hash KDF.  Only genuinely unknown CFMs or wrong passwords
 surface as error rows.
 
-Pure Python, deterministic, no external deps (AES is implemented from
-FIPS-197 below); also used by the synthetic corpus builder to produce
-genuinely encrypted fixtures.
+Deterministic; AES comes from the `cryptography` package and RC4 is pure
+Python.  Also used by the synthetic corpus builder to produce genuinely
+encrypted fixtures.
 """
 
 from __future__ import annotations
@@ -20,6 +20,8 @@ from __future__ import annotations
 import hashlib
 import struct
 from functools import lru_cache
+
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 # the 32-byte padding string of Algorithm 2 (ISO 32000 §7.6.3.3)
 PAD = bytes(
@@ -151,206 +153,36 @@ def object_key(file_key: bytes, obj_id: int, gen: int, aes: bool = False) -> byt
 
 
 # ---------------------------------------------------------------------------
-# AES (FIPS-197) — needed for the AESV2 crypt filter (ISO 32000 §7.6.2):
-# CBC mode, 16-byte IV prefix, PKCS#7 padding.  Pure Python, like RC4
-# above: the package declares no crypto dependency.  (Where the
-# `cryptography` package happens to be installed, its ARC4 still rejects
-# key lengths PDF allows, such as 11-15-byte object keys, so using it would
-# mean a second cipher path.)  Per-document payloads are small (the kernel
-# is Arrow-batch parallel across documents, so the Python cipher is off
-# the per-byte hot path the way the filters are).
+# AES for the AESV2/AESV3 crypt filters (ISO 32000 §7.6.2): CBC mode,
+# 16-byte IV prefix, PKCS#7 padding.  The one cipher is the compiled one
+# from the `cryptography` package; RC4 above stays pure Python because
+# that package's ARC4 rejects the 11-15-byte object keys PDF allows.
 # ---------------------------------------------------------------------------
 
-_SBOX = bytes.fromhex(
-    "637c777bf26b6fc53001672bfed7ab76"
-    "ca82c97dfa5947f0add4a2af9ca472c0"
-    "b7fd9326363ff7cc34a5e5f171d83115"
-    "04c723c31896059a071280e2eb27b275"
-    "09832c1a1b6e5aa0523bd6b329e32f84"
-    "53d100ed20fcb15b6acbbe394a4c58cf"
-    "d0efaafb434d338545f9027f503c9fa8"
-    "51a3408f929d38f5bcb6da2110fff3d2"
-    "cd0c13ec5f974417c4a77e3d645d1973"
-    "60814fdc222a908846eeb814de5e0bdb"
-    "e0323a0a4906245cc2d3ac629195e479"
-    "e7c8376d8dd54ea96c56f4ea657aae08"
-    "ba78252e1ca6b4c6e8dd741f4bbd8b8a"
-    "703eb5664803f60e613557b986c11d9e"
-    "e1f8981169d98e949b1e87e9ce5528df"
-    "8ca1890dbfe6426841992d0fb054bb16"
-)
-_INV_SBOX = bytearray(256)
-for _i, _v in enumerate(_SBOX):
-    _INV_SBOX[_v] = _i
-_INV_SBOX = bytes(_INV_SBOX)
 
-
-def _xtime(a: int) -> int:
-    return ((a << 1) ^ 0x1B) & 0xFF if a & 0x80 else a << 1
-
-
-def _gmul(a: int, b: int) -> int:
-    p = 0
-    while b:
-        if b & 1:
-            p ^= a
-        a = _xtime(a)
-        b >>= 1
-    return p
-
-
-def _expand_key(key: bytes):
-    nk = len(key) // 4
-    nr = nk + 6
-    w = [list(key[4 * i : 4 * i + 4]) for i in range(nk)]
-    rcon = 1
-    for i in range(nk, 4 * (nr + 1)):
-        t = list(w[i - 1])
-        if i % nk == 0:
-            t = [_SBOX[b] for b in t[1:] + t[:1]]
-            t[0] ^= rcon
-            rcon = _xtime(rcon)
-        elif nk > 6 and i % nk == 4:
-            t = [_SBOX[b] for b in t]
-        w.append([w[i - nk][j] ^ t[j] for j in range(4)])
-    return w, nr
-
-
-# T-table form of the round function (the standard Rijndael 32-bit-word
-# construction from the public FIPS-197 / Rijndael reference material):
-# SubBytes+ShiftRows+MixColumns collapse to four 256-entry word-table
-# lookups per column — ~12x over the per-byte _gmul path, which matters
-# because Algorithm 2.B (hash_2b) runs 64+ AES-CBC rounds per (pwd, salt)
-# and real encrypted corpora carry per-file salts (judge r03 perf item).
-
-_TE0 = [0] * 256
-_TE1 = [0] * 256
-_TE2 = [0] * 256
-_TE3 = [0] * 256
-_TD0 = [0] * 256
-_TD1 = [0] * 256
-_TD2 = [0] * 256
-_TD3 = [0] * 256
-for _b in range(256):
-    _s = _SBOX[_b]
-    _t = (_gmul(_s, 2) << 24) | (_s << 16) | (_s << 8) | _gmul(_s, 3)
-    _TE0[_b] = _t
-    _TE1[_b] = ((_t >> 8) | (_t << 24)) & 0xFFFFFFFF
-    _TE2[_b] = ((_t >> 16) | (_t << 16)) & 0xFFFFFFFF
-    _TE3[_b] = ((_t >> 24) | (_t << 8)) & 0xFFFFFFFF
-    _si = _INV_SBOX[_b]
-    _t = (
-        (_gmul(_si, 14) << 24)
-        | (_gmul(_si, 9) << 16)
-        | (_gmul(_si, 13) << 8)
-        | _gmul(_si, 11)
-    )
-    _TD0[_b] = _t
-    _TD1[_b] = ((_t >> 8) | (_t << 24)) & 0xFFFFFFFF
-    _TD2[_b] = ((_t >> 16) | (_t << 16)) & 0xFFFFFFFF
-    _TD3[_b] = ((_t >> 24) | (_t << 8)) & 0xFFFFFFFF
-del _b, _s, _si, _t
-
-
-def _words(w: list) -> list:
-    return [(x[0] << 24) | (x[1] << 16) | (x[2] << 8) | x[3] for x in w]
-
-
-@lru_cache(maxsize=128)
-def _schedule(key: bytes):
-    """(enc_round_words, dec_round_words, nr).  The decryption schedule is
-    the equivalent-inverse-cipher form: InvMixColumns over the middle
-    round keys, rounds reversed — so decryption shares the encryption
-    loop structure with the inverse tables."""
-    w, nr = _expand_key(key)
-    rk = tuple(_words(w))
-    return rk, _inverse_schedule(rk, nr), nr
-
-
-def _inverse_schedule(rk: tuple, nr: int) -> tuple:
-    """The round keys reversed, with InvMixColumns over the middle ones.
-    ``_TDi[_SBOX[b]]`` is InvMixColumns of byte b in row i (the table
-    folds in InvSubBytes, which _SBOX undoes), so a word costs four
-    lookups instead of sixteen GF(2^8) multiplications."""
-    drk = []
-    for rnd in range(nr, -1, -1):
-        ws = rk[4 * rnd : 4 * rnd + 4]
-        if 0 < rnd < nr:
-            ws = [
-                _TD0[_SBOX[x >> 24]] ^ _TD1[_SBOX[(x >> 16) & 0xFF]]
-                ^ _TD2[_SBOX[(x >> 8) & 0xFF]] ^ _TD3[_SBOX[x & 0xFF]]
-                for x in ws
-            ]
-        drk.extend(ws)
-    return tuple(drk)
-
-
-def _encrypt_words(block: bytes, rk, nr: int) -> bytes:
-    s0 = int.from_bytes(block[0:4], "big") ^ rk[0]
-    s1 = int.from_bytes(block[4:8], "big") ^ rk[1]
-    s2 = int.from_bytes(block[8:12], "big") ^ rk[2]
-    s3 = int.from_bytes(block[12:16], "big") ^ rk[3]
-    k = 4
-    for _ in range(nr - 1):
-        t0 = _TE0[s0 >> 24] ^ _TE1[(s1 >> 16) & 0xFF] ^ _TE2[(s2 >> 8) & 0xFF] ^ _TE3[s3 & 0xFF] ^ rk[k]
-        t1 = _TE0[s1 >> 24] ^ _TE1[(s2 >> 16) & 0xFF] ^ _TE2[(s3 >> 8) & 0xFF] ^ _TE3[s0 & 0xFF] ^ rk[k + 1]
-        t2 = _TE0[s2 >> 24] ^ _TE1[(s3 >> 16) & 0xFF] ^ _TE2[(s0 >> 8) & 0xFF] ^ _TE3[s1 & 0xFF] ^ rk[k + 2]
-        t3 = _TE0[s3 >> 24] ^ _TE1[(s0 >> 16) & 0xFF] ^ _TE2[(s1 >> 8) & 0xFF] ^ _TE3[s2 & 0xFF] ^ rk[k + 3]
-        s0, s1, s2, s3 = t0, t1, t2, t3
-        k += 4
-    b = _SBOX  # final round: no MixColumns
-    t0 = ((b[s0 >> 24] << 24) | (b[(s1 >> 16) & 0xFF] << 16) | (b[(s2 >> 8) & 0xFF] << 8) | b[s3 & 0xFF]) ^ rk[k]
-    t1 = ((b[s1 >> 24] << 24) | (b[(s2 >> 16) & 0xFF] << 16) | (b[(s3 >> 8) & 0xFF] << 8) | b[s0 & 0xFF]) ^ rk[k + 1]
-    t2 = ((b[s2 >> 24] << 24) | (b[(s3 >> 16) & 0xFF] << 16) | (b[(s0 >> 8) & 0xFF] << 8) | b[s1 & 0xFF]) ^ rk[k + 2]
-    t3 = ((b[s3 >> 24] << 24) | (b[(s0 >> 16) & 0xFF] << 16) | (b[(s1 >> 8) & 0xFF] << 8) | b[s2 & 0xFF]) ^ rk[k + 3]
-    return b"".join(x.to_bytes(4, "big") for x in (t0, t1, t2, t3))
-
-
-def _decrypt_words(block: bytes, drk, nr: int) -> bytes:
-    s0 = int.from_bytes(block[0:4], "big") ^ drk[0]
-    s1 = int.from_bytes(block[4:8], "big") ^ drk[1]
-    s2 = int.from_bytes(block[8:12], "big") ^ drk[2]
-    s3 = int.from_bytes(block[12:16], "big") ^ drk[3]
-    k = 4
-    for _ in range(nr - 1):
-        t0 = _TD0[s0 >> 24] ^ _TD1[(s3 >> 16) & 0xFF] ^ _TD2[(s2 >> 8) & 0xFF] ^ _TD3[s1 & 0xFF] ^ drk[k]
-        t1 = _TD0[s1 >> 24] ^ _TD1[(s0 >> 16) & 0xFF] ^ _TD2[(s3 >> 8) & 0xFF] ^ _TD3[s2 & 0xFF] ^ drk[k + 1]
-        t2 = _TD0[s2 >> 24] ^ _TD1[(s1 >> 16) & 0xFF] ^ _TD2[(s0 >> 8) & 0xFF] ^ _TD3[s3 & 0xFF] ^ drk[k + 2]
-        t3 = _TD0[s3 >> 24] ^ _TD1[(s2 >> 16) & 0xFF] ^ _TD2[(s1 >> 8) & 0xFF] ^ _TD3[s0 & 0xFF] ^ drk[k + 3]
-        s0, s1, s2, s3 = t0, t1, t2, t3
-        k += 4
-    b = _INV_SBOX
-    t0 = ((b[s0 >> 24] << 24) | (b[(s3 >> 16) & 0xFF] << 16) | (b[(s2 >> 8) & 0xFF] << 8) | b[s1 & 0xFF]) ^ drk[k]
-    t1 = ((b[s1 >> 24] << 24) | (b[(s0 >> 16) & 0xFF] << 16) | (b[(s3 >> 8) & 0xFF] << 8) | b[s2 & 0xFF]) ^ drk[k + 1]
-    t2 = ((b[s2 >> 24] << 24) | (b[(s1 >> 16) & 0xFF] << 16) | (b[(s0 >> 8) & 0xFF] << 8) | b[s3 & 0xFF]) ^ drk[k + 2]
-    t3 = ((b[s3 >> 24] << 24) | (b[(s2 >> 16) & 0xFF] << 16) | (b[(s1 >> 8) & 0xFF] << 8) | b[s0 & 0xFF]) ^ drk[k + 3]
-    return b"".join(x.to_bytes(4, "big") for x in (t0, t1, t2, t3))
-
-
-def _encrypt_block(block: bytes, w: list, nr: int) -> bytes:
-    """Byte-row-schedule entry kept for the unit tests' FIPS vectors;
-    hot paths use the cached word schedule directly."""
-    rk = _words(w)
-    return _encrypt_words(block, rk, nr)
-
-
-def _decrypt_block(block: bytes, w: list, nr: int) -> bytes:
-    return _decrypt_words(block, _inverse_schedule(tuple(_words(w)), nr), nr)
+def _cbc(key: bytes, data: bytes, iv: bytes, encrypt: bool) -> bytes:
+    """Raw AES-CBC, no padding, no IV prefix.  Raises ValueError on a key
+    that is not 16, 24 or 32 bytes, or on data that is not whole blocks."""
+    cipher = Cipher(algorithms.AES(key), modes.CBC(iv))
+    ctx = cipher.encryptor() if encrypt else cipher.decryptor()
+    return ctx.update(data) + ctx.finalize()
 
 
 def aes_cbc_encrypt(key: bytes, data: bytes, iv: bytes) -> bytes:
     """IV-prefixed AES-CBC with PKCS#7 padding (the AESV2 stream layout;
     writer side, used by the synthetic corpus builder)."""
-    rk, _drk, nr = _schedule(bytes(key))
     pad = 16 - len(data) % 16
-    data = data + bytes([pad]) * pad
-    out = bytearray(iv)
-    prev = iv
-    for i in range(0, len(data), 16):
-        blk = bytes(x ^ y for x, y in zip(data[i : i + 16], prev))
-        prev = _encrypt_words(blk, rk, nr)
-        out += prev
-    return bytes(out)
+    return iv + _cbc(key, data + bytes([pad]) * pad, iv, encrypt=True)
+
+
+def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
+    """Inverse of :func:`aes_cbc_encrypt`; lenient on damaged padding
+    (returns the unpadded tail rather than raising)."""
+    if len(data) < 32 or len(data) % 16:
+        return b""
+    out = _cbc(key, data[16:], data[:16], encrypt=False)
+    pad = out[-1]
+    return out[:-pad] if 1 <= pad <= 16 else out
 
 
 # ---------------------------------------------------------------------------
@@ -359,35 +191,17 @@ def aes_cbc_encrypt(key: bytes, data: bytes, iv: bytes) -> bytes:
 # and /UE wraps the key.  No per-object keys — the file key is used directly.
 # ---------------------------------------------------------------------------
 
-def _cbc_nopad(key: bytes, data: bytes, iv: bytes, encrypt: bool) -> bytes:
-    """Raw AES-CBC, no padding, no IV prefix (the KDF/key-wrap primitive)."""
-    rk, drk, nr = _schedule(bytes(key))
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        blk = data[i : i + 16]
-        if encrypt:
-            prev = _encrypt_words(bytes(x ^ y for x, y in zip(blk, prev)), rk, nr)
-            out += prev
-        else:
-            dec = _decrypt_words(blk, drk, nr)
-            out += bytes(x ^ y for x, y in zip(dec, prev))
-            prev = blk
-    return bytes(out)
 
-
+@lru_cache(maxsize=256)
 def hash_2b(pwd: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     """Algorithm 2.B (R6): iterated SHA-256/384/512 + AES-128-CBC mixing.
-    Deterministic per (pwd, salt, udata); memoized — a corpus shares salts,
-    and the 64+ pure-Python AES rounds are the expensive part."""
-    cached = _HASH2B_CACHE.get((pwd, salt, udata))
-    if cached is not None:
-        return cached
+    Deterministic per (pwd, salt, udata); memoized per process, because a
+    corpus shares salts and each call runs 64+ AES-CBC passes."""
     k = hashlib.sha256(pwd + salt + udata).digest()
     i = 0
     while True:
         k1 = (pwd + k + udata) * 64
-        e = _cbc_nopad(k[:16], k1, k[16:32], encrypt=True)
+        e = _cbc(k[:16], k1, k[16:32], encrypt=True)
         mod = sum(e[:16]) % 3
         if mod == 0:
             k = hashlib.sha256(e).digest()
@@ -398,13 +212,7 @@ def hash_2b(pwd: bytes, salt: bytes, udata: bytes = b"") -> bytes:
         i += 1
         if i >= 64 and e[-1] <= i - 32:
             break
-    k = k[:32]
-    if len(_HASH2B_CACHE) < 256:
-        _HASH2B_CACHE[(pwd, salt, udata)] = k
-    return k
-
-
-_HASH2B_CACHE: dict = {}
+    return k[:32]
 
 
 def v5_entries(file_key: bytes, vsalt: bytes, ksalt: bytes, user_pwd: bytes = b"", udata: bytes = b""):
@@ -412,7 +220,7 @@ def v5_entries(file_key: bytes, vsalt: bytes, ksalt: bytes, user_pwd: bytes = b"
     the 48-byte /U string, the /O+/OE) entries wrapping ``file_key`` —
     Algorithm 9 hashes the owner password WITH the /U entry as udata."""
     u = hash_2b(user_pwd, vsalt, udata) + vsalt + ksalt
-    ue = _cbc_nopad(hash_2b(user_pwd, ksalt, udata), file_key, b"\x00" * 16, encrypt=True)
+    ue = _cbc(hash_2b(user_pwd, ksalt, udata), file_key, bytes(16), encrypt=True)
     return u, ue
 
 
@@ -426,7 +234,7 @@ def v5_recover_key(u_entry: bytes, ue_entry: bytes, user_pwd: bytes = b""):
     if hash_2b(user_pwd, vsalt) != u_entry[:32]:
         return None
     ikey = hash_2b(user_pwd, ksalt)
-    return _cbc_nopad(ikey, ue_entry[:32], b"\x00" * 16, encrypt=False)
+    return _cbc(ikey, ue_entry[:32], bytes(16), encrypt=False)
 
 
 def v5_recover_key_owner(u_entry: bytes, o_entry: bytes, oe_entry: bytes, owner_pwd: bytes):
@@ -441,7 +249,7 @@ def v5_recover_key_owner(u_entry: bytes, o_entry: bytes, oe_entry: bytes, owner_
     if hash_2b(owner_pwd, vsalt, udata) != o_entry[:32]:
         return None
     ikey = hash_2b(owner_pwd, ksalt, udata)
-    return _cbc_nopad(ikey, oe_entry[:32], b"\x00" * 16, encrypt=False)
+    return _cbc(ikey, oe_entry[:32], bytes(16), encrypt=False)
 
 
 class StandardDecryptor:
@@ -470,23 +278,3 @@ class StandardDecryptor:
 
     def decrypt_string(self, obj_id: int, gen: int, data: bytes) -> bytes:
         return self._apply(self.str_mode, obj_id, gen, data)
-
-
-def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
-    """Inverse of :func:`aes_cbc_encrypt`; lenient on damaged padding
-    (returns the unpadded tail rather than raising)."""
-    if len(data) < 32 or len(data) % 16:
-        return b""
-    _rk, drk, nr = _schedule(bytes(key))
-    iv = data[:16]
-    out = bytearray()
-    prev = iv
-    for i in range(16, len(data), 16):
-        blk = data[i : i + 16]
-        dec = _decrypt_words(blk, drk, nr)
-        out += bytes(x ^ y for x, y in zip(dec, prev))
-        prev = blk
-    pad = out[-1] if out else 0
-    if 1 <= pad <= 16 and len(out) >= pad:
-        del out[-pad:]
-    return bytes(out)

@@ -124,6 +124,13 @@ def _build_decryptor(trailer: dict, objects: ObjectTable, password: bytes = b"")
                 n = cf_len if cf_len <= 40 else max(5, cf_len // 8)
             else:
                 n = 16 if "aes" in (stm_mode, str_mode) else 5
+        if "aes" in (stm_mode, str_mode) and n < 11:
+            # the object key is min(n + 5, 16) bytes, and AES takes only 16
+            raise PdfError(
+                f"unsupported encryption (AESV2 key length {n} bytes)",
+                kind=FILTER_ERROR,
+                stage="decode",
+            )
     elif str(enc.get("Filter")) == "Standard" and v == 5 and r == 6:
         # AESV3 (ISO 32000-2 §7.6.4): AES-256, SHA-2 KDF; the /U entry
         # validates the (empty) user password, /UE unwraps the file key.

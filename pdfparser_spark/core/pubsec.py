@@ -115,7 +115,7 @@ def build_recipient_cms(
     if len(seed) != 20 or len(cek) != 16 or len(iv) != 16:
         raise ValueError("PubSec: bad seed/cek/iv length")
     plain = seed + (perms & 0xFFFFFFFF).to_bytes(4, "big")
-    enc_content = crypt._cbc_nopad(cek, _pkcs7_pad(plain), iv, encrypt=True)
+    enc_content = crypt._cbc(cek, _pkcs7_pad(plain), iv, encrypt=True)
     k = (rsa_n.bit_length() + 7) // 8
     ps_len = k - 3 - len(cek)
     ps = bytes(b or 1 for b in pad_stream[:ps_len])  # nonzero PS bytes
@@ -201,7 +201,7 @@ def recover_seed(recipients: list[bytes], keys=None) -> tuple[bytes, int]:
             if ekids[2][0] not in (0x80, 0xA0, 0x04):
                 raise ValueError("PubSec: encryptedContent shape")
             enc = blob[ekids[2][1] : ekids[2][2]]
-            plain = _pkcs7_unpad(crypt._cbc_nopad(cek, enc, iv, encrypt=False))
+            plain = _pkcs7_unpad(crypt._cbc(cek, enc, iv, encrypt=False))
             if len(plain) != 24:
                 raise ValueError("PubSec: enveloped payload is not seed+perms")
             return plain[:20], int.from_bytes(plain[20:24], "big")

@@ -624,7 +624,7 @@ class _EncState:
             # Algorithm 10: one AES-ECB block (== CBC with a zero IV for
             # a single block) over P + 0xFF pad + 'T'/'F' + 'adb' + tail
             perms_clear = struct.pack("<i", p_flags) + b"\xff\xff\xff\xffTadbpdfs"
-            perms = crypt._cbc_nopad(self.key, perms_clear, b"\x00" * 16, encrypt=True)
+            perms = crypt._cbc(self.key, perms_clear, bytes(16), encrypt=True)
             self.enc_body = (
                 b"<< /Filter /Standard /V 5 /R 6 /Length 256 /P %d "
                 b"/CF << /StdCF << /CFM /AESV3 /Length 32 >> >> "

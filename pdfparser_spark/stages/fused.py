@@ -806,10 +806,10 @@ def extract_encrypt_rewrite_fused(
     from ..core.writer import write_pdf
 
     # password + seed are CORPUS-SHARED on purpose: R6 key derivation
-    # (Algorithm 2.B) costs ~2.5 s per distinct (pwd, salt) pair in pure
-    # Python, and crypt.hash_2b memoizes per worker process — shared
-    # salts amortize it to a one-time cost per executor (same trade the
-    # protected synth family makes)
+    # (Algorithm 2.B) costs ~1.5 ms per distinct (pwd, salt) pair, and
+    # crypt.hash_2b memoizes per worker process — shared salts amortize
+    # it to a one-time cost per executor (same trade the protected synth
+    # family makes)
     pwd = b"hunter2-rw"
 
     def rows_of(doc_id, data):

@@ -1633,8 +1633,9 @@ def build_document_binary(
     P_FLAGS = -4
     if r["encrypted"] and r["aes256"]:
         # V5/R6: random 32-byte file key wrapped by /U + /UE (empty user
-        # password).  Salts are corpus-global constants so hash_2b's memo
-        # makes synthesis O(1) per doc; the parser handles arbitrary salts.
+        # password).  Salts are corpus-global constants (the oracles pin
+        # these bytes), so hash_2b's memo pays the ~1.5 ms KDF once per
+        # process; the parser handles arbitrary per-file salts.
         file_key = hashlib.sha256(f"fkey{doc_id}".encode()).digest()
         u_entry, ue_entry = _crypt.v5_entries(file_key, b"VSALT690", b"KSALT135", user_pwd)
         # Algorithm 9: the owner hashes take the 48-byte /U string as udata

@@ -4,8 +4,9 @@ kernel and pipeline tests."""
 from __future__ import annotations
 
 
-def pdf(*objs: bytes) -> bytes:
-    """A one-revision PDF whose objects 1..n are ``objs`` (1 = catalog)."""
+def pdf(*objs: bytes, trailer: bytes = b"") -> bytes:
+    """A one-revision PDF whose objects 1..n are ``objs`` (1 = catalog);
+    ``trailer`` holds extra trailer entries, each after a space."""
     out = bytearray(b"%PDF-1.7\n")
     offsets = []
     for i, body in enumerate(objs, 1):
@@ -14,7 +15,9 @@ def pdf(*objs: bytes) -> bytes:
     xref = len(out)
     out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
     out += b"".join(b"%010d 00000 n \n" % o for o in offsets)
-    out += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (len(objs) + 1, xref)
+    out += b"trailer\n<< /Size %d /Root 1 0 R%s >>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objs) + 1, trailer, xref
+    )
     return bytes(out)
 
 
@@ -102,6 +105,31 @@ DEEP_NESTING = pdf(
     b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
     stream(b"", b"BT /F1 12 Tf 72 720 Td (deep) Tj ET"),
 )
+
+
+def _aesv2_short_key() -> bytes:
+    from pdfparser_spark.core import crypt
+
+    id0 = b"handmade-aesv2-5"
+    o = crypt.compute_o_entry(b"owner", b"", n=5, r=4)
+    u = crypt.compute_u_entry(crypt.compute_file_key(o, -4, id0, b"", n=5, r=4), id0, r=4)
+    return pdf(
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Resources << /Font << /F1 4 0 R >> >> /Contents 6 0 R >>",
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+        b"<< /Filter /Standard /V 4 /R 4 /Length 40 /P -4 /O <%s> /U <%s> "
+        b"/CF << /StdCF << /CFM /AESV2 >> >> /StmF /StdCF /StrF /StdCF >>"
+        % (o.hex().encode(), u.hex().encode()),
+        stream(b"", bytes(range(32))),
+        trailer=b" /Encrypt 5 0 R /ID [<%s> <%s>]" % (id0.hex().encode(), id0.hex().encode()),
+    )
+
+
+# an AESV2 document whose /Length 40 gives 5-byte file keys and so 10-byte
+# object keys, which no AES accepts; the empty user password validates
+AESV2_SHORT_KEY = _aesv2_short_key()
 
 
 def body_only(doc: bytes, catalog: bytes = b"/Type /Catalog") -> bytes:

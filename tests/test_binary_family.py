@@ -66,6 +66,41 @@ def test_unsupported_encryption_rejected():
     assert any("unsupported encryption" in e[2] for e in res["errors"])
 
 
+def test_aesv2_short_key_rejected_up_front():
+    """AESV2 under /Length 40 derives 10-byte object keys, which AES does
+    not take: the decryptor refuses the document with one row before any
+    object is decrypted, instead of decrypting garbage or failing
+    mid-document."""
+    from handmade import AESV2_SHORT_KEY
+
+    res = extract_spans(AESV2_SHORT_KEY, strict=False)
+    assert res["spans"] == []
+    assert res["errors"] == [
+        ("FilterError", "decode", "unsupported encryption (AESV2 key length 5 bytes)")
+    ]
+
+
+def test_aesv3_per_file_salts_stay_cheap():
+    """Twenty AESV3 documents with distinct seeds, hence distinct salts the
+    hash_2b memo never shares (as in real R6 files): each re-extracts to
+    its spans, and writing plus reading all twenty (six uncached
+    Algorithm 2.B calls each) takes under 2 s."""
+    import time
+
+    from pdfparser_spark.core.writer import write_pdf
+
+    t0 = time.perf_counter()
+    for i in range(20):
+        spans = [("text", f"per-file salt document {i}", None), ("text", "second line", None)]
+        seed = b"per-file-salt-%d-%d" % (i, time.time_ns())
+        data = write_pdf(spans, encrypt={"mode": "aes256", "seed": seed})
+        assert b"/V 5 /R 6" in data
+        res = extract_spans(data, strict=True)
+        assert res["errors"] == []
+        assert [tuple(s) for s in res["spans"]] == spans
+    assert time.perf_counter() - t0 < 2.0, "per-file-salt AESV3 documents regressed"
+
+
 def test_user_password_protected_rejected():
     """A /U entry that does not validate the EMPTY user password means the
     document needs a real password — error row, never garbage spans."""
@@ -155,14 +190,13 @@ def test_binary_family_through_spark_pipeline(spark, sf_dir):
 
 
 def test_aes_fips_vector_and_aesv2_doc():
-    """AES core against the FIPS-197 C.1 vector; an AESV2 (V4/R4 crypt
-    filter) document decrypts and extracts span-for-span."""
+    """AES against the FIPS-197 C.1 vector through the stream cipher (with
+    a zero IV the first CBC block is the bare block cipher); an AESV2
+    (V4/R4 crypt filter) document decrypts and extracts span-for-span."""
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-    w, nr = crypt._expand_key(key)
-    assert crypt._encrypt_block(pt, w, nr) == ct
-    assert crypt._decrypt_block(ct, w, nr) == pt
+    assert crypt.aes_cbc_encrypt(key, pt, bytes(16))[16:32] == ct
     msg = b"arbitrary-length payload for cbc"
     assert crypt.aes_cbc_decrypt(key, crypt.aes_cbc_encrypt(key, msg, bytes(16))) == msg
 
@@ -255,38 +289,20 @@ def test_rc4_classic_public_vectors():
 
 def test_aes_decrypt_known_answers_through_the_stream_schedule():
     """FIPS-197 Appendix C.1 (AES-128) and C.3 (AES-256) in the decrypt
-    direction, through the cached schedule AESV2/AESV3 streams use; the
-    T-table InvMixColumns of its inverse schedule equals the GF(2^8)
-    definition on random words."""
+    direction, through the stream decryption AESV2/AESV3 use: a zero IV
+    and one ciphertext block decrypt to the plaintext block, whose last
+    byte (0xff) is not a padding length and so stays."""
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     for key, ct in (
         (bytes(range(16)), "69c4e0d86a7b0430d8cdb78070b4c55a"),
         (bytes(range(32)), "8ea2b7ca516745bfeafc49904b496089"),
     ):
-        _rk, drk, nr = crypt._schedule(key)
-        assert crypt._decrypt_words(bytes.fromhex(ct), drk, nr) == pt
-
-    def inv_mix(x: int) -> int:
-        b = x.to_bytes(4, "big")
-        rows = ((14, 11, 13, 9), (9, 14, 11, 13), (13, 9, 14, 11), (11, 13, 9, 14))
-        out = 0
-        for m in rows:
-            out = (out << 8) | (
-                crypt._gmul(b[0], m[0]) ^ crypt._gmul(b[1], m[1])
-                ^ crypt._gmul(b[2], m[2]) ^ crypt._gmul(b[3], m[3])
-            )
-        return out
-
-    rng = random.Random(7)
-    for _ in range(2000):
-        x = rng.getrandbits(32)
-        # two rounds: only the middle round key passes through InvMixColumns
-        assert crypt._inverse_schedule((0, 0, 0, 0, x, 0, 0, 0, 0, 0, 0, 0), 2)[4] == inv_mix(x)
+        assert crypt.aes_cbc_decrypt(key, bytes(16) + bytes.fromhex(ct)) == pt
 
 
 def test_aes_all_key_sizes_fips_vectors():
-    """FIPS-197 Appendix C vectors for 128/192/256 through the T-table
-    round function (both schedules), plus raw-CBC inverse pairing."""
+    """FIPS-197 Appendix C vectors for 128/192/256 in both directions
+    through the public stream cipher, plus raw-CBC inverse pairing."""
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     for klen, exp in (
         (16, "69c4e0d86a7b0430d8cdb78070b4c55a"),
@@ -294,30 +310,27 @@ def test_aes_all_key_sizes_fips_vectors():
         (32, "8ea2b7ca516745bfeafc49904b496089"),
     ):
         key = bytes(range(klen))
-        w, nr = crypt._expand_key(key)
-        ct = crypt._encrypt_block(pt, w, nr)
+        ct = crypt.aes_cbc_encrypt(key, pt, bytes(16))[16:32]
         assert ct.hex() == exp
-        assert crypt._decrypt_block(ct, w, nr) == pt
+        assert crypt.aes_cbc_decrypt(key, bytes(16) + ct) == pt
         iv = bytes(range(16))
         data = bytes(range(64)) * 4
-        enc = crypt._cbc_nopad(key, data, iv, encrypt=True)
-        assert crypt._cbc_nopad(key, enc, iv, encrypt=False) == data
+        enc = crypt._cbc(key, data, iv, encrypt=True)
+        assert crypt._cbc(key, enc, iv, encrypt=False) == data
 
 
 def test_hash_2b_vector_and_timing_floor():
-    """Algorithm 2.B stays bit-identical after the T-table rewrite, and a
-    COLD (uncached, fresh salt) derivation stays under 1 s — the pure
-    _gmul path ran ~2.5 s, so a regression to it trips this floor.
-    Real encrypted corpora carry per-file salts where the memo never
-    hits (judge r03 perf item); the T-table round function is what keeps
-    that workload feasible."""
+    """Algorithm 2.B stays bit-identical, and a COLD (uncached, fresh
+    salt) derivation stays under 0.1 s: the compiled cipher takes
+    ~1.5 ms, the pure-Python T-table AES it replaced ~0.25 s.  Real
+    encrypted corpora carry per-file salts where the memo never hits."""
     import time
 
     assert crypt.hash_2b(b"pw", b"saltsalt").hex().startswith("ed6b6720996e36d8")
     salt = b"fresh-%d" % time.time_ns()  # guaranteed memo miss
     t0 = time.time()
     crypt.hash_2b(b"pw", salt[:8])
-    assert time.time() - t0 < 1.0, "Algorithm 2.B cold derivation regressed"
+    assert time.time() - t0 < 0.1, "Algorithm 2.B cold derivation regressed"
 
 
 def test_aesv3_v5r6_roundtrip():
