@@ -154,7 +154,7 @@ def _parse_xref_stream(data: bytes, pos: int, tok: Tokenizer):
 
 # ``N G obj`` at a line start.  A header at offset 0 is matched apart:
 # one ``(?:^|[\r\n])`` alternation turns off the regex engine's fast scan
-# for the pattern's first character, which made the scan ~3x slower
+# for the pattern's first character, which made the scan ~2x slower
 _OBJ_HEADER_RE = re.compile(rb"[\r\n]\s*(\d+)\s+(\d+)\s+obj\b")
 _FIRST_HEADER_RE = re.compile(rb"\s*(\d+)\s+(\d+)\s+obj\b")
 # candidate offsets kept per key, newest first: a binary stream payload can
