@@ -197,7 +197,7 @@ def _warc_cols(parsed: DataFrame) -> DataFrame:
 def _warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Common Crawl-shaped ingestion: binaryFile scan over multi-member
     ``.warc.gz`` shards -> gzip-member split -> WARC/HTTP parse (one
-    zero-shuffle mapInPandas) -> typed per-document rows.  Request and
+    zero-shuffle mapInArrow) -> typed per-document rows.  Request and
     warcinfo records are filtered by the reader; 404 responses surface
     with their real status so downstream quality filters see them."""
     return _warc_cols(warc.read_warc(spark, _warc_dir(spark, sf_dir)))
@@ -271,7 +271,7 @@ def _mbox_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-mail-archive ingestion: mbox shards -> RFC 4155 split + stdlib
     MIME parse (an INDEPENDENT grammar implementation) -> base64-decoded
     application/pdf attachments -> the SAME extraction kernel as every
-    family -> ordered spans.  Two stateless mapInPandas kernels, zero
+    family -> ordered spans.  Two stateless mapInArrow kernels, zero
     shuffle; the plain span SQL is the oracle — mail transport must be
     invisible to extraction (the warc_pdf_extract shape for mailboxes)."""
     from pdfparser_spark.sources import mbox
@@ -307,7 +307,7 @@ def _tar_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     header-chain walk with VERIFIED checksums -> *.pdf members only
     (each doc also ships a notes/*.txt sidecar the filter must drop) ->
     the SAME extraction kernel as every family -> ordered spans.  Two
-    stateless mapInPandas kernels, zero shuffle; the plain span SQL is
+    stateless mapInArrow kernels, zero shuffle; the plain span SQL is
     the oracle — archive transport must be invisible to extraction."""
     from pdfparser_spark.sources import tar
 
@@ -343,7 +343,7 @@ def _zip_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZIP-dump ingestion: central-directory walk with VERIFIED CRC-32s
     -> deflated *.pdf members (stored notes/*.txt sidecars dropped by
     the filter) -> the SAME extraction kernel as every family ->
-    ordered spans.  Two stateless mapInPandas kernels, zero shuffle;
+    ordered spans.  Two stateless mapInArrow kernels, zero shuffle;
     the plain span SQL is the oracle — the container must be invisible
     to extraction (the tar/warc/mbox plan for zip)."""
     from pdfparser_spark.sources import zipsrc
@@ -412,7 +412,7 @@ def _warc_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _warc_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The crawl chain the north rule describes: WARC source -> HTTP 200
     filter -> DOM-tree Readability main-content extraction, two stateless
-    mapInPandas kernels with zero shuffle between them.  The 200 bodies
+    mapInArrow kernels with zero shuffle between them.  The 200 bodies
     ARE the DOM synth pages (sources/warc.py serves dom.page_html), so
     the scorer's decisions share the DOM oracle (404s excluded — their
     error page has no scoring candidates)."""
@@ -1047,7 +1047,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).select("doc_id", "page_idx", "x", "y", "text")
         ),
         # document metadata: trailer /Info + catalog /Outlines chain walk
-        # (First -> Next, cycle-capped) — one mapInPandas, zero shuffle
+        # (First -> Next, cycle-capped) — one mapInArrow, zero shuffle
         "doc_metadata": lambda s, d: extract_meta_fused(
             synthesize_corpus(
                 _docs(s, d).repartition(s.sparkContext.defaultParallelism, "doc_id")
@@ -1229,7 +1229,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semantic_dedup": lambda s, d: dedup.semantic_dedup(_emb(s, d)),
         # Common Crawl-shaped WARC source: distributed synth writer ->
         # binaryFile scan -> per-record gzip-member split + WARC/HTTP
-        # parse in ONE zero-shuffle mapInPandas; oracle rebuilds every
+        # parse in ONE zero-shuffle mapInArrow; oracle rebuilds every
         # record analytically from the documents table
         "warc_ingest": _warc_ingest,
         # Gopher rule-based document filter (Rae et al. 2021 §A1.1):
@@ -1297,7 +1297,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # conditional probabilities, broadcast model, one doc_id reduce
         "lm_likelihood_filter": lambda s, d: lm.lm_likelihood(_docs(s, d)),
         # interactive tier: page /Annots link annotations (/A /S /URI) —
-        # one mapInPandas over the corpus, zero shuffle, one row per link
+        # one mapInArrow over the corpus, zero shuffle, one row per link
         "doc_links": lambda s, d: extract_links_fused(
             synthesize_corpus(
                 _docs(s, d).repartition(s.sparkContext.defaultParallelism, "doc_id")
@@ -1320,7 +1320,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_asof_join": lambda s, d: events.asof_join(_tbl(s, d, "events")),
         # embedded-file attachments: /Names /EmbeddedFiles name tree
         # (flat or /Kids+/Limits) -> /Filespec -> decoded /EF stream —
-        # one mapInPandas, zero shuffle, payload surfaced as (size, md5)
+        # one mapInArrow, zero shuffle, payload surfaced as (size, md5)
         "doc_attachments": lambda s, d: extract_attachments_fused(
             synthesize_corpus(
                 _docs(s, d).repartition(s.sparkContext.defaultParallelism, "doc_id")
@@ -1387,7 +1387,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "zorder_skipping": lambda s, d: zorder.zorder_skipping_report(_docs(s, d)),
         # STREAMING extraction, PRODUCTION sink shape: the fused kernel
-        # lifted onto a stream (stateless mapInPandas), landed in the
+        # lifted onto a stream (stateless mapInArrow), landed in the
         # snapshot log via foreachBatch with batch-id-idempotent commits
         # (a replayed micro-batch never double-appends), atomic HEAD
         # swap, read back from the table HEAD; oracle = the batch span SQL
@@ -2147,7 +2147,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # cutoff) removes the max-timestamp pre-scan from the plan — at
         # 100 TB that scan is a pipeline barrier (judge r04 item 8)
         "events_stream_outer_join": lambda s, d: events.stream_interval_join_outer(
-            s, os.path.join(d, "events.parquet"), horizon="2024-02-01T00:00:00"
+            s, os.path.join(d, "events.parquet"), horizon=events.EVENTS_HORIZON
         ),
         # dynamic partition pruning over the time-partitioned fact
         # layout: the runtime day-dim filter prunes whole partition

@@ -101,7 +101,7 @@ def materialized_corpus(spark, sf_dir: str, repeat: int = 1):
     """Synthesize + persist the interleaved raw corpus (input prep — at
     production the Iceberg table already exists, so this is NOT timed).
 
-    The source parquet is a single split at these SFs, and mapInPandas
+    The source parquet is a single split at these SFs, and mapInArrow
     preserves partitioning — without an explicit spread the whole persisted
     corpus would be ONE partition and every downstream scan of it would be
     single-threaded.  The persisted layout is the *salted* two-tier layout
@@ -121,7 +121,7 @@ def run_headline(spark) -> tuple[dict, int]:
     """Time each headline query; return ({name: sec}, extracted_doc_count)."""
     out: dict[str, float] = {}
 
-    # warm the JVM + the Python-UDF worker pool (mapInPandas path) so q1
+    # warm the JVM + the Python-UDF worker pool (mapInArrow path) so q1
     # measures compute, not worker spawn; also warm whole-stage codegen for
     # the shingle/minhash expression tree (its first compile costs seconds
     # and belongs to session startup, not the operator); then drop caches.
@@ -365,7 +365,7 @@ def write_scaling_md(
             "# BENCH/BASELINE — measured scaling evidence\n\n"
             "Same extraction job (the FUSED single-pass mode: the whole kernel —\n"
             "xref -> objects -> filters -> page tree -> content tokenize -> CMap\n"
-            "decode -> ordered spans — in one mapInPandas, zero shuffles; see\n"
+            "decode -> ordered spans — in one mapInArrow, zero shuffles; see\n"
             "`pdfparser_spark/stages/fused.py`), identical pre-materialized input\n"
             f"corpus (`{SF_DIR}` documents x{SCALE_REPEAT} tiled, salted layout),\n"
             "two parallelism levels — the in-sandbox rendering of BASELINE.json's\n"

@@ -7,7 +7,7 @@ pipeline:
     read(span table) -> decode -> tokenize -> classify -> assemble -> spans out
 
 Unit of parallelism is the *document*; within-document parsing is a
-sequential, spec-correct state machine executed inside ``mapInPandas`` over
+sequential, spec-correct state machine executed inside ``mapInArrow`` over
 Arrow record batches (never per-row Python UDFs).  Across documents,
 everything is DataFrame algebra: reference resolution is a join, page
 ordering is a window, metrics are aggregations.

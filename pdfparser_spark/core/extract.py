@@ -82,6 +82,15 @@ def _build_decryptor(trailer: dict, objects: ObjectTable, password: bytes = b"")
     def as_int(x, default):  # /Encrypt entries are direct values in practice
         return x if isinstance(x, int) else default
 
+    def as_bytes(key: str) -> bytes:
+        """The string entry /``key`` (/O, /U, /OE, /UE), ``b""`` when absent."""
+        x = enc.get(key)
+        if x is None:
+            return b""
+        if not isinstance(x, bytes):
+            raise FilterError(f"/Encrypt /{key} is not a string")
+        return x
+
     cf = enc.get("CF")
     cf = cf if isinstance(cf, dict) else {}
 
@@ -139,12 +148,12 @@ def _build_decryptor(trailer: dict, objects: ObjectTable, password: bytes = b"")
         message = "unsupported encryption (V5 crypt filter CFM={})"
         stm5 = crypt_filter("StmF", {"AESV3": "aes256"}, message)[0]
         str5 = crypt_filter("StrF", {"AESV3": "aes256"}, message)[0]
-        u5, ue5 = enc.get("U") or b"", enc.get("UE") or b""
+        u5, ue5 = as_bytes("U"), as_bytes("UE")
         key = crypt.v5_recover_key(u5, ue5, b"")
         if key is None and password:
             key = crypt.v5_recover_key(u5, ue5, password)
         if key is None and password:
-            key = crypt.v5_recover_key_owner(u5, enc.get("O") or b"", enc.get("OE") or b"", password)
+            key = crypt.v5_recover_key_owner(u5, as_bytes("O"), as_bytes("OE"), password)
         if key is None:
             raise PdfError(
                 "encrypted document requires a user password", kind=FILTER_ERROR, stage="decode"
@@ -202,8 +211,8 @@ def _build_decryptor(trailer: dict, objects: ObjectTable, password: bytes = b"")
     ids = trailer.get("ID") or []
     id0 = ids[0] if isinstance(ids, list) and ids else b""
     em = enc.get("EncryptMetadata")
-    o_entry = enc.get("O") or b""
-    u_entry = enc.get("U") or b""
+    o_entry = as_bytes("O")
+    u_entry = as_bytes("U")
     p_flags = as_int(enc.get("P"), -1)
     em_bool = em if isinstance(em, bool) else True
 

@@ -107,6 +107,23 @@ def _parse_classic_xref(data: bytes, pos: int, tok: Tokenizer):
             pos = skip_ws(data, pos + em.end())
 
 
+def _int(attrs: dict, key: str, default=None) -> int:
+    """The number /``key`` of an xref dictionary as an int, ``default``
+    when absent; any other type is a ParsingError naming the entry."""
+    x = attrs.get(key, default)
+    if not isinstance(x, (int, float)):
+        raise ParsingError(f"XRef /{key} is not a number")
+    return int(x)
+
+
+def _ints(attrs: dict, key: str) -> list:
+    """The number array /``key`` of an xref dictionary, ``[]`` when absent."""
+    xs = attrs.get(key, [])
+    if not isinstance(xs, list) or not all(isinstance(x, (int, float)) for x in xs):
+        raise ParsingError(f"XRef /{key} is not a number array")
+    return [int(x) for x in xs]
+
+
 def _parse_xref_stream(data: bytes, pos: int, tok: Tokenizer):
     """L4 (ISO 32000 §7.5.8; reference has only the enum variant
     pdf_file.rs:707).  The xref stream is itself an indirect object whose
@@ -118,14 +135,13 @@ def _parse_xref_stream(data: bytes, pos: int, tok: Tokenizer):
         raise ParsingError("startxref does not point at an XRef stream")
     chain = build_filter_chain(st.attrs)
     payload = decode_chain(st.raw, chain)
-    w = st.attrs.get("W")
-    if not isinstance(w, list) or len(w) < 3:
+    w = _ints(st.attrs, "W")
+    if len(w) < 3:
         raise ParsingError("XRef stream missing /W")
-    w = [int(x) for x in w[:3]]
+    w = w[:3]
     rowlen = sum(w)
-    size = int(st.attrs.get("Size", 0))
-    index = st.attrs.get("Index") or [0, size]
-    runs = [(int(index[i]), int(index[i + 1])) for i in range(0, len(index) - 1, 2)]
+    index = _ints(st.attrs, "Index") or [0, _int(st.attrs, "Size", 0)]
+    runs = [(index[i], index[i + 1]) for i in range(0, len(index) - 1, 2)]
 
     def field(row: bytes, k: int, default: int) -> int:
         a = sum(w[:k])
@@ -318,10 +334,9 @@ def xref_sections(data: bytes, max_prev: int = 64) -> list:
             kind = "stream"
             offs, tr, comp = _parse_xref_stream(data, probe, tok)
         sections.append((kind, offs, comp, tr))
-        prev = tr.get("Prev")
-        if prev is None:
+        if tr.get("Prev") is None:
             break
-        at = int(prev)
+        at = _int(tr, "Prev")
     if not sections:
         raise ParsingError("no trailer found")
     return sections

@@ -1,7 +1,7 @@
 """Skew-aware document partitioning (SURVEY.md §4, north_rule).
 
 Document corpora are heavy-tailed: a handful of giant documents can straggle
-an entire mapInPandas stage because AQE's skew handling only re-splits
+an entire mapInArrow stage because AQE's skew handling only re-splits
 *shuffle* partitions at join/agg boundaries, not Python map stages.
 
 Two strategies, both pure DataFrame API:

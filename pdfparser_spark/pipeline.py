@@ -194,7 +194,7 @@ def run_extraction(
     """Convenience wrapper: synthesize the interleaved corpus from the
     driver's ``documents`` table, then run the DAG.
 
-    The source parquet is one split at small SFs and mapInPandas preserves
+    The source parquet is one split at small SFs and mapInArrow preserves
     partitioning, so spread the scan first — otherwise synthesis (and the
     first read of every downstream branch) runs single-threaded."""
     n_parts = spark.sparkContext.defaultParallelism

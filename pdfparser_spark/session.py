@@ -18,10 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-# bounded: rows carry whole-document payloads.  Overridable for thin-row
-# workloads (the x96 scaling corpus docs are ~1 KB; bigger batches cut
-# per-batch Python/Arrow overhead without memory risk there).
-ARROW_BATCH_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256"))
+# bounded: rows carry whole-document payloads
+ARROW_BATCH_ROWS = 256
 
 
 def _default_driver_memory() -> str:

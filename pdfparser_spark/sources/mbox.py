@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runner import map_rows
+
 
 def msg_date(doc_id: int) -> str:
     """Deterministic RFC 5322 date: doc_id seconds past a fixed epoch."""
@@ -194,35 +196,30 @@ def parse_messages(raw: bytes) -> Iterator[dict]:
 
 
 def read_mbox(spark: SparkSession, path: str) -> DataFrame:
-    """``binaryFile`` over the shard dir -> one stateless mapInPandas
+    """``binaryFile`` over the shard dir -> one stateless mapInArrow
     parsing every message (shard-level parallelism, like sources/warc.py
     — mbox is not safely splittable, so a shard is the work unit)."""
     files = spark.read.format("binaryFile").load(os.path.join(path, "*.mbox"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "message_id", "subject", "sender", "date",
-            "n_parts", "filename", "pdf", "error",
-        ]
-        for pdf_batch in batches:
-            rows = []
-            for content in pdf_batch["content"]:
-                try:
-                    rows.extend(parse_messages(bytes(content)))
-                except Exception as e:  # corrupt shard: contained skip
-                    rows.append(
-                        {
-                            "message_id": "", "subject": "", "sender": "",
-                            "date": "", "n_parts": 0, "filename": None,
-                            "pdf": None, "error": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(content):
+        rows = []
+        try:
+            rows.extend(parse_messages(content))
+        except Exception as e:  # corrupt shard: contained skip
+            rows.append(
+                {
+                    "message_id": "", "subject": "", "sender": "",
+                    "date": "", "n_parts": 0, "filename": None,
+                    "pdf": None, "error": f"{type(e).__name__}: {e}",
+                }
+            )
+        return rows
 
-    return files.select("content").mapInPandas(
-        parse,
-        schema=(
+    return map_rows(
+        files.select("content"),
+        (
             "message_id string, subject string, sender string, date string, "
             "n_parts int, filename string, pdf binary, error string"
         ),
+        parse,
     )

@@ -14,7 +14,7 @@ not just take everything.
 
 Reader side walks the header chain (name via the ustar ``prefix``
 field when set, size, typeflag, mtime, checksum VERIFIED) inside one
-stateless mapInPandas over ``binaryFile`` shards — file-level
+stateless mapInArrow over ``binaryFile`` shards — file-level
 parallelism, zero shuffle, like every archive source here.  A member
 whose checksum fails costs that member (counted as an error row); a
 truncated archive costs the remainder of that shard, never the task.
@@ -32,6 +32,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..runner import map_rows
 
 BLOCK = 512
 
@@ -208,29 +210,27 @@ def parse_tar(data: bytes) -> Iterator[dict]:
 
 
 def read_tar(spark: SparkSession, path: str) -> DataFrame:
-    """``binaryFile`` over the shard dir -> one stateless mapInPandas
+    """``binaryFile`` over the shard dir -> one stateless mapInArrow
     walking every member header (shard-level parallelism; tar is not
     splittable without the header chain, so a shard is the work unit —
     size shards ~1 GB like WARC)."""
     files = spark.read.format("binaryFile").load(os.path.join(path, "*.tar*"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["name", "size", "mtime", "payload", "error"]
-        for pdf_batch in batches:
-            rows = []
-            for content in pdf_batch["content"]:
-                try:
-                    rows.extend(parse_tar(bytes(content)))
-                except Exception as e:  # corrupt shard: contained skip
-                    rows.append(
-                        {
-                            "name": None, "size": 0, "mtime": 0,
-                            "payload": None, "error": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(content):
+        rows = []
+        try:
+            rows.extend(parse_tar(content))
+        except Exception as e:  # corrupt shard: contained skip
+            rows.append(
+                {
+                    "name": None, "size": 0, "mtime": 0,
+                    "payload": None, "error": f"{type(e).__name__}: {e}",
+                }
+            )
+        return rows
 
-    return files.select("content").mapInPandas(
+    return map_rows(
+        files.select("content"),
+        "name string, size long, mtime long, payload binary, error string",
         parse,
-        schema="name string, size long, mtime long, payload binary, error string",
     )

@@ -11,7 +11,7 @@ record independently seekable).  This module provides both halves:
   DuckDB oracle can state the expected parse output analytically, exactly
   like `synth.build_document` does for the PDF families;
 * a reader (`read_warc`) built on Spark's ``binaryFile`` source plus one
-  `mapInPandas` that splits gzip members with ``zlib`` and parses the WARC
+  `mapInArrow` that splits gzip members with ``zlib`` and parses the WARC
   record grammar + the embedded HTTP/1.1 response.
 
 Scale notes (100 TB): parallelism is file-level — `binaryFile` gives one
@@ -37,6 +37,8 @@ from datetime import datetime, timedelta
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..runner import map_rows
 
 _EPOCH = datetime(2024, 1, 1)  # WARC-Date base: deterministic, never wall clock
 _CRLF = b"\r\n"
@@ -394,34 +396,22 @@ def index_warc(spark: SparkSession, path: str) -> DataFrame:
     later costs ONE range read of ``length`` bytes, not a shard scan."""
     files = spark.read.format("binaryFile").load(path).select("path", "content")
 
-    def index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "warc_date", "path", "offset", "length"]
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                frows = []  # buffered per file: corrupt => NOTHING indexed
-                try:
-                    for off, clen, member in split_gzip_members_with_offsets(
-                        bytes(content)
-                    ):
-                        for headers, _block in _parse_records_in(member):
-                            if headers.get("warc-type") != "response":
-                                continue
-                            frows.append(
-                                {
-                                    "url": headers.get("warc-target-uri", ""),
-                                    "warc_date": headers.get("warc-date", ""),
-                                    "path": fpath,
-                                    "offset": off,
-                                    "length": clen,
-                                }
-                            )
-                except ValueError:
-                    continue  # corrupt shard: absent from the index
-                rows.extend(frows)
-            yield pd.DataFrame(rows, columns=cols)
+    def index(fpath, content):
+        rows = []  # buffered per file: corrupt => NOTHING indexed
+        try:
+            for off, clen, member in split_gzip_members_with_offsets(content):
+                for headers, _block in _parse_records_in(member):
+                    if headers.get("warc-type") == "response":
+                        rows.append((
+                            headers.get("warc-target-uri", ""),
+                            headers.get("warc-date", ""),
+                            fpath, off, clen,
+                        ))
+        except ValueError:
+            return []  # corrupt shard: absent from the index
+        return rows
 
-    return files.mapInPandas(index, schema=CDX_SCHEMA)
+    return map_rows(files, CDX_SCHEMA, index)
 
 
 def fetch_warc_records(cdx: DataFrame) -> DataFrame:
@@ -433,39 +423,35 @@ def fetch_warc_records(cdx: DataFrame) -> DataFrame:
     billion-record corpus serves point lookups at index-partition
     parallelism with O(record) I/O per lookup."""
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["path", "url", "warc_date", "status", "content_type", "n_bytes", "body"]
-        for pdf in batches:
-            rows = []
-            for fpath, off, length in zip(pdf["path"], pdf["offset"], pdf["length"]):
-                local = fpath[len("file:") :] if str(fpath).startswith("file:") else fpath
-                try:
-                    with open(local, "rb") as fh:
-                        fh.seek(int(off))
-                        comp = fh.read(int(length))
-                    members = split_gzip_members(comp)
-                    for member in members:
-                        for headers, block in _parse_records_in(member):
-                            if headers.get("warc-type") != "response":
-                                continue
-                            status, ctype, body = _parse_http_response(block)
-                            rows.append(
-                                {
-                                    "path": fpath,
-                                    "url": headers.get("warc-target-uri", ""),
-                                    "warc_date": headers.get("warc-date", ""),
-                                    "status": status,
-                                    "content_type": ctype,
-                                    "n_bytes": len(body),
-                                    "body": body.decode("utf-8", errors="replace"),
-                                }
-                            )
-                except (OSError, ValueError):
-                    continue  # unreadable range: skip the lookup, never the task
-            yield pd.DataFrame(rows, columns=cols)
+    def fetch(fpath, off, length):
+        local = fpath[len("file:") :] if fpath.startswith("file:") else fpath
+        rows = []
+        try:
+            with open(local, "rb") as fh:
+                fh.seek(off)
+                comp = fh.read(length)
+            for member in split_gzip_members(comp):
+                for headers, block in _parse_records_in(member):
+                    if headers.get("warc-type") == "response":
+                        rows.append(_response_row(fpath, headers, block))
+        except (OSError, ValueError):
+            pass  # unreadable range: skip the lookup, never the task
+        return rows
 
-    return cdx.select("path", "offset", "length").mapInPandas(
-        fetch, schema=READ_SCHEMA
+    return map_rows(cdx.select("path", "offset", "length"), READ_SCHEMA, fetch)
+
+
+def _response_row(fpath: str, headers: dict, block: bytes) -> tuple:
+    """One :data:`READ_SCHEMA` row for a RESPONSE record."""
+    status, ctype, body = _parse_http_response(block)
+    return (
+        fpath,
+        headers.get("warc-target-uri", ""),
+        headers.get("warc-date", ""),
+        status,
+        ctype,
+        len(body),
+        body.decode("utf-8", errors="replace"),
     )
 
 
@@ -498,34 +484,17 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     ``content`` (and ``path``) are read from the binaryFile scan."""
     files = spark.read.format("binaryFile").load(path).select("path", "content")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["path", "url", "warc_date", "status", "content_type", "n_bytes", "body"]
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                frows = []  # buffered per file: corrupt => skipped WHOLE
-                try:
-                    for headers, block in parse_warc_records(bytes(content)):
-                        if headers.get("warc-type") != "response":
-                            continue
-                        status, ctype, body = _parse_http_response(block)
-                        frows.append(
-                            {
-                                "path": fpath,
-                                "url": headers.get("warc-target-uri", ""),
-                                "warc_date": headers.get("warc-date", ""),
-                                "status": status,
-                                "content_type": ctype,
-                                "n_bytes": len(body),
-                                "body": body.decode("utf-8", errors="replace"),
-                            }
-                        )
-                except ValueError:
-                    continue  # corrupt shard: skip whole file, never kill the task
-                rows.extend(frows)
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(fpath, content):
+        try:  # a list, so a corrupt shard is skipped WHOLE
+            return [
+                _response_row(fpath, headers, block)
+                for headers, block in parse_warc_records(content)
+                if headers.get("warc-type") == "response"
+            ]
+        except ValueError:
+            return []  # corrupt shard: skip whole file, never kill the task
 
-    return files.mapInPandas(parse, schema=READ_SCHEMA)
+    return map_rows(files, READ_SCHEMA, parse)
 
 
 READ_CAPTURES_SCHEMA = (
@@ -541,50 +510,29 @@ def read_warc_captures(spark: SparkSession, path: str) -> DataFrame:
     :func:`resolve_revisits` joins them back to the original payloads."""
     files = spark.read.format("binaryFile").load(path).select("path", "content")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["path", "url", "warc_date", "record_type", "status",
-                "content_type", "body", "digest"]
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                frows = []  # buffered per file: corrupt => skipped WHOLE
-                try:
-                    for headers, block in parse_warc_records(bytes(content)):
-                        wtype = headers.get("warc-type")
-                        if wtype == "response":
-                            status, ctype, body = _parse_http_response(block)
-                            frows.append(
-                                {
-                                    "path": fpath,
-                                    "url": headers.get("warc-target-uri", ""),
-                                    "warc_date": headers.get("warc-date", ""),
-                                    "record_type": "response",
-                                    "status": status,
-                                    "content_type": ctype,
-                                    "body": body.decode("utf-8", errors="replace"),
-                                    "digest": payload_digest(body),
-                                }
-                            )
-                        elif wtype == "revisit":
-                            status, ctype, _body = _parse_http_response(block)
-                            frows.append(
-                                {
-                                    "path": fpath,
-                                    "url": headers.get("warc-target-uri", ""),
-                                    "warc_date": headers.get("warc-date", ""),
-                                    "record_type": "revisit",
-                                    "status": status,
-                                    "content_type": ctype,
-                                    "body": "",
-                                    "digest": headers.get("warc-payload-digest", ""),
-                                }
-                            )
-                except ValueError:
-                    continue  # corrupt shard: skip whole file, never kill the task
-                rows.extend(frows)
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(fpath, content):
+        rows = []  # buffered per file: corrupt => skipped WHOLE
+        try:
+            for headers, block in parse_warc_records(content):
+                wtype = headers.get("warc-type")
+                if wtype not in ("response", "revisit"):
+                    continue
+                status, ctype, body = _parse_http_response(block)
+                if wtype == "response":
+                    text, digest = body.decode("utf-8", errors="replace"), payload_digest(body)
+                else:
+                    text, digest = "", headers.get("warc-payload-digest", "")
+                rows.append((
+                    fpath,
+                    headers.get("warc-target-uri", ""),
+                    headers.get("warc-date", ""),
+                    wtype, status, ctype, text, digest,
+                ))
+        except ValueError:
+            return []  # corrupt shard: skip whole file, never kill the task
+        return rows
 
-    return files.mapInPandas(parse, schema=READ_CAPTURES_SCHEMA)
+    return map_rows(files, READ_CAPTURES_SCHEMA, parse)
 
 
 def resolve_revisits(captures: DataFrame) -> DataFrame:

@@ -14,7 +14,7 @@ Reader side does what a real zip reader does: reverse-scan for the
 EOCD signature, walk the CENTRAL DIRECTORY (never the local headers
 first — the central directory is the authoritative index), then slice
 each member via its local-header offset and inflate/copy with the
-CRC-32 VERIFIED.  One stateless mapInPandas over ``binaryFile`` shards
+CRC-32 VERIFIED.  One stateless mapInArrow over ``binaryFile`` shards
 — file-level parallelism, zero shuffle, like every archive source
 here.  A member whose CRC fails costs that member (error row); a shard
 with no EOCD costs that shard, never the task.
@@ -33,6 +33,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..runner import map_rows
 
 _LOCAL_SIG = b"PK\x03\x04"
 _CDIR_SIG = b"PK\x01\x02"
@@ -172,28 +174,26 @@ def parse_zip(data: bytes) -> Iterator[dict]:
 
 
 def read_zip(spark: SparkSession, path: str) -> DataFrame:
-    """``binaryFile`` over the shard dir -> one stateless mapInPandas
+    """``binaryFile`` over the shard dir -> one stateless mapInArrow
     walking every central-directory entry (shard-level parallelism;
     the central directory lives at EOF, so a shard is the work unit)."""
     files = spark.read.format("binaryFile").load(os.path.join(path, "*.zip"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["name", "method", "size", "payload", "error"]
-        for pdf_batch in batches:
-            rows = []
-            for content in pdf_batch["content"]:
-                try:
-                    rows.extend(parse_zip(bytes(content)))
-                except Exception as e:  # corrupt shard: contained skip
-                    rows.append(
-                        {
-                            "name": None, "method": 0, "size": 0,
-                            "payload": None, "error": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(content):
+        rows = []
+        try:
+            rows.extend(parse_zip(content))
+        except Exception as e:  # corrupt shard: contained skip
+            rows.append(
+                {
+                    "name": None, "method": 0, "size": 0,
+                    "payload": None, "error": f"{type(e).__name__}: {e}",
+                }
+            )
+        return rows
 
-    return files.select("content").mapInPandas(
+    return map_rows(
+        files.select("content"),
+        "name string, method int, size long, payload binary, error string",
         parse,
-        schema="name string, method int, size long, payload binary, error string",
     )

@@ -4,7 +4,7 @@
 
 Each stage is a DataFrame -> DataFrame function with a checkpointable
 boundary (pipeline.py persists each output).  Sequential per-document work
-happens only inside ``mapInPandas`` kernels, each running the fused
+happens only inside ``mapInArrow`` kernels, each running the fused
 kernel's own code (core/extract.py); *between* stages everything is Spark
 algebra — font binding is one join, ordering is one ordered aggregation.
 """

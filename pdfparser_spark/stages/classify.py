@@ -6,7 +6,7 @@ realization of the reference's transparent reference deref
 (pdf_objects.rs:216-301; SURVEY.md §2.4 A2: "join-then-coalesce, not
 pointer chase").  Glyph bytes become Unicode through the font row's typed
 spec, with the fused kernel's own builder (``core.extract.spec_decoder``)
-and text rule (``core.extract.shown_text``), inside a mapInPandas kernel
+and text rule (``core.extract.shown_text``), inside a mapInArrow kernel
 that builds each distinct spec's decoder once per task.  ActualText
 replacements decode as PDF text strings, never through a font.  Media
 events pass through: the tokenize stage already resolved every ``Do``.
@@ -17,26 +17,19 @@ At cluster scale AQE's skew-join splitting handles heavy-tailed documents
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.cmap import pdf_text_string
 from ..core.extract import FontSpec, shown_text, spec_decoder
+from ..runner import map_rows
 from ..schema import CLASSIFIED
 
-_COLS = CLASSIFIED.fieldNames()
 _KEY = ["doc_id", "page_idx", "seq", "ev_idx"]
 
 
 def _spec(tounicode, encoding, differences) -> FontSpec:
-    return FontSpec(
-        bytes(tounicode) if tounicode is not None else None,
-        encoding if isinstance(encoding, str) else None,
-        tuple((int(d["code"]), d["glyph"]) for d in differences) if differences is not None else (),
-    )
+    return FontSpec(tounicode, encoding, tuple((d["code"], d["glyph"]) for d in differences or ()))
 
 
 def classify(tokens: DataFrame, decoded: DataFrame) -> DataFrame:
@@ -47,31 +40,24 @@ def classify(tokens: DataFrame, decoded: DataFrame) -> DataFrame:
         fonts, on=["doc_id", "page_idx", "scope", "font_name"], how="left"
     )
 
-    def decode_text(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decoders: dict = {}
-        for pdf in batches:
-            texts = []
-            for ev_type, operand, parts, tu, enc, diffs in zip(
-                pdf["ev_type"], pdf["operand"], pdf["parts"],
-                pdf["tounicode"], pdf["base_encoding"], pdf["differences"],
-            ):
-                if ev_type == "atext":
-                    texts.append(pdf_text_string(bytes(operand)))
-                    continue
-                spec = _spec(tu, enc, diffs)
-                dec = decoders.get(spec)
-                if dec is None:
-                    dec = decoders[spec] = spec_decoder(spec)
-                texts.append(shown_text(bytes(operand) if parts is None else parts, dec))
-            out = pdf[_KEY].copy()
-            out["kind"] = "text"
-            out["text"] = texts
-            out["media_ref"] = None
-            yield out.reindex(columns=_COLS)
+    decoders: dict = {}  # per task: each task unpickles its own copy
 
-    text_spans = shows.select(
-        *_KEY, "ev_type", "operand", "parts", "tounicode", "base_encoding", "differences"
-    ).mapInPandas(decode_text, schema=CLASSIFIED)
+    def decode_text(doc_id, page_idx, seq, ev_idx, ev_type, operand, parts, tu, enc, diffs):
+        if ev_type == "atext":
+            text = pdf_text_string(operand)
+        else:
+            spec = _spec(tu, enc, diffs)
+            dec = decoders.get(spec)
+            if dec is None:
+                dec = decoders[spec] = spec_decoder(spec)
+            text = shown_text(operand if parts is None else parts, dec)
+        return [(doc_id, page_idx, seq, ev_idx, "text", text, None)]
+
+    text_spans = map_rows(
+        shows.select(*_KEY, "ev_type", "operand", "parts", "tounicode", "base_encoding", "differences"),
+        CLASSIFIED,
+        decode_text,
+    )
     media_spans = tokens.filter(F.col("ev_type") == "media").select(
         *_KEY,
         F.lit("media").alias("kind"),

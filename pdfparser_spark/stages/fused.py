@@ -4,18 +4,18 @@ The staged DAG (decode -> tokenize -> classify -> assemble) buys
 checkpoint/resume and per-stage lineage at the cost of three shuffles and
 two persisted intermediates.  But extraction itself is *per-document*
 embarrassingly parallel — nothing in the kernel crosses documents — so the
-maximum-throughput production mode is this fused stage: ONE ``mapInPandas``
+maximum-throughput production mode is this fused stage: ONE ``mapInArrow``
 running the whole kernel (core/extract.py: version -> xref -> objects ->
 filters -> page tree -> content tokenize -> CMap decode -> ordered spans)
 per document, zero shuffles, no intermediate materialization.
 
 Every extractor here is a row function plus a schema.  The row function
 ``rows_of(doc_id, data)`` turns one document's bytes into its output rows,
-tuples in schema order; ``_per_doc`` runs it: the Arrow batch loop, byte
-reassembly from the interleaved spans (``_doc_bytes``), one pandas frame
-per batch, and the ``mapInPandas`` call.  The runner adds no error
-handling: each kernel keeps its own leniency.  The staged decode stage
-runs through the same runner.  The one cross-document extractor,
+tuples in schema order; ``_per_doc`` runs it through the package's row
+runner (``runner.map_rows``) after byte reassembly from the interleaved
+spans (``_doc_bytes``).  The runner adds no error handling: each kernel
+keeps its own leniency.  The staged decode stage runs through the same
+runner.  The one cross-document extractor,
 ``extract_merge_pairs_fused``, groups by pair instead.
 
 Semantics are identical to the staged DAG (same kernel functions; asserted
@@ -27,7 +27,7 @@ the input scan and the output write.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable
 
 import numpy as np
 import pandas as pd
@@ -55,6 +55,7 @@ from ..core.extract import (
     extract_tagged_spans,
     extract_xmp,
 )
+from ..runner import map_rows
 from ..schema import DOCUMENTS_RAW
 from ..synth import SIG_D, SIG_E, SIG_EC_D, SIG_N, TAG_LANGS
 
@@ -89,18 +90,13 @@ def _per_doc(
     documents_raw: DataFrame, schema, rows_of: Callable[[int, bytes], Iterable]
 ) -> DataFrame:
     """Run ``rows_of(doc_id, data)`` over every document of
-    ``documents_raw(doc_id, spans)`` as one ``mapInPandas``; its rows
+    ``documents_raw(doc_id, spans)`` through the row runner; its rows
     (tuples in schema order, or dicts keyed by column) form the output."""
-    cols = _columns(schema)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                rows.extend(rows_of(int(doc_id), _doc_bytes(spans)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return documents_raw.mapInPandas(run, schema=schema)
+    return map_rows(
+        documents_raw.select("doc_id", "spans"),
+        schema,
+        lambda doc_id, spans: rows_of(doc_id, _doc_bytes(spans)),
+    )
 
 
 def _span_rows(key: int, spans, *extra) -> list:
@@ -198,7 +194,7 @@ def extract_word_boxes_fused(documents_raw: DataFrame, password: bytes = b"") ->
     baseline box.  This is the hOCR-style geometry an OCR layer would
     report, recovered integer-exact from the vector text itself.  A
     strict superset of `extract_advance_fused`'s columns; same plan
-    (one mapInPandas, scan-bound)."""
+    (one mapInArrow, scan-bound)."""
 
     def rows_of(doc_id, data):
         res = extract_advance_spans(data, password=password, with_width=True)
@@ -380,7 +376,7 @@ def extract_outlines_fused(documents_raw: DataFrame, password: bytes = b"") -> D
     (`core.extract.extract_outline_tree`) — every bookmark in pre-order
     with its nesting depth, resolved /Dest target page, and open/closed
     display state.  Emits (doc_id, ord, depth, title, target_page,
-    closed); one mapInPandas, scan-bound like every fused kernel."""
+    closed); one mapInArrow, scan-bound like every fused kernel."""
 
     def rows_of(doc_id, data):
         items = extract_outline_tree(data, password=password)["items"]
@@ -512,7 +508,7 @@ def extract_tagged_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
     kernel (core/extract.py ``extract_tagged_spans``, ISO 32000 §14.7/
     §14.8) ranks each show op by its /MCID's depth-first position in the
     /StructTreeRoot walk; untagged (artifact) content follows in drawing
-    order with NULL struct_type.  One mapInPandas — the ranking is
+    order with NULL struct_type.  One mapInArrow — the ranking is
     per-document and row-local, so the plan is scan -> kernel -> sink at
     any cluster size."""
 
@@ -530,7 +526,7 @@ def extract_scanned_fused(documents_raw: DataFrame, password: bytes = b"") -> Da
     /EncodedByteAlign, /BlackIs1) or the T.88 embedded segment walk with
     MMR generic regions (``textops/jbig2.py``).  Emits one row per image
     with the ink statistics (count + position-weighted signature — any
-    single pixel flip changes it).  One mapInPandas; decode per-doc."""
+    single pixel flip changes it).  One mapInArrow; decode per-doc."""
     from ..textops.ccitt import decode_ccitt
     from ..textops.jbig2 import decode_jbig2
 
@@ -562,7 +558,7 @@ def extract_scanned_fused(documents_raw: DataFrame, password: bytes = b"") -> Da
 def extract_labels_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """Page labels (§12.4.2), zero shuffle: the /PageLabels number-tree
     walk + style formatting (decimal/roman/letters, prefix, /St) in one
-    mapInPandas.  Every page gets a label (viewer-default ordinal+1 when
+    mapInArrow.  Every page gets a label (viewer-default ordinal+1 when
     no tree governs it)."""
 
     def rows_of(doc_id, data):
@@ -575,7 +571,7 @@ def extract_labels_fused(documents_raw: DataFrame, password: bytes = b"") -> Dat
 def extract_signatures_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """Digital-signature verification (§12.8), zero shuffle: the AcroForm
     walk + ByteRange coverage + CMS digest/RSA verification in one
-    mapInPandas — the verdict columns are per-doc scalars, so the plan is
+    mapInArrow — the verdict columns are per-doc scalars, so the plan is
     scan -> kernel -> sink at any corpus size.  The kernel's rows are
     (sig_idx, field, signer, digest_alg, key_alg, coverage_ok,
     digest_ok, sig_ok)."""
@@ -594,7 +590,7 @@ def extract_signatures_fused(documents_raw: DataFrame, password: bytes = b"") ->
 
 def extract_markup_fused(documents_raw: DataFrame, password: bytes = b"") -> DataFrame:
     """Markup annotations (§12.5.6), zero shuffle: the /Annots walk plus
-    the /QuadPoints-to-layout geometric join in one mapInPandas — the
+    the /QuadPoints-to-layout geometric join in one mapInArrow — the
     highlighted TEXT is recovered per document, so no cross-doc data
     movement exists at any corpus size.  The kernel's rows are
     (page_idx, annot_idx, subtype, author, contents, covered_text)."""

@@ -9,11 +9,9 @@ from the same source rows.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..runner import map_rows
 from ..schema import DOCUMENTS_RAW
 from ..synth import (
     build_document,
@@ -58,18 +56,11 @@ def synthesize_corpus(documents: DataFrame, repeat: int = 1, family: str = "asci
     """
     builder = _BUILDERS[family]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id is None or pd.isna(doc_id):
-                    continue  # malformed source row: drop, never kill the task
-                if not isinstance(text, str):
-                    text = ""  # NULL text -> empty document
-                for k in range(repeat):
-                    did = int(doc_id) + k * 1_000_000_000
-                    d = builder(did, text)
-                    out.append({"doc_id": did, "spans": d["span_rows"]})
-            yield pd.DataFrame(out, columns=["doc_id", "spans"])
+    def gen(doc_id, text):
+        if doc_id is None:
+            return []  # malformed source row: drop, never kill the task
+        text = text or ""  # NULL text -> empty document
+        dids = [doc_id + k * 1_000_000_000 for k in range(repeat)]
+        return [(did, builder(did, text)["span_rows"]) for did in dids]
 
-    return documents.select("doc_id", "text").mapInPandas(gen, schema=DOCUMENTS_RAW)
+    return map_rows(documents.select("doc_id", "text"), DOCUMENTS_RAW, gen)

@@ -12,18 +12,16 @@ in place under their own resources.  It emits text events (with their
 scope and, for TJ, their parts), ActualText replacements (``atext``),
 media events, and the errors the interpreter records (dangling XObject,
 form recursion cap).  Pages are independent, so this stage is
-embarrassingly parallel — no shuffle (narrow mapInPandas).
+embarrassingly parallel — no shuffle (narrow mapInArrow).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.extract import _content_events, _contained, show_operand, table_scopes
+from ..runner import map_rows
 from ..schema import TOKENS
 
 _EMPTY = dict.fromkeys(TOKENS.fieldNames())
@@ -56,13 +54,4 @@ def tokenize(decoded: DataFrame) -> DataFrame:
         "doc_id", "page_idx", "data", "scopes", "forms"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, page_idx, data, scopes, forms in zip(
-                pdf["doc_id"], pdf["page_idx"], pdf["data"], pdf["scopes"], pdf["forms"]
-            ):
-                rows.extend(_page_rows(int(doc_id), int(page_idx), bytes(data), scopes, forms))
-            yield pd.DataFrame(rows, columns=TOKENS.fieldNames())
-
-    return pages.mapInPandas(run, schema=TOKENS)
+    return map_rows(pages, TOKENS, _page_rows)

@@ -5,7 +5,7 @@ This is the continuous-ingest shape of the pipeline (BASELINE.json north
 star is a resumable batch DAG; real deployments also tail an arriving
 corpus): new documents stream in, every micro-batch flows through the
 same zero-shuffle fused kernel (`stages.fused.extract_fused` over
-`synthesize_corpus` — both plain ``mapInPandas``, stateless, so they
+`synthesize_corpus` — both plain ``mapInArrow``, stateless, so they
 lift to streaming DataFrames unchanged), and ``foreachBatch`` commits
 each batch into the table format with the batch-id-idempotent pattern
 (see `textops.events.stream_window_to_snapshot_log`): a checkpoint

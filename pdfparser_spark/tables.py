@@ -59,7 +59,7 @@ def detect_tables(
         # ONE shuffle for the whole operator: clustering on (doc_id,
         # page_idx) satisfies the agg's (doc_id, page_idx, y) grouping AND
         # every window below, so Catalyst inserts no further Exchange.
-        # (The layout kernel's mapInPandas reports UnknownPartitioning, so
+        # (The layout kernel's mapInArrow reports UnknownPartitioning, so
         # upstream doc_id clustering can't be reused declaratively.)
         lines.repartition("doc_id", "page_idx")
         .groupBy("doc_id", "page_idx", "y")

@@ -10,7 +10,7 @@ rarity scoring), and the multimodal metadata/decode path.
 
 Everything is expressed in built-in ``pyspark.sql.functions`` (JVM-side,
 whole-stage-codegen'd) except the media decode stub, which is the one
-genuinely-Python kernel (mapInPandas, Arrow batches).  Every operator is
+genuinely-Python kernel (mapInArrow, Arrow batches).  Every operator is
 deterministic (md5-derived hashing, no RNG) so a DuckDB oracle can verify
 values bit-for-bit.
 """

@@ -23,12 +23,12 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from pdfparser_spark.runner import map_rows
 
 RATES = (8000, 16000, 22050, 44100)
 
@@ -169,31 +169,15 @@ def audio_features(spans_flat: DataFrame) -> DataFrame:
     """REAL decode over the WAV payload column: parse the RIFF bytes,
     emit integer features (rate, channels, n_samples, duration_ms, peak,
     sum_abs).  All-integer so the oracle recomputes them exactly."""
-    payloads = audio_payloads(spans_flat)
+    def rows_of(d, m, payload):
+        rate, ch, arr = decode_wav(payload)
+        a = np.abs(arr.astype(np.int64))
+        n = arr.shape[0]
+        return [(d, m, rate, ch, n, n * 1000 // rate, int(a.max()), int(a.sum()))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rates, chs, ns, durs, peaks, sums = [], [], [], [], [], []
-            for raw in pdf["payload"]:
-                rate, ch, arr = decode_wav(bytes(raw))
-                a = np.abs(arr.astype(np.int64))
-                rates.append(rate)
-                chs.append(ch)
-                ns.append(arr.shape[0])
-                durs.append(arr.shape[0] * 1000 // rate)
-                peaks.append(int(a.max()))
-                sums.append(int(a.sum()))
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["rate"] = rates
-            out["channels"] = chs
-            out["n_samples"] = ns
-            out["duration_ms"] = durs
-            out["peak"] = peaks
-            out["sum_abs"] = sums
-            yield out
-
-    return payloads.mapInPandas(
-        run,
-        schema="doc_id long, media_ref string, rate int, channels int, "
+    return map_rows(
+        audio_payloads(spans_flat),
+        "doc_id long, media_ref string, rate int, channels int, "
         "n_samples int, duration_ms int, peak int, sum_abs long",
+        rows_of,
     )

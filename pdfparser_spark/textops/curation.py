@@ -38,11 +38,14 @@ magnitude smaller than the corpus.
 
 from __future__ import annotations
 
+import unicodedata
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import dedup, textqc
 from ..rounding import r4
+from ..runner import map_rows
 
 # Deterministic eval-set membership for the decontamination demo: every
 # (doc_id % EVAL_MOD == EVAL_REM)th document plays the benchmark role.
@@ -489,35 +492,25 @@ def unicode_normalize(documents: DataFrame, form: str = "NFC") -> DataFrame:
     e.g. the CCNet / Gopher preprocessing descriptions).
 
     Spark has no codepoint-normalization builtin, so this is one of the
-    few legitimately Python-side ops: a single Arrow-batched mapInPandas
+    few legitimately Python-side ops: a single Arrow-batched mapInArrow
     projection (zero shuffle — the normalization is stateless per row;
     at 100 TB the plan is scan -> kernel -> sink).  ``n_folded`` counts
     the codepoints removed by composition (len before - after),
     ``changed`` flags rows the fold actually touched.  The oracle is
     DuckDB's independent ``nfc_normalize`` — a cross-engine check of the
     actual Unicode tables, not a replayed formula."""
-    import pandas as pd  # local: keep module import-light on the driver
-
     if form != "NFC":  # documented: the oracle pins NFC; NFKC etc. would
         raise ValueError("only NFC is wired to the cross-engine oracle")
 
-    def run(batches):
-        import unicodedata
+    def rows_of(doc_id, text):
+        src = text or ""
+        norm = unicodedata.normalize("NFC", src)
+        return [(doc_id, norm, len(src) - len(norm), src != norm)]
 
-        for pdf in batches:
-            src = pdf["text"].fillna("")
-            norm = src.map(lambda t: unicodedata.normalize("NFC", t))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "norm_text": norm,
-                    "n_folded": src.str.len() - norm.str.len(),
-                    "changed": src.ne(norm),
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        run, schema="doc_id long, norm_text string, n_folded long, changed boolean"
+    return map_rows(
+        documents.select("doc_id", "text"),
+        "doc_id long, norm_text string, n_folded long, changed boolean",
+        rows_of,
     )
 
 

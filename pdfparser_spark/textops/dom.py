@@ -29,7 +29,7 @@ legitimately OUTSCORES the article — so the extractor's choice of subtree
 is contested, not fixed, and the oracle checks the decision itself
 (winner class + tag path) plus the metrics and the extracted text.
 
-Scale: parse + score is a narrow per-doc Arrow kernel (``mapInPandas``,
+Scale: parse + score is a narrow per-doc Arrow kernel (``mapInArrow``,
 zero shuffle); the page synthesis is a JVM projection, so column pruning
 reaches the parquet scan.  The parser is lenient (never raises on corrupt
 markup — fuzzed in tests) and iterative throughout (no recursion, so a
@@ -38,11 +38,10 @@ markup — fuzzed in tests) and iterative throughout (no recursion, so a
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..runner import map_rows
 
 MIN_P_CHARS = 25
 
@@ -355,25 +354,14 @@ DOM_SCHEMA = (
 
 
 def dom_extract(pages: DataFrame) -> DataFrame:
-    """(doc_id, html) -> winner-subtree row per doc; one mapInPandas,
+    """(doc_id, html) -> winner-subtree row per doc; one mapInArrow,
     zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, src in zip(pdf["doc_id"], pdf["html"]):
-                res = extract_main(src)
-                if res is None:
-                    continue
-                res["doc_id"] = int(doc_id)
-                rows.append(res)
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "winner", "path", "p_count", "points2",
-                         "text_len", "link_len", "main_text"],
-            )
+    def rows_of(doc_id, src):
+        res = extract_main(src)
+        return [] if res is None else [{**res, "doc_id": doc_id}]
 
-    return pages.mapInPandas(run, schema=DOM_SCHEMA)
+    return map_rows(pages.select("doc_id", "html"), DOM_SCHEMA, rows_of)
 
 
 def dom_main_content(documents: DataFrame) -> DataFrame:

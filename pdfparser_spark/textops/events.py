@@ -29,6 +29,11 @@ from pyspark.sql.window import Window
 
 from ..rounding import r2 as _r2  # engine-portable half-up (one shared def)
 
+# the events corpus's ingest cutoff: every ``ts`` falls before it (a test
+# checks each scale factor), so it stands in for the max-timestamp
+# pre-scan as ``stream_interval_join_outer``'s ``horizon``
+EVENTS_HORIZON = "2024-02-01T00:00:00"
+
 
 def _agg(df: DataFrame) -> DataFrame:
     return (

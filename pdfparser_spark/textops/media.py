@@ -3,7 +3,7 @@ metadata.
 
 The pipeline treats image/audio/video as ``binary`` columns with a
 metadata struct; decode / feature-extract runs as an Arrow-batched
-``mapInPandas`` kernel.  Two decode tiers:
+``mapInArrow`` kernel.  Two decode tiers:
 
   * REAL decode — binary PPM (P6), 24-bit BMP, PNG (``textops/png.py``:
     chunk walk + CRC, zlib inflate, per-row filter reconstruction), and
@@ -30,15 +30,14 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pdfparser_spark.runner import map_rows
 from pdfparser_spark.textops import gif, jpeg, png, tiff
 
 MEDIA_META = T.StructType(
@@ -78,21 +77,11 @@ def media_payload_kernel(spans_flat: DataFrame, make_payload) -> DataFrame:
     media_ref) -> bytes`` in an Arrow-batched kernel.  At production the
     bytes come from the source table instead."""
     media = spans_flat.filter(F.col("kind") == "media").select("doc_id", "media_ref")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media_ref": pdf["media_ref"],
-                    "payload": [
-                        make_payload(int(d), m)
-                        for d, m in zip(pdf["doc_id"], pdf["media_ref"])
-                    ],
-                }
-            )
-
-    return media.mapInPandas(run, schema="doc_id long, media_ref string, payload binary")
+    return map_rows(
+        media,
+        "doc_id long, media_ref string, payload binary",
+        lambda d, m: [(d, m, make_payload(d, m))],
+    )
 
 
 def _fake_meta(doc_id: int, media_ref: str) -> tuple[str, int, int, int]:
@@ -110,23 +99,7 @@ def _fake_meta(doc_id: int, media_ref: str) -> tuple[str, int, int, int]:
 def media_metadata(spans_flat: DataFrame) -> DataFrame:
     """Media spans -> typed metadata via the Arrow-batched decode kernel."""
     media = spans_flat.filter(F.col("kind") == "media").select("doc_id", "media_ref")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_fake_meta(int(d), m) for d, m in zip(pdf["doc_id"], pdf["media_ref"])]
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media_ref": pdf["media_ref"],
-                    "fmt": [m[0] for m in metas],
-                    "width": [m[1] for m in metas],
-                    "height": [m[2] for m in metas],
-                    "n_frames": [m[3] for m in metas],
-                }
-            )
-            yield out
-
-    return media.mapInPandas(run, schema=MEDIA_META)
+    return map_rows(media, MEDIA_META, lambda d, m: [(d, m, *_fake_meta(d, m))])
 
 
 # ---------------------------------------------------------------------------
@@ -336,28 +309,17 @@ def media_decode_real(spans_flat: DataFrame) -> DataFrame:
     the oracle recomputes it analytically from the gradient rule."""
     payloads = media_payloads(spans_flat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep, fmts, ws, hs, sums = [], [], [], [], []
-            for i, raw in enumerate(pdf["payload"]):
-                dec = sniff_decode(bytes(raw))
-                if dec is None:  # unrecognized magic: skip, never kill the task
-                    continue
-                fmt, w, h, img = dec
-                keep.append(i)
-                fmts.append(fmt)
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(img.sum(dtype=np.int64)))
-            out = pdf.iloc[keep][["doc_id", "media_ref"]].copy()
-            out["fmt"] = fmts
-            out["width"] = ws
-            out["height"] = hs
-            out["pixel_sum"] = sums
-            yield out
+    def rows_of(doc_id, media_ref, payload):
+        dec = sniff_decode(payload)
+        if dec is None:  # unrecognized magic: skip, never kill the task
+            return []
+        fmt, w, h, img = dec
+        return [(doc_id, media_ref, fmt, w, h, int(img.sum(dtype=np.int64)))]
 
-    return payloads.mapInPandas(
-        run, schema="doc_id long, media_ref string, fmt string, width int, height int, pixel_sum long"
+    return map_rows(
+        payloads,
+        "doc_id long, media_ref string, fmt string, width int, height int, pixel_sum long",
+        rows_of,
     )
 
 
@@ -368,30 +330,19 @@ def media_resize_real(spans_flat: DataFrame, target_w: int = 64) -> DataFrame:
     arithmetic, not just the geometry."""
     payloads = media_payloads(spans_flat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep, out_ws, out_hs, sums = [], [], [], []
-            for i, raw in enumerate(pdf["payload"]):
-                dec = sniff_decode(bytes(raw))
-                if dec is None:  # unrecognized magic: skip, never kill the task
-                    continue
-                _fmt, w, h, img = dec
-                keep.append(i)
-                out_h = max(1, int(h * target_w / w + 0.5))
-                rr = (np.arange(out_h, dtype=np.int64) * h) // out_h
-                cc = (np.arange(target_w, dtype=np.int64) * w) // target_w
-                resized = img[rr][:, cc]
-                out_ws.append(target_w)
-                out_hs.append(out_h)
-                sums.append(int(resized.sum(dtype=np.int64)))
-            out = pdf.iloc[keep][["doc_id", "media_ref"]].copy()
-            out["out_w"] = out_ws
-            out["out_h"] = out_hs
-            out["pixel_sum"] = sums
-            yield out
+    def rows_of(doc_id, media_ref, payload):
+        dec = sniff_decode(payload)
+        if dec is None:  # unrecognized magic: skip, never kill the task
+            return []
+        _fmt, w, h, img = dec
+        out_h = max(1, int(h * target_w / w + 0.5))
+        rr = (np.arange(out_h, dtype=np.int64) * h) // out_h
+        cc = (np.arange(target_w, dtype=np.int64) * w) // target_w
+        resized = img[rr][:, cc]
+        return [(doc_id, media_ref, target_w, out_h, int(resized.sum(dtype=np.int64)))]
 
-    return payloads.mapInPandas(
-        run, schema="doc_id long, media_ref string, out_w int, out_h int, pixel_sum long"
+    return map_rows(
+        payloads, "doc_id long, media_ref string, out_w int, out_h int, pixel_sum long", rows_of
     )
 
 
@@ -422,17 +373,11 @@ def media_resize(media_meta: DataFrame, target_w: int = 64) -> DataFrame:
         ).alias("out_h"),
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["resized_md5"] = [
-                hashlib.md5(f"{int(d)}:{m}:{int(w)}x{int(h)}".encode()).hexdigest()
-                for d, m, w, h in zip(pdf["doc_id"], pdf["media_ref"], pdf["out_w"], pdf["out_h"])
-            ]
-            yield pdf
+    def rows_of(d, m, w, h):
+        return [(d, m, w, h, hashlib.md5(f"{d}:{m}:{w}x{h}".encode()).hexdigest())]
 
     schema = "doc_id long, media_ref string, out_w int, out_h int, resized_md5 string"
-    return geo.mapInPandas(run, schema=schema)
+    return map_rows(geo, schema, rows_of)
 
 
 def _make_exif_jpeg(doc_id: int, media_ref: str) -> bytes:
@@ -485,41 +430,21 @@ def media_jpx(spans_flat: DataFrame) -> DataFrame:
 
     payloads = media_payload_kernel(spans_flat, _make_jpx)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "media_ref", "width", "height", "n_components",
-                "bit_depth", "brand", "colorspace", "progression",
-                "n_layers", "n_decomp"]
-        for pdf in batches:
-            rows = []
-            for d, m, raw in zip(pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                try:
-                    meta = parse_jpx_header(bytes(raw))
-                except ValueError:  # damaged payload: skip, never kill the task
-                    continue
-                rows.append(
-                    {
-                        "doc_id": int(d),
-                        "media_ref": m,
-                        "width": int(meta["width"]),
-                        "height": int(meta["height"]),
-                        "n_components": int(meta["n_components"]),
-                        "bit_depth": int(meta["bit_depth"]),
-                        "brand": meta["brand"],
-                        "colorspace": meta["colorspace"],
-                        "progression": meta["progression"],
-                        "n_layers": int(meta["n_layers"]),
-                        "n_decomp": int(meta["n_decomp"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(d, m, payload):
+        try:
+            meta = parse_jpx_header(payload)
+        except ValueError:  # damaged payload: skip, never kill the task
+            return []
+        return [{"doc_id": d, "media_ref": m, **meta}]
 
-    return payloads.mapInPandas(
-        run,
-        schema=(
+    return map_rows(
+        payloads,
+        (
             "doc_id long, media_ref string, width int, height int, "
             "n_components int, bit_depth int, brand string, colorspace string, "
             "progression string, n_layers int, n_decomp int"
         ),
+        rows_of,
     )
 
 
@@ -584,44 +509,29 @@ def media_jpx_decode(spans_flat: DataFrame) -> DataFrame:
 
     payloads = media_payload_kernel(spans_flat, _make_jpx_real)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "media_ref", "width", "height", "n_components",
-                "pixel_sum", "lossy", "within_band"]
-        for pdf in batches:
-            rows = []
-            for d, m, raw in zip(pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                try:
-                    w, h, img = decode_jp2_image(bytes(raw))
-                except ValueError:  # damaged payload: skip, never kill the task
-                    continue
-                lossy = int(d) % 2 == 1
-                if lossy:
-                    ok = _within_band(img, _jpx_real_image(int(d), m)[0])
-                    psum = None
-                else:
-                    ok = True
-                    psum = int(img.sum(dtype=np.int64))
-                rows.append(
-                    {
-                        "doc_id": int(d),
-                        "media_ref": m,
-                        "width": w,
-                        "height": h,
-                        "n_components": 1 if img.ndim == 2 else img.shape[2],
-                        "pixel_sum": psum,
-                        "lossy": lossy,
-                        "within_band": ok,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(d, m, payload):
+        try:
+            w, h, img = decode_jp2_image(payload)
+        except ValueError:  # damaged payload: skip, never kill the task
+            return []
+        lossy = d % 2 == 1
+        if lossy:
+            ok = _within_band(img, _jpx_real_image(d, m)[0])
+            psum = None
+        else:
+            ok = True
+            psum = int(img.sum(dtype=np.int64))
+        n_components = 1 if img.ndim == 2 else img.shape[2]
+        return [(d, m, w, h, n_components, psum, lossy, ok)]
 
-    return payloads.mapInPandas(
-        run,
-        schema=(
+    return map_rows(
+        payloads,
+        (
             "doc_id long, media_ref string, width int, height int, "
             "n_components int, pixel_sum long, lossy boolean, "
             "within_band boolean"
         ),
+        rows_of,
     )
 
 
@@ -635,32 +545,20 @@ def media_exif(spans_flat: DataFrame) -> DataFrame:
 
     payloads = media_payload_kernel(spans_flat, _make_exif_jpeg)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "media_ref", "byte_order", "make", "model",
-                "orientation", "taken"]
-        for pdf in batches:
-            rows = []
-            for d, m, raw in zip(pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                meta = parse_exif(bytes(raw))
-                if meta is None:  # no or damaged Exif: skip, never kill the task
-                    continue
-                rows.append(
-                    {
-                        "doc_id": int(d),
-                        "media_ref": m,
-                        "byte_order": meta.get("byte_order"),
-                        "make": meta.get("make"),
-                        "model": meta.get("model"),
-                        "orientation": int(meta.get("orientation") or 0),
-                        "taken": meta.get("datetime"),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(d, m, payload):
+        meta = parse_exif(payload)
+        if meta is None:  # no or damaged Exif: skip, never kill the task
+            return []
+        return [(
+            d, m, meta.get("byte_order"), meta.get("make"), meta.get("model"),
+            int(meta.get("orientation") or 0), meta.get("datetime"),
+        )]
 
-    return payloads.mapInPandas(
-        run,
-        schema=(
+    return map_rows(
+        payloads,
+        (
             "doc_id long, media_ref string, byte_order string, make string, "
             "model string, orientation int, taken string"
         ),
+        rows_of,
     )

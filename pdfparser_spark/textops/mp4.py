@@ -421,37 +421,27 @@ def video_frames_real(spans_flat, every: int = 5):
     makes the lossy round trip integer-predictable, so the DuckDB oracle
     recomputes it analytically (the same closed form as
     ``media_decode_real``, plus the per-frame offset)."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
+    from pdfparser_spark.runner import map_rows
     from pdfparser_spark.textops.media import decode_video_real
 
     payloads = video_mjpeg_payloads(spans_flat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, m, raw in zip(pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                try:
-                    v = decode_video_real(bytes(raw))
-                except ValueError:
-                    continue  # undecodable codec/corrupt: skip, never kill the task
-                for f in range(0, v["n_frames"], every):
-                    img = v["frames"][f]
-                    rows.append(
-                        (int(d), m, f, v["width"], v["height"], int(img.sum(dtype=np.int64)))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "media_ref", "frame_idx", "width", "height", "pixel_sum"],
-            )
+    def rows_of(d, m, payload):
+        try:
+            v = decode_video_real(payload)
+        except ValueError:
+            return []  # undecodable codec/corrupt: skip, never kill the task
+        return [
+            (d, m, f, v["width"], v["height"], int(v["frames"][f].sum(dtype=np.int64)))
+            for f in range(0, v["n_frames"], every)
+        ]
 
-    return payloads.mapInPandas(
-        run,
-        schema="doc_id long, media_ref string, frame_idx int, width int, "
-        "height int, pixel_sum long",
+    return map_rows(
+        payloads,
+        "doc_id long, media_ref string, frame_idx int, width int, height int, pixel_sum long",
+        rows_of,
     )
 
 
@@ -459,32 +449,16 @@ def video_metadata(spans_flat):
     """REAL container parse over the MP4 payload column: walk the actual
     box structure and emit (brand, duration_ms, n_tracks, width, height)
     — all integers/strings, recomputed exactly by the DuckDB oracle."""
-    from collections.abc import Iterator
+    from pdfparser_spark.runner import map_rows
 
-    import pandas as pd
+    def rows_of(d, m, payload):
+        meta = decode_mp4_meta(payload)
+        w, h = meta["video"] or (0, 0)
+        return [(d, m, meta["brand"], meta["duration_ms"], meta["n_tracks"], w, h)]
 
-    payloads = video_payloads(spans_flat)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            brands, durs, tracks, ws, hs = [], [], [], [], []
-            for raw in pdf["payload"]:
-                m = decode_mp4_meta(bytes(raw))
-                brands.append(m["brand"])
-                durs.append(m["duration_ms"])
-                tracks.append(m["n_tracks"])
-                ws.append(m["video"][0] if m["video"] else 0)
-                hs.append(m["video"][1] if m["video"] else 0)
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["brand"] = brands
-            out["duration_ms"] = durs
-            out["n_tracks"] = tracks
-            out["width"] = ws
-            out["height"] = hs
-            yield out
-
-    return payloads.mapInPandas(
-        run,
-        schema="doc_id long, media_ref string, brand string, duration_ms int, "
+    return map_rows(
+        video_payloads(spans_flat),
+        "doc_id long, media_ref string, brand string, duration_ms int, "
         "n_tracks int, width int, height int",
+        rows_of,
     )

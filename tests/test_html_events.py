@@ -344,3 +344,21 @@ def test_stream_outer_interval_join_equals_batch_left_join(spark, sf_dir):
     )
     assert got == exp
     assert any(b is None for _a, b in got)  # real outer rows flushed
+
+
+def test_events_horizon_is_past_every_scale_factor(sf_dir):
+    # events_stream_outer_join passes EVENTS_HORIZON instead of scanning
+    # for the max timestamp; a corpus reaching it would leave the outer
+    # state unflushed and drop the null-extended rows
+    import glob
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    horizon = dt.datetime.fromisoformat(events.EVENTS_HORIZON)
+    paths = glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*", "events.parquet"))
+    assert paths
+    for path in paths:
+        ts = pq.read_table(path, columns=["ts"])["ts"]
+        assert pc.max(ts).as_py() < horizon, path

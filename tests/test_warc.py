@@ -170,7 +170,7 @@ def test_cdx_index_and_range_fetch(spark, tmp_path):
 
 def test_warc_plans_are_scan_only(spark, tmp_path):
     """The ingest plan's only operators are scan -> project -> the one
-    mapInPandas (zero Exchange); the CDX fetch plan likewise never
+    mapInArrow (zero Exchange); the CDX fetch plan likewise never
     shuffles — data movement is exactly the scan at any corpus scale."""
     docs = spark.createDataFrame(
         [(i, f"t{i}") for i in range(10)], "doc_id long, text string"
