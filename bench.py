@@ -2,25 +2,20 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+``/root/testdata/sf0.1``) on ``build_session()``'s ``local[N]`` (N = the
+CPUs in the affinity mask, or ``SPARK_GRAFT_CPUS``) and prints ONE JSON
+line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Extra keys beyond the contract: ``docs_per_sec`` (the BASELINE.json primary
-metric — documents/sec through the full extraction DAG) and ``scaling``
-(throughput at two parallelism levels on identical input + efficiency, the
-in-sandbox rendering of BASELINE.json's N -> 4N executor criterion).
-
-Scaling methodology: the same extraction job (decode -> tokenize ->
-classify -> assemble over a pre-materialized salted-layout corpus, no
-checkpoint reuse) at ``local[N]`` and ``local[4N]`` (N = CPUS // 4, at
-least 2) on the identical input.  Efficiency = (docs_per_sec_4N /
-docs_per_sec_N) / 4.
-The measurement is slow (two fresh sessions over a x96 corpus), so it runs
-via ``python bench.py --scaling`` which persists ``BENCH/scaling.json`` +
-``BENCH/BASELINE.md``; default runs are headline-only and attach the most
-recent persisted scaling result.
+metric: documents/sec through the fused single-pass extraction),
+``docs_per_sec_staged_dag`` (the same documents through the staged DAG) and
+``scaling``, measured in this run: the headline's ``extract_fused`` timing at
+N cores against the same job at one core, with the whole process tree
+(driver, JVM, Python workers) pinned to one CPU.  Efficiency =
+(docs_per_sec_N / docs_per_sec_1) / N.  On a one-core session ``scaling`` is
+left out.  A run writes no file into the checkout.
 """
 
 from __future__ import annotations
@@ -40,17 +35,11 @@ from pdfparser_spark.pipeline import Pipeline  # noqa: E402
 from pdfparser_spark.session import build_session  # noqa: E402
 from pdfparser_spark.stages import extract_fused, synthesize_corpus  # noqa: E402
 from pdfparser_spark.textops import ann, dedup, graph, model, textqc  # noqa: E402
+from perfbench.engine import pin_tree  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
-# repeat factor for the scaling corpus: enough per-core work that JVM/task
-# overhead doesn't dominate the local[4N] run.  Per-doc kernel cost on the
-# synthetic corpus is ~1ms core-time per stage chain, so 96 x 5000 sf0.1
-# docs ~= 480k docs ~= 7 core-minutes of work -> the local[8] run is
-# solidly core-bound and the fixed few-second barrier cost is <10% even at
-# local[32].
-SCALE_REPEAT = int(os.environ.get("SPARK_GRAFT_SCALE_REPEAT", "96"))
-BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+# warm-up input: the smallest scale factor, next to SF_DIR
+WARM_DIR = os.path.join(os.path.dirname(os.path.normpath(SF_DIR)), "sf0.001")
 
 
 def _sf_of(path: str) -> float:
@@ -61,18 +50,8 @@ def _sf_of(path: str) -> float:
         return -1.0
 
 
-def _docs(spark, name="documents"):
-    return spark.read.parquet(os.path.join(SF_DIR, f"{name}.parquet"))
-
-
-def _docs_at(spark, sf_dir, name="documents"):
+def _table(spark, name: str, sf_dir: str = SF_DIR):
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def timed(fn):
-    t0 = time.perf_counter()
-    n = fn()
-    return round(time.perf_counter() - t0, 3), n
 
 
 def timed_best2(fn, between=None):
@@ -80,11 +59,10 @@ def timed_best2(fn, between=None):
     more than 50%): single-box timings carry multi-second noise (GC
     pauses, page cache, first-plan codegen, co-tenant load) that can
     dominate a 3s query; the faster warm run is the truer steady-state
-    capability (CLAUDE.md measurement policy).  The adaptive third
-    attempt costs nothing when the box is quiet and halves the damage a
-    noisy patch does to the one recorded per-round number.  ``between``
-    runs after each attempt (cache release) so every run re-executes the
-    full plan."""
+    capability.  The adaptive third attempt costs nothing when the box is
+    quiet and halves the damage a noisy patch does to the one recorded
+    number.  ``between`` runs after each attempt (cache release) so every
+    run re-executes the full plan."""
     times, n = [], None
     for attempt in range(3):
         t0 = time.perf_counter()
@@ -97,7 +75,7 @@ def timed_best2(fn, between=None):
     return round(min(times), 3), n
 
 
-def materialized_corpus(spark, sf_dir: str, repeat: int = 1):
+def materialized_corpus(spark, sf_dir: str):
     """Synthesize + persist the interleaved raw corpus (input prep — at
     production the Iceberg table already exists, so this is NOT timed).
 
@@ -109,12 +87,16 @@ def materialized_corpus(spark, sf_dir: str, repeat: int = 1):
     is written with — so the timed job runs ``Pipeline(pre_balanced=True)``,
     the steady-state shape."""
     n_parts = spark.sparkContext.defaultParallelism * 3
-    documents = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).repartition(
-        n_parts, "doc_id"
-    )
-    raw = repartition_docs(synthesize_corpus(documents, repeat=repeat), n_parts).persist()
+    documents = _table(spark, "documents", sf_dir).repartition(n_parts, "doc_id")
+    raw = repartition_docs(synthesize_corpus(documents), n_parts).persist()
     raw.count()
     return raw
+
+
+def fused_docs(raw) -> int:
+    """One fused single-pass extraction over ``raw``; returns its doc count."""
+    row = extract_fused(raw).select(F.count(F.lit(1)).alias("docs"), F.sum(F.size("spans"))).collect()
+    return int(row[0]["docs"])
 
 
 def run_headline(spark) -> tuple[dict, int]:
@@ -125,10 +107,9 @@ def run_headline(spark) -> tuple[dict, int]:
     # measures compute, not worker spawn; also warm whole-stage codegen for
     # the shingle/minhash expression tree (its first compile costs seconds
     # and belongs to session startup, not the operator); then drop caches.
-    warm_dir = os.path.join(os.path.dirname(os.path.normpath(SF_DIR)), "sf0.001")
-    warm = materialized_corpus(spark, warm_dir)
+    warm = materialized_corpus(spark, WARM_DIR)
     Pipeline(spark, work_dir=None).run(warm)["spans"].count()
-    dedup.lsh_candidate_pairs(_docs_at(spark, warm_dir)).count()
+    dedup.lsh_candidate_pairs(_table(spark, "documents", WARM_DIR)).count()
     release_cached()
     spark.catalog.clearCache()
     raw = materialized_corpus(spark, SF_DIR)
@@ -152,20 +133,17 @@ def run_headline(spark) -> tuple[dict, int]:
         while pipelines:
             pipelines.pop().release()
 
-    # best-of-2 like everything else: single-shot walls swing 2-3x with
-    # background load, and the driver benches once per round
     sec, agg = timed_best2(full_dag, between=_release_pipelines)
     out["extract_full_dag"] = sec
     n_docs = int(agg[0]["docs"])
     _release_pipelines()
 
     # q1b: the fused single-pass mode (zero-shuffle steady-state path)
-    out["extract_fused"], _ = timed_best2(
-        lambda: extract_fused(raw).select(F.count(F.lit(1)), F.sum(F.size("spans"))).collect()
-    )
+    out["extract_fused"], _ = timed_best2(lambda: fused_docs(raw))
 
-    docs = _docs(spark)
-    emb = _docs(spark, "embeddings")
+    docs = _table(spark, "documents")
+    emb = _table(spark, "embeddings")
+
     def _release():
         release_cached()  # drop persisted subplans so re-runs re-execute
         spark.catalog.clearCache()
@@ -179,7 +157,7 @@ def run_headline(spark) -> tuple[dict, int]:
     )
     out["ann_cosine_topk"], _ = timed_best2(lambda: ann.cosine_topk(emb).count())
 
-    lineitem = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
+    lineitem = _table(spark, "lineitem")
     out["tpch_q1_pricing"], _ = timed_best2(
         lambda: lineitem.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
@@ -194,529 +172,53 @@ def run_headline(spark) -> tuple[dict, int]:
     return out, n_docs
 
 
-def extraction_throughput(n_cores: int, repeat: int) -> dict:
-    """docs/sec of extraction at local[n_cores] over the identical corpus.
-
-    Times the FUSED single-pass job — the steady-state throughput mode
-    (zero shuffle, pure per-doc compute), which is what actually scales
-    with executors; the staged checkpointed DAG is measured in the
-    headline (its shuffle/persist fraction is disk-/memory-bandwidth-bound
-    and on a single box would make a core-count scaling measurement
-    measure the disk, not the engine)."""
-    spark = build_session(master=f"local[{n_cores}]", shuffle_partitions=max(8, n_cores))
+def one_core_fused() -> tuple[float, int]:
+    """The headline's ``extract_fused`` timing on one CPU: pin the process
+    tree to one CPU of the affinity mask, start a ``local[1]`` session, warm
+    it, time the fused pass over the same corpus by the same rule, and
+    restore the mask.  Returns (sec, docs)."""
+    allowed = os.sched_getaffinity(0)
+    pin_tree({min(allowed)})
     try:
-        # warm the JVM/Arrow path so we time steady-state compute, not startup
-        warm = materialized_corpus(spark, os.path.join(os.path.dirname(os.path.normpath(SF_DIR)), "sf0.001"))
-        extract_fused(warm).select(F.sum(F.size("spans"))).collect()
-        # drop warm-up cache entries so the timed plan can't alias them
-        # (Spark's cache manager dedupes persisted plans by analyzed plan)
-        spark.catalog.clearCache()
-        raw = materialized_corpus(spark, SF_DIR, repeat=repeat)
-        # best-of-2: wall timings on a shared box carry multi-second noise
-        # (page cache, cron, GC); the faster run is the truer capability
-        times = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            n = extract_fused(raw).count()
-            times.append(time.perf_counter() - t0)
-        dt = min(times)
-        return {"cores": n_cores, "docs": int(n), "sec": round(dt, 3),
-                "docs_per_sec": round(n / dt, 2), "runs_sec": [round(t, 3) for t in times]}
+        spark = build_session(master="local[1]")
+        try:
+            fused_docs(materialized_corpus(spark, WARM_DIR))
+            # the cache manager dedupes persisted plans: drop the warm-up's
+            spark.catalog.clearCache()
+            raw = materialized_corpus(spark, SF_DIR)
+            return timed_best2(lambda: fused_docs(raw))
+        finally:
+            spark.stop()
     finally:
-        spark.stop()
-
-
-def write_scaling_md(
-    lo: dict,
-    hi: dict,
-    eff: float,
-    hw: dict | None = None,
-    normalized: float | None = None,
-    base: dict | None = None,
-    eff_base: float | None = None,
-    hw_eff_base: float | None = None,
-) -> None:
-    os.makedirs(BENCH_DIR, exist_ok=True)
-    path = os.path.join(BENCH_DIR, "BASELINE.md")
-    hist = _history()
-    hist_section = ""
-    if len(hist) >= 2:
-        effs = sorted(h["efficiency"] for h in hist)
-        norms = sorted(
-            h["efficiency_vs_hardware_ceiling"]
-            for h in hist
-            if h.get("efficiency_vs_hardware_ceiling") is not None
-        )
-        med = effs[len(effs) // 2] if len(effs) % 2 else round((effs[len(effs)//2 - 1] + effs[len(effs)//2]) / 2, 3)
-        medn = norms[len(norms) // 2] if len(norms) % 2 else round((norms[len(norms)//2 - 1] + norms[len(norms)//2]) / 2, 3)
-        def ratios(h):
-            hwc = h.get("hardware_ceiling") or {}
-            rl = rh = None
-            if hwc.get("lo_docs_per_sec"):
-                rl = round(h["low"]["docs_per_sec"] / hwc["lo_docs_per_sec"], 2)
-            if hwc.get("hi_docs_per_sec"):
-                rh = round(h["high"]["docs_per_sec"] / hwc["hi_docs_per_sec"], 2)
-            return rl, rh
-
-        rows = "\n".join(
-            f"| {h['low']['docs_per_sec']} | {h['high']['docs_per_sec']} | {h['efficiency']} | "
-            f"{h.get('efficiency_2_to_lo', '—')} | "
-            f"{h.get('hardware_ceiling', {}).get('efficiency', '—')} | {h.get('efficiency_vs_hardware_ceiling', '—')} | "
-            f"{ratios(h)[0] or '—'} | {ratios(h)[1] or '—'} |"
-            for h in hist
-        )
-        base_effs = sorted(
-            h["efficiency_2_to_lo"] for h in hist if h.get("efficiency_2_to_lo") is not None
-        )
-        medb = None
-        if base_effs:
-            medb = (
-                base_effs[len(base_effs) // 2]
-                if len(base_effs) % 2
-                else round((base_effs[len(base_effs)//2 - 1] + base_effs[len(base_effs)//2]) / 2, 3)
-            )
-        hist_section = (
-            "\n## Run history (single-box timings swing with background load)\n\n"
-            "| lo docs/sec | hi docs/sec | raw eff (lo->hi) | raw eff (2->lo) | hw ceiling | normalized | spark/bare @lo | spark/bare @hi |\n"
-            "|---|---|---|---|---|---|---|---|\n" + rows + "\n\n"
-            f"Across {len(hist)} pinned runs: **median raw efficiency {med}**, "
-            f"median hardware-normalized **{medn}**"
-            + (
-                f", median unsaturated-bus 2->{hist[-1]['hardware_ceiling']['lo_cores']} raw "
-                f"**{medb}**" if medb is not None else ""
-            )
-            + ".\n\n"
-            "Note the inverse relation visible in the table: the early runs\n"
-            "(round-1 kernel, ~1.3k docs/s-core) measured raw 0.82-0.83, and\n"
-            "after the round-2 kernel optimizations doubled per-core\n"
-            "throughput (~2.5k docs/s-core) raw fell to ~0.63-0.67 — with the\n"
-            "bare no-Spark probe falling in lockstep.  A faster kernel\n"
-            "saturates the shared memory bus sooner, so the single-box 8->32\n"
-            "rolloff steepens exactly as compute improves.  That inverse\n"
-            "relation is the cleanest evidence that the raw number measures\n"
-            "the box, not the engine: one could trivially 'score' raw >= 0.8\n"
-            "by de-optimizing the kernel, which would halve the primary\n"
-            "metric (docs/sec).  On a real N -> 4N executor scale-up each\n"
-            "executor brings its own memory buses and the rolloff does not\n"
-            "occur; the engine-attributable number is the normalized column.\n"
-            "Reading: the last two columns compare the Spark job's per-core\n"
-            "throughput against the bare-multiprocessing probe at the SAME\n"
-            "active-core count — ~1.0 at both levels means the engine runs at\n"
-            "the machine's physical per-core rate and adds no scaling penalty\n"
-            "of its own.  The raw 8->32 number therefore measures this box's\n"
-            "memory-bandwidth rolloff as active cores quadruple, which a real\n"
-            "N -> 4N *executor* scale-up does not experience (each new\n"
-            "executor brings its own memory buses); the engine-attributable\n"
-            "efficiency — the criterion's subject — is the normalized column.\n"
-        )
-    curve_section = ""
-    curve_path = os.path.join(BENCH_DIR, "curve3.json")
-    if os.path.exists(curve_path):
-        with open(curve_path) as f:
-            cv = json.load(f)
-        lv = cv["levels"]
-        curve_rows = "\n".join(
-            f"| {n} | {lv[n]['spark_dps']} | {lv[n]['hw_dps']} | "
-            f"{round(lv[n]['spark_dps']/int(n),1)} | {round(lv[n]['hw_dps']/int(n),1)} |"
-            for n in sorted(lv, key=int)
-        )
-        curve_section = (
-            "\n## Three-level curve (2 -> 8 -> 32 cores, one experiment)\n\n"
-            "Same job and corpus at three pinned widths — the low step shows\n"
-            "what scaling looks like while the shared memory bus is still\n"
-            "unsaturated, the high step shows the box's rolloff, and the bare\n"
-            "no-Spark probe mirrors both:\n\n"
-            "| cores | spark docs/sec | probe docs/sec | spark/core | probe/core |\n"
-            "|---|---|---|---|---|\n" + curve_rows + "\n\n"
-            f"- 2 -> 8 (4x): spark raw efficiency **{cv['spark_eff_2_to_8']}**, "
-            f"probe {cv['probe_eff_2_to_8']}\n"
-            f"- 8 -> 32 (4x): spark raw efficiency **{cv['spark_eff_8_to_32']}**, "
-            f"probe {cv['probe_eff_8_to_32']}\n\n"
-            "While the bus is unsaturated the job scales near-linearly (and\n"
-            "clears the >= 0.8 criterion raw); past ~8 active cores the BARE\n"
-            "KERNEL rolls off as hard as (here: harder than) the Spark job —\n"
-            "demonstrating within a single experiment that the 8 -> 32 raw\n"
-            "number measures memory bandwidth, not an engine scaling defect.\n"
-        )
-    hw_section = ""
-    if hw:
-        hw_section = (
-            "\n## Hardware ceiling (single-box normalization)\n\n"
-            "This sandbox measures both parallelism levels on ONE machine, so\n"
-            "memory bandwidth / cache / frequency are shared: per-core\n"
-            "throughput inherently drops as active cores rise.  A bare\n"
-            "multiprocessing probe (no Spark, no Arrow: one python process per\n"
-            "core running the identical `core.extract.extract_spans` kernel\n"
-            "over identical documents) measures the box's best-achievable\n"
-            "core-scaling for this workload:\n\n"
-            "| probe | docs/sec | per-core |\n|---|---|---|\n"
-            f"| {hw['lo_cores']} processes | {hw['lo_docs_per_sec']} | {round(hw['lo_docs_per_sec']/hw['lo_cores'],1)} |\n"
-            f"| {hw['hi_cores']} processes | {hw['hi_docs_per_sec']} | {round(hw['hi_docs_per_sec']/hw['hi_cores'],1)} |\n\n"
-            f"Hardware ceiling efficiency = **{hw['efficiency']}**.  The Spark\n"
-            f"job's efficiency relative to that ceiling = {eff} / "
-            f"{hw['efficiency']} = **{normalized}** — i.e. the ENGINE preserves\n"
-            "that fraction of the scaling the machine can physically deliver\n"
-            "(>= 0.8 criterion met on the engine's own contribution).  On a\n"
-            "real N -> 4N *executor* scale-up each new executor brings its own\n"
-            "memory bus, so the single-box ceiling does not apply there.\n"
-        )
-    with open(path, "w") as f:
-        f.write(
-            "# BENCH/BASELINE — measured scaling evidence\n\n"
-            "Same extraction job (the FUSED single-pass mode: the whole kernel —\n"
-            "xref -> objects -> filters -> page tree -> content tokenize -> CMap\n"
-            "decode -> ordered spans — in one mapInArrow, zero shuffles; see\n"
-            "`pdfparser_spark/stages/fused.py`), identical pre-materialized input\n"
-            f"corpus (`{SF_DIR}` documents x{SCALE_REPEAT} tiled, salted layout),\n"
-            "two parallelism levels — the in-sandbox rendering of BASELINE.json's\n"
-            "N vs 4N executors.  Each level runs in a subprocess PINNED to\n"
-            "exactly that many CPUs (taskset), so the low level can't borrow\n"
-            "idle cores for JVM auxiliary threads — the same boundary a real\n"
-            "N-executor deployment has:\n\n"
-            "| config | docs | wall sec | docs/sec |\n|---|---|---|---|\n"
-            + (
-                f"| local[{base['cores']}] | {base['docs']} | {base['sec']} | {base['docs_per_sec']} |\n"
-                if base
-                else ""
-            )
-            + f"| local[{lo['cores']}] | {lo['docs']} | {lo['sec']} | {lo['docs_per_sec']} |\n"
-            f"| local[{hi['cores']}] | {hi['docs']} | {hi['sec']} | {hi['docs_per_sec']} |\n\n"
-            f"**Raw scaling efficiency** = ({hi['docs_per_sec']} / {lo['docs_per_sec']}) / "
-            f"({hi['cores']} / {lo['cores']}) = **{eff}** (target >= 0.8, "
-            "BASELINE.json:2).\n"
-            + (
-                f"**Unsaturated-bus step** (2 -> {lo['cores']} cores, 4x): raw efficiency "
-                f"**{eff_base}**"
-                + (f" (bare probe: {hw_eff_base})" if hw_eff_base is not None else "")
-                + " — measured inside THIS run, before the shared memory bus\n"
-                "saturates; see the three-level curve below for why the\n"
-                f"{lo['cores']} -> {hi['cores']} raw number measures the box.\n"
-                if eff_base is not None
-                else ""
-            )
-            + hw_section + curve_section + hist_section +
-            "\nMethodology notes:\n"
-            "- The fused mode is the steady-state production path: per-document\n"
-            "  extraction crosses no document boundary, so its only data movement\n"
-            "  is the input scan and output write — the component that actually\n"
-            "  scales with executor count on a real cluster.\n"
-            "- The staged checkpointed DAG (resumability mode) adds three\n"
-            "  shuffles + two persisted intermediates; on a *single box* those\n"
-            "  are bound by one shared disk/memory-bus, so a local[N] vs\n"
-            "  local[4N] comparison of it measures the disk, not the engine —\n"
-            "  on a real 4N-executor cluster shuffle IO bandwidth scales with\n"
-            "  the executor count.  Its absolute throughput is reported in the\n"
-            "  headline bench (`extract_full_dag`).\n"
-        )
-
-
-def hardware_probe(procs: int, samples: int = 4) -> float:
-    """Best-of-N docs/sec of the bare extraction kernel at ``procs``
-    multiprocessing workers (no Spark, no Arrow, no shuffle).  On a single
-    machine the memory bus and cache are shared, so per-core throughput
-    drops as active cores rise — probing each parallelism level ADJACENT to
-    its Spark run (same minute, same background load) quantifies the box's
-    ceiling so the Spark job's efficiency can be normalized against it (a
-    real N -> 4N *executor* scale-up multiplies memory buses along with
-    cores and does not see this effect)."""
-    import multiprocessing as mp
-
-    from pdfparser_spark.synth import build_document
-
-    text = ("the quick brown fox jumps over the lazy dog data query stream filter sort hash " * 3)
-    docs = [build_document(i, text) for i in range(200)]
-    payloads = []
-    for d in docs:
-        parts = sorted((s for s in d["span_rows"] if s["text"] is not None), key=lambda s: s["offset"])
-        payloads.append("".join(s["text"] for s in parts).encode("latin-1"))
-
-    best = 0.0
-    for _ in range(samples):
-        with mp.Pool(procs) as pool:
-            t0 = time.perf_counter()
-            counts = pool.map(_mp_work, [(3, payloads)] * 32)
-            dt = time.perf_counter() - t0
-        best = max(best, sum(counts) / dt)
-    return best
-
-
-def _mp_work(args):
-    from pdfparser_spark.core.extract import extract_spans
-
-    reps, payloads = args
-    n = 0
-    for _ in range(reps):
-        for p in payloads:
-            extract_spans(p)
-            n += 1
-    return n
-
-
-def _run_level(n_cores: int) -> tuple[dict, float]:
-    """Measure one parallelism level — Spark job + bare-kernel probe — in a
-    SUBPROCESS pinned to exactly ``n_cores`` CPUs via taskset.  Without the
-    pin, a local[8] JVM's auxiliary threads (GC, Arrow serialization,
-    scheduler) spill onto idle cores, inflating the low level and
-    understating true N -> 4N scaling.  On a real cluster an N-executor
-    deployment has exactly N executors' worth of cores — the pin is what
-    makes the in-sandbox rendering faithful."""
-    import subprocess
-    import sys as _sys
-
-    cmd = [_sys.executable, os.path.abspath(__file__), "--throughput", str(n_cores)]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["taskset", "-c", f"0-{n_cores - 1}"] + cmd
-    # budget scales with the pin width: the 2-core level synthesizes AND
-    # runs the same 480k-doc corpus on 2 CPUs (~8 min end to end)
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=1200)
-    if out.returncode != 0 or not out.stdout.strip():
-        # surface the child's stderr: an empty stdout otherwise dies as an
-        # opaque IndexError that hides the real failure (OOM, bad taskset
-        # range, Spark startup)
-        raise RuntimeError(
-            f"scaling level local[{n_cores}] failed (rc={out.returncode}); "
-            f"stderr tail:\n{out.stderr[-2000:]}"
-        )
-    line = out.stdout.strip().splitlines()[-1]
-    payload = json.loads(line)
-    return payload["spark"], payload["hw_dps"]
-
-
-def run_scaling() -> dict:
-    """The N-vs-4N measurement (slow: two fresh pinned sessions over a
-    x{repeat} corpus).  Persists its result so default bench runs can
-    attach it."""
-    lo_cores, hi_cores = max(2, CPUS // 4), CPUS
-    # each level runs CPU-pinned in its own subprocess; the bare-kernel
-    # hardware probe runs adjacent to its Spark job under the same pin so
-    # the pair shares background-load conditions.  SPARK_GRAFT_SCALE_PASSES
-    # > 1 interleaves lo/hi passes and keeps the best per level: background
-    # load asymmetrically penalizes the wide level (the narrow pin dodges
-    # load on the unused cores), so single-window pairings bias raw
-    # efficiency downward under any contention.
-    passes = int(os.environ.get("SPARK_GRAFT_SCALE_PASSES", "1"))
-    base = lo = hi = hw_base = hw_lo = hw_hi = None
-    for _ in range(max(1, passes)):
-        b, hb = _run_level(2)  # unsaturated-bus base: 2 cores
-        l, hl = _run_level(lo_cores)
-        h, hh = _run_level(hi_cores)
-        if base is None or b["docs_per_sec"] > base["docs_per_sec"]:
-            base, hw_base = b, hb
-        if lo is None or l["docs_per_sec"] > lo["docs_per_sec"]:
-            lo, hw_lo = l, hl
-        if hi is None or h["docs_per_sec"] > hi["docs_per_sec"]:
-            hi, hw_hi = h, hh
-    # slow-sample refusal (judge r04 item 2): if the pinned bare-kernel
-    # probe landed well below its run-history median, the box is in a
-    # slow-bus/co-tenant phase and the pair would record the machine, not
-    # the engine — re-run the lo/hi pair (keep the best per level) before
-    # writing the artifact.  Also retry when raw efficiency misses the
-    # 0.8 contract bar, bounded so a genuinely saturated box terminates.
-    hist_lo = sorted(
-        h_["hardware_ceiling"]["lo_docs_per_sec"]
-        for h_ in _history()
-        if h_.get("hardware_ceiling", {}).get("lo_docs_per_sec")
-    )
-    med_lo = hist_lo[len(hist_lo) // 2] if hist_lo else None
-    retries = 0
-    while retries < 2:
-        eff_now = (hi["docs_per_sec"] / lo["docs_per_sec"]) / (hi_cores / lo_cores)
-        probe_slow = med_lo is not None and hw_lo / med_lo < 0.85
-        if not (probe_slow or eff_now < 0.8):
-            break
-        retries += 1
-        l, hl = _run_level(lo_cores)
-        h, hh = _run_level(hi_cores)
-        if l["docs_per_sec"] > lo["docs_per_sec"]:
-            lo, hw_lo = l, hl
-        if h["docs_per_sec"] > hi["docs_per_sec"]:
-            hi, hw_hi = h, hh
-    eff = round((hi["docs_per_sec"] / lo["docs_per_sec"]) / (hi_cores / lo_cores), 3)
-    # the 2 -> lo_cores (4x) step runs while the shared memory bus is still
-    # unsaturated — every history entry now carries its own raw >= 0.8
-    # data point alongside the saturated lo -> hi one
-    eff_base = round(
-        (lo["docs_per_sec"] / base["docs_per_sec"]) / (lo_cores / 2), 3
-    )
-    hw_eff_base = round((hw_lo / hw_base) / (lo_cores / 2), 3) if hw_base else None
-    hw = {
-        "lo_cores": lo_cores,
-        "hi_cores": hi_cores,
-        "lo_docs_per_sec": round(hw_lo, 1),
-        "hi_docs_per_sec": round(hw_hi, 1),
-        "efficiency": round((hw_hi / hw_lo) / (hi_cores / lo_cores), 3),
-    }
-    normalized = round(eff / hw["efficiency"], 3) if hw["efficiency"] else None
-    scaling = {
-        "base": base,
-        "low": lo,
-        "high": hi,
-        "efficiency": eff,
-        "efficiency_2_to_lo": eff_base,
-        "hw_base_docs_per_sec": round(hw_base, 1) if hw_base else None,
-        "hw_efficiency_2_to_lo": hw_eff_base,
-        "hardware_ceiling": hw,
-        "efficiency_vs_hardware_ceiling": normalized,
-        "slow_sample_retries": retries,
-        "repeat": SCALE_REPEAT,
-        "sf_dir": SF_DIR,
-    }
-    os.makedirs(BENCH_DIR, exist_ok=True)
-    with open(os.path.join(BENCH_DIR, "scaling.json"), "w") as f:
-        json.dump(scaling, f)
-    # append to the run history: single-box wall timings swing with
-    # background load, so the honest headline number is the median of all
-    # measured runs, not whichever run happened last
-    with open(os.path.join(BENCH_DIR, "history.jsonl"), "a") as f:
-        f.write(json.dumps(scaling) + "\n")
-    write_scaling_md(lo, hi, eff, hw, normalized, base, eff_base, hw_eff_base)
-    return scaling
-
-
-def _history() -> list[dict]:
-    path = os.path.join(BENCH_DIR, "history.jsonl")
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        return [json.loads(line) for line in f if line.strip()]
+        pin_tree(allowed)
 
 
 def main() -> None:
-    if "--throughput" in sys.argv:
-        # subprocess worker for run_scaling: one pinned level, JSON on stdout
-        n = int(sys.argv[sys.argv.index("--throughput") + 1])
-        spark_res = extraction_throughput(n, SCALE_REPEAT)
-        hw_dps = hardware_probe(n)
-        print(json.dumps({"spark": spark_res, "hw_dps": round(hw_dps, 1)}))
-        return
-
-    if "--curve3" in sys.argv:
-        # the three-level (2/8/32) experiment behind BENCH/curve3.json: the
-        # 2->8 step measures raw scaling while the memory bus is still
-        # unsaturated (criterion met raw), 8->32 shows the box's rolloff,
-        # and the bare probe mirrors both.  Re-runnable any round so the
-        # curve tracks the current kernel.
-        levels = {}
-        for n in (2, max(2, CPUS // 4), CPUS):
-            sp, hw_dps = _run_level(n)
-            levels[str(n)] = {"spark_dps": sp["docs_per_sec"], "hw_dps": hw_dps}
-        ns = sorted(levels, key=int)
-        eff = lambda a, b, k: round(
-            (levels[b][k] / levels[a][k]) / (int(b) / int(a)), 3
-        )
-        cv = {
-            "levels": levels,
-            "spark_eff_2_to_8": eff(ns[0], ns[1], "spark_dps"),
-            "spark_eff_8_to_32": eff(ns[1], ns[2], "spark_dps"),
-            "probe_eff_2_to_8": eff(ns[0], ns[1], "hw_dps"),
-            "probe_eff_8_to_32": eff(ns[1], ns[2], "hw_dps"),
-        }
-        with open(os.path.join(BENCH_DIR, "curve3.json"), "w") as f:
-            json.dump(cv, f)
-        print(json.dumps(cv))
-        return
-
-    scaling_only = "--scaling" in sys.argv or os.environ.get("SPARK_GRAFT_SCALING")
-
+    spark = build_session()
+    cores = spark.sparkContext.defaultParallelism
+    queries, n_docs = run_headline(spark)
+    spark.stop()
     result = {
         "metric": "headline wall seconds (extraction DAG + curation ops); docs_per_sec = BASELINE.json primary metric",
         "unit": "sec",
         "sf": _sf_of(SF_DIR),
-    }
-    if scaling_only:
-        result["scaling"] = run_scaling()
-        result["value"] = result["scaling"]["high"]["sec"]
-        result["queries"] = {"extract_scaling_high": result["scaling"]["high"]["sec"]}
-    else:
-        # machine-health probe FIRST (bare kernel, no Spark): single-box
-        # wall timings swing >2x with co-tenant load (load-avg spikes with
-        # zero local CPU use observed); recording the box's bare capability
-        # next to the numbers lets any reader normalize a noisy patch.
-        hw_now = round(hardware_probe(min(8, CPUS), samples=2), 1)
-        spark = build_session(master=f"local[{CPUS}]")
-        queries, n_docs = run_headline(spark)
-        spark.stop()
-        # bracket the run: a co-tenant spike can arrive MID-run (observed:
-        # healthy start probe, 100x tail-query walls, next probe at 56% of
-        # history) — the end probe makes that legible in the record
-        hw_end = round(hardware_probe(min(8, CPUS), samples=2), 1)
-        # slow-sample refusal (judge r04 item 2): when the bracketing
-        # probes show the box ran well below its history median, the
-        # numbers measure a co-tenant phase — re-run the headline once
-        # and keep the faster (truer-capability) sample
-        hist0 = _history()
-        lo_hist = sorted(
-            h["hardware_ceiling"]["lo_docs_per_sec"]
-            for h in hist0
-            if h.get("hardware_ceiling", {}).get("lo_docs_per_sec")
-        )
-        med0 = lo_hist[len(lo_hist) // 2] if lo_hist else None
-        headline_retries = 0
-        if med0 and min(hw_now, hw_end) / med0 < 0.9:
-            headline_retries = 1
-            spark = build_session(master=f"local[{CPUS}]")
-            queries2, n_docs2 = run_headline(spark)
-            spark.stop()
-            hw_end = round(hardware_probe(min(8, CPUS), samples=2), 1)
-            if sum(queries2.values()) < sum(queries.values()):
-                queries, n_docs = queries2, n_docs2
-        result["headline_slow_sample_retries"] = headline_retries
-        result["value"] = round(sum(queries.values()), 3)
-        result["queries"] = queries
-        result["hw_probe_docs_per_sec"] = hw_now
-        result["hw_probe_end_docs_per_sec"] = hw_end
-        # append to the local headline-run history: single-box walls swing
-        # >2x with co-tenant load, so the distribution (not one sample) is
-        # the honest record — BENCH/headline_history.jsonl is committed
-        try:
-            with open(os.path.join(BENCH_DIR, "headline_history.jsonl"), "a") as f:
-                f.write(
-                    json.dumps(
-                        {
-                            "queries": queries,
-                            "value": result["value"],
-                            "hw_probe_docs_per_sec": hw_now,
-                            "hw_probe_end_docs_per_sec": hw_end,
-                        }
-                    )
-                    + "\n"
-                )
-        except OSError:
-            pass
-        hist = _history()
-        lo = sorted(
-            h["hardware_ceiling"]["lo_docs_per_sec"]
-            for h in hist
-            if h.get("hardware_ceiling", {}).get("lo_docs_per_sec")
-        )
-        if lo:
-            med = lo[len(lo) // 2]
-            result["hw_probe_vs_history"] = round(hw_now / med, 3)
+        "value": round(sum(queries.values()), 3),
+        "queries": queries,
         # primary metric = steady-state throughput mode (fused, zero-shuffle);
         # the checkpointed staged DAG's figure is reported alongside
-        result["docs_per_sec"] = round(n_docs / queries["extract_fused"], 2)
-        result["docs_per_sec_staged_dag"] = round(n_docs / queries["extract_full_dag"], 2)
-        # attach the most recent scaling measurement (run via
-        # `python bench.py --scaling`; committed alongside BENCH/BASELINE.md)
-        cached = os.path.join(BENCH_DIR, "scaling.json")
-        if os.path.exists(cached):
-            with open(cached) as f:
-                result["scaling"] = json.load(f)
-            hist = _history()
-            if len(hist) >= 2:
-                effs = sorted(h["efficiency"] for h in hist)
-                norms = sorted(
-                    h["efficiency_vs_hardware_ceiling"]
-                    for h in hist
-                    if h.get("efficiency_vs_hardware_ceiling") is not None
-                )
-                mid = lambda xs: xs[len(xs) // 2] if len(xs) % 2 else round((xs[len(xs)//2 - 1] + xs[len(xs)//2]) / 2, 3)
-                result["scaling"]["history"] = {
-                    "runs": len(hist),
-                    "median_efficiency": mid(effs),
-                    "median_efficiency_vs_hardware_ceiling": mid(norms) if norms else None,
-                }
-
+        "docs_per_sec": round(n_docs / queries["extract_fused"], 2),
+        "docs_per_sec_staged_dag": round(n_docs / queries["extract_full_dag"], 2),
+    }
+    if cores > 1:
+        sec1, docs1 = one_core_fused()
+        high = {"cores": cores, "docs": n_docs, "sec": queries["extract_fused"],
+                "docs_per_sec": result["docs_per_sec"]}
+        low = {"cores": 1, "docs": docs1, "sec": sec1, "docs_per_sec": round(docs1 / sec1, 2)}
+        result["scaling"] = {
+            "low": low,
+            "high": high,
+            "efficiency": round(high["docs_per_sec"] / low["docs_per_sec"] / cores, 3),
+        }
     print(json.dumps(result))
 
 

@@ -189,7 +189,6 @@ def run_extraction(
     sf_dir: str,
     work_dir: str | None = None,
     strict: bool = False,
-    repeat: int = 1,
 ) -> dict:
     """Convenience wrapper: synthesize the interleaved corpus from the
     driver's ``documents`` table, then run the DAG.
@@ -201,5 +200,5 @@ def run_extraction(
     documents = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).repartition(
         n_parts, "doc_id"
     )
-    raw = synthesize_corpus(documents, repeat=repeat)
+    raw = synthesize_corpus(documents)
     return Pipeline(spark, work_dir=work_dir, strict=strict).run(raw)

@@ -33,14 +33,12 @@ def _default_driver_memory() -> str:
 def build_session(
     master: str | None = None,
     app_name: str = "pdfparser_spark",
-    shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
-        shuffle_partitions = cpus if n == "*" else max(4, int(n))
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
+    shuffle_partitions = cpus if n == "*" else max(4, int(n))
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -42,12 +42,8 @@ _BUILDERS = {
 }
 
 
-def synthesize_corpus(documents: DataFrame, repeat: int = 1, family: str = "ascii") -> DataFrame:
+def synthesize_corpus(documents: DataFrame, family: str = "ascii") -> DataFrame:
     """``documents(doc_id, text)`` -> ``documents_raw(doc_id, spans)``.
-
-    ``repeat`` > 1 tiles the corpus with distinct doc_ids (doc_id +
-    k * 10^9) for bench scale-up without new source data; rules shift with
-    the new id, so the tiled corpus is still rule-consistent.
 
     ``family='binary'`` builds the real-writer binary family instead
     (true binary Flate, CRLF, inline images, RC4/AES encryption);
@@ -60,7 +56,6 @@ def synthesize_corpus(documents: DataFrame, repeat: int = 1, family: str = "asci
         if doc_id is None:
             return []  # malformed source row: drop, never kill the task
         text = text or ""  # NULL text -> empty document
-        dids = [doc_id + k * 1_000_000_000 for k in range(repeat)]
-        return [(did, builder(did, text)["span_rows"]) for did in dids]
+        return [(doc_id, builder(doc_id, text)["span_rows"])]
 
     return map_rows(documents.select("doc_id", "text"), DOCUMENTS_RAW, gen)

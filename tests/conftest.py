@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from pdfparser_spark.session import build_session
 
-    s = build_session(master="local[4]", shuffle_partitions=4, app_name="pdfparser_spark_tests")
+    s = build_session(master="local[4]", app_name="pdfparser_spark_tests")
     yield s
     s.stop()
 

@@ -76,3 +76,35 @@ def test_run_pipeline_cli_warc_mode(tmp_path):
     # oracle's own row count at sf0.001
     assert summary["mode"] == "warc" and summary["docs"] == 469
     assert os.path.exists(str(tmp_path / "out" / "main_content"))
+
+
+def test_bench_prints_one_contract_line():
+    """bench.py's driver contract at the test scale: the last stdout line
+    is the one JSON result with the 9 headline query walls and a 1 -> N
+    core scaling record measured in the run, and the run writes no
+    ``BENCH/`` directory."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001", SPARK_GRAFT_CPUS="2")
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py")],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        cwd=repo,
+        env=env,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    result = json.loads(out.stdout.strip().splitlines()[-1])
+    assert set(result["queries"]) == {
+        "extract_full_dag", "extract_fused", "dedup_minhash_lsh", "dedup_simhash",
+        "textqc_quality_langid", "ann_cosine_topk", "tpch_q1_pricing",
+        "docs_pagerank", "model_classifier",
+    }
+    assert result["value"] == round(sum(result["queries"].values()), 3)
+    assert result["docs_per_sec"] > 0 and result["docs_per_sec_staged_dag"] > 0
+    scaling = result["scaling"]
+    assert (scaling["low"]["cores"], scaling["high"]["cores"]) == (1, 2)
+    assert scaling["low"]["docs"] == scaling["high"]["docs"] == 500
+    assert scaling["efficiency"] > 0
+    assert not [k for k in result if k.startswith("hw_probe")]
+    assert not os.path.exists(os.path.join(repo, "BENCH"))

@@ -77,3 +77,26 @@ def test_fused_extractor_matches_oracle(spark, sf_dir, duck, oracles, extractor)
     name = QUERY_OF[extractor]
     ok, verdict = compare(spark, duck, sf_dir, name, entrymod.queries()[name], oracles[name])
     assert ok, verdict
+
+
+# queries whose kernels run through ``runner.map_rows`` outside the fused
+# extractors: media, video, audio, DOM and archive sources
+MAP_ROWS_QUERIES = [
+    "media_jpx_meta",
+    "media_jpx_decode",
+    "media_exif",
+    "media_resize_real",
+    "video_metadata",
+    "audio_features",
+    "dom_main_content",
+    "tar_pdf_extract",
+    "zip_pdf_extract",
+]
+
+
+@pytest.mark.parametrize("name", MAP_ROWS_QUERIES)
+def test_map_rows_query_matches_oracle(spark, sf_dir, duck, oracles, name):
+    ok, verdict = compare(spark, duck, sf_dir, name, entrymod.queries()[name], oracles[name])
+    assert ok, verdict
+    # "<name>: <n> rows": an empty result would pass against an empty oracle
+    assert int(verdict.split()[-2]) > 0, verdict

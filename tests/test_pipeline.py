@@ -152,7 +152,7 @@ def test_fused_strict_mode(spark, sf_dir):
 
 
 def test_giant_docs_isolated_by_split_strategy(spark):
-    """Skew policy (partitioning.py, strategy='split'): giant documents
+    """Skew policy (partitioning.py): giant documents
     provably occupy the dedicated partition range [target, target+slots)
     and never share a partition with the small-doc bulk — one straggler
     can't blockade a mapInPandas partition of smalls."""
@@ -176,31 +176,6 @@ def test_giant_docs_isolated_by_split_strategy(spark):
     assert all(p >= target for p in big_pids)      # giants in dedicated range
     assert all(p < target for p in small_pids)     # smalls in their own range
     assert len(set(big_pids)) >= 2                 # giants spread, not clumped
-
-
-def test_salt_strategy_spreads_giants(spark):
-    """strategy='salt': single shuffle; full-entropy re-seeded hash must
-    not clump the giants into one partition (regression: pre-modded small
-    integer salts collapsed under HashPartitioning's re-hash)."""
-    from pyspark.sql import Row
-
-    from pdfparser_spark.partitioning import repartition_docs
-    from pdfparser_spark.schema import DOCUMENTS_RAW
-
-    span = lambda text: Row(kind="struct", text=text, media_ref=None, offset=0)
-    big_ids = list(range(900, 912))
-    rows = [Row(doc_id=i, spans=[span("x" * 100)]) for i in range(50)]
-    rows += [Row(doc_id=b, spans=[span("y" * 5000)]) for b in big_ids]
-    df = spark.createDataFrame(rows, schema=DOCUMENTS_RAW)
-
-    out = repartition_docs(df, 4, isolate_threshold=1000, big_slots=16, strategy="salt")
-    pid = out.select("doc_id", F.spark_partition_id().alias("pid")).collect()
-    big_pids = [r.pid for r in pid if r.doc_id in big_ids]
-    from collections import Counter
-
-    most_common = Counter(big_pids).most_common(1)[0][1]
-    assert len(set(big_pids)) >= 6   # 12 giants over 20 partitions: spread
-    assert most_common <= 4          # and no single-partition pile-up
 
 
 def test_degenerate_span_arrays(spark):
