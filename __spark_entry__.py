@@ -256,6 +256,28 @@ def _warc_pdf_dir(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
+def _extract_payloads(docs: DataFrame) -> DataFrame:
+    """``docs(doc_id, payload binary)`` -> the flat spans of each payload
+    through ``extract_fused``.  The payload rides as one text span decoded
+    latin-1, which ``_doc_bytes`` encodes back byte for byte; a cast to
+    string would decode UTF-8 and fail the task on a binary PDF."""
+    return flatten_spans(
+        extract_fused(
+            docs.select(
+                "doc_id",
+                F.array(
+                    F.struct(
+                        F.lit("text").alias("kind"),
+                        F.decode("payload", "ISO-8859-1").alias("text"),
+                        F.lit(None).cast("string").alias("media_ref"),
+                        F.lit(0).alias("offset"),
+                    )
+                ).alias("spans"),
+            )
+        )
+    )
+
+
 def _mbox_dir(spark: SparkSession, sf_dir: str) -> str:
     out = os.path.join(_CACHE_ROOT, f"mbox_{_sf_tag(sf_dir)}_{_SRC_TAG}")
     marker = os.path.join(out, "_SUCCESS")
@@ -277,18 +299,12 @@ def _mbox_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfparser_spark.sources import mbox
 
     parsed = mbox.read_mbox(spark, _mbox_dir(spark, sf_dir))
-    raw = parsed.filter(F.col("pdf").isNotNull()).select(
-        F.regexp_extract("subject", r"document (\d+)$", 1).cast("long").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.col("pdf").cast("string").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
+    return _extract_payloads(
+        parsed.filter(F.col("pdf").isNotNull()).select(
+            F.regexp_extract("subject", r"document (\d+)$", 1).cast("long").alias("doc_id"),
+            F.col("pdf").alias("payload"),
+        )
     )
-    return flatten_spans(extract_fused(raw))
 
 
 def _tar_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -312,20 +328,12 @@ def _tar_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfparser_spark.sources import tar
 
     parsed = tar.read_tar(spark, _tar_dir(spark, sf_dir))
-    raw = parsed.filter(
-        F.col("payload").isNotNull() & F.col("name").endswith(".pdf")
-    ).select(
-        F.regexp_extract("name", r"/doc(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.col("payload").cast("string").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
+    return _extract_payloads(
+        parsed.filter(F.col("payload").isNotNull() & F.col("name").endswith(".pdf")).select(
+            F.regexp_extract("name", r"/doc(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+            "payload",
+        )
     )
-    return flatten_spans(extract_fused(raw))
 
 
 def _zip_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -349,20 +357,12 @@ def _zip_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfparser_spark.sources import zipsrc
 
     parsed = zipsrc.read_zip(spark, _zip_dir(spark, sf_dir))
-    raw = parsed.filter(
-        F.col("payload").isNotNull() & F.col("name").endswith(".pdf")
-    ).select(
-        F.regexp_extract("name", r"/doc(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.col("payload").cast("string").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
+    return _extract_payloads(
+        parsed.filter(F.col("payload").isNotNull() & F.col("name").endswith(".pdf")).select(
+            F.regexp_extract("name", r"/doc(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+            "payload",
+        )
     )
-    return flatten_spans(extract_fused(raw))
 
 
 def _warc_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,22 +391,11 @@ def _warc_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_captures"),
         F.max("body").alias("body"),  # deterministic; captures are identical
     )
-    raw = docs.select(
-        "doc_id",
-        "n_captures",
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.col("body").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
+    # the reader decodes PDF bodies latin-1, so encoding back is exact
+    spans = _extract_payloads(
+        docs.select("doc_id", F.encode("body", "ISO-8859-1").alias("payload"))
     )
-    spans = flatten_spans(extract_fused(raw.select("doc_id", "spans")))
-    return spans.join(
-        F.broadcast(raw.select("doc_id", "n_captures")), "doc_id"
-    )
+    return spans.join(F.broadcast(docs.select("doc_id", "n_captures")), "doc_id")
 
 
 def _warc_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -792,8 +792,7 @@ class TableScope:
         form, scope = hit
         if form is None:
             return _MEDIA
-        form = int(form)  # Arrow hands nullable ints to pandas as floats
-        return Form(form, bytes(self._forms[form]), None, self._scopes[int(scope)])
+        return Form(form, bytes(self._forms[form]), None, self._scopes[scope])
 
 
 def table_scopes(rows, forms) -> list:

@@ -41,7 +41,6 @@ class Pipeline:
         spark: SparkSession,
         work_dir: str | None = None,
         strict: bool = False,
-        target_partitions: int | None = None,
         pre_balanced: bool = False,
     ) -> None:
         """``pre_balanced=True`` skips the input salting shuffle: the caller
@@ -52,9 +51,6 @@ class Pipeline:
         self.work_dir = work_dir
         self.strict = strict
         self.pre_balanced = pre_balanced
-        self.target_partitions = target_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
         self._manifest: dict = {"stages": {}}
         self._persisted: list[DataFrame] = []
         if work_dir:
@@ -138,8 +134,8 @@ class Pipeline:
         def build_decode():
             if self.pre_balanced:
                 return decode(documents_raw)
-            balanced = repartition_docs(documents_raw, self.target_partitions)
-            return decode(balanced)
+            n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            return decode(repartition_docs(documents_raw, n_parts))
 
         decoded = self._checkpointed("decode", build_decode)
         tokens = self._checkpointed("tokenize", lambda: tokenize(decoded), eager=False)

@@ -1,4 +1,4 @@
-"""The package's one Arrow row runner: every per-row Python kernel runs
+"""The package's one Arrow row runner: every batch Python kernel runs
 through :func:`map_rows`, the only ``mapInArrow`` call.
 
 A kernel is a row function plus a Spark schema.  The runner hands the row
@@ -9,9 +9,11 @@ returns, against the Arrow form of the schema parsed once on the driver.
 No pandas frame sits between Arrow and the kernel.  The runner adds no
 error handling: each kernel keeps its own leniency.
 
-Group-shaped kernels (``applyInPandas`` shard writers, the pair merge, the
-cogroup diff, ``applyInPandasWithState``) need a whole group at once and
-stay on pandas.
+A group-shaped kernel (the archive shard writers of ``sources/shards.py``,
+the pair merge) groups in Spark first,
+``groupBy(key).agg(sort_array(collect_list(struct(...))))``, and gets one
+row per group: its key and the group's rows as a list of dicts, in order.
+Only the streaming state of ``textops/events.py`` stays on pandas.
 """
 
 from __future__ import annotations

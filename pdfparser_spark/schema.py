@@ -103,7 +103,6 @@ TOKENS = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("page_idx", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),  # one content per page: 0
         T.StructField("ev_idx", T.IntegerType()),
         T.StructField("ev_type", T.StringType()),  # text | atext | media | error
         # text: the scope whose font ``font_name`` decodes it
@@ -125,7 +124,6 @@ CLASSIFIED = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("page_idx", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),
         T.StructField("ev_idx", T.IntegerType()),
         T.StructField("kind", T.StringType()),
         T.StructField("text", T.StringType()),

@@ -18,12 +18,11 @@ truncated mid-object so the oracle can state the rescue rows analytically.
 from __future__ import annotations
 
 import json
-import os
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .shards import write_shards
 
 READ_SCHEMA = "doc_id long, lang string, text string, _corrupt string"
 
@@ -37,35 +36,19 @@ def doc_json_line(doc_id: int, lang: str, text: str) -> str:
     return line[: max(len(line) - 5, 1)] if doc_id % 23 == 7 else line
 
 
+def _jsonl_shard(shard: int, rows: list) -> tuple[str, bytes, int]:
+    lines = [doc_json_line(d, str(lg), str(tx)) for d, lg, tx in rows]
+    return f"shard-{shard:05d}.jsonl", ("\n".join(lines) + "\n").encode("utf-8"), len(lines)
+
+
 def write_jsonl_shards(
     documents: DataFrame, out_dir: str, n_shards: int = 8
 ) -> DataFrame:
-    """Distributed deterministic writer: ``documents(doc_id, lang, text)``
-    -> ``out_dir/shard-NNNNN.jsonl`` (one file per ``doc_id % n_shards``
-    group, rows sorted by doc_id, write-temp + atomic rename)."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        path = os.path.join(out_dir, f"shard-{shard:05d}.jsonl")
-        pdf = pdf.sort_values("doc_id")
-        lines = [
-            doc_json_line(int(d), str(lg), str(tx))
-            for d, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-        ]
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write("\n".join(lines) + "\n")
-        os.replace(tmp, path)
-        return pd.DataFrame(
-            {"shard": [shard], "path": [path], "n_records": [len(lines)]}
-        )
-
-    return (
-        documents.select("doc_id", "lang", "text")
-        .withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
-        .groupBy("shard")
-        .applyInPandas(write, schema="shard long, path string, n_records long")
+    """Distributed deterministic writer (``sources.shards``):
+    ``documents(doc_id, lang, text)`` -> ``out_dir/shard-NNNNN.jsonl``
+    plus the ``(shard, path, n_records)`` manifest."""
+    return write_shards(
+        documents.select("doc_id", "lang", "text"), out_dir, n_shards, "n_records", _jsonl_shard
     )
 
 

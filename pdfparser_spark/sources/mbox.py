@@ -6,7 +6,7 @@ Writer side builds messages BYTE-DETERMINISTICALLY by hand (multipart/
 mixed: a text/plain note + the document's PDF as a base64
 application/pdf attachment) into ``mboxrd``-quoted shard files, one per
 ``doc_id % n_shards``, sorted by doc_id — reproducible shard bytes,
-write-temp + atomic rename (the sources/warc.py discipline).
+write-temp + atomic rename (the shared writer, sources/shards.py).
 
 Reader side splits shards on RFC 4155 ``From `` separator lines and
 parses each message with the stdlib :mod:`email` parser — an
@@ -24,11 +24,10 @@ import base64
 import os
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..runner import map_rows
+from .shards import write_shards
 
 
 def msg_date(doc_id: int) -> str:
@@ -46,12 +45,7 @@ def build_eml(doc_id: int, text: str) -> bytes:
     (76-char lines per RFC 2045 §6.8).  CRLF line endings throughout."""
     from ..synth import build_document
 
-    d = build_document(doc_id, text)
-    parts = sorted(
-        (s for s in d["span_rows"] if s["text"] is not None),
-        key=lambda s: s["offset"],
-    )
-    pdf = "".join(s["text"] for s in parts).encode("ascii")
+    pdf = build_document(doc_id, text)["bytes"]
     b64 = base64.b64encode(pdf).decode("ascii")
     b64_lines = "\r\n".join(b64[i : i + 76] for i in range(0, len(b64), 76))
     boundary = f"==pdfspark-{doc_id}=="
@@ -90,44 +84,26 @@ def _mboxrd_quote(body: bytes) -> bytes:
     return b"\n".join(out)
 
 
+def _mbox_shard(shard: int, rows: list) -> tuple[str, bytes, int]:
+    parts = []
+    for did, text in rows:
+        eml = _mboxrd_quote(build_eml(did, text or ""))
+        parts.append(b"From archive@corpus.example %s\n" % msg_date(did).encode("ascii"))
+        parts.append(eml)
+        if not eml.endswith(b"\n"):
+            parts.append(b"\n")
+        parts.append(b"\n")  # RFC 4155 blank separator line
+    return f"shard-{shard:05d}.mbox", b"".join(parts), len(rows)
+
+
 def write_mbox_shards(
     documents: DataFrame, out_dir: str, n_shards: int = 8
 ) -> DataFrame:
-    """Distributed deterministic writer: ``documents(doc_id, text)`` ->
-    ``out_dir/shard-NNNNN.mbox`` (one per doc_id % n_shards, messages
-    sorted by doc_id, mboxrd quoting, atomic rename).  Materializing the
-    returned (shard, path, n_messages) manifest IS the write."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        path = os.path.join(out_dir, f"shard-{shard:05d}.mbox")
-        pdf = pdf.sort_values("doc_id")
-        parts = []
-        n = 0
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            did = int(doc_id)
-            txt = text if isinstance(text, str) else ""
-            eml = _mboxrd_quote(build_eml(did, txt))
-            parts.append(
-                b"From archive@corpus.example %s\n" % msg_date(did).encode("ascii")
-            )
-            parts.append(eml)
-            if not eml.endswith(b"\n"):
-                parts.append(b"\n")
-            parts.append(b"\n")  # RFC 4155 blank separator line
-            n += 1
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(b"".join(parts))
-        os.replace(tmp, path)
-        return pd.DataFrame({"shard": [shard], "path": [path], "n_messages": [n]})
-
-    return (
-        documents.select("doc_id", "text")
-        .withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
-        .groupBy("shard")
-        .applyInPandas(write, schema="shard long, path string, n_messages long")
+    """Distributed deterministic writer (``sources.shards``):
+    ``documents(doc_id, text)`` -> ``out_dir/shard-NNNNN.mbox`` (mboxrd
+    quoting) plus the ``(shard, path, n_messages)`` manifest."""
+    return write_shards(
+        documents.select("doc_id", "text"), out_dir, n_shards, "n_messages", _mbox_shard
     )
 
 

@@ -7,8 +7,8 @@ Writer side builds archives BYTE-DETERMINISTICALLY by hand — 512-byte
 ustar headers (octal size/mtime, spec checksum over a space-filled
 checksum field), member data zero-padded to block size, two zero
 blocks as end-of-archive; one shard per ``doc_id % n_shards``, members
-sorted by doc_id, write-temp + atomic rename (the sources/warc.py
-discipline).  Each document contributes its PDF member plus a small
+sorted by doc_id, write-temp + atomic rename (sources/shards.py,
+the shared writer).  Each document contributes its PDF member plus a small
 ``notes/*.txt`` sidecar so the reader must actually FILTER members,
 not just take everything.
 
@@ -26,14 +26,15 @@ jsonl.py.
 
 from __future__ import annotations
 
+import gzip
+import lzma
 import os
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..runner import map_rows
+from .shards import write_shards
 
 BLOCK = 512
 
@@ -78,67 +79,36 @@ def build_tar_member(name: str, data: bytes, mtime: int = 0) -> bytes:
     return bytes(hdr) + data + b"\0" * pad
 
 
+def _tar_shard(shard: int, rows: list) -> tuple[str, bytes, int]:
+    from ..synth import build_document
+
+    parts = []
+    for did, text in rows:
+        body = build_document(did, text or "")["bytes"]
+        parts.append(build_tar_member(f"corpus/doc{did}.pdf", body, mtime=did))
+        note = f"source note for document {did}\n".encode("ascii")
+        parts.append(build_tar_member(f"corpus/notes/doc{did}.txt", note, mtime=did))
+    parts.append(b"\0" * (2 * BLOCK))  # end-of-archive
+    blob = b"".join(parts)
+    name = f"shard-{shard:05d}.tar"
+    # compression cycle by shard: plain / .tar.gz (deterministic gzip,
+    # mtime 0) / .tar.xz — the real-world dump mix; the reader sniffs
+    # magic bytes, so the tar walk itself is container-blind
+    if shard % 3 == 1:
+        blob, name = gzip.compress(blob, mtime=0), name + ".gz"
+    elif shard % 3 == 2:
+        blob, name = lzma.compress(blob, format=lzma.FORMAT_XZ), name + ".xz"
+    return name, blob, 2 * len(rows)
+
+
 def write_tar_shards(
     documents: DataFrame, out_dir: str, n_shards: int = 8
 ) -> DataFrame:
-    """Distributed deterministic writer: ``documents(doc_id, text)`` ->
-    ``out_dir/shard-NNNNN.tar`` (one per doc_id % n_shards, members
-    sorted by doc_id, atomic rename).  Materializing the returned
-    (shard, path, n_members) manifest IS the write."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..synth import build_document
-
-        shard = int(key[0])
-        path = os.path.join(out_dir, f"shard-{shard:05d}.tar")
-        pdf = pdf.sort_values("doc_id")
-        parts = []
-        n = 0
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            did = int(doc_id)
-            txt = text if isinstance(text, str) else ""
-            d = build_document(did, txt)
-            spans = sorted(
-                (s for s in d["span_rows"] if s["text"] is not None),
-                key=lambda s: s["offset"],
-            )
-            body = "".join(s["text"] for s in spans).encode("ascii")
-            parts.append(build_tar_member(f"corpus/doc{did}.pdf", body, mtime=did))
-            parts.append(
-                build_tar_member(
-                    f"corpus/notes/doc{did}.txt",
-                    f"source note for document {did}\n".encode("ascii"),
-                    mtime=did,
-                )
-            )
-            n += 2
-        parts.append(b"\0" * (2 * BLOCK))  # end-of-archive
-        blob = b"".join(parts)
-        # compression cycle by shard: plain / .tar.gz (deterministic
-        # gzip, mtime 0) / .tar.xz — the real-world dump mix; the reader
-        # sniffs magic bytes, so the tar walk itself is container-blind
-        if shard % 3 == 1:
-            import gzip as _gzip
-
-            blob = _gzip.compress(blob, mtime=0)
-            path += ".gz"
-        elif shard % 3 == 2:
-            import lzma as _lzma
-
-            blob = _lzma.compress(blob, format=_lzma.FORMAT_XZ)
-            path += ".xz"
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(blob)
-        os.replace(tmp, path)
-        return pd.DataFrame({"shard": [shard], "path": [path], "n_members": [n]})
-
-    return (
-        documents.select("doc_id", "text")
-        .withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
-        .groupBy("shard")
-        .applyInPandas(write, schema="shard long, path string, n_members long")
+    """Distributed deterministic writer (``sources.shards``):
+    ``documents(doc_id, text)`` -> ``out_dir/shard-NNNNN.tar[.gz|.xz]``
+    plus the ``(shard, path, n_members)`` manifest."""
+    return write_shards(
+        documents.select("doc_id", "text"), out_dir, n_shards, "n_members", _tar_shard
     )
 
 
@@ -147,17 +117,13 @@ def decompress_container(data: bytes) -> bytes:
     (1F 8B), xz (FD '7zXZ' 00) or none.  A corrupt container raises
     ValueError (contained by the reader as one error row)."""
     if data[:2] == b"\x1f\x8b":
-        import gzip as _gzip
-
         try:
-            return _gzip.decompress(data)
+            return gzip.decompress(data)
         except Exception as e:
             raise ValueError(f"bad gzip container: {e}") from e
     if data[:6] == b"\xfd7zXZ\x00":
-        import lzma as _lzma
-
         try:
-            return _lzma.decompress(data)
+            return lzma.decompress(data)
         except Exception as e:
             raise ValueError(f"bad xz container: {e}") from e
     return data

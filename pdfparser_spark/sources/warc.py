@@ -29,16 +29,15 @@ from __future__ import annotations
 
 import gzip
 import hashlib
-import os
 import zlib
 from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..runner import map_rows
+from .shards import write_shards
 
 _EPOCH = datetime(2024, 1, 1)  # WARC-Date base: deterministic, never wall clock
 _CRLF = b"\r\n"
@@ -164,12 +163,7 @@ def pdf_response_body(doc_id: int, text: str) -> bytes:
     payload (shared by the record builder and the revisit digest)."""
     from ..synth import build_document
 
-    d = build_document(doc_id, text)
-    parts = sorted(
-        (s for s in d["span_rows"] if s["text"] is not None),
-        key=lambda s: s["offset"],
-    )
-    return "".join(s["text"] for s in parts).encode("ascii")
+    return build_document(doc_id, text)["bytes"]
 
 
 def build_pdf_response_record(doc_id: int, text: str) -> bytes:
@@ -229,88 +223,53 @@ def build_pdf_revisit_record(doc_id: int, digest: str) -> bytes:
     )
 
 
+def _warc_shard(shard: int, rows: list) -> tuple[str, bytes, int]:
+    records = [build_warcinfo_record(shard)]
+    for did, text in rows:
+        records += [build_request_record(did), build_response_record(did, text or "")]
+    return f"shard-{shard:05d}.warc.gz", _gzip_members(records), len(rows)
+
+
+def _warc_pdf_shard(shard: int, rows: list) -> tuple[str, bytes, int]:
+    records = [build_warcinfo_record(shard)]
+    for did, text in rows:
+        records.append(build_pdf_response_record(did, text or ""))
+        if did % 9 == 7:
+            # every 9th+7 doc was re-crawled: the second capture is a
+            # revisit-by-digest record (Common Crawl dedup layout)
+            digest = payload_digest(pdf_response_body(did, text or ""))
+            records.append(build_pdf_revisit_record(did, digest))
+    return f"pdf-shard-{shard:05d}.warc.gz", _gzip_members(records), len(records) - 1
+
+
+def _gzip_members(records: list[bytes]) -> bytes:
+    """Every record its own gzip member (mtime 0: reproducible bytes)."""
+    return b"".join(gzip.compress(r, mtime=0) for r in records)
+
+
 def write_warc_pdf_shards(
     documents: DataFrame, out_dir: str, n_shards: int = 8
 ) -> DataFrame:
     """Like :func:`write_warc_shards` but every response carries the
     document's ASCII-armored PDF bytes (``application/pdf``) — the
     document-crawl archive layout."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        path = os.path.join(out_dir, f"pdf-shard-{shard:05d}.warc.gz")
-        pdf = pdf.sort_values("doc_id")
-        parts = [gzip.compress(build_warcinfo_record(shard), mtime=0)]
-        n = 0
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            did = int(doc_id)
-            txt = text if isinstance(text, str) else ""
-            parts.append(gzip.compress(build_pdf_response_record(did, txt), mtime=0))
-            n += 1
-            if did % 9 == 7:
-                # every 9th+7 doc was re-crawled: the second capture is a
-                # revisit-by-digest record (Common Crawl dedup layout)
-                parts.append(
-                    gzip.compress(
-                        build_pdf_revisit_record(
-                            did, payload_digest(pdf_response_body(did, txt))
-                        ),
-                        mtime=0,
-                    )
-                )
-                n += 1
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(b"".join(parts))
-        os.replace(tmp, path)
-        return pd.DataFrame({"shard": [shard], "path": [path], "n_records": [n]})
-
-    return (
-        documents.select("doc_id", "text")
-        .withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
-        .groupBy("shard")
-        .applyInPandas(write, schema="shard long, path string, n_records long")
+    return write_shards(
+        documents.select("doc_id", "text"), out_dir, n_shards, "n_records", _warc_pdf_shard
     )
 
 
 def write_warc_shards(
     documents: DataFrame, out_dir: str, n_shards: int = 8
 ) -> DataFrame:
-    """Distributed deterministic writer: ``documents(doc_id, text)`` ->
-    ``out_dir/shard-NNNNN.warc.gz``, one file per ``doc_id % n_shards``
-    group, every record its own gzip member (Common Crawl layout), records
-    sorted by doc_id inside a shard so shard bytes are reproducible.
-
-    Executors write to the shared filesystem directly (local FS here; a
-    cluster points ``out_dir`` at the distributed store) via write-temp +
-    atomic rename, so task retries are idempotent.  Returns the manifest
-    ``(shard, path, n_records)`` — materializing it IS the write."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        path = os.path.join(out_dir, f"shard-{shard:05d}.warc.gz")
-        pdf = pdf.sort_values("doc_id")
-        parts = [gzip.compress(build_warcinfo_record(shard), mtime=0)]
-        n = 0
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            did = int(doc_id)
-            txt = text if isinstance(text, str) else ""
-            parts.append(gzip.compress(build_request_record(did), mtime=0))
-            parts.append(gzip.compress(build_response_record(did, txt), mtime=0))
-            n += 1
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(b"".join(parts))
-        os.replace(tmp, path)
-        return pd.DataFrame({"shard": [shard], "path": [path], "n_records": [n]})
-
-    return (
-        documents.select("doc_id", "text")
-        .withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
-        .groupBy("shard")
-        .applyInPandas(write, schema="shard long, path string, n_records long")
+    """Distributed deterministic writer (``sources.shards``):
+    ``documents(doc_id, text)`` -> ``out_dir/shard-NNNNN.warc.gz``, a
+    warcinfo record then each doc's request and response, every record
+    its own gzip member (Common Crawl layout).  Executors write to the
+    shared filesystem directly (a cluster points ``out_dir`` at the
+    distributed store).  Returns the ``(shard, path, n_records)``
+    manifest."""
+    return write_shards(
+        documents.select("doc_id", "text"), out_dir, n_shards, "n_records", _warc_shard
     )
 
 
@@ -451,8 +410,17 @@ def _response_row(fpath: str, headers: dict, block: bytes) -> tuple:
         status,
         ctype,
         len(body),
-        body.decode("utf-8", errors="replace"),
+        _body_text(ctype, body),
     )
+
+
+def _body_text(ctype: str, body: bytes) -> str:
+    """The ``body`` column: a PDF decodes latin-1, byte-faithful (its
+    ``encode("latin-1")`` is the served bytes, binary streams included);
+    text decodes UTF-8."""
+    if ctype == "application/pdf":
+        return body.decode("latin-1")
+    return body.decode("utf-8", errors="replace")
 
 
 def _parse_http_response(block: bytes) -> tuple[int, str, bytes]:
@@ -519,7 +487,7 @@ def read_warc_captures(spark: SparkSession, path: str) -> DataFrame:
                     continue
                 status, ctype, body = _parse_http_response(block)
                 if wtype == "response":
-                    text, digest = body.decode("utf-8", errors="replace"), payload_digest(body)
+                    text, digest = _body_text(ctype, body), payload_digest(body)
                 else:
                     text, digest = "", headers.get("warc-payload-digest", "")
                 rows.append((

@@ -6,7 +6,7 @@ Writer side builds archives BYTE-DETERMINISTICALLY by hand — local
 file headers, raw-deflate payloads (zlib wbits=-15), CRC-32s, the
 central directory, and the end-of-central-directory record; one shard
 per ``doc_id % n_shards``, members sorted by doc_id, write-temp +
-atomic rename (the sources/warc.py discipline).  PDFs are DEFLATED,
+atomic rename (the shared writer, sources/shards.py).  PDFs are DEFLATED,
 the ``notes/*.txt`` sidecars are STORED, so the reader must handle
 both methods.
 
@@ -30,11 +30,10 @@ import struct
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..runner import map_rows
+from .shards import write_shards
 
 _LOCAL_SIG = b"PK\x03\x04"
 _CDIR_SIG = b"PK\x01\x02"
@@ -77,48 +76,25 @@ def build_zip(members: list) -> bytes:
     return bytes(out)
 
 
+def _zip_shard(shard: int, rows: list) -> tuple[str, bytes, int]:
+    from ..synth import build_document
+
+    members = []
+    for did, text in rows:
+        members.append((f"corpus/doc{did}.pdf", build_document(did, text or "")["bytes"], 8))
+        note = f"source note for document {did}\n".encode("ascii")
+        members.append((f"corpus/notes/doc{did}.txt", note, 0))
+    return f"shard-{shard:05d}.zip", build_zip(members), len(members)
+
+
 def write_zip_shards(
     documents: DataFrame, out_dir: str, n_shards: int = 8
 ) -> DataFrame:
-    """Distributed deterministic writer: ``documents(doc_id, text)`` ->
-    ``out_dir/shard-NNNNN.zip`` (one per doc_id % n_shards, members
-    sorted by doc_id, atomic rename).  Materializing the returned
-    (shard, path, n_members) manifest IS the write."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..synth import build_document
-
-        shard = int(key[0])
-        path = os.path.join(out_dir, f"shard-{shard:05d}.zip")
-        pdf = pdf.sort_values("doc_id")
-        members = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            did = int(doc_id)
-            d = build_document(did, text if isinstance(text, str) else "")
-            spans = sorted(
-                (s for s in d["span_rows"] if s["text"] is not None),
-                key=lambda s: s["offset"],
-            )
-            body = "".join(s["text"] for s in spans).encode("ascii")
-            members.append((f"corpus/doc{did}.pdf", body, 8))
-            members.append(
-                (f"corpus/notes/doc{did}.txt",
-                 f"source note for document {did}\n".encode("ascii"), 0)
-            )
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(build_zip(members))
-        os.replace(tmp, path)
-        return pd.DataFrame(
-            {"shard": [shard], "path": [path], "n_members": [len(members)]}
-        )
-
-    return (
-        documents.select("doc_id", "text")
-        .withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
-        .groupBy("shard")
-        .applyInPandas(write, schema="shard long, path string, n_members long")
+    """Distributed deterministic writer (``sources.shards``):
+    ``documents(doc_id, text)`` -> ``out_dir/shard-NNNNN.zip`` plus the
+    ``(shard, path, n_members)`` manifest."""
+    return write_shards(
+        documents.select("doc_id", "text"), out_dir, n_shards, "n_members", _zip_shard
     )
 
 

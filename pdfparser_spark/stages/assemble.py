@@ -1,9 +1,10 @@
 """Stage 4 — assemble.
 
 Ordered span emission (reference B5, doc_tree.rs:134-142 preorder walk;
-SURVEY.md §2.6).  The reading order key is ``(page_idx, seq, ev_idx)`` —
-page order came from the tree walk in decode, ``seq`` is the content-stream
-index within the page, ``ev_idx`` the operator's byte order in its stream.
+SURVEY.md §2.6).  The reading order key is ``(page_idx, ev_idx)`` — page
+order came from the tree walk in decode, ``ev_idx`` is the event's order in
+the page's one content stream (its /Contents array joined, forms executed
+in place).
 
 Implementation note (scale): a window (`row_number` over doc_id) followed by
 ``collect_list`` would shuffle twice.  Instead we do ONE shuffle:
@@ -26,7 +27,7 @@ def assemble(classified: DataFrame, decoded: DataFrame, strict: bool = False, me
         classified.groupBy("doc_id")
         .agg(
             F.sort_array(
-                F.collect_list(F.struct("page_idx", "seq", "ev_idx", "kind", "text", "media_ref"))
+                F.collect_list(F.struct("page_idx", "ev_idx", "kind", "text", "media_ref"))
             ).alias("raw")
         )
         .select(

@@ -25,7 +25,7 @@ from ..core.extract import FontSpec, shown_text, spec_decoder
 from ..runner import map_rows
 from ..schema import CLASSIFIED
 
-_KEY = ["doc_id", "page_idx", "seq", "ev_idx"]
+_KEY = ["doc_id", "page_idx", "ev_idx"]
 
 
 def _spec(tounicode, encoding, differences) -> FontSpec:
@@ -42,7 +42,7 @@ def classify(tokens: DataFrame, decoded: DataFrame) -> DataFrame:
 
     decoders: dict = {}  # per task: each task unpickles its own copy
 
-    def decode_text(doc_id, page_idx, seq, ev_idx, ev_type, operand, parts, tu, enc, diffs):
+    def decode_text(doc_id, page_idx, ev_idx, ev_type, operand, parts, tu, enc, diffs):
         if ev_type == "atext":
             text = pdf_text_string(operand)
         else:
@@ -51,7 +51,7 @@ def classify(tokens: DataFrame, decoded: DataFrame) -> DataFrame:
             if dec is None:
                 dec = decoders[spec] = spec_decoder(spec)
             text = shown_text(operand if parts is None else parts, dec)
-        return [(doc_id, page_idx, seq, ev_idx, "text", text, None)]
+        return [(doc_id, page_idx, ev_idx, "text", text, None)]
 
     text_spans = map_rows(
         shows.select(*_KEY, "ev_type", "operand", "parts", "tounicode", "base_encoding", "differences"),

@@ -16,7 +16,8 @@ runner (``runner.map_rows``) after byte reassembly from the interleaved
 spans (``_doc_bytes``).  The runner adds no error handling: each kernel
 keeps its own leniency.  The staged decode stage runs through the same
 runner.  The one cross-document extractor,
-``extract_merge_pairs_fused``, groups by pair instead.
+``extract_merge_pairs_fused``, groups by pair in Spark and hands each
+pair's rows to the same runner.
 
 Semantics are identical to the staged DAG (same kernel functions; asserted
 by the shared DuckDB oracle and pytest span-equality).  Use the staged
@@ -30,7 +31,6 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core.extract import (
@@ -72,18 +72,16 @@ _FIELDS = "doc_id long, field_idx int, field_name string, field_type string, fie
 def _doc_bytes(spans) -> bytes:
     # text-bearing spans concatenate in offset order (media markers are
     # zero-width); latin-1 is byte-faithful for the ASCII-armored text.
-    # spans may be NULL (malformed upstream row) — treat as empty, never crash
-    if spans is None:
+    # A malformed upstream row (NULL spans, a NULL offset, text above
+    # U+00FF) is an empty document: the kernel reports it, never crashes
+    parts = [s for s in spans or () if s["text"] is not None]
+    if any(s["offset"] is None for s in parts):
         return b""
-    parts = sorted((s for s in spans if s["text"] is not None), key=lambda s: s["offset"])
-    return "".join(s["text"] for s in parts).encode("latin-1")
-
-
-def _columns(schema) -> list[str]:
-    # DDL strings here are flat (no nested commas); StructTypes name their own
-    if isinstance(schema, str):
-        return [f.split()[0] for f in schema.split(",")]
-    return schema.fieldNames()
+    try:
+        text = "".join(s["text"] for s in sorted(parts, key=lambda s: s["offset"]))
+        return text.encode("latin-1")
+    except UnicodeEncodeError:
+        return b""
 
 
 def _per_doc(
@@ -425,7 +423,7 @@ def extract_graphics_fused(documents_raw: DataFrame, password: bytes = b"") -> D
         "n_subpaths int, n_strokes int, n_fills int, n_clips int, "
         "rect_area long"
     )
-    counters = _columns(schema)[1:]
+    counters = [f.split()[0] for f in schema.split(",")[1:]]
 
     def rows_of(doc_id, data):
         g = extract_graphics(data, password=password)
@@ -886,20 +884,19 @@ def extract_merge_pairs_fused(
 
     schema = "pair_id long, ord int, kind string, text string, media_ref string"
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for pair_id, grp in pdf.groupby("pair_id"):
-            spans_all = []
-            for spans in grp.sort_values("doc_id")["spans"]:
-                spans_all.extend(extract_spans(_doc_bytes(spans), password=password)["spans"])
-            merged = write_pdf(spans_all, xref_stream=pair_id % 2 == 1, objstm=pair_id % 4 == 3)
-            rows.extend(_span_rows(int(pair_id), extract_spans(merged)["spans"]))
-        return pd.DataFrame(rows, columns=_columns(schema))
+    def merge(pair_id, members):
+        spans_all = []
+        for m in members:  # doc_id order
+            spans_all.extend(extract_spans(_doc_bytes(m["spans"]), password=password)["spans"])
+        merged = write_pdf(spans_all, xref_stream=pair_id % 2 == 1, objstm=pair_id % 4 == 3)
+        return _span_rows(pair_id, extract_spans(merged)["spans"])
 
-    paired = documents_raw.withColumn(
-        "pair_id", F.floor(F.col("doc_id") / 2).cast("long")
+    pairs = (
+        documents_raw.filter(F.col("doc_id").isNotNull())  # NULL ids have no pair
+        .groupBy(F.floor(F.col("doc_id") / 2).cast("long").alias("pair_id"))
+        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "spans"))).alias("members"))
     )
-    return paired.groupBy("pair_id").applyInPandas(merge, schema=schema)
+    return map_rows(pairs, schema, merge)
 
 
 def extract_incremental_redact_fused(

@@ -28,7 +28,7 @@ _EMPTY = dict.fromkeys(TOKENS.fieldNames())
 
 
 def _page_rows(doc_id: int, page_idx: int, content: bytes, scopes, forms) -> list[dict]:
-    head = {**_EMPTY, "doc_id": doc_id, "page_idx": page_idx, "seq": 0}
+    head = {**_EMPTY, "doc_id": doc_id, "page_idx": page_idx}
     rows: list[dict] = []
     errors: list = []
     with _contained(errors):

@@ -192,7 +192,7 @@ def test_warc_plans_are_scan_only(spark, tmp_path):
 
 def test_pdf_over_warc_roundtrip_and_plan(spark, tmp_path):
     """application/pdf responses carry the ASCII-armored synthetic PDFs
-    losslessly (the reader's utf-8 body decode is identity on them), and
+    losslessly (the reader decodes PDF bodies latin-1, byte for byte), and
     the archive-to-extraction chain plan carries zero exchanges."""
     from pdfparser_spark.core.extract import extract_spans as kernel
     from pdfparser_spark.synth import build_document
