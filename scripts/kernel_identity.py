@@ -7,11 +7,12 @@ the input's password, plus strict ``extract_spans``, ``extract_advance_spans``
 with widths, ``extract_attachments`` with payloads, ``decode_document`` and
 ``redact.apply_redactions``.
 
-Inputs (461): ASCII documents 0-119; documents 0-27 of the binary, damaged,
+Inputs (462): ASCII documents 0-119; documents 0-27 of the binary, damaged,
 protected, columns, table, advance, tagged, scanned, signed and pubsec
 families; the protected ones again with the user and with the owner
-password; and five junk inputs (empty, garbage, a half-truncated document,
-a 400-byte binary prefix, a bare header).
+password; and six junk inputs (empty, garbage, a half-truncated document,
+a 400-byte binary prefix, a bare header, and a writer document whose
+object stream has two flipped bytes in its Flate payload).
 
 Usage:
     python scripts/kernel_identity.py OUT.json      # dump this checkout
@@ -35,6 +36,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def _text(doc_id: int) -> str:
     return " ".join(f"w{(doc_id * 7 + k) % 53}" for k in range(30))
+
+
+def corrupt_objstm_document() -> bytes:
+    """A two-page writer document with its catalog and pages in an object
+    stream, two bytes of whose Flate payload are flipped."""
+    from pdfparser_spark.core.writer import write_pdf
+
+    spans = [("text", "hello world", None), ("text", "second page", None)]
+    data = bytearray(write_pdf(spans, xref_stream=True, objstm=True))
+    at = data.index(b"stream\n", data.index(b"/Type /ObjStm")) + len(b"stream\n") + 2
+    data[at : at + 2] = bytes(b ^ 0xFF for b in data[at : at + 2])
+    return bytes(data)
 
 
 def inputs() -> list[tuple[str, bytes, bytes]]:
@@ -62,6 +75,7 @@ def inputs() -> list[tuple[str, bytes, bytes]]:
         ("junk/half", ascii0[: len(ascii0) // 2], b""),
         ("junk/prefix400", binary0[:400], b""),
         ("junk/header", b"%PDF-1.7\n", b""),
+        ("junk/objstm_flipped", corrupt_objstm_document(), b""),
     ]
     return out
 

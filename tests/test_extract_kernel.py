@@ -1398,6 +1398,18 @@ def test_spans_never_parse_what_no_page_reaches(monkeypatch):
     assert parsed and not parsed & unreached
 
 
+def test_a_corrupt_object_stream_is_reported_once():
+    """The catalog and pages live in an ObjStm whose Flate payload is
+    corrupt: the container's own read records the FilterError, and its
+    members, which it cannot hold, add no second row."""
+    from scripts.kernel_identity import corrupt_objstm_document
+
+    errors = extract_spans(corrupt_objstm_document())["errors"]
+    filter_rows = [e for e in errors if e[0] == "FilterError"]
+    assert len(filter_rows) == 1
+    assert "invalid distance too far back" in filter_rows[0][2]
+
+
 def test_encrypted_object_streams_read_lazily():
     """AESV2 (doc 9) and AESV3 (doc 15) documents whose catalog lives in an
     encrypted ObjStm: the container is read, decrypted and decoded first
