@@ -18,16 +18,6 @@ REFERENCE_ERROR = "ReferenceError"
 UNAVAILABLE_TYPE = "UnavailableType"
 DOC_TREE_ERROR = "DocTreeError"
 
-ERROR_KINDS = (
-    PARSING_ERROR,
-    FILTER_ERROR,
-    REFERENCE_ERROR,
-    UNAVAILABLE_TYPE,
-    DOC_TREE_ERROR,
-)
-
-STAGES = ("decode", "tokenize", "classify", "assemble")
-
 
 class PdfError(Exception):
     """Base parse error carrying the taxonomy kind and pipeline stage."""

@@ -239,18 +239,13 @@ def _build_decryptor(trailer: dict, objects: ObjectTable, password: bytes = b"")
     return crypt.StandardDecryptor(key, stm_mode, str_mode, enc_obj)
 
 
-def _apply_decryption(decryptor, objects: dict, objstm_expanded: set) -> None:
-    """Decrypt streams and strings in place.  Skips: the /Encrypt object
-    itself, xref streams (§7.5.8.2), streams already decrypted during
-    ObjStm expansion, and everything about objects that were ACTUALLY
-    materialized out of an ObjStm (the container was encrypted as a whole;
-    its contents are not separately encrypted, §7.6.2).  The skip-set is
-    the expansion record, NOT the raw type-2 xref map: a stale type-2
-    entry whose object was re-written directly in a newer revision must
-    still be decrypted."""
+def _apply_decryption(decryptor, objects: dict) -> None:
+    """Decrypt the streams and strings of directly read objects in place
+    (an ObjStm member is never passed: the container was encrypted as a
+    whole, §7.6.2).  Skips the /Encrypt object itself and xref streams
+    (§7.5.8.2)."""
     if decryptor is None:
         return
-    from_objstm = objstm_expanded
 
     def dec_value(val, obj_id, gen):
         if isinstance(val, (bytes, bytearray)):
@@ -263,15 +258,13 @@ def _apply_decryption(decryptor, objects: dict, objstm_expanded: set) -> None:
             return val
         return val
 
-    for (obj_id, gen), val in sorted(objects.items()):
-        if (obj_id, gen) == decryptor.enc_obj or (obj_id, gen) in from_objstm:
+    for (obj_id, gen), val in objects.items():
+        if (obj_id, gen) == decryptor.enc_obj:
             continue
         if isinstance(val, Stream):
-            if str(val.attrs.get("Type")) == "XRef" or val.decrypted:
-                continue
-            val.raw = decryptor.decrypt_stream(obj_id, gen, val.raw)
-            val.decrypted = True
-            dec_value(val.attrs, obj_id, gen)
+            if str(val.attrs.get("Type")) != "XRef":
+                val.raw = decryptor.decrypt_stream(obj_id, gen, val.raw)
+                dec_value(val.attrs, obj_id, gen)
         else:
             objects[(obj_id, gen)] = dec_value(val, obj_id, gen)
 
@@ -283,30 +276,29 @@ class ObjectTable:
     """A document's objects keyed by ``(id, gen)``, read on first use (the
     reference's memoizing cache, pdf_file.rs:25-68); the only way any code
     reads a document's objects.  A lookup (``in``, ``[]``, ``get``) of a
-    key not yet read materializes it, once: parse (/Length through the
-    table, header resync), ObjStm expansion (the container is read first,
-    so it is decrypted and decoded), decryption, and for a stream
-    classification and filter decode.  Its error rows land in the
-    document's error list when it is read, so a kernel reports faults only
-    in the objects it reads.  :meth:`read_all` reads every indexed object,
-    key by key; only the orphan-page scan and ``decode_document``'s object
-    counts need it.
+    key not yet read reads its one xref entry, once
+    (``xref.parse_all_objects``): a direct entry is parsed (/Length
+    through the index, offset-slop repair) and decrypted; a type-2 entry
+    first reads its ObjStm container, which is a direct entry, and then
+    expands the container's decoded payload.  Every stream read is
+    classified and filter-decoded.  Its error rows land in the document's
+    error list when it is read, so a kernel reports faults only in the
+    objects it reads.  :meth:`read_all` reads every indexed object, key by
+    key; only the orphan-page scan and ``decode_document``'s object counts
+    need it.
 
     Expanding an ObjStm materializes all its members, except one that has
     a direct xref entry not read yet: that entry wins when it is read.
     ``decryptor`` applies to the objects read after it is set;
     :func:`open_document` sets it once the /Encrypt dictionary is read.
     A recovered document's index holds candidate offsets per key, which
-    the first read validates (``xref.parse_all_objects``)."""
+    the first read validates."""
 
-    __slots__ = (
-        "_data", "_offsets", "_compressed", "_errors", "decryptor", "_expanded", "_store", "_tried",
-    )
+    __slots__ = ("_data", "_offsets", "_compressed", "_errors", "decryptor", "_store", "_tried")
 
     def __init__(self, data: bytes, offsets: dict, compressed: dict, errors: list, decryptor):
         self._data, self._offsets, self._compressed = data, offsets, compressed
         self._errors, self.decryptor = errors, decryptor
-        self._expanded: set = set()  # keys materialized out of an ObjStm
         self._store: dict = {}  # materialized objects
         self._tried: set = set()  # keys whose materialization has started
 
@@ -336,25 +328,22 @@ class ObjectTable:
     def _read(self, key) -> None:
         self._tried.add(key)  # also the guard against a lookup cycle
         if key in self._offsets:
-            offsets, compressed = {key: self._offsets[key]}, {}
+            fresh = parse_all_objects(
+                self._data, key, self._offsets[key], self._offsets, self._errors, self._store
+            )
+            _apply_decryption(self.decryptor, fresh)
         elif key[1] == 0 and key[0] in self._compressed:
-            entry = self._compressed[key[0]]
-            self.get((entry[0], 0))  # the container
-            offsets, compressed = {}, {key[0]: entry}
+            stm_id = self._compressed[key[0]][0]
+            self.get((stm_id, 0))  # the container: read, decrypted and decoded first
+            fresh = parse_all_objects(
+                self._data, key, Ref(stm_id, 0), self._offsets, self._errors, self._store
+            )
+            # a member whose direct xref entry is still unread: that entry
+            # (a newer revision) wins when it is read
+            for k in [k for k in fresh if k in self._offsets and k not in self._tried]:
+                del fresh[k]
         else:
             return
-        expanded = self._expanded
-        fresh = parse_all_objects(
-            self._data, offsets, compressed, self._errors, self.decryptor, expanded, self._store,
-            self._offsets,
-        )
-        # an ObjStm member whose direct xref entry is still unread: that
-        # entry (a newer revision) wins when it is read
-        for k in [k for k in fresh if k in expanded and k in self._offsets]:
-            if k not in self._tried:
-                del fresh[k]
-                expanded.discard(k)
-        _apply_decryption(self.decryptor, fresh, expanded)
         self._store.update(fresh)
         decode_doc_streams(fresh, self._errors, self)
 
@@ -405,42 +394,25 @@ def _require_pages(root, objects: dict):
     return pages
 
 
-def classify_stream(attrs: dict, objects: dict) -> str:
-    """D1 (reference decode.rs:197-203, 261-271) extended: classify before
-    decoding so media payloads skip the filter fold entirely — the
-    reference's one 'pushdown' (SURVEY.md §4)."""
-    subtype = get_resolved(attrs, "Subtype", objects)
-    if isinstance(subtype, str) and str(subtype) == "Image":
-        return "image"
-    t = get_resolved(attrs, "Type", objects)
-    if isinstance(t, str):
-        ts = str(t)
-        if ts == "XRef":
-            return "xref"
-        if ts == "ObjStm":
-            return "objstm"
-    return "unknown"
-
-
-def decode_doc_streams(objects: dict, errors: list, lookup=None) -> None:
-    """Decode stage core (D2-D9): fill ``Stream.data`` for every
-    non-media stream in ``objects``, in key order; media/undecodable
-    chains pass through with kind='image' (reference decode.rs:184-239,
-    spec-corrected).  References resolve in ``lookup`` (default
-    ``objects``)."""
-    if lookup is None:
-        lookup = objects
-    for _key, val in sorted(objects.items()):
+def decode_doc_streams(objects: dict, errors: list, lookup: dict) -> None:
+    """Decode stage core (D1-D9): fill ``Stream.data`` for every
+    non-media stream in ``objects``; an image (/Subtype /Image, D1,
+    reference decode.rs:197-203, 261-271) or a media/undecodable chain
+    passes through with kind='image' (reference decode.rs:184-239,
+    spec-corrected), classified before decoding so media payloads skip
+    the filter fold entirely — the reference's one 'pushdown' (SURVEY.md
+    §4).  References resolve in ``lookup``."""
+    for val in objects.values():
         if not isinstance(val, Stream):
             continue
-        val.kind = classify_stream(val.attrs, lookup)
+        subtype = get_resolved(val.attrs, "Subtype", lookup)
         chain = build_filter_chain(val.attrs, lambda v: resolve(v, lookup))
         # D9: /Length validation as a metric, never a panic (decode.rs:185-193)
         length = resolve(val.attrs.get("Length"), lookup)
         file_len = val.file_len if val.file_len is not None else len(val.raw)
         if isinstance(length, int) and length != file_len:
             errors.append((FILTER_ERROR, "decode", f"/Length {length} != payload {file_len}"))
-        if val.kind == "image" or is_media_chain(chain):
+        if subtype == "Image" or is_media_chain(chain):
             val.kind = "image"
             val.data = None  # never rasterized (D8)
             continue

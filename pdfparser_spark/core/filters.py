@@ -32,24 +32,10 @@ import numpy as np
 
 from .errors import FilterError
 
-# Filters we can decode (reference decode.rs:36-47 enumerates the full set).
-DECODABLE = {
-    "FlateDecode",
-    "Fl",
-    "LZWDecode",
-    "LZW",
-    "ASCIIHexDecode",
-    "AHx",
-    "ASCII85Decode",
-    "A85",
-    "RunLengthDecode",
-    "RL",
-}
 # Media codecs: payload stays encoded, stream becomes a media span.
 MEDIA_FILTERS = {"DCTDecode", "DCT", "JPXDecode", "CCITTFaxDecode", "CCF", "JBIG2Decode"}
 
-_WS = b"\x00\t\n\x0c\r "
-_WS_BYTES = bytes(_WS)  # for bytes.translate deletion (C-speed strip)
+_WS_BYTES = b"\x00\t\n\x0c\r "  # for bytes.translate deletion (C-speed strip)
 
 
 def ascii_hex_decode(data: bytes, parms: dict | None = None) -> bytes:
@@ -70,7 +56,7 @@ def ascii_hex_decode(data: bytes, parms: dict | None = None) -> bytes:
 def ascii85_decode(data: bytes, parms: dict | None = None) -> bytes:
     """ISO 32000 §7.4.3 via the stdlib's Adobe-85 codec (``z`` groups,
     ``<~``/``~>`` framing, whitespace tolerated)."""
-    stripped = bytes(c for c in data if c not in _WS)
+    stripped = data.translate(None, delete=_WS_BYTES)
     if not stripped.startswith(b"<~"):
         stripped = b"<~" + stripped
     if not stripped.endswith(b"~>"):

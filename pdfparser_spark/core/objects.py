@@ -55,10 +55,11 @@ class Ref:
 class Stream:
     """Stream object: dict attributes + payload (reference decode.rs:10-27).
 
-    ``raw`` is the undecoded payload sliced between ``stream``/``endstream``;
-    ``data`` is filled by the decode stage (filters.py).  ``kind`` is the
-    classification from decode.rs:261-271 extended per SURVEY.md §2.5 D1/D8:
-    'content' | 'image' | 'xref' | 'objstm' | 'media' | 'unknown'.
+    ``raw`` is the undecoded payload sliced between ``stream``/``endstream``
+    (decrypted in place when its object is read); ``data`` is its filter
+    decode (filters.py), None for an image, a media chain or a payload
+    that did not decode.  ``kind`` is 'image' for exactly those streams
+    (decode.rs:261-271, SURVEY.md §2.5 D1/D8), else 'unknown'.
     """
 
     attrs: dict
@@ -69,9 +70,6 @@ class Stream:
     # bytes, so the D9 validation must compare against this even after
     # in-place decryption rewrites ``raw`` (AES strips IV + padding)
     file_len: int | None = None
-    # set once decryption has rewritten ``raw`` (ObjStm containers are
-    # decrypted during expansion, before the doc-wide decryption pass)
-    decrypted: bool = False
 
 
 @dataclass

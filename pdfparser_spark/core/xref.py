@@ -12,11 +12,14 @@ plus object streams (ObjStm, §7.5.7) for type-2 entries, and /Prev chains
 for incrementally-updated files.
 
 The result is the object index ``(obj_id, gen) -> byte offset`` that the
-reference keeps as ``HashMap<ObjectId, usize>`` (pdf_file.rs:226-270).  All
-code reads objects through ``extract.ObjectTable``, which parses one object
-the first time something dereferences it (the reference's memoizing cache,
-pdf_file.rs:25-68); :func:`parse_all_objects` is its parser and has no
-other caller.
+reference keeps as ``HashMap<ObjectId, usize>`` (pdf_file.rs:226-270), plus
+the type-2 entries ``obj_id -> (objstm_id, index)``.  All code reads
+objects through ``extract.ObjectTable``, which reads one xref entry the
+first time something dereferences its key (the reference's memoizing
+cache, ``retrieve_object_by_ref``, pdf_file.rs:47-68).
+:func:`parse_all_objects` is that one read and has no other caller: a
+direct entry is parsed at its offset, and a type-2 entry expands the
+ObjStm container the table has already read, decrypted and decoded.
 
 Damaged-file recovery validates on read: when the footer is lost, the
 scan indexes each key's candidate offsets (newest first) without parsing
@@ -29,7 +32,6 @@ intact one, pays only for the objects a kernel reaches.
 from __future__ import annotations
 
 import re
-from collections import ChainMap
 
 from .errors import ParsingError
 from .filters import build_filter_chain, decode_chain
@@ -38,6 +40,8 @@ from .tokenizer import Tokenizer, skip_ws
 
 _VERSION_RE = re.compile(rb"%PDF-(\d\.\d)")
 _VALID_VERSIONS = {"1.0", "1.1", "1.2", "1.3", "1.4", "1.5", "1.6", "1.7", "2.0"}
+# the most xref sections one /Prev chain is followed through
+_MAX_PREV = 64
 
 
 def sniff_version(data: bytes) -> str:
@@ -274,27 +278,37 @@ def _recover_by_scan(data: bytes, tok: Tokenizer):
     return offsets, trailer
 
 
-def read_xref(data: bytes, max_prev: int = 64):
-    """Follow the /Prev chain from ``startxref`` and merge sections
+def read_xref(data: bytes):
+    """Follow the /Prev chain from ``startxref`` and merge its sections
     (newest-first wins, matching incremental-update semantics); if the
     footer is damaged (no/corrupt ``startxref``), fall back to the
     reverse-trailer + scan-all-objects recovery.  Returns
     (offsets, trailer, compressed)."""
-    tok = Tokenizer(data)
+    offsets: dict = {}
+    compressed: dict = {}
+    trailer: dict = {}
     try:
-        at = find_startxref(data)
-        return _read_xref_chain(data, at, tok, max_prev)
+        for _kind, offs, comp, tr in xref_sections(data):
+            for k, v in offs.items():
+                offsets.setdefault(k, v)
+            for k, v in comp.items():
+                compressed.setdefault(k, v)
+            for k, v in tr.items():
+                trailer.setdefault(k, v)
+        if not trailer:
+            raise ParsingError("no trailer found")
     except ParsingError as chain_err:
         try:
-            offs, tr = _recover_by_scan(data, tok)
+            offs, tr = _recover_by_scan(data, Tokenizer(data))
         except ParsingError as rec_err:
             # keep the original chain failure visible — it names the real
             # corruption; the scan error alone would hide it
             raise ParsingError(f"{rec_err} (after xref failure: {chain_err})") from chain_err
         return offs, tr, {}
+    return offsets, trailer, compressed
 
 
-def xref_sections(data: bytes, max_prev: int = 64) -> list:
+def xref_sections(data: bytes) -> list:
     """The /Prev chain as a LIST of sections, newest-first:
     ``[(kind, offsets, compressed, trailer)]`` with kind ``'classic'`` /
     ``'stream'`` (a hybrid §7.5.8.4 section stays one 'classic' entry
@@ -305,7 +319,7 @@ def xref_sections(data: bytes, max_prev: int = 64) -> list:
     at = find_startxref(data)
     sections: list = []
     seen: set = set()
-    for _ in range(max_prev):
+    for _ in range(_MAX_PREV):
         if at in seen or at < 0 or at >= len(data):
             break
         seen.add(at)
@@ -342,71 +356,87 @@ def xref_sections(data: bytes, max_prev: int = 64) -> list:
     return sections
 
 
-def _read_xref_chain(data: bytes, at: int, tok: Tokenizer, max_prev: int):
-    del at  # the section walk re-derives the anchor from startxref
-    offsets: dict = {}
-    compressed: dict = {}
-    trailer: dict = {}
-    for _kind, offs, comp, tr in xref_sections(data, max_prev):
-        for k, v in offs.items():
-            offsets.setdefault(k, v)
-        for k, v in comp.items():
-            compressed.setdefault(k, v)
-        for k, v in tr.items():
-            trailer.setdefault(k, v)
-    if not trailer:
-        raise ParsingError("no trailer found")
-    return offsets, trailer, compressed
+def _slop_repair(tok: Tokenizer, obj_id: int, gen: int, off: int):
+    """Offset-slop repair (broken real-world writers routinely emit xref
+    offsets a few bytes off): ``(object, shift)`` for the exact ``N G obj``
+    header found within +-64 bytes of the recorded offset, else None."""
+    data = tok.data
+    pat = re.compile(rb"(?<![0-9])" + f"{obj_id} {gen} obj".encode("ascii"))
+    m = pat.search(data, max(0, off - 64), min(len(data), off + 96))
+    if m is None or m.start() == off:
+        return None
+    try:
+        ind, _ = tok.parse_indirect_at(m.start())
+    except ParsingError:
+        return None
+    return (ind, m.start() - off) if ind.obj_id == obj_id else None
+
+
+def _objstm_members(obj_id: int, stm_id: int, container, errors: list, known: dict) -> dict:
+    """The members of the object stream ``stm_id`` (§7.5.7) that ``known``
+    does not hold yet, read from the container's decoded payload; the
+    type-2 entry of ``obj_id`` named it.  A container that did not decode
+    yields nothing: its own read recorded why."""
+    if not isinstance(container, Stream):
+        errors.append(("ReferenceError", "tokenize", f"ObjStm {stm_id} missing for obj {obj_id}"))
+        return {}
+    payload = container.data
+    if payload is None:
+        return {}
+    objects: dict = {}
+    try:
+        n = int(resolve(container.attrs.get("N"), known) or 0)
+        first = int(resolve(container.attrs.get("First"), known) or 0)
+        itok = Tokenizer(payload)
+        pairs = []
+        p = 0
+        for _ in range(n):
+            onum, p = itok.parse_value(p)
+            ooff, p = itok.parse_value(p)
+            pairs.append((int(onum), int(ooff)))
+        for onum, ooff in pairs:
+            val, _ = itok.parse_value(first + ooff)
+            if (onum, 0) not in known:
+                objects.setdefault((onum, 0), val)
+    except (ParsingError, ValueError, TypeError) as e:
+        errors.append(("ParsingError", "tokenize", f"ObjStm {stm_id}: {e}"))
+    return objects
 
 
 def parse_all_objects(
-    data: bytes,
-    offsets: dict,
-    compressed: dict,
-    errors: list,
-    decryptor,
-    objstm_expanded: set,
-    parsed: dict,
-    index: dict,
-):
-    """Parse the objects indexed by ``offsets`` (key order) and expand the
-    ObjStm entries of ``compressed``; returns the objects this call parsed.
-    Its caller, ``extract.ObjectTable``, passes one entry at a time.
-    Indirect /Length is resolved against already-parsed objects or by
-    direct offset parse (two-pass) at its entry in ``index``, the
-    document's whole offset index: a length object that follows its stream
-    is found even when this call reads only the stream.  An entry that is
-    a tuple holds recovery-scan candidates (:func:`_recover_by_scan`): the
-    first that parses and names its key is the object, and the others are
-    skipped without an error row or an offset-slop repair.
+    data: bytes, key: tuple, entry, index: dict, errors: list, known: dict
+) -> dict:
+    """Read the xref entry ``entry`` of ``key`` and return the objects the
+    read materialized.  Its one caller, ``extract.ObjectTable``, calls it
+    once per key, with ``known`` the objects earlier reads materialized.
 
-    ``parsed``: objects of the same document that earlier calls
-    materialized.  They are not parsed or expanded again, and /Length and
-    ObjStm container lookups see them (a container found there is already
-    decrypted and decoded).
+    - A ``Ref`` is a type-2 entry: the object stream it names, which the
+      table has already read (so decrypted and decoded), is looked up in
+      ``known`` and expanded (:func:`_objstm_members`).
+    - A tuple holds recovery-scan candidates (:func:`_recover_by_scan`):
+      the first that parses and names ``key`` is the object, and the
+      others are skipped without an error row or an offset-slop repair.
+    - An int is a byte offset, parsed there, with the offset-slop repair
+      (:func:`_slop_repair`) when the parse fails or names another object.
 
-    ``decryptor`` (crypt.StandardDecryptor | None): in encrypted documents
-    ObjStm containers must be decrypted BEFORE their payload is
-    filter-decoded and expanded — the decryption pass runs after parsing
-    and would be too late for the objects inside.
-
-    ``objstm_expanded`` is filled with the keys of objects that were
-    ACTUALLY materialized out of an ObjStm (not merely listed in a —
-    possibly stale — type-2 xref entry).  The decryption pass must skip
-    exactly these: an object with a stale type-2 entry that was re-written
-    as a direct object in a newer revision IS individually encrypted."""
+    An indirect /Length resolves in ``known`` or by a direct parse at its
+    entry in ``index``, the document's whole offset index: a length
+    object that follows its stream is found even though only the stream
+    is being read."""
+    obj_id, gen = key
+    if isinstance(entry, Ref):
+        return _objstm_members(obj_id, entry.obj_id, resolve(entry, known), errors, known)
     objects: dict = {}
-    known = ChainMap(objects, parsed)
 
     def length_resolver(ref: Ref):
-        key = (ref.obj_id, ref.gen)
-        v = known.get(key)
+        k = (ref.obj_id, ref.gen)
+        v = objects.get(k, known.get(k))
         if v is None:
-            off = index.get(key)
+            off = index.get(k)
             if off is None:
                 return None
             if type(off) is tuple:
-                hit = _first_candidate(Tokenizer(data), key, off)
+                hit = _first_candidate(Tokenizer(data), k, off)
                 if hit is None:
                     return None
                 ind = hit[1]
@@ -420,80 +450,26 @@ def parse_all_objects(
         return v if isinstance(v, int) else None
 
     tok = Tokenizer(data, length_resolver=length_resolver)
-
-    def slop_repaired(obj_id: int, gen: int, off: int) -> bool:
-        """Offset-slop repair (broken real-world writers routinely emit
-        xref offsets a few bytes off): parse the exact ``N G obj`` header
-        found within +-64 bytes of the recorded offset."""
-        pat = re.compile(rb"(?<![0-9])" + f"{obj_id} {gen} obj".encode("ascii"))
-        m = pat.search(data, max(0, off - 64), min(len(data), off + 96))
-        if m is None or m.start() == off:
-            return False
-        try:
-            ind, _ = tok.parse_indirect_at(m.start())
-        except ParsingError:
-            return False
-        if ind.obj_id != obj_id:
-            return False
+    if type(entry) is tuple:  # recovery-scan candidates: no rows, no slop repair
+        hit = _first_candidate(tok, key, entry)
+        if hit is not None:
+            objects[key] = hit[1].value
+        return objects
+    if entry <= 0 or entry >= len(data):
+        errors.append(("ParsingError", "tokenize", f"offset {entry} out of range for obj {obj_id}"))
+        return objects
+    try:
+        ind, _ = tok.parse_indirect_at(entry)
+    except ParsingError as e:
+        ind, failure = None, f"obj {obj_id}: {e}"
+    else:
+        failure = None if ind.obj_id == obj_id else f"xref points {obj_id} at object {ind.obj_id}"
+    if failure is not None:
+        repaired = _slop_repair(tok, obj_id, gen, entry)
+        if repaired is not None:
+            ind, shift = repaired
+            failure = f"obj {obj_id}: offset slop {shift:+d} repaired"
+        errors.append(("ParsingError", "tokenize", failure))
+    if ind is not None:
         objects[(ind.obj_id, ind.gen)] = ind.value
-        errors.append((
-            "ParsingError", "tokenize", f"obj {obj_id}: offset slop {m.start() - off:+d} repaired",
-        ))
-        return True
-
-    for (obj_id, gen), off in sorted(offsets.items()):
-        if (obj_id, gen) in known:
-            continue
-        if type(off) is tuple:  # recovery-scan candidates: no rows, no slop repair
-            hit = _first_candidate(tok, (obj_id, gen), off)
-            if hit is not None:
-                objects[(obj_id, gen)] = hit[1].value
-            continue
-        if off <= 0 or off >= len(data):
-            errors.append(("ParsingError", "tokenize", f"offset {off} out of range for obj {obj_id}"))
-            continue
-        try:
-            ind, _ = tok.parse_indirect_at(off)
-        except ParsingError as e:
-            if not slop_repaired(obj_id, gen, off):
-                errors.append(("ParsingError", "tokenize", f"obj {obj_id}: {e}"))
-            continue
-        if ind.obj_id != obj_id:
-            if slop_repaired(obj_id, gen, off):
-                continue
-            errors.append(("ParsingError", "tokenize", f"xref points {obj_id} at object {ind.obj_id}"))
-        objects[(ind.obj_id, ind.gen)] = ind.value
-
-    # Object streams (§7.5.7): type-2 entries live inside an ObjStm.
-    for obj_id, (stm_id, _idx) in sorted(compressed.items()):
-        if (obj_id, 0) in known:
-            continue
-        container = resolve(Ref(stm_id, 0), known)
-        if not isinstance(container, Stream):
-            errors.append(("ReferenceError", "tokenize", f"ObjStm {stm_id} missing for obj {obj_id}"))
-            continue
-        try:
-            if container.data is None:
-                if decryptor is not None and not container.decrypted:
-                    container.raw = decryptor.decrypt_stream(stm_id, 0, container.raw)
-                    container.decrypted = True
-                chain = build_filter_chain(container.attrs, lambda v: resolve(v, known))
-                container.data = decode_chain(container.raw, chain)
-            payload = container.data
-            n = int(resolve(container.attrs.get("N"), known) or 0)
-            first = int(resolve(container.attrs.get("First"), known) or 0)
-            itok = Tokenizer(payload)
-            pairs = []
-            p = 0
-            for _ in range(n):
-                onum, p = itok.parse_value(p)
-                ooff, p = itok.parse_value(p)
-                pairs.append((int(onum), int(ooff)))
-            for onum, ooff in pairs:
-                val, _ = Tokenizer(payload).parse_value(first + ooff)
-                if (onum, 0) not in known:
-                    objects[(onum, 0)] = val
-                    objstm_expanded.add((onum, 0))
-        except (ParsingError, ValueError, TypeError) as e:
-            errors.append(("ParsingError", "tokenize", f"ObjStm {stm_id}: {e}"))
     return objects

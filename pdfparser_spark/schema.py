@@ -130,12 +130,3 @@ CLASSIFIED = T.StructType(
         T.StructField("media_ref", T.StringType()),
     ]
 )
-
-METRICS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("error_kind", T.StringType()),
-        T.StructField("stage", T.StringType()),
-        T.StructField("count", T.LongType()),
-    ]
-)

@@ -27,9 +27,10 @@ from .shards import write_shards
 READ_SCHEMA = "doc_id long, lang string, text string, _corrupt string"
 
 
-def doc_json_line(doc_id: int, lang: str, text: str) -> str:
-    """Canonical line for a doc; the doc_id % 23 == 7 slice is truncated
-    mid-object (the classic partial-write defect)."""
+def doc_json_line(doc_id: int, lang: str | None, text: str | None) -> str:
+    """Canonical line for a doc (a NULL ``lang`` or ``text`` is JSON
+    ``null``); the doc_id % 23 == 7 slice is truncated mid-object (the
+    classic partial-write defect)."""
     line = json.dumps(
         {"doc_id": doc_id, "lang": lang, "text": text}, separators=(",", ":")
     )
@@ -37,7 +38,7 @@ def doc_json_line(doc_id: int, lang: str, text: str) -> str:
 
 
 def _jsonl_shard(shard: int, rows: list) -> tuple[str, bytes, int]:
-    lines = [doc_json_line(d, str(lg), str(tx)) for d, lg, tx in rows]
+    lines = [doc_json_line(*row) for row in rows]
     return f"shard-{shard:05d}.jsonl", ("\n".join(lines) + "\n").encode("utf-8"), len(lines)
 
 

@@ -3,7 +3,8 @@
 Each source supplies only its format: a function ``build(shard, rows)``
 that turns one shard's rows, in doc_id order, into ``(file name, bytes,
 count)``.  This module owns the rest of the discipline every writer
-shares: the shard key ``pmod(doc_id, n_shards)``, the per-shard doc_id
+shares: the shard key ``pmod(doc_id, n_shards)`` (a NULL doc_id is
+dropped, as ``synthesize_corpus`` does), the per-shard doc_id
 order (a Spark ``sort_array`` over the collected group, so shard bytes
 are reproducible), write-temp plus atomic rename into ``out_dir`` (task
 retries are idempotent), and the one manifest row per shard.
@@ -31,9 +32,10 @@ def write_shards(
     (``doc_id`` its first column).  ``build(shard, rows)`` gets the
     group's rows as tuples of ``documents``' columns, sorted by doc_id.
     Returns the manifest ``(shard, path, <count>)``: materializing it IS
-    the write."""
+    the write.  A row with a NULL doc_id has no shard and is dropped."""
     os.makedirs(out_dir, exist_ok=True)
-    groups = documents.groupBy(F.pmod("doc_id", F.lit(n_shards)).alias("shard")).agg(
+    keyed = documents.filter(F.col("doc_id").isNotNull())
+    groups = keyed.groupBy(F.pmod("doc_id", F.lit(n_shards)).alias("shard")).agg(
         F.sort_array(F.collect_list(F.struct(*documents.columns))).alias("rows")
     )
 

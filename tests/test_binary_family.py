@@ -241,7 +241,7 @@ def test_stale_type2_entry_still_decrypts_direct_object():
     errors: list = []
     stale = ObjectTable(data, offsets, {stale_id: (9999, 0)}, errors, decryptor)
     objects = stale.read_all()
-    assert objects[(stale_id, 0)].decrypted and objects[(stale_id, 0)].data
+    assert objects[(stale_id, 0)].data
     assert errors == []
     assert {k: getattr(v, "data", v) for k, v in objects.items()} == {
         k: getattr(v, "data", v) for k, v in plain.items()

@@ -71,3 +71,14 @@ def test_spark_shard_roundtrip(spark, sf_dir, tmp_path):
     assert all(r.error is None and r.pdf is not None for r in rows)
     ids = sorted(int(r.subject.split()[-1]) for r in rows)
     assert ids == sorted(r.doc_id for r in docs.collect())
+
+
+def test_a_null_doc_id_is_dropped_not_fatal(spark, tmp_path):
+    """A NULL doc_id has no shard: the write drops its row and writes the
+    others, instead of failing the job."""
+    docs = spark.createDataFrame([(1, "a b"), (None, "c d")], "doc_id long, text string")
+    out = str(tmp_path / "mbox")
+    manifest = mbox.write_mbox_shards(docs, out, n_shards=2).collect()
+    assert [(m.shard, m.n_messages) for m in manifest] == [(1, 1)]
+    msgs = list(mbox.parse_messages(open(manifest[0].path, "rb").read()))
+    assert [m["subject"] for m in msgs] == ["document 1"]

@@ -44,7 +44,7 @@ PINS = {
         [
             (0, "shard-00000.jsonl", 9, "d4e6d2ec922c0766adf227af04e1d723cc6f8cc9ae1ecfcc77e08ccf7978e1c6"),
             (1, "shard-00001.jsonl", 9, "641aab1aad0896ea3b08e8c33f2340dc33dbaefe5c190c0f5c5e09daba56bdcc"),
-            (2, "shard-00002.jsonl", 8, "465b09523a7a788719ae2284a64dfef3f02e17984dd5634729bdcfc0f03a3764"),
+            (2, "shard-00002.jsonl", 8, "8c91ffc071f55a2c27b61412b9200e32628615c35b2f035b92e5ffae23f23634"),
         ],
     ),
     "mbox": (
@@ -106,6 +106,15 @@ def test_shard_bytes_and_manifest(spark, tmp_path, kind):
     assert all(os.path.dirname(r.path) == out for r in manifest)
     assert sorted(os.listdir(out)) == sorted(name for _s, name, _n, _h in got)
     assert got == want
+
+
+def test_jsonl_null_text_reads_back_null(spark, tmp_path):
+    """A NULL text is written as JSON null, so the permissive read gives
+    doc 11 back a NULL text, not the string "None"."""
+    out = str(tmp_path / "jsonl")
+    jsonl.write_jsonl_shards(_documents(spark), out, n_shards=3).collect()
+    back = {r.doc_id: r for r in jsonl.read_jsonl_rescue(spark, out).collect()}
+    assert back[11].lang == "en" and back[11].text is None and back[11]._corrupt is None
 
 
 MERGE_ROWS = 35
